@@ -16,6 +16,8 @@ of ``search.search``:
     idx.health()                       # operational stats (HNSW)
     idx.refresh(vectors=corpus)        # codebook retrain (PQ kinds)
     idx.gc()                           # replay-log compaction
+    idx.stream_ingest(stream_df)       # foreachBatch appends
+    idx.stream_remove(stream_df)       # foreachBatch deletes
     idx.search([...], k=10)            # serving, via search.search
 
 Every method forwards kind-specific keywords verbatim (``spill`` for
@@ -59,6 +61,8 @@ _REFRESH = {
     "pq": "pq_refresh_index",
     "ivf_pq": "ivf_pq_refresh_index",
 }
+# kinds whose append takes ``batch_id`` (replay-logged)
+_REPLAY_LOGGED = ("pq", "ivf_pq", "bm25")
 
 
 def _detect_kind(spark: SparkSession, path: str) -> str:
@@ -169,43 +173,119 @@ class MaintainedIndex:
         return self._vault("gc")(self.spark, self.path, **kw)
 
     # -- streaming -------------------------------------------------------
-    _STREAM_INGEST = {
-        "hnsw": "stream_index_ingest",
-        "pq": "stream_pq_ingest",
-        "bm25": "stream_bm25_ingest",
-    }
-    _STREAM_REMOVE = {
-        "ivf": "stream_ivf_remove",
-        "hnsw": "stream_hnsw_remove",
-        "pq": "stream_pq_remove",
-        "ivf_pq": "stream_pq_remove",  # shared codes-table remover
-        "bm25": "stream_bm25_remove",
-    }
+    def stream_ingest(
+        self,
+        stream_df: DataFrame,
+        checkpoint: str | None = None,
+        query_name: str | None = None,
+        seed: int = 42,
+    ):
+        """Start a Structured-Streaming ingest into this index: each
+        micro-batch runs :meth:`append` through the shared
+        ``streaming.upsert.run_stream`` runner.  Returns the
+        StreamingQuery.
 
-    def stream_ingest(self, stream_df: DataFrame, **kw):
-        """Start the kind's Structured-Streaming ingest into this
-        index (replayable per-micro-batch appends).  Returns the
-        StreamingQuery.  IVF/IVF-PQ ingest streams are not wired —
-        batch ``append`` per micro-batch via ``foreachBatch`` is the
-        supported shape for those kinds."""
-        from astro_vectordb_spark.streaming import upsert as streaming
+        foreachBatch is at-least-once, so a kind streams only if a
+        redelivered micro-batch is a no-op: pq / ivf_pq / bm25 append
+        with ``batch_id`` (the replay log), HNSW with its default
+        ``on_conflict="skip"`` (stored ids win) and the level-draw
+        ``seed`` offset by ``batch_id`` so batches don't correlate.
+        IVF's append has no replay log — a redelivered batch would
+        insert twice — so IVF raises; drive :meth:`append` from your
+        own foreachBatch if duplicates are acceptable."""
+        from astro_vectordb_spark.streaming.upsert import run_stream
 
-        name = self._STREAM_INGEST.get(self.kind)
-        if name is None:
+        if seed != 42 and self.kind != "hnsw":
+            raise ValueError(f"seed is an HNSW option, not {self.kind}")
+        if self.kind == "hnsw":
+            def apply(b, bid):
+                return {"touched_shards": self.append(b, seed=seed + bid)}
+        elif self.kind in _REPLAY_LOGGED:
+            def apply(b, bid):
+                return self.append(b, batch_id=bid)
+        else:
             raise ValueError(
-                f"the {self.kind} kind has no streaming-ingest face; "
-                "drive append() from your own foreachBatch"
+                f"the {self.kind} kind has no streaming-ingest face (its "
+                "append keeps no replay log, so a redelivered micro-batch "
+                "would insert twice); drive append() from your own "
+                "foreachBatch"
             )
-        return getattr(streaming, name)(stream_df, self.path, **kw)
-
-    def stream_remove(self, stream_df: DataFrame, **kw):
-        """Start the kind's streaming DELETE face (physical removes,
-        replay-logged).  Returns the StreamingQuery."""
-        from astro_vectordb_spark.streaming import upsert as streaming
-
-        return getattr(streaming, self._STREAM_REMOVE[self.kind])(
-            stream_df, self.path, **kw
+        name = query_name or (
+            "astro_index_ingest" if self.kind == "hnsw"
+            else f"astro_{self.kind}_ingest"
         )
+        return run_stream(stream_df, apply, name, checkpoint=checkpoint)
+
+    def stream_remove(
+        self,
+        stream_df: DataFrame,
+        checkpoint: str | None = None,
+        query_name: str | None = None,
+        compact_every: int | None = None,
+        mode: str = "auto",
+        min_degree_frac: float = 0.5,
+        auto_repair: bool = False,
+        repair_every: int | None = None,
+        health_threshold: float | None = None,
+    ):
+        """Start a streaming DELETE into this index: each micro-batch
+        runs :meth:`remove` with its ``batch_id`` (the op-namespaced
+        replay log makes redelivery a no-op and lets an ingest stream
+        share the index).  Vector kinds read the batch's ``vec_id``
+        column; BM25 takes the removed ``(doc_id, text)`` rows — the
+        statistics need the ORIGINAL text.  Returns the StreamingQuery.
+
+        Maintenance rides the stream (after every Nth applied batch):
+
+        * PQ kinds, ``compact_every=N``: :meth:`compact` — each remove
+          rewrites its touched files into fresh ones, so delete
+          traffic grows the file count without bound;
+        * HNSW, ``repair_every=N``: a full-index :meth:`rebalance`
+          rebuilding every shard whose mean live level-0 degree fell
+          below ``health_threshold * m`` (default
+          ``min_degree_frac``) — catches erosion that accrues below
+          the per-batch ``auto_repair`` check (which only examines the
+          touched shards) across many batches.  ``mode``,
+          ``min_degree_frac`` and ``auto_repair`` pass to each remove
+          (see ``vault.hnsw_remove_from_index``)."""
+        from astro_vectordb_spark.streaming.upsert import run_stream
+
+        if compact_every is not None and self.kind not in ("pq", "ivf_pq"):
+            raise ValueError(
+                f"compact_every is a PQ-kind option, not {self.kind}"
+            )
+        hnsw_opts = (mode, min_degree_frac, auto_repair, repair_every,
+                     health_threshold)
+        if self.kind != "hnsw" and hnsw_opts != (
+            "auto", 0.5, False, None, None
+        ):
+            raise ValueError(
+                "mode/min_degree_frac/auto_repair/repair_every/"
+                f"health_threshold are HNSW options, not {self.kind}"
+            )
+        every, maintain, kw = None, None, {}
+        if self.kind == "hnsw":
+            kw = {"mode": mode, "min_degree_frac": min_degree_frac,
+                  "auto_repair": auto_repair}
+            floor = (min_degree_frac if health_threshold is None
+                     else health_threshold)
+            every = repair_every
+            maintain = lambda: self.rebalance(  # noqa: E731
+                min_degree_frac=float(floor)
+            )
+        elif compact_every:
+            every, maintain = compact_every, self.compact
+
+        def apply(b, bid):
+            ids = b if self.kind == "bm25" else b.select("vec_id")
+            return self.remove(ids, batch_id=bid, **kw)
+
+        name = query_name or (
+            "astro_pq_remove" if self.kind == "ivf_pq"
+            else f"astro_{self.kind}_remove"
+        )
+        return run_stream(stream_df, apply, name, checkpoint=checkpoint,
+                          every=every, maintain=maintain)
 
     # -- serving ---------------------------------------------------------
     def search(self, query, k: int = 10, *, docs: DataFrame | None = None,

@@ -16,6 +16,7 @@ though every index already persists its family parameters in
     idx.groups()                          # retroactive keep set
     idx.apply_sweep(batch_id=9)           # sweep-APPLY (fixpoint)
     idx.compact()                         # churn-aware rewrite
+    idx.stream_ingest(stream_df)          # foreachBatch dedup-at-ingest
 
 Every method forwards family-specific keywords verbatim (``threshold``
 for minhash/rp, ``eps`` for semdedup, ``max_hamming`` for simhash,
@@ -42,6 +43,13 @@ _FAMILIES = {
     "simhash": ("bits", "hash_family"),
     "rp": ("n_planes", "n_tables"),
     "semdedup": ("k", "vec_col"),
+}
+# family -> (similarity knob, its default) for dedup-at-ingest
+_KNOB = {
+    "minhash": ("threshold", 0.8),
+    "simhash": ("max_hamming", None),
+    "rp": ("threshold", 0.9),
+    "semdedup": ("eps", 0.95),
 }
 
 
@@ -139,15 +147,76 @@ class NearDupIndex:
 
         return _gc(self.spark, self.path, **kw)
 
-    def stream_ingest(self, stream_df: DataFrame, **kw):
-        """Start the family's Structured-Streaming ingest into this
-        index (``stream_<family>_ingest``: intra-batch collapse +
-        vs-history dedup + replayable append, with in-stream
-        ``gc_every``).  Returns the StreamingQuery."""
-        from astro_vectordb_spark.streaming import upsert as streaming
+    def stream_ingest(
+        self,
+        stream_df: DataFrame,
+        checkpoint: str | None = None,
+        query_name: str | None = None,
+        drop_dups: bool = True,
+        threshold: float | None = None,
+        eps: float | None = None,
+        max_hamming: int | None = None,
+        max_bucket_size: int | None = None,
+        gc_every: int | None = None,
+    ):
+        """Start continuous dedup-at-ingest into this index through the
+        shared ``streaming.upsert.run_stream`` runner.  Each
+        micro-batch runs ``index_lifecycle.ingest_batch``: with
+        ``drop_dups`` it collapses near-copies WITHIN the batch, drops
+        rows matching EVERYTHING already ingested (only the compact
+        bucket/primary tables are read, never the corpus), and appends
+        the rest under the micro-batch's ``batch_id``, so a redelivered
+        batch is a no-op.  Returns the StreamingQuery.
 
-        fn = getattr(streaming, f"stream_{self.family}_ingest")
-        return fn(stream_df, self.path, **kw)
+        The similarity floor is the family's own knob, with its match
+        default: ``threshold`` for minhash (0.8) and rp (0.9), ``eps``
+        for semdedup (0.95), ``max_hamming`` for simhash (the build
+        distance).  ``max_bucket_size`` caps per-bucket witnesses (the
+        match face's hot-bucket valve).
+
+        ``gc_every=N``: after every Nth applied batch, compact the
+        replay log (:meth:`gc`) scoped to this stream's own op
+        namespace (``ops=[<family>_append]``) — a horizon is only sound
+        against the owning stream's micro-batch ordering, so a sibling
+        stream on the same index (e.g. a paired remove stream) keeps
+        its rows verbatim, and a sibling commit racing the swap is
+        detected and carried (vault.gc).  Without gc a months-long
+        ingest accretes one tiny log file per micro-batch."""
+        from astro_vectordb_spark.sources.index_lifecycle import (
+            FAMILIES,
+            ingest_batch,
+        )
+        from astro_vectordb_spark.streaming.upsert import run_stream
+
+        knob, default = _KNOB[self.family]
+        given = {"threshold": threshold, "eps": eps,
+                 "max_hamming": max_hamming}
+        stray = sorted(k for k, v in given.items()
+                       if v is not None and k != knob)
+        if stray:
+            raise ValueError(
+                f"{self.family} indexes take {knob}=, not {stray}"
+            )
+        value = default if given[knob] is None else given[knob]
+        if self.family == "simhash":
+            from astro_vectordb_spark.sources.vault import _simhash_thr
+
+            value = _simhash_thr(self.meta, value)[1]
+        op = FAMILIES[self.family].append_op
+
+        def apply(b, bid):
+            # a fresh family object per batch: SemDeDup memoizes its
+            # centroid table, which a refresh may swap mid-stream
+            return ingest_batch(
+                self.spark, self.path, FAMILIES[self.family](), b, bid,
+                value, drop_dups=drop_dups, max_bucket_size=max_bucket_size,
+            )
+
+        return run_stream(
+            stream_df, apply, query_name or f"astro_{self.family}_ingest",
+            checkpoint=checkpoint, every=gc_every,
+            maintain=lambda: self.gc(ops=[op]),
+        )
 
     def __repr__(self) -> str:  # pragma: no cover - debug sugar
         return (f"NearDupIndex(family={self.family!r}, "

@@ -22,6 +22,11 @@ differing only in three kernels:
     bucketize(ctx, primary)    primary rows → (id, *bucket_keys)
     pair_score(ctx, a, b)      two primary values → similarity Column
 
+plus two hooks with defaults: ``self_pairs`` (the intra-batch pass of
+dedup-at-ingest, :func:`ingest_batch`; MinHash overrides it with its
+exact-duplicate collapse) and ``append_stats`` (append-time telemetry;
+SemDeDup reports centroid drift).
+
 This module is the single implementation of everything else (the
 round-12 verdict's "extract the shared index-lifecycle core"): the
 per-family faces in :mod:`astro_vectordb_spark.sources.vault` are thin
@@ -92,6 +97,31 @@ class BucketIndexFamily:
 
     def pair_score(self, ctx: IndexCtx, a, b):
         raise NotImplementedError
+
+    def append_stats(self, ctx: IndexCtx, fresh: DataFrame) -> dict:
+        """Append-time telemetry merged into every append report (see
+        :func:`append_to_index`); none by default."""
+        return {}
+
+    def self_pairs(
+        self,
+        ctx: IndexCtx,
+        batch: DataFrame,
+        threshold: float,
+        max_bucket_size: int | None = None,
+    ) -> DataFrame:
+        """Verified (a_id, b_id) near-dup pairs WITHIN one raw batch,
+        under the index's stored family: encode, bucketize, bucket
+        self-join, exact verify at the same ``threshold`` as the
+        historical match.  The intra-batch pass of
+        :func:`ingest_batch`."""
+        enc = self.encode(ctx, batch).localCheckpoint(eager=True)
+        cands = bucket_self_pairs(
+            self.bucketize(ctx, enc), self.bucket_keys, ctx.meta["id_col"],
+            max_bucket_size=max_bucket_size,
+            unique_assignment=self.unique_assignment,
+        )
+        return verify_pairs(ctx, self, cands, enc, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -228,7 +258,6 @@ def append_to_index(
     new_rows: DataFrame,
     batch_id: int | None = None,
     dedup_ids: bool = True,
-    stats_fn=None,
 ) -> dict:
     """Incremental insert with the crash-self-healing bucket sync:
     primary rows append BEFORE bucket rows, and the bucket append
@@ -237,13 +266,13 @@ def append_to_index(
     short-circuits the diff with two count-distinct aggregations since
     bucket ids are always a subset of primary ids).
 
-    ``stats_fn(ctx, fresh)`` (opt-in): called with the encoded
+    ``family.append_stats(ctx, fresh)`` is called with the encoded
     post-dedup batch; its dict merges into the report.  The hook is
-    how a family surfaces append-time telemetry — the SemDeDup face
-    reports per-batch assignment-similarity drift vs the train-time
-    baseline (the ``pq_append_to_index`` batch-MSE pattern) — without
-    the core knowing the family's statistics.  A replay-skipped batch
-    never calls it."""
+    how a family surfaces append-time telemetry — SemDeDup reports
+    per-batch assignment-similarity drift vs the train-time baseline
+    (the ``pq_append_to_index`` batch-MSE pattern) — without the core
+    knowing the family's statistics.  A replay-skipped batch never
+    calls it."""
     v = _v()
     if v._batch_already_committed(spark, path, batch_id,
                                   op=family.append_op):
@@ -255,7 +284,7 @@ def append_to_index(
     fresh = family.encode(ctx, new_rows)
     if dedup_ids:
         fresh = fresh.join(primary.select(id_col), id_col, "left_anti")
-    extra = stats_fn(ctx, fresh) if stats_fn is not None else {}
+    extra = family.append_stats(ctx, fresh)
     n_primary_before = primary.select(id_col).distinct().count()
     n_bucket_before = buckets.select(id_col).distinct().count()
     if n_primary_before == n_bucket_before:
@@ -282,7 +311,7 @@ def append_to_index(
         absolute=all_primary.select(id_col).distinct().count(),
     )
     v._record_batch(spark, path, batch_id, op=family.append_op)
-    # extra merges FIRST: a stats_fn returning a colliding key (e.g.
+    # extra merges FIRST: an append_stats returning a colliding key (e.g.
     # "appended_rows") must not overwrite the core replay/sync fields
     # callers depend on — core wins on collision.
     return {
@@ -501,6 +530,72 @@ def apply_groups(
     }
 
 
+def ingest_batch(
+    spark: SparkSession,
+    path: str,
+    family: BucketIndexFamily,
+    batch: DataFrame,
+    batch_id: int | None,
+    threshold: float,
+    drop_dups: bool = True,
+    max_bucket_size: int | None = None,
+) -> dict:
+    """Dedup-at-ingest of ONE batch — what a near-dup index's stream
+    runs per micro-batch.  With ``drop_dups``:
+
+    1. intra-batch: ``family.self_pairs`` (two near-copies of a
+       brand-new row arriving in one batch — neither is in the index,
+       so the historical match alone would append both) → connected
+       components → every non-min-id member drops;
+    2. historical: :func:`match_index` of the survivors against the
+       persisted index at the same ``threshold`` — only the compact
+       bucket/primary tables are read, never the corpus — and every
+       hit drops;
+
+    then the rest appends through the replay-logged
+    :func:`append_to_index`.  The report adds ``dropped_intra_batch``
+    and ``dropped_dups``.  Both passes are deterministic, so a
+    redelivered batch would keep the same survivors; it is skipped
+    outright when its ``(append_op, batch_id)`` is already logged.
+    ``max_bucket_size`` caps per-bucket witnesses in both passes (the
+    opt-in hot-bucket valve of :func:`match_index`)."""
+    from astro_vectordb_spark.operators.dedup import connected_components
+
+    v = _v()
+    if v._batch_already_committed(spark, path, batch_id,
+                                  op=family.append_op):
+        return {"appended_rows": 0, "repaired_rows": 0,
+                "skipped_replay": True, "dropped_dups": 0,
+                "dropped_intra_batch": 0}
+    n_intra = n_dups = 0
+    keep = batch
+    if drop_dups:
+        meta = v._read_meta(spark, path)
+        ctx = IndexCtx(spark, path, meta)
+        id_col = meta["id_col"]
+        comp = connected_components(
+            family.self_pairs(ctx, batch, threshold, max_bucket_size)
+        )
+        losers = comp.filter(F.col("id") != F.col("component")).select(
+            F.col("id").alias(id_col)
+        ).localCheckpoint(eager=True)
+        n_intra = losers.count()
+        if n_intra:
+            keep = keep.join(losers, id_col, "left_anti")
+        hits = match_index(
+            spark, path, family, keep, threshold,
+            max_bucket_size=max_bucket_size,
+        ).select(F.col("new_id").alias(id_col)).distinct()
+        hits = hits.localCheckpoint(eager=True)
+        n_dups = hits.count()
+        if n_dups:
+            keep = keep.join(hits, id_col, "left_anti")
+    rep = append_to_index(spark, path, family, keep, batch_id=batch_id)
+    rep["dropped_dups"] = int(n_dups)
+    rep["dropped_intra_batch"] = int(n_intra)
+    return rep
+
+
 # ---------------------------------------------------------------------------
 # the three families
 
@@ -548,6 +643,27 @@ class MinhashFamily(BucketIndexFamily):
             primary, num_hashes=int(m["num_hashes"]),
             bands=int(m["bands"]), id_col=m["id_col"],
         )
+
+    def self_pairs(self, ctx, batch, threshold, max_bucket_size=None):
+        """Lossless exact-duplicate collapse instead of the plain
+        bucket self-join: verified pairs among the batch's min-id
+        representatives per distinct signature
+        (``vault.minhash_sig_self_pairs``, no per-bucket cap), plus
+        one (rep, member) pair per same-signature member.  A member's
+        id exceeds its rep's, so it never heads its component."""
+        m = ctx.meta
+        id_col = m["id_col"]
+        sigs = self.encode(ctx, batch).localCheckpoint(eager=False)
+        reps, pairs = _v().minhash_sig_self_pairs(
+            sigs, num_hashes=int(m["num_hashes"]), bands=int(m["bands"]),
+            threshold=threshold, id_col=id_col,
+        )
+        members = (
+            sigs.join(reps.select("sig", F.col(id_col).alias("a_id")), "sig")
+            .filter(F.col(id_col) != F.col("a_id"))
+            .select("a_id", F.col(id_col).alias("b_id"))
+        )
+        return pairs.unionByName(members)
 
     def pair_score(self, ctx: IndexCtx, a, b):
         nh = int(ctx.meta["num_hashes"])
@@ -668,6 +784,32 @@ class SemDeDupFamily(BucketIndexFamily):
     def encode(self, ctx: IndexCtx, df: DataFrame) -> DataFrame:
         m = ctx.meta
         return df.select(m["id_col"], m["vec_col"])
+
+    def append_stats(self, ctx: IndexCtx, fresh: DataFrame) -> dict:
+        """Drift telemetry: the appended batch's assigned-centroid
+        similarity (mean, p95) next to the train-time baseline in
+        ``_meta`` — see ``semdedup_append_to_index``."""
+        from astro_vectordb_spark.functions.vector import similarity
+        from astro_vectordb_spark.sources.semdedup_index import _sim_stats
+
+        m = ctx.meta
+        per = (
+            fresh.select(F.col(m["vec_col"]).alias("_v"), m["id_col"])
+            .crossJoin(F.broadcast(self.centroids(ctx).select("centroid")))
+            .withColumn(
+                "_as", similarity(F.col("_v"), F.col("centroid"),
+                                  m["metric"])
+            )
+            .groupBy(m["id_col"])
+            .agg(F.max("_as").alias("_s"))
+        ).localCheckpoint(eager=True)
+        bm, bp = _sim_stats(per)
+        return {
+            "batch_sim_mean": bm,
+            "batch_sim_p95": bp,
+            "train_sim_mean": m.get("train_sim_mean"),
+            "train_sim_p95": m.get("train_sim_p95"),
+        }
 
     def bucketize(self, ctx: IndexCtx, primary: DataFrame) -> DataFrame:
         from astro_vectordb_spark.functions.vector import similarity
@@ -810,3 +952,12 @@ class SimhashFamily(BucketIndexFamily):
             F.lit(float(bits))
             - F.bit_count(a.bitwiseXOR(b)).cast("double")
         ) / F.lit(float(bits))
+
+
+# family name (as ``neardup.open`` detects it from ``_meta``) -> class
+FAMILIES = {
+    "minhash": MinhashFamily,
+    "simhash": SimhashFamily,
+    "rp": RPFamily,
+    "semdedup": SemDeDupFamily,
+}

@@ -328,35 +328,12 @@ def semdedup_append_to_index(
     Matching stays exact either way: candidates are verified with the
     true cosine; drift costs recall via worse blocking, not false
     positives."""
-    from astro_vectordb_spark.functions.vector import similarity
     from astro_vectordb_spark.sources.index_lifecycle import append_to_index
 
-    def _drift_stats(ctx, fresh: DataFrame) -> dict:
-        m = ctx.meta
-        cents = _read_maybe_swapped(
-            spark, os.path.join(path, "centroids")
-        ).select("centroid")
-        per = (
-            fresh.select(F.col(m["vec_col"]).alias("_v"), m["id_col"])
-            .crossJoin(F.broadcast(cents))
-            .withColumn(
-                "_as", similarity(F.col("_v"), F.col("centroid"),
-                                  m["metric"])
-            )
-            .groupBy(m["id_col"])
-            .agg(F.max("_as").alias("_s"))
-        ).localCheckpoint(eager=True)
-        bm, bp = _sim_stats(per)
-        return {
-            "batch_sim_mean": bm,
-            "batch_sim_p95": bp,
-            "train_sim_mean": m.get("train_sim_mean"),
-            "train_sim_p95": m.get("train_sim_p95"),
-        }
-
+    # the drift report is the family's append_stats hook
     return append_to_index(
         spark, path, _semdedup_family(), new_rows, batch_id=batch_id,
-        dedup_ids=dedup_ids, stats_fn=_drift_stats,
+        dedup_ids=dedup_ids,
     )
 
 

@@ -1514,10 +1514,10 @@ def pq_compact_index(
 
     # crash-safe swap (not an in-place overwrite): the rewrite reads the
     # LIVE files while writing a staging sibling, then two renames swap
-    # it in — a crash or executor loss mid-compaction (stream_pq_remove
-    # triggers this automatically via compact_every) can no longer lose
-    # the codes table, matching _remove_rows_by_file's write-then-delete
-    # ordering.
+    # it in — a crash or executor loss mid-compaction (a PQ handle's
+    # stream_remove triggers this automatically via compact_every) can
+    # no longer lose the codes table, matching _remove_rows_by_file's
+    # write-then-delete ordering.
     def _write(staging: str) -> None:
         writer = (
             survivors.repartition(ideal, "cell_id")
@@ -2814,7 +2814,7 @@ def _gc_locked(
     every other namespace are passed through VERBATIM (no horizon is
     written for an op the caller does not own).  A stream scheduling
     gc from its own foreachBatch should pass its own namespaces
-    (``stream_minhash_ingest(gc_every=)`` passes
+    (``neardup.open(spark, path).stream_ingest(gc_every=)`` passes
     ``ops=["minhash_append"]`` etc.): a horizon asserts "every
     batch_id <= H applied", which is only sound against the ordering
     of the stream that OWNS that namespace.

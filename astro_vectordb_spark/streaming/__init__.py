@@ -4,28 +4,12 @@ from astro_vectordb_spark.streaming.dedup import (
 )
 from astro_vectordb_spark.streaming.upsert import (
     foreach_batch_upsert,
-    stream_bm25_ingest,
-    stream_minhash_ingest,
-    stream_bm25_remove,
-    stream_hnsw_remove,
-    stream_ivf_remove,
-    stream_pq_ingest,
-    stream_rp_ingest,
-    stream_pq_remove,
     stream_sync_merge,
 )
 
 __all__ = [
     "first_seen_filter",
     "foreach_batch_upsert",
-    "stream_bm25_ingest",
-    "stream_minhash_ingest",
-    "stream_bm25_remove",
     "stream_dedup_exact",
-    "stream_hnsw_remove",
-    "stream_ivf_remove",
-    "stream_pq_ingest",
-    "stream_rp_ingest",
-    "stream_pq_remove",
     "stream_sync_merge",
 ]

@@ -13,8 +13,9 @@ graph-cleaning TODO, README.md:78-81): edge sweeps are the CHEAP
 delete (seconds vs a rebuild) but erode wiring — a removed node's
 pruned incoming edges are never re-wired — so the remove report
 carries per-shard mean live degree / under-wired fraction /
-needs_repair, and `auto_repair=True` (or `stream_hnsw_remove(...,
-auto_repair=True)`) closes the loop without a scheduled job.
+needs_repair, and `auto_repair=True` (or
+`index.open(spark, path).stream_remove(..., auto_repair=True)`) closes
+the loop without a scheduled job.
 
 Run: python examples/maintenance_pipeline.py [sf_dir]
 """

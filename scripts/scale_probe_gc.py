@@ -4,7 +4,8 @@ A long-running ingest stream appends one tiny parquet file to the
 index's ``_batches`` replay log per micro-batch; ``gc_every`` compacts
 it in-stream (scoped to the stream's own op namespace).  test_gc.py
 pins the correctness of one compaction; this probe drives a few
-hundred REAL micro-batches through ``stream_minhash_ingest(gc_every=)``
+hundred REAL micro-batches through
+``neardup.open(spark, path).stream_ingest(gc_every=)``
 interleaved with remove batches (their own namespace) across several
 stream stop/restart cycles, then asserts the steady state:
 
@@ -25,7 +26,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from pyspark.sql import functions as F
 
@@ -59,7 +62,7 @@ def main() -> None:
         minhash_remove_from_index,
         save_minhash_index,
     )
-    from astro_vectordb_spark.streaming.upsert import stream_minhash_ingest
+    from astro_vectordb_spark import neardup
 
     spark = get_spark("gc-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -103,8 +106,8 @@ def main() -> None:
                 text.alias("text"),
             )
         )
-        q = stream_minhash_ingest(
-            stream, path, checkpoint=ckpt, drop_dups=True,
+        q = neardup.open(spark, path).stream_ingest(
+            stream, checkpoint=ckpt, drop_dups=True,
             threshold=0.9, gc_every=GC_EVERY,
         )
         deadline = time.time() + STREAM_SECONDS
@@ -139,10 +142,13 @@ def main() -> None:
         max_rows_seen = max(max_rows_seen, n_rows)
 
     # phase 2: a-few-hundred-batches longevity, driving the EXACT
-    # foreachBatch body (_minhash_ingest_batch + the stream's scoped
-    # gc cadence) directly — same code path as the stream, without
-    # paying rate-source wall-clock per batch
-    from astro_vectordb_spark.streaming.upsert import _minhash_ingest_batch
+    # foreachBatch body (index_lifecycle.ingest_batch + the stream's
+    # scoped gc cadence) directly — same code path as the stream,
+    # without paying rate-source wall-clock per batch
+    from astro_vectordb_spark.sources.index_lifecycle import (
+        MinhashFamily,
+        ingest_batch,
+    )
 
     direct_applied = 0
     for i in range(DIRECT_BATCHES):
@@ -152,10 +158,7 @@ def main() -> None:
               f"epsilon zeta eta theta {i % 7} {i % 13}")],
             "doc_id long, text string",
         )
-        _minhash_ingest_batch(
-            spark, path, doc, batch_id=10_000 + i, drop_dups=True,
-            threshold=0.9, query_name="gc-probe-direct",
-        )
+        ingest_batch(spark, path, MinhashFamily(), doc, 10_000 + i, 0.9)
         direct_applied += 1
         if direct_applied % GC_EVERY == 0:
             gc(spark, path, keep_last_batches=KEEP_LAST,

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -18,8 +19,9 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_SF_SMOKE", "/root/testdata/sf0.001")
 # "call time >= 8 s" — which cuts ~3150 s of call time while keeping
 # at least one default-tier test in every test file (verified when the
 # manifest was generated).  The FULL suite still runs with
-# `python -m pytest tests/ -q -m ""` and must stay green; see
-# NOTES_r16.md for the measured wall times of both tiers.
+# `python -m pytest tests/ -q -m ""` and must stay green; the measured
+# wall times of both tiers are in VERDICT.md ("What's wrong", item 5)
+# and the ROADMAP.md "Round-16 snapshot".
 _SLOW_MANIFEST = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
 
 
@@ -60,3 +62,26 @@ def embeddings(spark, sf_dir):
 @pytest.fixture(scope="session")
 def documents(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+
+
+@pytest.fixture
+def parquet_stream(spark, tmp_path):
+    """``make(schema, *chunks)`` writes each chunk (a list of rows) as
+    ONE parquet file under a fresh directory and returns a file stream
+    over it reading one file per micro-batch: a finite, deterministic
+    source — start the query, then ``q.processAllAvailable()``."""
+    n = itertools.count()
+
+    def make(schema: str, *chunks):
+        src = str(tmp_path / f"stream_src_{next(n)}")
+        for rows in chunks:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    return make

@@ -166,46 +166,31 @@ class TestVersionGC:
 
 class TestStreamingGC:
     def test_rp_stream_gc_every_bounds_log_files(self, spark, data,
-                                                 tmp_path):
+                                                 tmp_path, parquet_stream):
         """gc_every compacts the replay log from inside foreachBatch —
         after many micro-batches the log stays at a bounded file
         count and replays remain no-ops."""
-        import time
-
+        from astro_vectordb_spark import neardup
         from astro_vectordb_spark.sources.vault import (
             rp_match_index,
             save_rp_index,
         )
-        from astro_vectordb_spark.streaming.upsert import stream_rp_ingest
 
         path = str(tmp_path / "idx_sgc")
         save_rp_index(data.filter(F.col("vec_id") < 40), path)
         fixed = [float(i) / 10 for i in range(DIM)]
-        stream = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "20")
-            .load()
-            .select(
-                (F.col("value") + 700_000).alias("vec_id"),
-                F.array(*[F.lit(v) for v in fixed]).alias("embedding"),
-            )
+        # eight micro-batches of the same fixed vector
+        stream = parquet_stream(
+            "vec_id long, embedding array<double>",
+            *([(700_000 + 2 * b + i, fixed) for i in range(2)]
+              for b in range(8)),
         )
-        q = stream_rp_ingest(
-            stream, path, drop_dups=True, threshold=0.999, gc_every=3
+        q = neardup.open(spark, path).stream_ingest(
+            stream, drop_dups=True, threshold=0.999, gc_every=3
         )
-        applied = 0
         try:
-            # generous deadline: under full-suite contention micro-
-            # batches take several seconds each; the bound below only
-            # asserts once enough batches actually applied
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                time.sleep(3)
-                applied = (q.lastProgress or {}).get("batchId", 0)
-                if len(_parquet_files(os.path.join(path, "_batches"))) and (
-                    applied >= 7
-                ):
-                    break
+            q.processAllAvailable()
+            applied = q.lastProgress["batchId"]
         finally:
             q.stop()
         n_files = len(_parquet_files(os.path.join(path, "_batches")))

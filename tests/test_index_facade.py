@@ -155,54 +155,85 @@ class TestKindMatrix:
 
 class TestStreamDispatch:
     def test_stream_ingest_and_remove_via_handle(self, spark, embeddings,
-                                                 tmp_path):
-        """One kind exercises each streaming dispatch (per-kind
-        semantics are pinned by the streaming suites); unsupported
-        kinds raise with the supported shape named."""
-        import time
-
-        from astro_vectordb_spark.operators.ann import ivf_build
+                                                 tmp_path, parquet_stream):
+        """One kind exercises the streaming dispatch (per-kind
+        semantics are pinned by the streaming suites)."""
         from astro_vectordb_spark.operators.pq import pq_encode, pq_train
-        from astro_vectordb_spark.sources.vault import (
-            save_ivf_index,
-            save_pq_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_pq_index
 
         model = pq_train(embeddings, m=8, ks=16, max_rows=N, seed=3)
         path = str(tmp_path / "pq_stream")
         save_pq_index(pq_encode(embeddings, model), model, path)
         idx = index.open(spark, path)
-        stream = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "5")
-            .load()
-            .select(
-                (F.col("value") + 900_000).alias("vec_id"),
-                F.array(*[F.lit(float(i)) for i in range(DIM)]).alias(
-                    "embedding"
-                ),
-            )
-        )
         q = idx.stream_ingest(
-            stream, checkpoint=str(tmp_path / "ckpt")
+            _const_stream(parquet_stream), checkpoint=str(tmp_path / "ckpt")
         )
         try:
-            deadline = time.time() + 40
-            while time.time() < deadline:
-                time.sleep(3)
-                if (q.lastProgress or {}).get("batchId", 0) >= 2:
-                    break
+            q.processAllAvailable()
         finally:
             q.stop()
         assert spark.read.parquet(path + "/codes").filter(
             F.col("vec_id") >= 900_000
         ).count() > 0
-        # ivf has no ingest stream: the error names the alternative
+
+    @pytest.mark.parametrize("kind", ["ivf"])
+    def test_kinds_without_replay_safe_append_cannot_stream_ingest(
+        self, spark, embeddings, tmp_path, parquet_stream, kind
+    ):
+        """The one stream-ingest rule: a redelivered micro-batch must be
+        a no-op.  IVF's append keeps no replay log (a redelivery would
+        insert twice), so the error names the foreachBatch
+        alternative."""
+        from astro_vectordb_spark.operators.ann import ivf_build
+        from astro_vectordb_spark.sources.vault import save_ivf_index
+
         assigned, cents = ivf_build(embeddings, k_cells=4)
-        ivf_path = str(tmp_path / "ivf_stream")
-        save_ivf_index(assigned, cents, ivf_path)
+        path = str(tmp_path / kind)
+        save_ivf_index(assigned, cents, path)
+        idx = index.open(spark, path)
+        assert idx.kind == kind
         with pytest.raises(ValueError, match="foreachBatch"):
-            index.open(spark, ivf_path).stream_ingest(stream)
+            idx.stream_ingest(_const_stream(parquet_stream))
+
+    def test_batch_id_logged_append_streams_replay_safe(
+        self, spark, embeddings, tmp_path, parquet_stream
+    ):
+        """The positive side of the rule: IVF-PQ's append takes
+        ``batch_id``, so it streams — and re-running the same
+        micro-batch id (a redelivery) inserts nothing twice."""
+        from astro_vectordb_spark.operators.pq import ivf_pq_build
+        from astro_vectordb_spark.sources.vault import save_ivf_pq_index
+
+        enc, cents, model = ivf_pq_build(embeddings, k_cells=4, m=8,
+                                         ks=16, max_rows=N, seed=3)
+        path = str(tmp_path / "ivfpq_stream")
+        save_ivf_pq_index(enc, cents, model, path)
+        idx = index.open(spark, path)
+        q = idx.stream_ingest(_const_stream(parquet_stream))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        codes = spark.read.parquet(path + "/codes")
+        assert codes.filter(F.col("vec_id") >= 900_000).count() == 6
+        redelivered = spark.createDataFrame(
+            _const_rows()[:3], "vec_id long, embedding array<float>"
+        )
+        assert idx.append(redelivered, batch_id=0)["skipped_replay"]
+        assert spark.read.parquet(path + "/codes").count() == N + 6
+
+
+def _const_rows():
+    return [(900_000 + i, [float(i + j) for j in range(DIM)])
+            for i in range(6)]
+
+
+def _const_stream(parquet_stream):
+    """Six fresh ids (900000...) in two micro-batches of three."""
+    rows = _const_rows()
+    return parquet_stream(
+        "vec_id long, embedding array<float>", rows[:3], rows[3:]
+    )
 
 
 class TestDetection:

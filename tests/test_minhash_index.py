@@ -132,25 +132,25 @@ class TestAppend:
 
     def test_stats_fn_cannot_shadow_core_report_fields(
             self, spark, corpus_rows, tmp_path):
-        """round-15 advice: the stats_fn extras merge FIRST in the
-        append report — a hook returning a colliding key (e.g.
-        'appended_rows') must not overwrite the core replay/sync
+        """round-15 advice: the family's append_stats extras merge
+        FIRST in the append report — a hook returning a colliding key
+        (e.g. 'appended_rows') must not overwrite the core replay/sync
         fields callers branch on."""
         from astro_vectordb_spark.sources.index_lifecycle import (
             MinhashFamily,
             append_to_index,
         )
 
+        class Colliding(MinhashFamily):
+            def append_stats(self, ctx, fresh):
+                return {"appended_rows": -999, "skipped_replay": True,
+                        "custom_stat": 7}
+
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, corpus_rows[:40]), path)
         rep = append_to_index(
-            spark, path, MinhashFamily(), _mkdocs(spark, corpus_rows[40:]),
+            spark, path, Colliding(), _mkdocs(spark, corpus_rows[40:]),
             batch_id=0,
-            stats_fn=lambda ctx, fresh: {
-                "appended_rows": -999,
-                "skipped_replay": True,
-                "custom_stat": 7,
-            },
         )
         # core fields win on collision; non-colliding extras survive
         assert rep["appended_rows"] == 20
@@ -236,76 +236,30 @@ class TestParityWithBatchOperator:
 
 
 class TestStreamingIngest:
-    def test_batch_kernel_drops_dups_and_appends_novel(
-        self, spark, corpus_rows, tmp_path
-    ):
-        """The per-batch kernel (what foreachBatch runs): duplicates of
-        indexed docs are dropped, novel docs append and become
-        matchable; a replayed batch is a no-op."""
-        from astro_vectordb_spark.streaming.upsert import (
-            _minhash_ingest_batch,
-        )
+    def test_stream_ingest_end_to_end(self, spark, corpus_rows, tmp_path,
+                                      parquet_stream):
+        """Stream integration: streamed docs become matchable in the
+        persisted index (the per-batch semantics are pinned by
+        test_neardup_facade.TestIngestBatch)."""
+        from astro_vectordb_spark import neardup
 
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, corpus_rows[:40]), path)
-        batch = _mkdocs(
-            spark,
-            [(100000, corpus_rows[3][1])]  # exact dup of indexed doc 3
-            + [(100001, "novel one two three four five six seven")],
+        body = "streamed body of fresh unseen words"
+        stream = parquet_stream(
+            "doc_id long, text string",
+            [(500_000 + i, body) for i in range(3)],
+            [(500_003 + i, body) for i in range(3)],
         )
-        rep = _minhash_ingest_batch(
-            spark, path, batch, 0, drop_dups=True, threshold=0.9,
-            query_name="t",
-        )
-        assert rep["dropped_dups"] == 1 and rep["appended_rows"] == 1
-        probe = _mkdocs(
-            spark, [(200000, "novel one two three four five six seven")]
-        )
-        got = minhash_match_index(spark, path, probe, threshold=0.9)
-        assert any(int(r.hist_id) == 100001 for r in got.collect())
-        rep2 = _minhash_ingest_batch(
-            spark, path, batch, 0, drop_dups=True, threshold=0.9,
-            query_name="t",
-        )
-        assert rep2["skipped_replay"]
-
-    def test_stream_ingest_end_to_end(self, spark, corpus_rows, tmp_path):
-        """Rate-stream integration: streamed docs become matchable in
-        the persisted index while the query runs."""
-        import time
-
-        from astro_vectordb_spark.streaming.upsert import (
-            stream_minhash_ingest,
-        )
-
-        path = str(tmp_path / "idx")
-        save_minhash_index(_mkdocs(spark, corpus_rows[:40]), path)
-        stream = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "10")
-            .load()
-            .select(
-                (F.col("value") + 500_000).alias("doc_id"),
-                F.lit("streamed body of fresh unseen words").alias("text"),
-            )
-        )
-        q = stream_minhash_ingest(stream, path, drop_dups=True)
-        probe = _mkdocs(
-            spark, [(900000, "streamed body of fresh unseen words")]
-        )
+        q = neardup.open(spark, path).stream_ingest(stream, drop_dups=True)
         try:
-            deadline = time.time() + 40
-            seen = False
-            while time.time() < deadline:
-                time.sleep(3)
-                if minhash_match_index(
-                    spark, path, probe, threshold=0.9
-                ).limit(1).count():
-                    seen = True
-                    break
+            q.processAllAvailable()
         finally:
             q.stop()
-        assert seen, "streamed docs never became matchable"
+        probe = _mkdocs(spark, [(900000, body)])
+        assert minhash_match_index(
+            spark, path, probe, threshold=0.9
+        ).limit(1).count(), "streamed docs never became matchable"
 
 
 class TestCompact:
@@ -557,8 +511,9 @@ class TestIntraBatchDedup:
         neither is in the historical index, so the historical match
         alone appended both — the intra-batch pass keeps only the
         min-id copy.  Replay stays a no-op."""
-        from astro_vectordb_spark.streaming.upsert import (
-            _minhash_ingest_batch,
+        from astro_vectordb_spark.sources.index_lifecycle import (
+            MinhashFamily,
+            ingest_batch,
         )
 
         path = str(tmp_path / "idx")
@@ -573,10 +528,7 @@ class TestIntraBatchDedup:
                 (100_003, corpus_rows[3][1]),  # historical dup
             ],
         )
-        rep = _minhash_ingest_batch(
-            spark, path, batch, 0, drop_dups=True, threshold=0.9,
-            query_name="t",
-        )
+        rep = ingest_batch(spark, path, MinhashFamily(), batch, 0, 0.9)
         assert rep["dropped_intra_batch"] == 1
         assert rep["dropped_dups"] == 1
         assert rep["appended_rows"] == 2
@@ -586,10 +538,7 @@ class TestIntraBatchDedup:
             for r in sigs.filter(F.col("doc_id") >= 100_000).collect()
         }
         assert landed == {100_000, 100_002}
-        rep2 = _minhash_ingest_batch(
-            spark, path, batch, 0, drop_dups=True, threshold=0.9,
-            query_name="t",
-        )
+        rep2 = ingest_batch(spark, path, MinhashFamily(), batch, 0, 0.9)
         assert rep2["skipped_replay"]
 
 

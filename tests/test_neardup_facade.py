@@ -149,35 +149,157 @@ class TestKindMatrix:
 
 
 class TestStreamDispatch:
-    def test_stream_ingest_via_handle(self, spark, corpora, tmp_path):
+    def test_stream_ingest_via_handle(self, spark, corpora, tmp_path,
+                                      parquet_stream):
         """The handle starts the family's streaming ingest (one family
-        exercises the dispatch; per-family semantics are pinned by the
-        family streaming suites)."""
-        import time
-
+        exercises the dispatch; per-family semantics are pinned by
+        TestIngestBatch and the family streaming suites)."""
         docs, _, _ = corpora
         path = str(tmp_path / "nd_stream")
         _build(spark, corpora, "minhash", path)
         idx = neardup.open(spark, path)
         first = docs.filter(F.col("doc_id") == 0).first()["text"]
-        stream = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "10")
-            .load()
-            .select(
-                (F.col("value") + 900_000).alias("doc_id"),
-                F.lit(first).alias("text"),
-            )
+        stream = parquet_stream(
+            "doc_id long, text string",
+            [(900_000 + i, first) for i in range(5)],
+            [(900_005 + i, first) for i in range(5)],
         )
         q = idx.stream_ingest(stream, drop_dups=True)
         try:
-            deadline = time.time() + 40
-            while time.time() < deadline:
-                time.sleep(3)
-                if (q.lastProgress or {}).get("batchId", 0) >= 3:
-                    break
+            q.processAllAvailable()
         finally:
             q.stop()
         # every streamed row was an exact copy of indexed doc 0:
         # nothing lands
         assert neardup.open(spark, path).meta["n_rows"] == 80
+
+    def test_family_knob_checked(self, spark, corpora, tmp_path,
+                                 parquet_stream):
+        """Each family takes its own similarity knob; another family's
+        is rejected rather than silently ignored."""
+        path = str(tmp_path / "nd_knob")
+        _build(spark, corpora, "rp", path)
+        stream = parquet_stream("vec_id long, embedding array<double>",
+                                [(1, [1.0] * DIM)])
+        with pytest.raises(ValueError, match="threshold="):
+            neardup.open(spark, path).stream_ingest(stream, eps=0.9)
+
+
+# Dedup-at-ingest on a static batch through the shared body
+# (``index_lifecycle.ingest_batch``, what every near-dup stream runs per
+# micro-batch).  Each case: one copy of an indexed row (a historical
+# dup), and for the facade corpora one intra-batch near-dup pair of a
+# new row, plus novel rows.  The last two cases are the former
+# per-family batch-kernel tests of the minhash and RP suites.
+_NOVEL_TEXT = "fresh unseen body of words arriving twice in one batch"
+_NOVEL_TEXT_2 = "another distinct novel passage about entirely other things"
+INGEST_CASES = FAMILIES + ["minhash_hist_only", "rp_stored_planes"]
+
+
+def _ingest_case(spark, corpora, tmp_path, case):
+    """-> (path, family, batch, threshold, expected, probe, probe_hit)."""
+    from astro_vectordb_spark.sources.index_lifecycle import FAMILIES as FAM
+
+    docs, vecs, _ = corpora
+    path = str(tmp_path / f"ingest_{case}")
+    if case == "minhash_hist_only":
+        from astro_vectordb_spark.sources.vault import save_minhash_index
+
+        words = ["merge", "hash", "spark", "join", "scan", "sort", "row",
+                 "plan"]
+        rows = [(i, " ".join(words[(i * 3 + j) % 8]
+                             for j in range(6 + i % 4)))
+                for i in range(40)]
+        save_minhash_index(
+            spark.createDataFrame(rows, "doc_id long, text string"), path
+        )
+        novel = "novel one two three four five six seven"
+        batch = spark.createDataFrame(
+            [(100000, rows[3][1]), (100001, novel)],  # dup of doc 3
+            "doc_id long, text string",
+        )
+        probe = spark.createDataFrame([(200000, novel)],
+                                      "doc_id long, text string")
+        return (path, FAM["minhash"](), batch, 0.9,
+                {"dropped_intra_batch": 0, "dropped_dups": 1,
+                 "landed": {100001}}, probe, 100001)
+    if case == "rp_stored_planes":
+        from astro_vectordb_spark.sources.vault import save_rp_index
+
+        rng = np.random.RandomState(5)
+        C = rng.randn(20, DIM)
+        C /= np.linalg.norm(C, axis=1, keepdims=True)
+        X = C[rng.randint(0, 20, 400)] + 0.05 * rng.randn(400, DIM)
+        schema = "vec_id long, embedding array<double>"
+        save_rp_index(
+            spark.createDataFrame(
+                [(i, [float(x) for x in X[i]]) for i in range(300)], schema
+            ),
+            path, n_planes=6, n_tables=8, seed=11,
+        )
+        v7, v350 = [float(x) for x in X[7]], [float(x) for x in X[350]]
+        # the twin (800350) loses intra-batch to 700350 (min id); the
+        # hist copy drops against indexed vector 7; one novel appends
+        batch = spark.createDataFrame(
+            [(700007, v7), (700350, v350), (800350, v350)], schema
+        )
+        probe = spark.createDataFrame([(900350, v350)], schema)
+        return (path, FAM["rp"](), batch, 0.99,
+                {"dropped_intra_batch": 1, "dropped_dups": 1,
+                 "landed": {700350}}, probe, 700350)
+    _build(spark, corpora, case, path)
+    expected = {"dropped_intra_batch": 1, "dropped_dups": 1,
+                "landed": {5001, 5003}}
+    if case in ("minhash", "simhash"):
+        schema = "doc_id long, text string"
+        copy = docs.filter(F.col("doc_id") == 3).first()["text"]
+        new, other = _NOVEL_TEXT, _NOVEL_TEXT_2
+    else:
+        schema = "vec_id long, embedding array<double>"
+        copy = vecs.filter(F.col("vec_id") == 3).first()["embedding"]
+        rng = np.random.RandomState(17)
+        new, other = ([float(x) for x in rng.randn(DIM)] for _ in range(2))
+    batch = spark.createDataFrame(
+        [(5000, copy), (5001, new), (5002, new), (5003, other)], schema
+    )
+    probe = spark.createDataFrame([(6001, new)], schema)
+    thr = {"minhash": 0.8, "simhash": 28 / 31, "rp": 0.9,
+           "semdedup": 0.95}[case]
+    return path, FAM[case](), batch, thr, expected, probe, 5001
+
+
+class TestIngestBatch:
+    @pytest.mark.parametrize("case", INGEST_CASES)
+    def test_drops_intra_and_hist_dups_appends_novel_replay_noop(
+        self, spark, corpora, tmp_path, case
+    ):
+        import os
+
+        from astro_vectordb_spark.sources.index_lifecycle import (
+            ingest_batch,
+            match_index,
+        )
+
+        path, fam, batch, thr, expected, probe, hit = _ingest_case(
+            spark, corpora, tmp_path, case
+        )
+        n0 = neardup.open(spark, path).meta["n_rows"]
+        rep = ingest_batch(spark, path, fam, batch, 0, thr)
+        assert rep["dropped_intra_batch"] == expected["dropped_intra_batch"]
+        assert rep["dropped_dups"] == expected["dropped_dups"]
+        assert rep["appended_rows"] == len(expected["landed"])
+        id_col = neardup.open(spark, path).meta["id_col"]
+        primary = os.path.join(path, fam.primary_table)
+        landed = {
+            int(r[0]) for r in spark.read.parquet(primary)
+            .filter(F.col(id_col) >= 5000).select(id_col).collect()
+        }
+        assert landed == expected["landed"]
+        # the appended novel row is matchable as history
+        got = match_index(spark, path, fam, probe, thr)
+        assert any(int(r["hist_id"]) == hit for r in got.collect())
+        # a redelivered batch is a no-op
+        rep2 = ingest_batch(spark, path, fam, batch, 0, thr)
+        assert rep2["skipped_replay"]
+        meta = neardup.open(spark, path).meta
+        assert meta["n_rows"] == n0 + len(expected["landed"])

@@ -6,8 +6,6 @@ health/repair hook on the streaming HNSW remove path (item 4)."""
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -551,13 +549,13 @@ class TestStreamRepairEvery:
             hnsw_query_shards,
             hnsw_shard_health,
         )
+        from astro_vectordb_spark import index
         from astro_vectordb_spark.sources.vault import (
             hnsw_append_to_index,
             hnsw_remove_from_index,
             load_hnsw_index,
             save_hnsw_index,
         )
-        from astro_vectordb_spark.streaming.upsert import stream_hnsw_remove
 
         rng = np.random.RandomState(31)
         C = rng.normal(size=(6, DIM))
@@ -606,28 +604,19 @@ class TestStreamRepairEvery:
             [(i,) for i in (7, 13)], "vec_id long"
         ).coalesce(1).write.parquet(src)
         stream = spark.readStream.schema("vec_id long").parquet(src)
-        q = stream_hnsw_remove(
-            stream, path, mode="sweep",
+        q = index.open(spark, path).stream_remove(
+            stream, mode="sweep",
             repair_every=1, health_threshold=frac,
         )
         try:
-            deadline = time.time() + 120
-            healed = False
-            while time.time() < deadline:
-                time.sleep(3)
-                try:
-                    g, m = load_hnsw_index(spark, path)
-                    rows = hnsw_shard_health(
-                        g, m=8, min_degree_frac=frac
-                    ).collect()
-                except Exception:
-                    continue  # mid-rewrite; retry (plain-parquet contract)
-                if rows and not any(r["needs_repair"] for r in rows):
-                    healed = True
-                    break
+            q.processAllAvailable()
         finally:
             q.stop()
-        assert healed, "periodic pass must rebuild the eroded shards"
+        g, m = load_hnsw_index(spark, path)
+        rows = hnsw_shard_health(g, m=8, min_degree_frac=frac).collect()
+        assert rows and not any(r["needs_repair"] for r in rows), (
+            "periodic pass must rebuild the eroded shards"
+        )
 
         # recall restored on the survivors
         graph2, meta2 = load_hnsw_index(spark, path)

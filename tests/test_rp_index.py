@@ -265,83 +265,34 @@ class TestRemoveCompact:
 
 
 class TestStreamingIngest:
-    def test_batch_kernel_intra_and_hist_dedup(self, spark, data, index):
-        """The per-batch kernel: intra-batch near-dups collapse to a
-        min-id survivor, copies of indexed vectors drop against the
-        history, novel vectors append; a replayed batch is a no-op."""
-        from astro_vectordb_spark.streaming.upsert import _rp_ingest_batch
-
-        df, X = data
-        path, _ = index
-        hist_copy = df.filter(F.col("vec_id") == 7).select(
-            (F.col("vec_id") + 700000).alias("vec_id"), "embedding"
-        )
-        novel = df.filter(F.col("vec_id") == 350).select(
-            (F.col("vec_id") + 700000).alias("vec_id"), "embedding"
-        )
-        novel_twin = df.filter(F.col("vec_id") == 350).select(
-            (F.col("vec_id") + 800000).alias("vec_id"), "embedding"
-        )
-        batch = hist_copy.unionByName(novel).unionByName(novel_twin)
-        rep = _rp_ingest_batch(
-            spark, path, batch, 0, drop_dups=True, threshold=0.99,
-            query_name="t",
-        )
-        # the twin (800350) loses intra-batch to 700350 (min id); the
-        # hist copy drops against indexed vector 7; one novel appends
-        assert rep["dropped_intra_batch"] == 1
-        assert rep["dropped_dups"] == 1
-        assert rep["appended_rows"] == 1
-        from astro_vectordb_spark.sources.vault import rp_match_index
-
-        probe = df.filter(F.col("vec_id") == 350).select(
-            (F.col("vec_id") + 900000).alias("vec_id"), "embedding"
-        )
-        got = rp_match_index(spark, path, probe, threshold=0.99)
-        assert any(int(r["hist_id"]) == 700350 for r in got.collect())
-        rep2 = _rp_ingest_batch(
-            spark, path, batch, 0, drop_dups=True, threshold=0.99,
-            query_name="t",
-        )
-        assert rep2["skipped_replay"]
-
-    def test_stream_ingest_end_to_end(self, spark, data, index):
-        """Rate-stream integration: streamed vectors become matchable
-        in the persisted index while the query runs."""
-        import time
-
-        from astro_vectordb_spark.sources.vault import rp_match_index
-        from astro_vectordb_spark.streaming.upsert import stream_rp_ingest
+    def test_stream_ingest_end_to_end(self, spark, data, index,
+                                      parquet_stream):
+        """Stream integration: streamed vectors become matchable in the
+        persisted index (the per-batch semantics are pinned by
+        test_neardup_facade.TestIngestBatch)."""
+        from astro_vectordb_spark import neardup
 
         df, X = data
         path, _ = index
         fixed = [float(x) for x in X[399]]
-        stream = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "5")
-            .load()
-            .select(
-                (F.col("value") + 600_000).alias("vec_id"),
-                F.array(*[F.lit(v) for v in fixed]).alias("embedding"),
-            )
+        stream = parquet_stream(
+            "vec_id long, embedding array<double>",
+            [(600_000 + i, fixed) for i in range(3)],
+            [(600_003 + i, fixed) for i in range(3)],
         )
-        q = stream_rp_ingest(stream, path, drop_dups=True, threshold=0.99)
+        q = neardup.open(spark, path).stream_ingest(
+            stream, drop_dups=True, threshold=0.99
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
         probe = spark.createDataFrame(
             [(950_000, fixed)], "vec_id long, embedding array<double>"
         )
-        try:
-            deadline = time.time() + 40
-            seen = False
-            while time.time() < deadline:
-                time.sleep(3)
-                if rp_match_index(
-                    spark, path, probe, threshold=0.99
-                ).limit(1).count():
-                    seen = True
-                    break
-        finally:
-            q.stop()
-        assert seen
+        assert rp_match_index(
+            spark, path, probe, threshold=0.99
+        ).limit(1).count()
 
 
 class TestGroupsApply:

@@ -398,14 +398,10 @@ class TestCompact:
 
 class TestStreaming:
     def test_stream_ingest_dedups_and_serves(self, spark, data,
-                                             tmp_path):
+                                             tmp_path, parquet_stream):
         """Streaming ingest: intra-batch + vs-history semantic dedup,
         replay-logged appends, gc_every bounding the log."""
-        import time
-
-        from astro_vectordb_spark.streaming.upsert import (
-            stream_semdedup_ingest,
-        )
+        from astro_vectordb_spark import neardup
 
         df, cents = data
         path = str(tmp_path / "sd_stream")
@@ -415,27 +411,18 @@ class TestStreaming:
         # constant-vector stream: every micro-batch row is an exact
         # copy of one indexed vector's direction -> everything after
         # the first novel append must be dropped as a duplicate
-        first = df.filter(F.col("vec_id") == 0).first()["embedding"]
-        stream = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "15")
-            .load()
-            .select(
-                (F.col("value") + 700_000).alias("vec_id"),
-                F.array(*[F.lit(float(x)) for x in first]).alias(
-                    "embedding"
-                ),
-            )
+        first = [float(x) for x in
+                 df.filter(F.col("vec_id") == 0).first()["embedding"]]
+        stream = parquet_stream(
+            "vec_id long, embedding array<double>",
+            *([(700_000 + 3 * b + i, first) for i in range(3)]
+              for b in range(6)),
         )
-        q = stream_semdedup_ingest(
-            stream, path, drop_dups=True, eps=0.999, gc_every=3
+        q = neardup.open(spark, path).stream_ingest(
+            stream, drop_dups=True, eps=0.999, gc_every=3
         )
         try:
-            deadline = time.time() + 40
-            while time.time() < deadline:
-                time.sleep(3)
-                if (q.lastProgress or {}).get("batchId", 0) >= 5:
-                    break
+            q.processAllAvailable()
         finally:
             q.stop()
         vecs, cells, _, meta = load_semdedup_index(spark, path)

@@ -210,12 +210,8 @@ class TestNativeFamily:
 
 class TestStreaming:
     def test_stream_ingest_dedups_and_serves(self, spark, data,
-                                             tmp_path):
-        import time
-
-        from astro_vectordb_spark.streaming.upsert import (
-            stream_simhash_ingest,
-        )
+                                             tmp_path, parquet_stream):
+        from astro_vectordb_spark import neardup
 
         path = str(tmp_path / "sh_stream")
         save_simhash_index(
@@ -224,24 +220,16 @@ class TestStreaming:
         # constant-text stream: every micro-batch row is an exact copy
         # of indexed doc 0 -> everything must drop as a duplicate
         first = data.filter(F.col("doc_id") == 0).first()["text"]
-        stream = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "15")
-            .load()
-            .select(
-                (F.col("value") + 700_000).alias("doc_id"),
-                F.lit(first).alias("text"),
-            )
+        stream = parquet_stream(
+            "doc_id long, text string",
+            *([(700_000 + 3 * b + i, first) for i in range(3)]
+              for b in range(6)),
         )
-        q = stream_simhash_ingest(
-            stream, path, drop_dups=True, gc_every=3
+        q = neardup.open(spark, path).stream_ingest(
+            stream, drop_dups=True, gc_every=3
         )
         try:
-            deadline = time.time() + 45
-            while time.time() < deadline:
-                time.sleep(3)
-                if (q.lastProgress or {}).get("batchId", 0) >= 5:
-                    break
+            q.processAllAvailable()
         finally:
             q.stop()
         sigs, _, meta = load_simhash_index(spark, path)

@@ -344,47 +344,37 @@ def test_relational_scaffolding(spark, sf_dir):
     assert ranked.filter(F.col("rank_in_nation") > 3).count() == 0
 
 
-def test_stream_index_ingest_live_hnsw(spark, embeddings, tmp_path):
+def test_stream_index_ingest_live_hnsw(spark, embeddings, tmp_path,
+                                      parquet_stream):
     """Streaming vectors land in the persisted sharded HNSW index and
     become searchable — the reference's live addPoint loop, one
     micro-batch at a time, touched shards only."""
+    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.hnsw import (
         hnsw_build_shards,
         hnsw_query_shards,
     )
     from astro_vectordb_spark.sources.vault import load_hnsw_index, save_hnsw_index
-    from astro_vectordb_spark.streaming.upsert import stream_index_ingest
 
     base = embeddings.filter(F.col("vec_id") < 300)
     graph = hnsw_build_shards(base, num_shards=2, ef_construction=64)
     p = str(tmp_path / "live_hnsw")
     save_hnsw_index(graph, p, m=16, metric="cosine")
 
-    # stream ticks map to the held-out vectors 300..., a few per batch
+    # the held-out vectors 300... stream in over three micro-batches
     held = embeddings.filter(F.col("vec_id") >= 300).select(
         "vec_id", "embedding"
     ).collect()
-    held_df = spark.createDataFrame(
-        [(int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in held],
+    rows = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
+            for r in held]
+    n_held = len(rows)
+    stream = parquet_stream(
         "vec_id long, embedding array<float>",
-    ).cache()
-    n_held = held_df.count()
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "200").load()
-        .select((F.col("value") + 300).alias("vec_id"))
-        .join(held_df, on="vec_id")  # stream-static join: real vectors
+        *(rows[i::3] for i in range(3)),
     )
-    q = stream_index_ingest(stream, p)
+    q = index.open(spark, p).stream_ingest(stream)
     try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            time.sleep(2)
-            g, _ = load_hnsw_index(spark, p)
-            if g.count() >= 300 + n_held:
-                break
-        else:
-            raise AssertionError("stream never ingested all held-out vectors")
+        q.processAllAvailable()
     finally:
         q.stop()
 
@@ -600,14 +590,14 @@ def test_first_seen_filter_counts_dups(spark):
     assert ok, "per-fingerprint first-seen state did not accumulate"
 
 
-def test_stream_pq_ingest_live_index(spark, tmp_path):
+def test_stream_pq_ingest_live_index(spark, tmp_path, parquet_stream):
     """foreachBatch PQ ingest: streamed rows become searchable codes in
     the persisted index, encoded under the frozen codebooks."""
     import numpy as np
 
+    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.pq import pq_encode, pq_train
     from astro_vectordb_spark.sources.vault import save_pq_index
-    from astro_vectordb_spark.streaming.upsert import stream_pq_ingest
 
     rng = np.random.RandomState(5)
     pts = rng.normal(size=(200, 16)).astype(np.float32)
@@ -619,43 +609,37 @@ def test_stream_pq_ingest_live_index(spark, tmp_path):
     path = str(tmp_path / "pq_stream_idx")
     save_pq_index(pq_encode(base, model), model, path)
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "20").load()
-        .select(
-            (F.col("value") + 100_000).alias("vec_id"),
-            F.array(*[F.lit(0.1) * (F.col("value") % 7 + i) for i in range(16)])
-            .cast("array<float>")
-            .alias("embedding"),
-        )
+    rows = [
+        (100_000 + v, [0.1 * (v % 7 + i) for i in range(16)])
+        for v in range(20)
+    ]
+    stream = parquet_stream(
+        "vec_id long, embedding array<float>", rows[:10], rows[10:]
     )
-    q = stream_pq_ingest(stream, path)
+    q = index.open(spark, path).stream_ingest(stream)
     try:
-        deadline = time.time() + 40
-        grown = False
-        while time.time() < deadline:
-            time.sleep(3)
-            n = _poll_count(spark, f"{path}/codes")
-            if n is not None and n > 210:
-                grown = True
-                break
+        q.processAllAvailable()
     finally:
         q.stop()
-    assert grown, "streamed rows never appeared in the codes table"
+    n = spark.read.parquet(f"{path}/codes").count()
+    assert n > 210, (
+        "streamed rows never appeared in the codes table"
+    )
     codes = spark.read.parquet(f"{path}/codes")
     assert codes.filter("vec_id >= 100000").count() > 0
     row = codes.filter("vec_id >= 100000").first()
     assert len(row["pq_code"]) == 4
 
 
-def test_stream_bm25_ingest_merges_stats(spark, tmp_path):
+def test_stream_bm25_ingest_merges_stats(spark, tmp_path, parquet_stream):
     """foreachBatch BM25 ingest: streamed docs merge into the persisted
     term/corpus statistics via versioned commits."""
+    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.keyword import bm25_term_stats
     from astro_vectordb_spark.sources.vault import (
         load_bm25_index,
         save_bm25_index,
     )
-    from astro_vectordb_spark.streaming.upsert import stream_bm25_ingest
 
     base = spark.createDataFrame(
         [(i, "spark merge join") for i in range(20)],
@@ -666,26 +650,20 @@ def test_stream_bm25_ingest_merges_stats(spark, tmp_path):
     save_bm25_index(ts, cs, path)
     n0 = cs.first()["n"]
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "20").load()
-        .select(
-            (F.col("value") + 1_000).alias("doc_id"),
-            F.lit("hash scan sort").alias("text"),
-        )
+    stream = parquet_stream(
+        "doc_id long, text string",
+        [(1_000 + v, "hash scan sort") for v in range(10)],
+        [(1_010 + v, "hash scan sort") for v in range(10)],
     )
-    q = stream_bm25_ingest(stream, path)
+    q = index.open(spark, path).stream_ingest(stream)
     try:
-        deadline = time.time() + 40
-        grown = False
-        while time.time() < deadline:
-            time.sleep(3)
-            _, cs2 = load_bm25_index(spark, path)
-            if cs2.first()["n"] > n0:
-                grown = True
-                break
+        q.processAllAvailable()
     finally:
         q.stop()
-    assert grown, "streamed docs never merged into the corpus stats"
+    _, cs2 = load_bm25_index(spark, path)
+    assert cs2.first()["n"] > n0, (
+        "streamed docs never merged into the corpus stats"
+    )
     ts2, cs2 = load_bm25_index(spark, path)
     dfs = {r["term"]: r["df"] for r in ts2.collect()}
     # new vocabulary present, old df counts intact
@@ -767,30 +745,24 @@ class TestMultiTableCommit:
         assert cs2.first()["n"] == 10  # no double count
 
 
-def _poll_count(spark, path: str) -> int | None:
-    """Row count of a PLAIN (unversioned) parquet dir that a
-    concurrent maintenance stream may be rewriting file-by-file:
-    a reader can plan on a listing whose files the write-then-delete
-    rewrite removes before the scan runs (FileNotFound mid-poll).
-    The versioned tables (sources.versioned) are immune by design;
-    for plain tables the reader contract is retry — return None and
-    let the poll loop try again."""
-    from py4j.protocol import Py4JJavaError
-
-    try:
-        return spark.read.parquet(path).count()
-    except Py4JJavaError:
-        return None
+def _id_stream(parquet_stream):
+    """Ids 0..49 in two micro-batches, the second one repeating ids of
+    the first (removes of already-removed ids are no-ops)."""
+    return parquet_stream(
+        "vec_id long",
+        [(v,) for v in range(30)],
+        [(v,) for v in range(20, 50)],
+    )
 
 
-def test_stream_pq_remove_deletes_ids(spark, tmp_path):
+def test_stream_pq_remove_deletes_ids(spark, tmp_path, parquet_stream):
     """foreachBatch PQ delete: streamed vec_ids are physically removed
     from the persisted codes table (touched-files-only rewrite)."""
     import numpy as np
 
+    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.pq import pq_encode, pq_train
     from astro_vectordb_spark.sources.vault import save_pq_index
-    from astro_vectordb_spark.streaming.upsert import stream_pq_remove
 
     rng = np.random.RandomState(1)
     df = spark.createDataFrame(
@@ -801,37 +773,32 @@ def test_stream_pq_remove_deletes_ids(spark, tmp_path):
     path = str(tmp_path / "pq_rm_stream")
     save_pq_index(pq_encode(df, model), model, path)
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "20").load()
-        .select((F.col("value") % 50).alias("vec_id"))
-    )
-    q = stream_pq_remove(stream, path)
+    q = index.open(spark, path).stream_remove(_id_stream(parquet_stream))
     try:
-        deadline = time.time() + 40
-        shrunk = False
-        while time.time() < deadline:
-            time.sleep(3)
-            n = _poll_count(spark, f"{path}/codes")
-            if n is not None and n <= 350:
-                shrunk = True
-                break
+        q.processAllAvailable()
     finally:
         q.stop()
-    assert shrunk, "streamed removals never reached the codes table"
+    n = spark.read.parquet(f"{path}/codes").count()
+    assert n <= 350, (
+        "streamed removals never reached the codes table"
+    )
     codes = spark.read.parquet(f"{path}/codes")
     assert codes.filter("vec_id < 50").count() == 0
     assert codes.filter("vec_id >= 50").count() == 350
 
 
 def test_pq_remove_batch_auto_compacts(spark, tmp_path):
-    """The streaming delete's per-batch body: every compact_every-th
-    applied batch triggers codes-table compaction (delete traffic
-    otherwise grows the file count without bound)."""
+    """The streaming delete's per-batch body (the shared runner's
+    micro_batch over the handle's remove, with compact as the every-N
+    hook — what ``stream_remove(compact_every=2)`` runs): every
+    compact_every-th applied batch triggers codes-table compaction
+    (delete traffic otherwise grows the file count without bound)."""
     import numpy as np
 
+    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.pq import pq_encode, pq_train
     from astro_vectordb_spark.sources.vault import save_pq_index
-    from astro_vectordb_spark.streaming.upsert import _pq_remove_batch
+    from astro_vectordb_spark.streaming.upsert import micro_batch
 
     rng = np.random.RandomState(4)
     df = spark.createDataFrame(
@@ -843,29 +810,34 @@ def test_pq_remove_batch_auto_compacts(spark, tmp_path):
     # many small files so compaction has something to do
     save_pq_index(pq_encode(df.repartition(12), model), model, path)
 
+    idx = index.open(spark, path)
+    body = micro_batch(
+        lambda b, bid: idx.remove(b.select("vec_id"), batch_id=bid), "t",
+        every=2, maintain=idx.compact,
+    )
     ids1 = spark.createDataFrame([(i,) for i in range(5)], "vec_id long")
-    rep1 = _pq_remove_batch(spark, path, ids1, 1, compact_every=2, query_name="t")
-    assert "compaction" not in rep1  # batch 1 of 2: no trigger
+    rep1 = body(ids1, 1)
+    assert "maintenance" not in rep1  # batch 1 of 2: no trigger
     ids2 = spark.createDataFrame([(i,) for i in range(5, 10)], "vec_id long")
-    rep2 = _pq_remove_batch(spark, path, ids2, 2, compact_every=2, query_name="t")
-    assert rep2["compaction"]["compacted"] is True
+    rep2 = body(ids2, 2)
+    assert rep2["maintenance"]["compacted"] is True
     codes = spark.read.parquet(f"{path}/codes")
     assert codes.count() == 290
     assert codes.filter("vec_id < 10").count() == 0
     # replayed batch never re-compacts or re-removes
-    rep3 = _pq_remove_batch(spark, path, ids2, 2, compact_every=2, query_name="t")
-    assert rep3.get("skipped_replay") and "compaction" not in rep3
+    rep3 = body(ids2, 2)
+    assert rep3.get("skipped_replay") and "maintenance" not in rep3
 
 
-def test_stream_hnsw_remove_deletes_ids(spark, tmp_path):
+def test_stream_hnsw_remove_deletes_ids(spark, tmp_path, parquet_stream):
     """foreachBatch HNSW delete (r9): streamed vec_ids are physically
     removed from the persisted graph (edge sweep), and the shared
     index is safe because the replay log is namespaced per op."""
     import numpy as np
 
+    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
     from astro_vectordb_spark.sources.vault import save_hnsw_index
-    from astro_vectordb_spark.streaming.upsert import stream_hnsw_remove
 
     rng = np.random.RandomState(2)
     df = spark.createDataFrame(
@@ -876,36 +848,28 @@ def test_stream_hnsw_remove_deletes_ids(spark, tmp_path):
     graph = hnsw_build_shards(df, num_shards=2, m=8, seed=5)
     save_hnsw_index(graph, path, m=8, metric="cosine")
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "20").load()
-        .select((F.col("value") % 50).alias("vec_id"))
-    )
-    q = stream_hnsw_remove(stream, path)
+    q = index.open(spark, path).stream_remove(_id_stream(parquet_stream))
     try:
-        deadline = time.time() + 60
-        shrunk = False
-        while time.time() < deadline:
-            time.sleep(3)
-            n = _poll_count(spark, f"{path}/graph")
-            if n is not None and n <= 350:
-                shrunk = True
-                break
+        q.processAllAvailable()
     finally:
         q.stop()
-    assert shrunk, "streamed removals never reached the graph"
+    n = spark.read.parquet(f"{path}/graph").count()
+    assert n <= 350, (
+        "streamed removals never reached the graph"
+    )
     live = spark.read.parquet(f"{path}/graph")
     assert live.filter("vec_id < 50").count() == 0
     assert live.filter("vec_id >= 50").count() == 350
 
 
-def test_stream_ivf_remove_deletes_ids(spark, tmp_path):
+def test_stream_ivf_remove_deletes_ids(spark, tmp_path, parquet_stream):
     """foreachBatch IVF delete (r9): streamed vec_ids leave the
     cell-partitioned vectors table; touched cells' stats recompute."""
     import numpy as np
 
+    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.ann import ivf_build, ivf_cell_stats
     from astro_vectordb_spark.sources.vault import save_ivf_index
-    from astro_vectordb_spark.streaming.upsert import stream_ivf_remove
 
     rng = np.random.RandomState(3)
     df = spark.createDataFrame(
@@ -919,23 +883,15 @@ def test_stream_ivf_remove_deletes_ids(spark, tmp_path):
         cell_stats=ivf_cell_stats(assigned, cents),
     )
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "20").load()
-        .select((F.col("value") % 50).alias("vec_id"))
-    )
-    q = stream_ivf_remove(stream, path)
+    q = index.open(spark, path).stream_remove(_id_stream(parquet_stream))
     try:
-        deadline = time.time() + 60
-        shrunk = False
-        while time.time() < deadline:
-            time.sleep(3)
-            n = _poll_count(spark, f"{path}/vectors")
-            if n is not None and n <= 350:
-                shrunk = True
-                break
+        q.processAllAvailable()
     finally:
         q.stop()
-    assert shrunk, "streamed removals never reached the vectors table"
+    n = spark.read.parquet(f"{path}/vectors").count()
+    assert n <= 350, (
+        "streamed removals never reached the vectors table"
+    )
     live = spark.read.parquet(f"{path}/vectors")
     assert live.filter("vec_id < 50").count() == 0
     assert live.filter("vec_id >= 50").count() == 350
@@ -1070,15 +1026,15 @@ class TestBM25Remove:
         ).get("skipped_replay")
 
 
-def test_stream_bm25_remove_subtracts_stats(spark, tmp_path):
+def test_stream_bm25_remove_subtracts_stats(spark, tmp_path, parquet_stream):
     """foreachBatch BM25 delete: streamed (doc_id, text) rows subtract
     from the persisted term/corpus statistics — the erasure stream."""
+    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.keyword import bm25_term_stats
     from astro_vectordb_spark.sources.vault import (
         load_bm25_index,
         save_bm25_index,
     )
-    from astro_vectordb_spark.streaming.upsert import stream_bm25_remove
 
     base = spark.createDataFrame(
         [(i, "spark merge join") for i in range(5000)],
@@ -1089,26 +1045,20 @@ def test_stream_bm25_remove_subtracts_stats(spark, tmp_path):
     save_bm25_index(ts, cs, path)
     n0 = cs.first()["n"]
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "20").load()
-        .select(
-            F.col("value").alias("doc_id"),
-            F.lit("spark merge join").alias("text"),
-        )
+    stream = parquet_stream(
+        "doc_id long, text string",
+        [(v, "spark merge join") for v in range(20)],
+        [(v, "spark merge join") for v in range(20, 40)],
     )
-    q = stream_bm25_remove(stream, path)
+    q = index.open(spark, path).stream_remove(stream)
     try:
-        deadline = time.time() + 40
-        shrunk = False
-        while time.time() < deadline:
-            time.sleep(3)
-            _, cs2 = load_bm25_index(spark, path)
-            if cs2.first()["n"] < n0:
-                shrunk = True
-                break
+        q.processAllAvailable()
     finally:
         q.stop()
-    assert shrunk, "streamed removals never left the corpus stats"
+    _, cs2 = load_bm25_index(spark, path)
+    assert cs2.first()["n"] < n0, (
+        "streamed removals never left the corpus stats"
+    )
     ts2, cs2 = load_bm25_index(spark, path)
     row = cs2.first()
     assert row["total_dl"] == row["n"] * 3  # exact decrements
