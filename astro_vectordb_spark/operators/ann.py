@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from astro_vectordb_spark.functions.vector import l2_norm
 from astro_vectordb_spark.operators.topk import topk_search
+from astro_vectordb_spark.session import local_frame
 
 DEFAULT_CELLS = 16
 DEFAULT_SEED = 42
@@ -121,7 +122,8 @@ def ivf_build_sampled(
     assigned = df.withColumn(
         "cell_id", F.explode(assign(F.col(vec_col)))
     )
-    centroids = df.sparkSession.createDataFrame(
+    centroids = local_frame(
+        df.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(C)],
         "cell_id int, centroid array<double>",
     )
@@ -261,7 +263,8 @@ def ivf_build(
         .join(df, on=id_col)
     )
     spark = df.sparkSession
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell_id int, centroid array<double>",
     )

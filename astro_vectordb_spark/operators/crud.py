@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark.session import local_frame
+
 
 def validate_embeddings(
     df: DataFrame,
@@ -76,7 +78,8 @@ def tombstone_delete(
     a broadcast anti-join (removeNodeFromGraph's intent, hnsw.ts:179-200,
     without the graph surgery because there is no materialized graph).
     """
-    ids_df = df.sparkSession.createDataFrame(
+    ids_df = local_frame(
+        df.sparkSession,
         [(i,) for i in ids], schema=df.select(id_col).schema
     )
     if hard:

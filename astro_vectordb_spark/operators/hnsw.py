@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark.session import local_frame
+
 
 def _quantize_np(vec) -> tuple[np.ndarray, float]:
     """Per-vector symmetric int8 codes — the SAME math as
@@ -515,7 +517,7 @@ def _cached_from_rows(
     return idx
 
 
-def _broadcast_queries(queries: DataFrame, query_id_col: str, query_vec_col: str):
+def _broadcast_queries(sc, queries, query_id_col: str, query_vec_col: str):
     """Ship the query batch to executors as ONE torrent broadcast of a
     compact (ids ndarray, float64 matrix) pair, instead of
     closure-capturing a Python list into every task (which reserializes
@@ -523,14 +525,20 @@ def _broadcast_queries(queries: DataFrame, query_id_col: str, query_vec_col: str
     driver-side bottleneck past ~1e5 queries).  Each executor holds one
     shared copy; tasks read ``bc.value`` zero-copy.
 
-    The driver still materializes the batch once to build the broadcast
-    (mirroring the reference's user-supplied query vector,
+    A DataFrame batch is materialized on the driver once to build the
+    broadcast (mirroring the reference's user-supplied query vector,
     hnsw.ts:241-250); for query sets too big for any single machine,
-    cogroup queries x shards instead."""
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    ids = np.array([r[query_id_col] for r in qrows])
-    mat = np.array([[float(x) for x in r[query_vec_col]] for r in qrows])
-    sc = queries.sparkSession.sparkContext
+    cogroup queries x shards instead.  A driver-side sequence of
+    vectors (query ids 0..n-1) broadcasts directly, with no job —
+    rounded through float32 exactly as an ``array<float>`` query
+    column would round it."""
+    if isinstance(queries, DataFrame):
+        qrows = queries.select(query_id_col, query_vec_col).collect()
+        ids = np.array([r[query_id_col] for r in qrows])
+        mat = np.array([[float(x) for x in r[query_vec_col]] for r in qrows])
+    else:
+        mat = np.asarray(queries, dtype=np.float32).astype(np.float64)
+        ids = np.arange(len(mat), dtype=np.int64)
     return sc.broadcast((ids, mat))
 
 
@@ -862,7 +870,7 @@ def hnsw_remove_shards(
     rm = {int(x) for x in remove_ids}
     quantized = "qvec" in graph.columns
     spark = graph.sparkSession
-    ids_df = spark.createDataFrame([(i,) for i in sorted(rm)], "vec_id long")
+    ids_df = local_frame(spark, [(i,) for i in sorted(rm)], "vec_id long")
     touched = (
         graph.select("vec_id", "shard_id")
         .join(F.broadcast(ids_df), "vec_id", "semi")
@@ -955,7 +963,7 @@ def hnsw_shard_health(
 
 def hnsw_query_shards(
     graph: DataFrame,
-    queries: DataFrame,
+    queries,
     k: int,
     m: int = 16,
     ef_search: int = 100,
@@ -973,6 +981,11 @@ def hnsw_query_shards(
     """Answer a query batch from PERSISTED graph rows: group rows by
     shard inside each task, rebuild the sub-index (adjacency load, no
     re-insertion), search, merge globally.
+
+    ``queries`` is a DataFrame ``(query_id long, query_vec
+    array<float>)``, collected once on the driver, or a driver-side
+    sequence of query vectors (query ids 0..n-1), which ships to the
+    shard tasks without a job — the single-query serving path.
 
     ``allowed_ids`` (optional) turns this into filtered ANN: a bounded
     collection of permitted ids (e.g. ids matching a metadata
@@ -1009,8 +1022,8 @@ def hnsw_query_shards(
     changes, so a mutated index can never serve stale graphs."""
     from astro_vectordb_spark.operators.topk import rank_topk_per_query
 
-    bc = _broadcast_queries(queries, query_id_col, query_vec_col)
-    sc = queries.sparkSession.sparkContext
+    sc = graph.sparkSession.sparkContext
+    bc = _broadcast_queries(sc, queries, query_id_col, query_vec_col)
     bc_allowed = (
         sc.broadcast(frozenset(int(x) for x in allowed_ids))
         if allowed_ids is not None
@@ -1110,7 +1123,8 @@ def hnsw_query_shards_cogrouped(
         )
     q_rep = queries.select(query_id_col, query_vec_col).crossJoin(
         F.broadcast(
-            graph.sparkSession.createDataFrame(
+            local_frame(
+                graph.sparkSession,
                 [(int(s),) for s in shard_ids], "shard_id int"
             )
         )
@@ -1166,7 +1180,9 @@ def hnsw_batch_topk(
     """
     from astro_vectordb_spark.operators.topk import rank_topk_per_query
 
-    bc = _broadcast_queries(queries, query_id_col, query_vec_col)
+    bc = _broadcast_queries(
+        corpus.sparkSession.sparkContext, queries, query_id_col, query_vec_col
+    )
 
     if num_shards is not None:
         corpus = corpus.repartition(num_shards)

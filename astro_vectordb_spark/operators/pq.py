@@ -49,6 +49,7 @@ from astro_vectordb_spark.functions.vector import (
     similarity,
     threshold_from_strength,
 )
+from astro_vectordb_spark.session import local_frame
 
 SCORE_DECIMALS = 6
 
@@ -746,7 +747,8 @@ def adaptive_refine_cut(
             r for i, r in enumerate(rows)
             if i < floor or r["adc_score"] >= cut
         ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(r[id_col]), float(r["adc_score"])) for r in kept],
         f"{id_col} long, adc_score double",
     )
@@ -1490,7 +1492,7 @@ def pq_batch_topk_cogrouped(
     )
     q_rep = queries.select(query_id_col, query_vec_col).crossJoin(
         F.broadcast(
-            spark.createDataFrame([(b,) for b in range(n_blocks)], "__blk int")
+            local_frame(spark, [(b,) for b in range(n_blocks)], "__blk int")
         )
     )
     out_schema = f"{query_id_col} long, {id_col} long, adc_score double"

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark.session import local_frame
+
 STAT_DECIMALS = 6
 
 # Diagnostic: per-column (bin -> distinct-value count) from the most
@@ -162,7 +164,7 @@ def exact_percentiles_rank(
         for r in sorted(sub_rows, key=lambda r: (r["column"], r["bin"])):
             offsets.append((r["column"], r["bin"], run.get(r["column"], 0)))
             run[r["column"]] = run.get(r["column"], 0) + r["sub"]
-        off_df = spark.createDataFrame(offsets, "column string, bin int, off long")
+        off_df = local_frame(spark, offsets, "column string, bin int, off long")
         w = (
             Window.partitionBy("column", "bin")
             .orderBy("v")
@@ -186,7 +188,8 @@ def exact_percentiles_rank(
                 targets.append(
                     (c, float(p), lo + 1, lo + 2 if frac > 0 else lo + 1, frac)
                 )
-        t_df = spark.createDataFrame(
+        t_df = local_frame(
+            spark,
             targets, "column string, p double, lo_rank long, hi_rank long, frac double"
         )
         cand = ranked.join(F.broadcast(t_df), "column").where(
@@ -219,7 +222,8 @@ def exact_percentiles_rank(
         )
     finally:
         hist.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         result_rows, "column string, p double, value double"
     )
 

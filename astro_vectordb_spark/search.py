@@ -123,8 +123,9 @@ def search(
             restrict_to_allowed,
         )
         from astro_vectordb_spark.operators.topk import topk_search
+        from astro_vectordb_spark.sources.vault import load_embeddings
 
-        corpus = spark.read.parquet(path)
+        corpus = load_embeddings(spark, path)
         if allowed_ids is not None:
             corpus = restrict_to_allowed(corpus, allowed_ids)
         out = topk_search(corpus, query_vector, k, strength=strength, metric=metric)
@@ -150,12 +151,8 @@ def search(
         from astro_vectordb_spark.operators.filtering import allowed_as_list
 
         graph, meta = load_hnsw_index(spark, path)
-        queries = spark.createDataFrame(
-            [(0, [float(x) for x in query_vector])],
-            "query_id long, query_vec array<float>",
-        )
         out = hnsw_query_shards(
-            graph, queries, k=k, m=meta["m"], metric=meta["metric"],
+            graph, [query_vector], k=k, m=meta["m"], metric=meta["metric"],
             ef_search=ef_search, clustered=meta["clustered_safe"],
             index_cache_token=meta["cache_token"],
             allowed_ids=(
@@ -260,8 +257,9 @@ def search_batch(
             restrict_to_allowed,
         )
         from astro_vectordb_spark.operators.topk import batch_topk
+        from astro_vectordb_spark.sources.vault import load_embeddings
 
-        corpus = spark.read.parquet(path)
+        corpus = load_embeddings(spark, path)
         if allowed_ids is not None:
             corpus = restrict_to_allowed(corpus, allowed_ids)
         return batch_topk(corpus, queries, k, strength=strength).select(

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -53,6 +53,37 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A frame over driver-side Python ``rows`` (tuples, positional)
+    with ``schema`` (a DDL string or ``StructType``), built as one Arrow
+    table so Spark plans it as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` builds a Python RDD
+    instead: every action on it starts Python workers and runs jobs
+    (``first()`` on a one-row frame costs two), and each plan reading
+    it shows ``Scan ExistingRDD``.  The local relation is folded into
+    the plan on the driver (``LocalTableScan``; a ``first()`` runs no
+    job).  The Arrow table path does not depend on
+    ``spark.sql.execution.arrow.pyspark.enabled`` and has no silent
+    non-Arrow fallback; empty ``rows`` work too.  Values convert as the
+    list path converts them (Python or NumPy float64 into ``float``
+    rounds to nearest; ``None`` is NULL)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

@@ -49,6 +49,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark.session import local_frame
+
 
 @dataclass
 class IndexCtx:
@@ -170,7 +172,8 @@ def save_index(
         w = w.partitionBy(family.partition_col)
     w.parquet(os.path.join(path, family.bucket_table))
     n_rows = stored.select(id_col).distinct().count()
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [tuple(meta_values) + (int(n_rows),)], family.meta_schema
     ).write.mode("overwrite").parquet(os.path.join(path, "_meta"))
 
@@ -347,7 +350,8 @@ def remove_from_index(
     if isinstance(ids, DataFrame):
         ids_df = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
     else:
-        ids_df = spark.createDataFrame(
+        ids_df = local_frame(
+            spark,
             [(int(x),) for x in ids], f"{id_col} long"
         ).distinct()
     ids_df = ids_df.localCheckpoint(eager=True)

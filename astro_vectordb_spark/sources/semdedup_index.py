@@ -11,6 +11,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark.session import local_frame
 from astro_vectordb_spark.sources.vault import _read_maybe_swapped
 
 # ---------------------------------------------------------------------------
@@ -104,7 +105,7 @@ def _write_meta_row(spark: SparkSession, path: str, meta: dict) -> None:
         else float(meta["probe_margin"]),
         None if meta.get("n_rows") is None else int(meta["n_rows"]),
     )
-    df = spark.createDataFrame([row], schema)
+    df = local_frame(spark, [row], schema)
 
     def _write(staging: str) -> None:
         df.coalesce(1).write.mode("overwrite").parquet(staging)

@@ -30,6 +30,8 @@ node), so a 1000-executor job opens nprobe/k_cells of the files.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +44,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from astro_vectordb_spark.session import local_frame
 
 EMBEDDINGS_SCHEMA = StructType(
     [
@@ -59,7 +63,7 @@ def open_or_create(
     (getAstroDB/createAstroDB, driver/driver.ts:28-48)."""
     if _fs_exists(spark, path):
         return spark.read.parquet(path)
-    empty = spark.createDataFrame([], schema)
+    empty = local_frame(spark, [], schema)
     empty.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
@@ -90,7 +94,17 @@ def compact_files(
 
 
 def load_embeddings(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """``spark.read.parquet(path)`` with the schema remembered per
+    file listing (``_CONTROL_MEMO``): inferring a parquet schema runs a
+    Spark job over the file footers, a read with a known schema runs
+    none, so repeated loads of an unchanged table run no job."""
+    listing = _listing(spark, path)
+    schema = _CONTROL_MEMO.fetch(
+        ("schema", *listing) if listing and listing[1] else None,
+        lambda: spark.read.parquet(path).schema,
+        lambda: ("schema", *(_listing(spark, path) or ())),
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def save_ivf_index(
@@ -119,7 +133,8 @@ def save_ivf_index(
     # per-call count job (spill-redundant assignment duplicates rows,
     # hence the distinct)
     n_rows = assigned.select("vec_id").distinct().count()
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(metric, int(k_cells), int(dim), int(n_rows))],
         "metric string, k_cells int, dim int, n_rows long",
     ).write.mode("overwrite").parquet(os.path.join(path, "_meta"))
@@ -295,46 +310,119 @@ def _replace_dir(spark: SparkSession, write_fn, path: str) -> None:
     fs.delete(p_old, True)
 
 
-def _qualified_uri(spark: SparkSession, path: str) -> str:
-    """Scheme-qualified absolute URI for ``path`` (the object-store-safe
-    replacement for ``os.path.abspath`` in cache tokens)."""
-    fs, hpath = _hadoop_fs(spark, path)
-    return str(fs.makeQualified(hpath).toString())
+class BoundedMemo:
+    """LRU map of driver-side control-plane facts — parquet schemas,
+    ``_meta`` dicts, the BM25 corpus-stats row — keyed on ``(kind,
+    path, version token)``, where the token names one committed version
+    of the table (a file listing or a version pointer).  A write makes
+    a new token, so an entry is never served for contents it was not
+    read from; dead entries age out of the LRU bound.  ``hits`` /
+    ``misses`` / ``evictions`` count lookups since start."""
+
+    def __init__(self, cap: int) -> None:
+        self.cap = cap
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+        self.hits = self.misses = self.evictions = 0
+
+    def fetch(self, key, load, rekey):
+        """The value remembered under ``key``, else ``load()``.
+
+        Staleness rule: the caller computes ``key`` BEFORE the load, and
+        ``rekey()`` recomputes it after; the loaded value is stored only
+        if the two agree — a commit landing between the token read and
+        the table read would otherwise be remembered under the older
+        version's key.  A None key (nothing committed, or no listing)
+        loads without remembering."""
+        if key is None:
+            return load()
+        with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+                self.hits += 1
+                return self._entries[key]
+            self.misses += 1
+        value = load()
+        if rekey() == key:
+            with self._lock:
+                self._entries[key] = value
+                while len(self._entries) > self.cap:
+                    self._entries.popitem(last=False)
+                    self.evictions += 1
+        return value
 
 
-def _scan_graph_files(
-    spark: SparkSession, graph_path: str
-) -> tuple[list[int], int, int, int, int]:
+# The process-wide control-plane memo of the read paths
+# (``load_embeddings``, ``load_hnsw_index``, ``load_bm25_index``).
+# Entries are a schema plus a few small rows; 64 covers the indexes of
+# a serving process many times over.
+_CONTROL_MEMO = BoundedMemo(cap=64)
+
+
+def _listing(spark: SparkSession, root: str) -> tuple | None:
+    """``(qualified root URI, files)`` with ``files`` the sorted
+    ``(path under root, bytes, mtime ms)`` of every file below
+    ``root`` — one recursive Hadoop listing (a single LIST round on
+    object stores), zero Spark jobs; None when ``root`` does not
+    exist.  It identifies the table VERSION: every parquet write adds
+    part files whose names carry a per-write UUID, so an append,
+    rewrite or swap changes the listing even within one mtime tick."""
+    from py4j.protocol import Py4JJavaError
+
+    fs, hpath = _hadoop_fs(spark, root)
+    try:
+        base = str(fs.makeQualified(hpath).toString())
+        files = []
+        it = fs.listFiles(hpath, True)
+        while it.hasNext():
+            f = it.next()
+            p = str(f.getPath().toString())
+            files.append((
+                p[len(base) + 1:] if p.startswith(base + "/") else p,
+                int(f.getLen()),
+                int(f.getModificationTime()),
+            ))
+    except Py4JJavaError as e:  # missing, or deleted mid-listing
+        if not str(e.java_exception.getClass().getName()).endswith(
+            "FileNotFoundException"
+        ):
+            raise
+        return None
+    return base, tuple(sorted(files))
+
+
+def _graph_file_stats(files) -> tuple[list[int], int, int, int, int]:
     """(shard ids, max parquet file bytes, file count, max mtime ms,
-    total bytes) from the partitioned graph directory — one recursive
-    Hadoop listing (a single LIST round on object stores), zero Spark
-    jobs.  File count + newest mtime + total size identify the graph
-    VERSION: any append/rebalance/rewrite changes at least one (total
-    size compensates for Hadoop's millisecond mtime resolution, where
-    two rewrites in the same tick with equal file counts could
-    otherwise collide)."""
-    fs, hpath = _hadoop_fs(spark, graph_path)
+    total bytes) of the ``shard_id=N/*.parquet`` files among
+    ``_listing`` entries.  File count + newest mtime + total size
+    identify the graph VERSION: any append/rebalance/rewrite changes at
+    least one (total size compensates for Hadoop's millisecond mtime
+    resolution, where two rewrites in the same tick with equal file
+    counts could otherwise collide)."""
     shard_ids: set[int] = set()
     max_bytes = 0
     n_files = 0
     max_mtime_ms = 0
     total_bytes = 0
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        f = it.next()
-        p = f.getPath()
-        parent = p.getParent().getName()
-        if not (
-            parent.startswith("shard_id=") and p.getName().endswith(".parquet")
-        ):
+    for rel, size, mtime in files:
+        parent, _, name = rel.rpartition("/")
+        parent = parent.rpartition("/")[2]
+        if not (parent.startswith("shard_id=") and name.endswith(".parquet")):
             continue
         shard_ids.add(int(parent.split("=", 1)[1]))
-        size = int(f.getLen())
         max_bytes = max(max_bytes, size)
         total_bytes += size
-        max_mtime_ms = max(max_mtime_ms, int(f.getModificationTime()))
+        max_mtime_ms = max(max_mtime_ms, mtime)
         n_files += 1
     return sorted(shard_ids), max_bytes, n_files, max_mtime_ms, total_bytes
+
+
+def _scan_graph_files(
+    spark: SparkSession, graph_path: str
+) -> tuple[list[int], int, int, int, int]:
+    """:func:`_graph_file_stats` of the partitioned graph directory."""
+    listing = _listing(spark, graph_path)
+    return _graph_file_stats(listing[1] if listing else ())
 
 
 def max_partition_bytes(spark: SparkSession) -> int:
@@ -383,7 +471,8 @@ def _write_hnsw_meta(spark: SparkSession, path: str, metric: str, m: int) -> Non
     shard_ids, max_bytes, _, _, _ = _scan_graph_files(
         spark, os.path.join(path, "graph")
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(metric, int(m), shard_ids, int(max_bytes))],
         "metric string, m int, shard_ids array<int>, max_shard_file_bytes long",
     ).write.mode("overwrite").parquet(os.path.join(path, "_meta"))
@@ -406,12 +495,29 @@ def load_hnsw_index(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     ``hnsw_query_shards(index_cache_token=...)`` to enable the
     worker-level rebuilt-index cache for repeated serving; any
     append/rebalance/rewrite produces a different token, so mutated
-    indexes never serve stale graphs."""
+    indexes never serve stale graphs.
+
+    The graph schema and the stored ``_meta`` are remembered per
+    listing of the whole index directory (``_CONTROL_MEMO``), so a
+    repeated load of an unchanged index runs no Spark job: one Hadoop
+    listing gives the version, the shard stats and the cache token."""
     graph_path = os.path.join(path, "graph")
-    graph = spark.read.parquet(graph_path)
-    meta = _read_meta(spark, path)
-    shard_ids, max_bytes, n_files, max_mtime_ms, total_bytes = _scan_graph_files(
-        spark, graph_path
+    listing = _listing(spark, path)
+
+    def _load():
+        return spark.read.parquet(graph_path).schema, _read_meta(spark, path)
+
+    schema, stored = _CONTROL_MEMO.fetch(
+        ("hnsw", *listing) if listing else None,
+        _load,
+        lambda: ("hnsw", *(_listing(spark, path) or ())),
+    )
+    if listing is None:  # readable, yet not listable: no version token
+        raise OSError(f"cannot list the HNSW index directory {path}")
+    graph = spark.read.schema(schema).parquet(graph_path)
+    meta = dict(stored)
+    shard_ids, max_bytes, n_files, max_mtime_ms, total_bytes = _graph_file_stats(
+        f for f in listing[1] if f[0].startswith("graph/")
     )
     if meta.get("max_shard_file_bytes") is None:
         meta["shard_ids"] = shard_ids
@@ -420,9 +526,7 @@ def load_hnsw_index(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     meta["clustered_safe"] = (
         0 < meta["max_shard_file_bytes"] < max_partition_bytes(spark)
     )
-    meta["cache_token"] = (
-        f"{_qualified_uri(spark, path)}:{n_files}:{max_mtime_ms}:{total_bytes}"
-    )
+    meta["cache_token"] = f"{listing[0]}:{n_files}:{max_mtime_ms}:{total_bytes}"
     return graph, meta
 
 
@@ -693,11 +797,13 @@ def save_pq_index(
     through the Hadoop FileSystem API on read)."""
     spark = encoded.sparkSession
     encoded.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    spark.createDataFrame(
+    local_frame(
+        spark,
         model.to_rows(), "subspace int, code int, centroid array<float>"
     ).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
     n_rows = encoded.select("vec_id").distinct().count()
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(model.metric, int(model.m), int(model.ks), int(model.dim),
           int(n_rows))],
         "metric string, m int, ks int, dim int, n_rows long",
@@ -752,12 +858,14 @@ def save_ivf_pq_index(
         "cell_id"
     ).parquet(os.path.join(path, "codes"))
     centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    spark.createDataFrame(
+    local_frame(
+        spark,
         model.to_rows(), "subspace int, code int, centroid array<float>"
     ).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
     k_cells = centroids.count()
     n_rows = encoded.select("vec_id").distinct().count()
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(model.metric, int(model.m), int(model.ks), int(model.dim),
           int(k_cells), int(n_rows), bool(getattr(model, "residual", False)))],
         "metric string, m int, ks int, dim int, k_cells int, n_rows long, "
@@ -832,7 +940,8 @@ def _update_meta_n_rows(
         schema = schema.add("n_rows", LongType())
     _replace_dir(
         spark,
-        lambda staging: spark.createDataFrame(
+        lambda staging: local_frame(
+            spark,
             [tuple(d[f.name] for f in schema.fields)], schema
         ).write.mode("overwrite").parquet(staging),
         mp,
@@ -900,7 +1009,8 @@ def _record_batch(
 ) -> None:
     if batch_id is None:
         return
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(batch_id), str(op))], "batch_id long, op string"
     ).write.mode("append").parquet(os.path.join(path, "_batches"))
 
@@ -1095,7 +1205,8 @@ def _as_ids_df(spark: SparkSession, vec_ids) -> DataFrame:
     with a vec_id column) into a one-column DataFrame."""
     if isinstance(vec_ids, DataFrame):
         return vec_ids.select("vec_id").distinct()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(v),) for v in vec_ids], "vec_id long"
     ).distinct()
 
@@ -1537,7 +1648,8 @@ def _write_codebooks(spark: SparkSession, model, path: str) -> None:
     sentinel rows + the ``train_mse`` baseline sentinel)."""
 
     def _write(staging: str) -> None:
-        spark.createDataFrame(
+        local_frame(
+            spark,
             model.to_rows(), "subspace int, code int, centroid array<float>"
         ).write.mode("overwrite").parquet(staging)
 
@@ -1752,113 +1864,105 @@ def save_bm25_index(
     from astro_vectordb_spark.sources.versioned import commit_version_multi
 
     spark = term_stats.sparkSession
-    empty_log = spark.createDataFrame([], "batch_id long")
+    empty_log = local_frame(spark, [], "batch_id long")
     commit_version_multi(
         {"term_stats": term_stats, "corpus_stats": corpus_stats,
          "batches": empty_log},
         os.path.join(path, "stats"), 0,
     )
-    # a rebuild at the same path always commits v0 again — drop any
-    # cached corpus-stats rows for the path (the pointer-mtime token
-    # already re-keys them; this keeps the dead entries from lingering)
-    ap = os.path.abspath(path)
-    for k in [k for k in _BM25_CORPUS_STATS_CACHE if k[0] == ap]:
-        del _BM25_CORPUS_STATS_CACHE[k]
+
+
+def _bm25_table_dirs(path: str) -> dict[str, str] | None:
+    """Live BM25 statistic table directories, for the current
+    ``stats/`` multi-table layout OR the legacy (pre-multi-commit)
+    layout of separate versioned ``term_stats/`` + ``corpus_stats/``
+    (+ ``batches/``) tables — an index persisted under the old layout
+    stays loadable, and its first ``bm25_append_to_index`` migrates it
+    (the merged tables commit into the new layout; the legacy
+    directories become dead data).  None when nothing is committed."""
+    from astro_vectordb_spark.sources.versioned import (
+        current_dirs,
+        current_version,
+    )
+
+    dirs = current_dirs(os.path.join(path, "stats"))
+    if dirs is not None:
+        return dirs
+    out = {}
+    for name in ("term_stats", "corpus_stats", "batches"):
+        ver = current_version(os.path.join(path, name))
+        if ver is not None:
+            out[name] = os.path.join(path, name, ver)
+    return out if "term_stats" in out and "corpus_stats" in out else None
 
 
 def _read_bm25_tables(
     spark: SparkSession, path: str
 ) -> dict[str, DataFrame] | None:
-    """Live BM25 statistic tables, reading the current ``stats/``
-    multi-table layout OR the legacy (pre-multi-commit) layout of
-    separate versioned ``term_stats/`` + ``corpus_stats/`` tables — an
-    index persisted under the old layout stays loadable, and its first
-    ``bm25_append_to_index`` migrates it (the merged tables commit into
-    the new layout; the legacy directories become dead data)."""
-    from astro_vectordb_spark.sources.versioned import (
-        read_current,
-        read_current_multi,
-    )
-
-    tables = read_current_multi(spark, os.path.join(path, "stats"))
-    if tables is not None:
-        return tables
-    ts = read_current(spark, os.path.join(path, "term_stats"))
-    cs = read_current(spark, os.path.join(path, "corpus_stats"))
-    if ts is None or cs is None:
+    """Live BM25 statistic tables (see :func:`_bm25_table_dirs`)."""
+    dirs = _bm25_table_dirs(path)
+    if dirs is None:
         return None
-    out = {"term_stats": ts, "corpus_stats": cs}
-    legacy_log = read_current(spark, os.path.join(path, "batches"))
-    if legacy_log is not None:
-        out["batches"] = legacy_log
-    return out
-
-
-# (abspath, version token) -> (rows, schema) of the 1-row corpus
-# stats table.  Serving-path control plane: every BM25 query needs
-# (n, avgdl) as literals, and reading a 1-row parquet per query costs
-# a cluster job each time; pinning the row per COMMITTED VERSION makes
-# those reads driver-local (LocalTableScan — no job) while any append/
-# remove commit (which swaps the version pointer) naturally invalidates
-# the entry.  The query itself still computes from the parquet corpus
-# and term stats every invocation.
-#
-# Staleness discipline (round-16 ADVICE fix): the version string alone
-# is NOT a content discriminator — ``save_bm25_index`` always commits
-# v0, so rebuilding an index at the same path in one session reuses
-# the version name.  The token therefore includes the POINTER FILE's
-# mtime_ns (``os.replace`` installs a fresh inode per swap), it is
-# read BEFORE the tables (so a concurrent commit between the two reads
-# can't cache new stats under an old key), and the entry is only
-# stored if the pointer is UNCHANGED after the collect (a swap during
-# the read serves that call uncached and the next call re-keys).
-_BM25_CORPUS_STATS_CACHE: dict[tuple, tuple] = {}
+    return {name: spark.read.parquet(d) for name, d in dirs.items()}
 
 
 def _bm25_version_token(path: str):
-    """(layout, version, pointer mtime_ns) of the committed BM25
-    statistics at ``path`` — probing the same layouts in the same
-    order as ``_read_bm25_tables`` — or None when nothing is
-    committed."""
-    from astro_vectordb_spark.sources.versioned import (
-        CURRENT,
-        current_version,
-    )
+    """Version token of the committed BM25 statistics at ``path``: the
+    pointer token (``versioned.current_token``) of each versioned table
+    :func:`_bm25_table_dirs` resolves, in the same layout order, or
+    None when nothing is committed."""
+    from astro_vectordb_spark.sources.versioned import current_token
 
-    for sub in ("stats", "corpus_stats"):
-        base = os.path.join(path, sub)
-        ver = current_version(base)
-        if ver is not None:
-            try:
-                mt = os.stat(os.path.join(base, CURRENT)).st_mtime_ns
-            except OSError:
-                mt = -1
-            return (sub, ver, mt)
-    return None
+    tok = current_token(os.path.join(path, "stats"))
+    if tok is not None:
+        return ("stats", tok)
+    legacy = tuple(
+        current_token(os.path.join(path, name))
+        for name in ("term_stats", "corpus_stats", "batches")
+    )
+    return ("legacy", legacy) if legacy[0] and legacy[1] else None
 
 
 def load_bm25_index(spark: SparkSession, path: str):
     """(term_stats, corpus_stats) live snapshots (legacy layouts
-    included — see ``_read_bm25_tables``).  ``corpus_stats`` comes back
-    as a driver-local 1-row relation (same schema/values as the
-    committed parquet) so downstream ``first()``/join consumers don't
-    pay a cluster job per lookup; see ``_BM25_CORPUS_STATS_CACHE``."""
+    included — see ``_bm25_table_dirs``).
+
+    Serving-path control plane: every BM25 query needs (n, avgdl) as
+    literals and reads the term stats.  Both tables' schemas and the
+    1-row corpus stats are remembered per committed version
+    (``_CONTROL_MEMO``, keyed on :func:`_bm25_version_token`; an
+    append/remove commit or a rebuild swaps the pointer and re-keys).
+    A load of an unchanged index therefore runs no Spark job:
+    ``term_stats`` is a parquet read with a known schema, and
+    ``corpus_stats`` a local relation (same schema and values as the
+    committed parquet) whose ``first()`` runs no job either.  The
+    query itself still prices terms from the term-stats parquet and
+    scans the corpus on every call (``bm25_topk_indexed``: one
+    term-df collect job plus the scoring plan)."""
+    abspath = os.path.abspath(path)
     token = _bm25_version_token(path)  # BEFORE the table reads
-    tables = _read_bm25_tables(spark, path)
-    if tables is None:
-        raise FileNotFoundError(f"no committed BM25 index at {path}")
-    ts, cs = tables["term_stats"], tables["corpus_stats"]
-    key = (os.path.abspath(path), token)
-    hit = _BM25_CORPUS_STATS_CACHE.get(key)
-    if hit is None:
-        hit = (cs.collect(), cs.schema)
-        # cache only if no commit landed between the token read and
-        # the collect — otherwise the rows may belong to the NEWER
-        # version and would be served stale under the OLD key
-        if token is not None and _bm25_version_token(path) == token:
-            _BM25_CORPUS_STATS_CACHE[key] = hit
-    cs_local = spark.createDataFrame(hit[0], hit[1])
-    return ts, cs_local
+
+    def _load():
+        dirs = _bm25_table_dirs(path)
+        if dirs is None:
+            raise FileNotFoundError(f"no committed BM25 index at {path}")
+        cs = spark.read.parquet(dirs["corpus_stats"])
+        return (
+            dirs["term_stats"],
+            spark.read.parquet(dirs["term_stats"]).schema,
+            cs.collect(),
+            cs.schema,
+        )
+
+    ts_dir, ts_schema, cs_rows, cs_schema = _CONTROL_MEMO.fetch(
+        ("bm25", abspath, token) if token is not None else None,
+        _load,
+        lambda: ("bm25", abspath, _bm25_version_token(path)),
+    )
+    return (
+        spark.read.schema(ts_schema).parquet(ts_dir),
+        local_frame(spark, cs_rows, cs_schema),
+    )
 
 
 def bm25_append_to_index(
@@ -1983,10 +2087,11 @@ def _bm25_apply_batch(
         return {count_key: 0}
     mts, mcs = merge_fn(ts, cs) if n_docs else (ts, cs)
     if log is None:
-        log = spark.createDataFrame([], "batch_id long, op string")
+        log = local_frame(spark, [], "batch_id long, op string")
     mlog = (
         log.unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(int(batch_id), op)], "batch_id long, op string"
             )
         )
@@ -2932,7 +3037,8 @@ def _gc_locked(
                 out_rows.append((int(horizon_val), op_key, True))
                 kept = [b for b in kept if b > horizon_val]
             out_rows.extend((int(b), op_key, False) for b in kept)
-        compacted = spark.createDataFrame(
+        compacted = local_frame(
+            spark,
             out_rows, "batch_id long, op string, horizon boolean"
         )
         new, old = _swap_sibling_paths(log_path)
@@ -3019,7 +3125,8 @@ def reset_op_log(spark: SparkSession, path: str, op: str | None) -> dict:
     if n_removed == 0:
         return {"removed_rows": 0, "rows_after": norm.count()}
     survivors = norm.filter(~F.coalesce(match, F.lit(False))).collect()
-    kept = spark.createDataFrame(
+    kept = local_frame(
+        spark,
         [(int(r["batch_id"]), r["op"], bool(r["horizon"]))
          for r in survivors],
         "batch_id long, op string, horizon boolean",

@@ -34,6 +34,24 @@ def current_version(path: str) -> str | None:
         return f.read().strip() or None
 
 
+def current_token(path: str) -> tuple | None:
+    """``(live version, pointer inode, pointer mtime_ns)`` of the table
+    at ``path``, or None when nothing is committed (or the pointer was
+    swapped out while being read).  The version name
+    alone does not identify the contents (a rebuild at the same path
+    commits ``v0`` again), but every commit swaps in a fresh pointer
+    file, so the triple changes with each one.  Costs one ``stat`` and
+    one small read, no Spark job."""
+    ver = current_version(path)
+    if ver is None:
+        return None
+    try:
+        st = os.stat(os.path.join(path, CURRENT))
+    except OSError:  # swapped out between the read and the stat
+        return None
+    return (ver, st.st_ino, st.st_mtime_ns)
+
+
 def read_current(spark: SparkSession, path: str) -> DataFrame | None:
     """The live snapshot, or None if the table has no committed version."""
     v = current_version(path)
@@ -74,20 +92,29 @@ def commit_version_multi(
     return vdir
 
 
-def read_current_multi(
-    spark: SparkSession, path: str
-) -> dict[str, DataFrame] | None:
-    """Live snapshots of every table in the current multi-table
-    version, keyed by sub-table name; None if nothing committed."""
+def current_dirs(path: str) -> dict[str, str] | None:
+    """Directory of every table in the current multi-table version,
+    keyed by sub-table name; None if nothing committed."""
     v = current_version(path)
     if v is None:
         return None
     vdir = os.path.join(path, v)
     return {
-        name: spark.read.parquet(os.path.join(vdir, name))
+        name: os.path.join(vdir, name)
         for name in sorted(os.listdir(vdir))
         if os.path.isdir(os.path.join(vdir, name))
     }
+
+
+def read_current_multi(
+    spark: SparkSession, path: str
+) -> dict[str, DataFrame] | None:
+    """Live snapshots of every table in the current multi-table
+    version, keyed by sub-table name; None if nothing committed."""
+    dirs = current_dirs(path)
+    if dirs is None:
+        return None
+    return {name: spark.read.parquet(d) for name, d in dirs.items()}
 
 
 def _swap_pointer(path: str, vdir: str, keep_versions: int) -> None:

@@ -37,6 +37,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 
 from astro_vectordb_spark.operators.crud import sync_merge, upsert_latest
+from astro_vectordb_spark.session import local_frame
 from astro_vectordb_spark.sources.versioned import commit_version, read_current
 
 
@@ -122,7 +123,7 @@ def apply_upsert_batch(
     spark = batch_df.sparkSession
     current = read_current(spark, target_path)
     if current is None:
-        current = spark.createDataFrame([], batch_df.schema)
+        current = local_frame(spark, [], batch_df.schema)
     fn = merge_fn or (lambda cur, b: upsert_latest(cur, b, id_col=id_col))
     return commit_version(fn(current, batch_df), target_path, int(batch_id))
 

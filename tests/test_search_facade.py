@@ -1157,3 +1157,275 @@ class TestAdaptiveRefinePassThrough:
             adaptive_refine=True,
         ).collect())
         assert ba == bf
+
+
+def _count_jobs(spark, group, action):
+    """Spark jobs ``action()`` runs, counted in its own job group after
+    the listener bus drains (the status store is fed asynchronously)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "serve-path job count")
+    try:
+        action()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_DOCS = [
+    (0, "spark merge join table"),
+    (1, "merge join row group"),
+    (2, "hash table scan filter"),
+    (3, "spark spark merge hash"),
+    (4, "window agg sort spill"),
+    (5, "join merge spark batch"),
+    (6, "vector index graph beam"),
+    (7, "scan filter merge spark"),
+]
+
+
+class TestServeControlPlane:
+    """A warm single-query call on persisted indexes runs only the jobs
+    that compute its answer: schemas, ``_meta`` and the BM25 corpus
+    stats come from the version-keyed control-plane memo, and the HNSW
+    query vector ships to the shard tasks without a frame."""
+
+    @pytest.fixture(scope="class")
+    def served(self, spark, corpus, tmp_path_factory):
+        from astro_vectordb_spark.functions.embed import embed_text
+        from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
+        from astro_vectordb_spark.operators.keyword import bm25_term_stats
+        from astro_vectordb_spark.sources.vault import (
+            save_bm25_index,
+            save_hnsw_index,
+        )
+
+        df, _ = corpus
+        root = tmp_path_factory.mktemp("serve_ctrl")
+        paths = {n: str(root / n) for n in
+                 ("vectors", "hnsw", "docs", "doc_vectors", "bm25")}
+        df.write.parquet(paths["vectors"])
+        save_hnsw_index(
+            hnsw_build_shards(df, num_shards=2, ef_construction=40),
+            paths["hnsw"], m=16, metric="cosine",
+        )
+        spark.createDataFrame(_DOCS, "doc_id long, text string").write.parquet(
+            paths["docs"]
+        )
+        docs = spark.read.parquet(paths["docs"])
+        embed_text(docs).select(
+            F.col("doc_id").alias("vec_id"), "embedding"
+        ).write.parquet(paths["doc_vectors"])
+        ts, cs = bm25_term_stats(docs)
+        save_bm25_index(ts, cs, paths["bm25"])
+        return paths, docs
+
+    def _warm_jobs(self, spark, name, action):
+        action()
+        return _count_jobs(spark, f"serve-ctrl-{name}", action)
+
+    def test_exact_search_one_job(self, spark, served, qv):
+        paths, _ = served
+        n = self._warm_jobs(
+            spark, "exact",
+            lambda: search(spark, paths["vectors"], qv, 10).collect(),
+        )
+        assert n <= 1, n
+
+    def test_hnsw_search_at_most_two_jobs(self, spark, served, qv):
+        paths, _ = served
+        n = self._warm_jobs(
+            spark, "hnsw",
+            lambda: search(spark, paths["hnsw"], qv, 10).collect(),
+        )
+        assert n <= 2, n
+
+    def test_hybrid_search_text_at_most_two_jobs(self, spark, served):
+        from astro_vectordb_spark.search import hybrid_search_text
+
+        paths, docs = served
+        n = self._warm_jobs(
+            spark, "hybrid",
+            lambda: hybrid_search_text(
+                spark, paths["doc_vectors"], paths["bm25"], docs,
+                "merge spark join", 5,
+            ).collect(),
+        )
+        assert n <= 2, n
+
+    def test_bm25_corpus_stats_first_runs_no_job(self, spark, served):
+        from astro_vectordb_spark.sources.vault import load_bm25_index
+
+        paths, _ = served
+        n = self._warm_jobs(
+            spark, "bm25-first",
+            lambda: load_bm25_index(spark, paths["bm25"])[1].first(),
+        )
+        assert n == 0, n
+
+
+class TestControlMemoStaleness:
+    """Each test changes a table at the SAME path after a read filled
+    the control-plane memo; the next read must see the new state."""
+
+    def test_hnsw_rebuilt_quantized(self, spark, corpus, qv, tmp_path):
+        from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
+        from astro_vectordb_spark.sources.vault import (
+            load_hnsw_index,
+            save_hnsw_index,
+        )
+
+        df, _ = corpus
+        p = str(tmp_path / "hnsw_q")
+        save_hnsw_index(hnsw_build_shards(df, num_shards=2), p, m=16)
+        before = search(spark, p, qv, 10).collect()
+        assert "embedding" in load_hnsw_index(spark, p)[0].columns
+        save_hnsw_index(
+            hnsw_build_shards(df, num_shards=2, quantize=True), p, m=16
+        )
+        graph, _ = load_hnsw_index(spark, p)
+        assert "qvec" in graph.columns and "embedding" not in graph.columns
+        after = search(spark, p, qv, 10).collect()
+        assert len(after) == 10
+        # quantized scores differ, the neighbourhood does not
+        assert after[0].vec_id == before[0].vec_id
+
+    def test_hnsw_rebuilt_with_new_m_and_metric(
+        self, spark, corpus, qv, tmp_path
+    ):
+        from astro_vectordb_spark.operators.hnsw import (
+            hnsw_build_shards,
+            hnsw_query_shards,
+        )
+        from astro_vectordb_spark.sources.vault import (
+            load_hnsw_index,
+            save_hnsw_index,
+        )
+
+        df, _ = corpus
+        p = str(tmp_path / "hnsw_m")
+        save_hnsw_index(
+            hnsw_build_shards(df, num_shards=2, m=8), p, m=8, metric="cosine"
+        )
+        search(spark, p, qv, 10).collect()
+        save_hnsw_index(
+            hnsw_build_shards(df, num_shards=2, m=16, metric="euclidean"),
+            p, m=16, metric="euclidean",
+        )
+        _, meta = load_hnsw_index(spark, p)
+        assert (meta["m"], meta["metric"]) == (16, "euclidean")
+        got = [(r.vec_id, r.score) for r in search(spark, p, qv, 10).collect()]
+        want = sorted(
+            ((r.vec_id, r.score) for r in hnsw_query_shards(
+                spark.read.parquet(p + "/graph"), [qv], k=10, m=16,
+                metric="euclidean",
+            ).collect()),
+            key=lambda t: (-t[1], t[0]),
+        )
+        assert got == want
+
+    def test_bm25_rebuilt_in_place(self, spark, tmp_path):
+        from astro_vectordb_spark.operators.keyword import bm25_term_stats
+        from astro_vectordb_spark.sources.vault import (
+            load_bm25_index,
+            save_bm25_index,
+        )
+
+        p = str(tmp_path / "bm25_re")
+        a = spark.createDataFrame(_DOCS[:4], "doc_id long, text string")
+        save_bm25_index(*bm25_term_stats(a), p)
+        ts, cs = load_bm25_index(spark, p)
+        assert cs.first()["n"] == 4
+        assert ts.filter(F.col("term") == "vector").count() == 0
+        b = spark.createDataFrame(_DOCS, "doc_id long, text string")
+        save_bm25_index(*bm25_term_stats(b), p)
+        ts, cs = load_bm25_index(spark, p)
+        assert cs.first()["n"] == len(_DOCS)
+        assert ts.filter(F.col("term") == "vector").first()["df"] == 1
+
+    def test_plain_table_append_then_wider_overwrite(
+        self, spark, corpus, qv, tmp_path
+    ):
+        from astro_vectordb_spark.sources.vault import load_embeddings
+
+        df, _ = corpus
+        p = str(tmp_path / "plain")
+        df.write.parquet(p)
+        first = search(spark, p, qv, 3).collect()
+        axis = [1.0] + [0.0] * (DIM - 1)
+        assert search(spark, p, axis, 1).collect()[0].vec_id != 10_000
+        spark.createDataFrame(
+            [(10_000, axis)], "vec_id long, embedding array<float>"
+        ).write.mode("append").parquet(p)
+        assert search(spark, p, axis, 1).collect()[0].vec_id == 10_000
+        df.withColumn("label", F.lit(7)).write.mode("overwrite").parquet(p)
+        table = load_embeddings(spark, p)
+        assert table.columns == ["vec_id", "embedding", "label"]
+        assert table.count() == N
+        assert [r.vec_id for r in search(spark, p, qv, 3).collect()] == [
+            r.vec_id for r in first
+        ]
+
+    def test_memo_stores_only_if_version_held_and_stays_bounded(self):
+        from astro_vectordb_spark.sources.vault import BoundedMemo
+
+        memo = BoundedMemo(cap=2)
+        loads = []
+
+        def load(v):
+            return lambda: loads.append(v) or v
+
+        # a commit lands during the load: served, not remembered
+        assert memo.fetch(("t", "p", 1), load("a"), lambda: ("t", "p", 2)) == "a"
+        assert memo.fetch(("t", "p", 1), load("b"), lambda: ("t", "p", 1)) == "b"
+        assert memo.fetch(("t", "p", 1), load("c"), lambda: ("t", "p", 1)) == "b"
+        assert loads == ["a", "b"]
+        assert (memo.hits, memo.misses) == (1, 2)
+        # LRU: touching p keeps it when a third key evicts
+        memo.fetch(("t", "q", 1), load("q"), lambda: ("t", "q", 1))
+        memo.fetch(("t", "p", 1), load("x"), lambda: ("t", "p", 1))
+        memo.fetch(("t", "r", 1), load("r"), lambda: ("t", "r", 1))
+        assert memo.evictions == 1
+        assert memo.fetch(("t", "p", 1), load("y"), lambda: None) == "b"
+        assert memo.fetch(("t", "q", 1), load("q2"), lambda: None) == "q2"
+        # no key: always loads, never stores
+        assert memo.fetch(None, load("n"), lambda: None) == "n"
+        assert memo.fetch(None, load("m"), lambda: None) == "m"
+
+    def test_memo_under_thread_contention(self):
+        """More threads than cores hammer a small memo with a short
+        switch interval: every fetch returns its key's value, the bound
+        holds, and each lookup counts once."""
+        import sys
+        import threading
+
+        from astro_vectordb_spark.sources.vault import BoundedMemo
+
+        memo = BoundedMemo(cap=4)
+        errors = []
+        n_threads, n_calls = 16, 2000
+
+        def work(t):
+            try:
+                for i in range(n_calls):
+                    key = ("t", "p", (t + i) % 7)
+                    if memo.fetch(key, lambda k=key: k[2], lambda k=key: k) != key[2]:
+                        errors.append(key)
+            except Exception as e:  # surfaced by the assert below
+                errors.append(e)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=work, args=(t,))
+                       for t in range(n_threads)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=60)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(th.is_alive() for th in threads)
+        assert errors == []
+        assert len(memo._entries) <= 4
+        assert memo.hits + memo.misses == n_threads * n_calls
