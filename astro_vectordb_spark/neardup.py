@@ -23,7 +23,9 @@ for minhash/rp, ``eps`` for semdedup, ``max_hamming`` for simhash,
 ``n_probes`` for the RP multi-probe dial, ...) — the handle binds
 (spark, path) and dispatches; semantics, replay contracts, and oracle
 parity are the underlying faces', documented there.  Detection reads
-ONE one-row parquet (``_meta``); the handle is stateless beyond it.
+ONE one-row parquet (``_meta``, through ``vault._read_meta``, which
+remembers it per version — a warm ``open`` runs no Spark job); the
+handle is stateless beyond it.
 
 The reference has a single in-memory index and no dedup lifecycle at
 all (astrovault.ts persists one JSON blob); this facade exists because

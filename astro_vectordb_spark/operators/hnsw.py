@@ -854,7 +854,10 @@ def hnsw_remove_shards(
     (one O(rows x M) sweep per shard; the entry point re-elects if
     removed), and the shard's surviving rows are re-emitted.  Returns
     updated rows for ONLY the touched shards — write back with a
-    dynamic partition overwrite.
+    dynamic partition overwrite.  A shard holding none of the ids
+    emits nothing, but it is still scanned and grouped: pass only the
+    shards known to hold ids (``vault.hnsw_remove_from_index`` filters
+    ``graph`` to them, which prunes the scan at the file listing).
 
     Cost: a scan + sweep of touched shards instead of a full graph
     rebuild — the right tool for SMALL removals.  Repeated sweeps
@@ -869,17 +872,10 @@ def hnsw_remove_shards(
     """
     rm = {int(x) for x in remove_ids}
     quantized = "qvec" in graph.columns
-    spark = graph.sparkSession
-    ids_df = local_frame(spark, [(i,) for i in sorted(rm)], "vec_id long")
-    touched = (
-        graph.select("vec_id", "shard_id")
-        .join(F.broadcast(ids_df), "vec_id", "semi")
-        .select("shard_id")
-        .distinct()
-    )
-    existing = graph.join(F.broadcast(touched), "shard_id", "semi")
 
     def _sweep(pdf: pd.DataFrame) -> pd.DataFrame:
+        if not pdf["vec_id"].isin(rm).any():
+            return pd.DataFrame()  # untouched shard: nothing to rewrite
         shard = int(pdf["shard_id"].iloc[0])
         index = NumpyHNSW.from_rows(pdf, m=m, metric=metric)
         index.remove_many(list(rm))
@@ -909,7 +905,7 @@ def hnsw_remove_shards(
         out["is_entry"] = [i == index.entry for i in alive]
         return pd.DataFrame(out)
 
-    return existing.groupBy("shard_id").applyInPandas(
+    return graph.groupBy("shard_id").applyInPandas(
         _sweep, GRAPH_SCHEMA_Q if quantized else GRAPH_SCHEMA
     )
 

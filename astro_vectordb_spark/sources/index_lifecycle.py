@@ -139,7 +139,9 @@ def _v():
 
 
 def load_index(spark: SparkSession, path: str, family: BucketIndexFamily):
-    """-> (primary df, buckets df, meta dict)."""
+    """-> (primary df, buckets df, meta dict).  ``_meta`` and both
+    table schemas come from the control-plane memo (per listing), so a
+    warm load of an unchanged index runs no Spark job."""
     v = _v()
     meta = v._read_meta(spark, path)
     primary = v._read_maybe_swapped(

@@ -29,6 +29,7 @@ node), so a 1000-executor job opens nprobe/k_cells of the files.
 
 from __future__ import annotations
 
+import copy
 import os
 import threading
 from collections import OrderedDict
@@ -98,13 +99,7 @@ def load_embeddings(spark: SparkSession, path: str) -> DataFrame:
     file listing (``_CONTROL_MEMO``): inferring a parquet schema runs a
     Spark job over the file footers, a read with a known schema runs
     none, so repeated loads of an unchanged table run no job."""
-    listing = _listing(spark, path)
-    schema = _CONTROL_MEMO.fetch(
-        ("schema", *listing) if listing and listing[1] else None,
-        lambda: spark.read.parquet(path).schema,
-        lambda: ("schema", *(_listing(spark, path) or ())),
-    )
-    return spark.read.schema(schema).parquet(path)
+    return _read_listed(spark, path, _listing(spark, path))
 
 
 def save_ivf_index(
@@ -352,10 +347,12 @@ class BoundedMemo:
         return value
 
 
-# The process-wide control-plane memo of the read paths
-# (``load_embeddings``, ``load_hnsw_index``, ``load_bm25_index``).
-# Entries are a schema plus a few small rows; 64 covers the indexes of
-# a serving process many times over.
+# The process-wide control-plane memo of every index load: parquet
+# schemas per table listing (``load_embeddings``, ``_read_maybe_swapped``,
+# the HNSW graph), ``_meta`` per listing of ``<index>/_meta``
+# (``_read_meta``) and the BM25 tables per version pointer
+# (``load_bm25_index``).  Entries are a schema plus a few small rows;
+# 64 covers the indexes of a serving process many times over.
 _CONTROL_MEMO = BoundedMemo(cap=64)
 
 
@@ -391,14 +388,39 @@ def _listing(spark: SparkSession, root: str) -> tuple | None:
     return base, tuple(sorted(files))
 
 
+def _by_listing(spark: SparkSession, kind: str, root: str, listing, load):
+    """``load()`` remembered in ``_CONTROL_MEMO`` under ``(kind,
+    *listing)``, where ``listing`` is ``_listing(spark, root)`` taken
+    BEFORE the load (the memo re-lists after it and stores only if
+    nothing moved).  A missing or empty ``root`` loads without
+    remembering."""
+    return _CONTROL_MEMO.fetch(
+        (kind, *listing) if listing and listing[1] else None,
+        load,
+        lambda: (kind, *(_listing(spark, root) or ())),
+    )
+
+
+def _read_listed(spark: SparkSession, path: str, listing) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema remembered per
+    ``listing`` of ``path``: inferring a parquet schema runs a Spark
+    job over the file footers, a read with a known schema runs none."""
+    schema = _by_listing(
+        spark, "schema", path, listing, lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
 def _graph_file_stats(files) -> tuple[list[int], int, int, int, int]:
     """(shard ids, max parquet file bytes, file count, max mtime ms,
-    total bytes) of the ``shard_id=N/*.parquet`` files among
-    ``_listing`` entries.  File count + newest mtime + total size
-    identify the graph VERSION: any append/rebalance/rewrite changes at
-    least one (total size compensates for Hadoop's millisecond mtime
-    resolution, where two rewrites in the same tick with equal file
-    counts could otherwise collide)."""
+    total bytes) of the ``shard_id=N/*.parquet`` files directly below
+    the graph directory among its ``_listing`` entries (so an in-flight
+    ``.spark-staging-*/shard_id=N`` dir does not count).  File count
+    + newest mtime + total size identify the graph VERSION: any
+    append/rebalance/rewrite changes at least one (total size
+    compensates for Hadoop's millisecond mtime resolution, where two
+    rewrites in the same tick with equal file counts could otherwise
+    collide)."""
     shard_ids: set[int] = set()
     max_bytes = 0
     n_files = 0
@@ -406,7 +428,6 @@ def _graph_file_stats(files) -> tuple[list[int], int, int, int, int]:
     total_bytes = 0
     for rel, size, mtime in files:
         parent, _, name = rel.rpartition("/")
-        parent = parent.rpartition("/")[2]
         if not (parent.startswith("shard_id=") and name.endswith(".parquet")):
             continue
         shard_ids.add(int(parent.split("=", 1)[1]))
@@ -415,14 +436,6 @@ def _graph_file_stats(files) -> tuple[list[int], int, int, int, int]:
         max_mtime_ms = max(max_mtime_ms, mtime)
         n_files += 1
     return sorted(shard_ids), max_bytes, n_files, max_mtime_ms, total_bytes
-
-
-def _scan_graph_files(
-    spark: SparkSession, graph_path: str
-) -> tuple[list[int], int, int, int, int]:
-    """:func:`_graph_file_stats` of the partitioned graph directory."""
-    listing = _listing(spark, graph_path)
-    return _graph_file_stats(listing[1] if listing else ())
 
 
 def max_partition_bytes(spark: SparkSession) -> int:
@@ -450,31 +463,18 @@ def save_hnsw_index(
     (hnsw.ts:781-792) as a queryable table, with metric metadata kept
     (the reference loses it on reload, hnsw.ts:794-810).
 
-    ``_meta`` also records the shard-id list (so incremental inserts
-    route without a control-plane Spark job) and the largest graph
-    file's size (so serving can decide whether ``clustered=True`` is
-    safe against the session's ``maxPartitionBytes``)."""
+    ``_meta`` holds only the build facts (metric, m), which no later
+    graph write changes; the layout facts (shard ids, largest file) are
+    read from the graph's file listing on every load, so appends,
+    removes and rebalances leave ``_meta`` — and its memo entry —
+    alone."""
     spark = graph.sparkSession
     graph_path = os.path.join(path, "graph")
     graph.repartition("shard_id").write.mode("overwrite").partitionBy(
         "shard_id"
     ).parquet(graph_path)
-    _write_hnsw_meta(spark, path, metric=metric, m=m)
-
-
-def _write_hnsw_meta(spark: SparkSession, path: str, metric: str, m: int) -> None:
-    """(Re)write ``_meta`` from the graph files on disk.  Every
-    operation that changes the graph's partition layout (save, append,
-    rebalance) must call this, or the persisted shard list / max file
-    size go stale — a stale shard list makes the cogrouped serve path
-    silently skip shards added later."""
-    shard_ids, max_bytes, _, _, _ = _scan_graph_files(
-        spark, os.path.join(path, "graph")
-    )
     local_frame(
-        spark,
-        [(metric, int(m), shard_ids, int(max_bytes))],
-        "metric string, m int, shard_ids array<int>, max_shard_file_bytes long",
+        spark, [(metric, int(m))], "metric string, m int"
     ).write.mode("overwrite").parquet(os.path.join(path, "_meta"))
 
 
@@ -486,48 +486,64 @@ def load_hnsw_index(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     graph with dangling neighbor ids.  Callers should pass
     ``clustered=meta['clustered_safe']`` instead of hard-coding True —
     serving then degrades to the (correct, one extra shuffle)
-    re-shuffled path instead of failing.  Indexes saved by older
-    versions lack the size metadata; their graph directory is scanned
-    on load (same filesystem listing, no Spark job).
+    re-shuffled path instead of failing.
 
-    ``meta['cache_token']`` identifies this graph VERSION (path + file
-    count + newest file mtime) — pass it as
+    ``meta['shard_ids']``, ``meta['max_shard_file_bytes']`` and
+    ``meta['cache_token']`` come from one Hadoop listing of the graph
+    directory on every load (no Spark job), never from ``_meta``:
+    older indexes stored the first two there, and such stored values
+    are ignored.  ``cache_token`` identifies this graph VERSION (path +
+    file count + newest file mtime + total bytes) — pass it as
     ``hnsw_query_shards(index_cache_token=...)`` to enable the
     worker-level rebuilt-index cache for repeated serving; any
     append/rebalance/rewrite produces a different token, so mutated
     indexes never serve stale graphs.
 
-    The graph schema and the stored ``_meta`` are remembered per
-    listing of the whole index directory (``_CONTROL_MEMO``), so a
-    repeated load of an unchanged index runs no Spark job: one Hadoop
-    listing gives the version, the shard stats and the cache token."""
+    The graph schema is remembered per listing of ``graph/`` and the
+    stored ``_meta`` per listing of ``_meta/`` (``_CONTROL_MEMO``), so
+    a repeated load of an unchanged index runs no Spark job, and a
+    graph write (which seeds the schema of its new version, see
+    :func:`_seed_graph_schema`) does not cost the next load one."""
+    return _load_hnsw(spark, path)[:2]
+
+
+def _load_hnsw(spark: SparkSession, path: str) -> tuple[DataFrame, dict, tuple]:
+    """:func:`load_hnsw_index` plus the graph listing it was read
+    under, which the graph writers diff against and seed after."""
     graph_path = os.path.join(path, "graph")
-    listing = _listing(spark, path)
-
-    def _load():
-        return spark.read.parquet(graph_path).schema, _read_meta(spark, path)
-
-    schema, stored = _CONTROL_MEMO.fetch(
-        ("hnsw", *listing) if listing else None,
-        _load,
-        lambda: ("hnsw", *(_listing(spark, path) or ())),
-    )
+    listing = _listing(spark, graph_path)
+    graph = _read_listed(spark, graph_path, listing)
     if listing is None:  # readable, yet not listable: no version token
-        raise OSError(f"cannot list the HNSW index directory {path}")
-    graph = spark.read.schema(schema).parquet(graph_path)
-    meta = dict(stored)
+        raise OSError(f"cannot list the HNSW graph directory {graph_path}")
+    meta = _read_meta(spark, path)
     shard_ids, max_bytes, n_files, max_mtime_ms, total_bytes = _graph_file_stats(
-        f for f in listing[1] if f[0].startswith("graph/")
+        listing[1]
     )
-    if meta.get("max_shard_file_bytes") is None:
-        meta["shard_ids"] = shard_ids
-        meta["max_shard_file_bytes"] = max_bytes
-    meta["shard_ids"] = sorted(int(s) for s in meta["shard_ids"])
-    meta["clustered_safe"] = (
-        0 < meta["max_shard_file_bytes"] < max_partition_bytes(spark)
-    )
+    meta["shard_ids"] = shard_ids
+    meta["max_shard_file_bytes"] = max_bytes
+    meta["clustered_safe"] = 0 < max_bytes < max_partition_bytes(spark)
     meta["cache_token"] = f"{listing[0]}:{n_files}:{max_mtime_ms}:{total_bytes}"
-    return graph, meta
+    return graph, meta, listing
+
+
+def _seed_graph_schema(
+    spark: SparkSession, graph_path: str, schema: StructType
+) -> tuple | None:
+    """Write-through after a graph commit: remember ``schema`` under
+    the graph listing taken now, and return that listing.
+
+    Rule: the writer that commits a graph version seeds the graph
+    schema it read and rewrote.  That is sound because append, remove
+    and rebalance rewrite shards with the columns they read (the
+    operators emit ``GRAPH_SCHEMA``/``GRAPH_SCHEMA_Q`` to match the
+    stored graph) and never change the graph schema, and because graph
+    maintenance is single-writer, so the listing taken after the commit
+    names exactly the version just written.  ``save_hnsw_index`` may
+    change the schema (plain <-> quantized) and seeds nothing: the
+    first load after it infers once."""
+    listing = _listing(spark, graph_path)
+    _by_listing(spark, "schema", graph_path, listing, lambda: schema)
+    return listing
 
 
 def hnsw_append_to_index(
@@ -548,27 +564,29 @@ def hnsw_append_to_index(
     Returns the touched shard ids."""
     from astro_vectordb_spark.operators.hnsw import hnsw_insert_shards
 
-    graph, meta = load_hnsw_index(spark, path)
+    graph, meta, before = _load_hnsw(spark, path)
+    graph_path = os.path.join(path, "graph")
     updated = hnsw_insert_shards(
         graph, new_rows, m=meta["m"], metric=meta["metric"], seed=seed,
         on_conflict=on_conflict, shard_ids=meta["shard_ids"],
     )
     # materialize before overwriting the path being read
     updated = updated.localCheckpoint(eager=True)
-    touched = sorted(
-        r["shard_id"] for r in updated.select("shard_id").distinct().collect()
-    )
     (
         updated.repartition("shard_id")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard_id")
-        .parquet(os.path.join(path, "graph"))
+        .parquet(graph_path)
     )
-    # refresh max-file-size metadata (an append can push a shard past
-    # the clustered-serve safety bound; shard list is unchanged here)
-    _write_hnsw_meta(spark, path, metric=meta["metric"], m=meta["m"])
-    return touched
+    after = _seed_graph_schema(spark, graph_path, graph.schema)
+    # the dynamic overwrite gives every partition it writes new part
+    # files (per-write UUID names) and leaves the others' files alone,
+    # so the touched shards are those holding files the old listing lacks
+    old = {f[0] for f in before[1]}
+    return _graph_file_stats(
+        f for f in (after[1] if after else ()) if f[0] not in old
+    )[0]
 
 
 def hnsw_rebalance(
@@ -608,7 +626,7 @@ def hnsw_rebalance(
     incremental."""
     from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
 
-    graph, meta = load_hnsw_index(spark, path)
+    graph, meta, _ = _load_hnsw(spark, path)
     stats = {
         r["shard_id"]: (r["n"], r["deg"])
         for r in graph.groupBy("shard_id").agg(
@@ -670,16 +688,16 @@ def hnsw_rebalance(
     for p in updated_parts[1:]:
         updated = updated.unionByName(p)
     updated = updated.localCheckpoint(eager=True)
+    graph_path = os.path.join(path, "graph")
     (
         updated.repartition("shard_id")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard_id")
-        .parquet(os.path.join(path, "graph"))
+        .parquet(graph_path)
     )
-    # splits created NEW shard partitions — the persisted shard list
-    # must reflect them or later appends/cogrouped serves miss them
-    _write_hnsw_meta(spark, path, metric=meta["metric"], m=meta["m"])
+    # splits created NEW shard partitions; the next load lists them
+    _seed_graph_schema(spark, graph_path, graph.schema)
     return result
 
 
@@ -743,15 +761,14 @@ def hnsw_index_stats(spark: SparkSession, path: str) -> dict:
     max level, plus the metadata the serve path keys on (metric, m,
     quantized storage, clustered_safe, on-disk bytes).
 
-    Cost: the `_meta` read, one Hadoop LIST, and ONE Spark aggregation
-    over the graph (|shards| result rows — bounded control plane).
+    Cost: the index load (one Hadoop LIST; memoized schema and
+    `_meta`), and ONE Spark aggregation over the graph (|shards|
+    result rows — bounded control plane).
     The reference's astrovault has no introspection surface at all;
     this is the rebuildGraphNodes-era TODO (README.md:78-81) made
     observable."""
-    graph, meta = load_hnsw_index(spark, path)
-    _, _, _, _, total_bytes = _scan_graph_files(
-        spark, os.path.join(path, "graph")
-    )
+    graph, meta, listing = _load_hnsw(spark, path)
+    total_bytes = _graph_file_stats(listing[1])[4]
     per_shard = {
         int(r["shard_id"]): {
             "rows": int(r["n"]),
@@ -815,21 +832,50 @@ def _read_maybe_swapped(spark: SparkSession, table_path: str) -> DataFrame:
     """Read a parquet dir that a crashed :func:`_replace_dir` swap may
     have left retired: if the live path is missing but the retired
     sibling exists, read the retired copy (read-only — the next
-    maintenance op's ``_recover_swap`` restores it in place)."""
-    if not _fs_exists(spark, table_path):
-        retired = _swap_sibling_paths(table_path)[1]
-        if _fs_exists(spark, retired):
-            table_path = retired
-    return spark.read.parquet(table_path)
+    maintenance op's ``_recover_swap`` restores it in place).  The live
+    table's schema is remembered per listing (:func:`_read_listed`);
+    a read of the retired copy is never remembered."""
+    listing = _listing(spark, table_path)
+    if listing is None:
+        return spark.read.parquet(_retired_if_live_missing(spark, table_path))
+    return _read_listed(spark, table_path, listing)
 
 
-def _read_meta(spark: SparkSession, path: str) -> dict:
-    """Read an index's one-row ``_meta`` table, tolerating a crashed
-    :func:`_update_meta_n_rows` swap: if the live dir is missing, the
-    retired sibling (intact pre-update copy) is read instead, so the
-    index never becomes unloadable; the next meta update's
-    ``_recover_swap`` restores the live path."""
-    return _read_maybe_swapped(spark, os.path.join(path, "_meta")).first().asDict()
+def _retired_if_live_missing(spark: SparkSession, table_path: str) -> str:
+    """``table_path``'s retired swap sibling if only that exists, else
+    ``table_path`` (whose read then fails as a missing path)."""
+    retired = _swap_sibling_paths(table_path)[1]
+    return retired if _fs_exists(spark, retired) else table_path
+
+
+def _read_meta(
+    spark: SparkSession, path: str, with_schema: bool = False
+) -> dict | tuple[dict, StructType]:
+    """An index's one-row ``_meta`` table as a fresh dict (plus its
+    schema with ``with_schema=True``) — the ONE reader of ``_meta``
+    tables in the package (a tier-1 AST test holds that).
+
+    The row is remembered per listing of ``<path>/_meta``
+    (``_CONTROL_MEMO``), so repeated loads of an unchanged index run
+    no schema-inference job and no ``first()`` job; every ``_meta``
+    rewrite (a save, or :func:`_update_meta_n_rows`' staged swap)
+    writes new part files and so a new key.  A crashed
+    :func:`_update_meta_n_rows` swap is tolerated: if the live dir is
+    missing, the retired sibling (intact pre-update copy) is read —
+    never remembered — so the index never becomes unloadable; the next
+    meta update's ``_recover_swap`` restores the live path."""
+    mp = os.path.join(path, "_meta")
+    listing = _listing(spark, mp)
+
+    def _load():
+        df = spark.read.parquet(
+            mp if listing else _retired_if_live_missing(spark, mp)
+        )
+        return df.schema, df.first().asDict()
+
+    schema, row = _by_listing(spark, "meta", mp, listing, _load)
+    meta = copy.deepcopy(row)
+    return (meta, schema) if with_schema else meta
 
 
 def load_pq_index(spark: SparkSession, path: str):
@@ -924,20 +970,15 @@ def _update_meta_n_rows(
     contract drifts the counter conservatively (widening then
     over-probes, never under-probes recall away).
     """
-    from pyspark.sql.types import LongType
-
-    mp = os.path.join(path, "_meta")
-    df = _read_maybe_swapped(spark, mp)
-    row = df.first()
-    d = row.asDict()
+    d, schema = _read_meta(spark, path, with_schema=True)
     if absolute is None:
         if d.get("n_rows") is None:
             return  # legacy meta: no counter to maintain
         absolute = int(d["n_rows"]) + int(delta)
     d["n_rows"] = max(int(absolute), 0)
-    schema = df.schema
-    if "n_rows" not in df.columns:
-        schema = schema.add("n_rows", LongType())
+    if "n_rows" not in schema.fieldNames():
+        schema = StructType([*schema.fields, StructField("n_rows", LongType())])
+    mp = os.path.join(path, "_meta")
     _replace_dir(
         spark,
         lambda staging: local_frame(
@@ -1202,13 +1243,15 @@ def _dedup_ids_deterministic(df: DataFrame, id_col: str = "vec_id") -> DataFrame
 
 def _as_ids_df(spark: SparkSession, vec_ids) -> DataFrame:
     """Normalize an id collection (iterable of longs or a DataFrame
-    with a vec_id column) into a one-column DataFrame."""
+    with a vec_id column) into a one-column DataFrame of distinct ids.
+    A driver-side collection is deduplicated in Python, so its frame
+    stays a bare local relation (``LocalTableScan``, no aggregate)."""
     if isinstance(vec_ids, DataFrame):
         return vec_ids.select("vec_id").distinct()
     return local_frame(
-        spark,
-        [(int(v),) for v in vec_ids], "vec_id long"
-    ).distinct()
+        spark, [(v,) for v in dict.fromkeys(int(v) for v in vec_ids)],
+        "vec_id long",
+    )
 
 
 def _remove_rows_by_file(
@@ -1375,9 +1418,9 @@ def hnsw_remove_from_index(
     ``sweep_max_frac`` of their rows and rebuilds the rest;
     ``"sweep"``/``"rebuild"`` force one strategy.  Only touched
     shards' files are replaced (dynamic partition overwrite); a shard
-    emptied entirely has its partition directory deleted; ``_meta``
-    is rewritten so the shard list / cache token reflect the new
-    layout.  Single-writer maintenance op; replayed ``batch_id`` is a
+    emptied entirely has its partition directory deleted, and the next
+    load's listing drops it from the shard list (``_meta`` is not
+    rewritten).  Single-writer maintenance op; replayed ``batch_id`` is a
     no-op via the ``_batches`` log.
 
     The report carries a per-touched-shard graph-health block
@@ -1402,25 +1445,32 @@ def hnsw_remove_from_index(
     if _batch_already_committed(spark, path, batch_id, op="hnsw_remove"):
         return {"removed_rows": 0, "touched_shards": [],
                 "skipped_replay": True}
-    ids = _as_ids_df(spark, vec_ids)
+    # a driver-side id collection stays a driver-side (deduplicated)
+    # list: the sweep guard is its len() and the sweep ships it as is
+    rm_ids = (
+        None if isinstance(vec_ids, DataFrame)
+        else list(dict.fromkeys(int(v) for v in vec_ids))
+    )
+    ids = _as_ids_df(spark, vec_ids if rm_ids is None else rm_ids)
     graph_path = os.path.join(path, "graph")
-    graph, meta = load_hnsw_index(spark, path)
-    # one aggregation pass: per-shard hit counts + totals -> touched
+    graph, meta, _ = _load_hnsw(spark, path)
+    # one aggregation pass: per-shard totals + hit counts -> touched
     # set, removal fractions, emptied detection — no survivor rescans
-    hit_counts = {
-        r["shard_id"]: r["n"]
-        for r in graph.join(ids, "vec_id", "left_semi")
-        .groupBy("shard_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    totals, hit_counts = {}, {}
+    for r in (
+        graph.select("vec_id", "shard_id")
+        .join(ids.withColumn("_hit", F.lit(1)), "vec_id", "left")
+        .groupBy("shard_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.count("_hit").alias("hits"))
+        .collect()
+    ):
+        totals[r["shard_id"]] = r["n"]
+        if r["hits"]:
+            hit_counts[r["shard_id"]] = r["hits"]
     touched = sorted(hit_counts)
     if not touched:
         _record_batch(spark, path, batch_id, op="hnsw_remove")
         return {"removed_rows": 0, "touched_shards": []}
-    totals = {
-        r["shard_id"]: r["n"]
-        for r in graph.filter(F.col("shard_id").isin(touched))
-        .groupBy("shard_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
     emptied = [s for s in touched if hit_counts[s] >= totals[s]]
     live_touched = [s for s in touched if s not in emptied]
     if mode == "sweep":
@@ -1440,13 +1490,17 @@ def hnsw_remove_from_index(
     # erasure batches it exists for, but nothing stops a caller passing
     # an unbounded DataFrame.  A set above max_sweep_ids forces rebuild
     # mode (rebuild anti-joins the ids distributed, never collecting).
-    if sweep_shards and ids.limit(max_sweep_ids + 1).count() > max_sweep_ids:
+    if sweep_shards and (
+        len(rm_ids) if rm_ids is not None
+        else ids.limit(max_sweep_ids + 1).count()
+    ) > max_sweep_ids:
         rebuild_shards = sorted(set(rebuild_shards) | set(sweep_shards))
         sweep_shards = []
 
     out_parts = []
     if sweep_shards:
-        rm_ids = [r["vec_id"] for r in ids.collect()]  # bounded batch
+        if rm_ids is None:
+            rm_ids = [r["vec_id"] for r in ids.collect()]  # bounded batch
         out_parts.append(
             hnsw_remove_shards(
                 graph.filter(F.col("shard_id").isin(sweep_shards)),
@@ -1500,7 +1554,7 @@ def hnsw_remove_from_index(
             ),
             True,
         )
-    _write_hnsw_meta(spark, path, metric=meta["metric"], m=meta["m"])
+    _seed_graph_schema(spark, graph_path, graph.schema)
     # graph-health verdict for the TOUCHED shards (the way
     # pq_append_to_index surfaces MSE drift): edge sweeps erode wiring —
     # a removed node's pruned incoming edges are never re-wired — so

@@ -744,7 +744,8 @@ def test_hnsw_quantized_build_serve_parity(spark, embeddings, tmp_path):
         hnsw_query_shards,
     )
     from astro_vectordb_spark.sources.vault import (
-        _scan_graph_files,
+        _graph_file_stats,
+        _listing,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -763,8 +764,8 @@ def test_hnsw_quantized_build_serve_parity(spark, embeddings, tmp_path):
     pf, pq = str(tmp_path / "hf"), str(tmp_path / "hq")
     save_hnsw_index(gf, pf, m=16, metric="cosine")
     save_hnsw_index(gq, pq, m=16, metric="cosine")
-    _, fbytes_f, _, _, tot_f = _scan_graph_files(spark, pf + "/graph")
-    _, fbytes_q, _, _, tot_q = _scan_graph_files(spark, pq + "/graph")
+    _, fbytes_f, _, _, tot_f = _graph_file_stats(_listing(spark, pf + "/graph")[1])
+    _, fbytes_q, _, _, tot_q = _graph_file_stats(_listing(spark, pq + "/graph")[1])
     # int8 codes + scale vs float32: graph files shrink well below 0.6x
     assert tot_q < 0.6 * tot_f, (tot_q, tot_f)
 

@@ -1,7 +1,8 @@
 """``session.local_frame``: driver-side rows become an Arrow-built
 ``LocalRelation`` with the same schema and bit-identical values as
 ``spark.createDataFrame(<list>, schema)``, and no library module builds
-a frame from rows any other way."""
+a frame from rows any other way.  Also guarded here: no module reads an
+index's ``_meta`` table except through the memoized ``vault._read_meta``."""
 
 from __future__ import annotations
 
@@ -124,4 +125,86 @@ def test_no_library_frame_from_rows_outside_the_helper():
                 hits.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
     assert not hits, "route these through session.local_frame: " + ", ".join(
         hits
+    )
+
+
+def test_driver_side_ids_frame_has_no_aggregate(spark):
+    """The id frame of every remove path dedupes a driver-side list in
+    Python: a bare local relation, no aggregate over it."""
+    from astro_vectordb_spark.sources.vault import _as_ids_df
+
+    df = _as_ids_df(spark, [3, 1, 3, 2, 1])
+    plan = _plan(df)
+    assert "LocalTableScan" in plan and "Aggregate" not in plan, plan
+    assert [r.vec_id for r in df.collect()] == [3, 1, 2]
+
+
+def _mentions_meta(node, meta_names) -> bool:
+    for n in ast.walk(node):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and (
+            n.value == "_meta" or n.value.endswith("/_meta")
+        ):
+            return True
+        if isinstance(n, ast.Name) and n.id in meta_names:
+            return True
+    return False
+
+
+def _receiver_attrs(func) -> list[str]:
+    """Attribute names along a call's receiver chain, outermost first
+    (``spark.read.schema(s).parquet`` -> parquet, schema, read)."""
+    out = []
+    while True:
+        if isinstance(func, ast.Attribute):
+            out.append(func.attr)
+            func = func.value
+        elif isinstance(func, ast.Call):
+            func = func.func
+        else:
+            return out
+
+
+_TABLE_READERS = {"_read_maybe_swapped", "_read_listed", "load_embeddings"}
+
+
+def test_no_meta_table_read_outside_read_meta():
+    """Every read of an index's ``_meta`` table goes through
+    ``vault._read_meta``, whose result is memoized per version; a read
+    anywhere else pays a schema-inference job and a ``first()`` job."""
+    hits = set()
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path.name == "vault.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "_read_meta":
+                    allowed = {id(n) for n in ast.walk(fn)}
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            # names bound to a _meta path anywhere in the function,
+            # closures included
+            meta_names = {
+                t.id
+                for a in ast.walk(fn)
+                if isinstance(a, ast.Assign) and _mentions_meta(a.value, ())
+                for t in a.targets if isinstance(t, ast.Name)
+            }
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call) or id(node) in allowed:
+                    continue
+                attrs = _receiver_attrs(node.func)
+                name = node.func.id if isinstance(node.func, ast.Name) else (
+                    attrs[0] if attrs else "")
+                is_read = name in _TABLE_READERS or (
+                    "read" in attrs and "write" not in attrs
+                    and attrs[0] in ("parquet", "load")
+                )
+                if is_read and any(
+                    _mentions_meta(a, meta_names)
+                    for a in [*node.args, *(k.value for k in node.keywords)]
+                ):
+                    hits.add(f"{path.relative_to(PKG.parent)}:{node.lineno}")
+    assert not hits, "read _meta through vault._read_meta: " + ", ".join(
+        sorted(hits)
     )

@@ -1264,6 +1264,115 @@ class TestServeControlPlane:
         assert n == 0, n
 
 
+class TestMaintenanceControlPlane:
+    """A warm maintenance call, and the read after it, runs only the
+    jobs that compute its answer: ``_meta`` and schemas come from the
+    control-plane memo, HNSW writes leave ``_meta`` alone and seed the
+    schema of the graph version they commit, and the HNSW remove
+    bookkeeping is one aggregation."""
+
+    @pytest.fixture
+    def hnsw_path(self, corpus, tmp_path):
+        from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
+        from astro_vectordb_spark.sources.vault import save_hnsw_index
+
+        df, _ = corpus
+        path = str(tmp_path / "hnsw1")
+        save_hnsw_index(
+            hnsw_build_shards(df, num_shards=1, ef_construction=40),
+            path, m=16, metric="cosine",
+        )
+        return path
+
+    @pytest.fixture(scope="class")
+    def minhash_path(self, spark, tmp_path_factory):
+        from astro_vectordb_spark.sources.vault import save_minhash_index
+
+        path = str(tmp_path_factory.mktemp("maint_ctrl") / "minhash")
+        save_minhash_index(
+            spark.createDataFrame(_DOCS, "doc_id long, text string"), path,
+            num_hashes=16, bands=4,
+        )
+        return path
+
+    @staticmethod
+    def _batch(spark, corpus, first_id, n=4):
+        _, pts = corpus
+        rows = [
+            (first_id + i, [float(x) + 1e-3 for x in pts[(7 * i) % N]])
+            for i in range(n)
+        ]
+        return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def _jobs(self, spark, name, action):
+        return _count_jobs(spark, f"maint-ctrl-{name}", action)
+
+    def test_neardup_open_runs_no_job(self, spark, minhash_path):
+        from astro_vectordb_spark import neardup
+
+        neardup.open(spark, minhash_path)
+        n = self._jobs(spark, "nd-open",
+                       lambda: neardup.open(spark, minhash_path))
+        assert n == 0, n
+
+    def test_minhash_match_at_most_six_jobs(self, spark, minhash_path):
+        from astro_vectordb_spark import neardup
+        from astro_vectordb_spark.session import local_frame
+
+        # an Arrow-built batch, as a pandas-fed caller passes it; a
+        # Python-RDD frame would add a job of its own
+        batch = local_frame(
+            spark,
+            [(100, "spark merge join table"), (101, "vector graph beam")],
+            "doc_id long, text string",
+        )
+
+        def match():
+            return neardup.open(spark, minhash_path).match(
+                batch, threshold=0.7).collect()
+
+        match()
+        got = []
+        n = self._jobs(spark, "nd-match", lambda: got.extend(match()))
+        assert n <= 6, n
+        assert {(r.new_id, r.hist_id) for r in got} >= {(100, 0)}
+
+    def test_hnsw_append_then_search(self, spark, corpus, hnsw_path):
+        from astro_vectordb_spark import index
+
+        idx = index.open(spark, hnsw_path)
+        idx.append(self._batch(spark, corpus, 10_000))
+        batch = self._batch(spark, corpus, 20_000)
+        touched = []
+        n = self._jobs(spark, "hnsw-append",
+                       lambda: touched.extend(idx.append(batch)))
+        assert n <= 9, n
+        assert touched == [0]
+        probe = [float(x) + 1e-3 for x in corpus[1][7]]
+        hits = []
+        n = self._jobs(spark, "hnsw-search-after-append", lambda: hits.extend(
+            search(spark, hnsw_path, probe, 5).collect()))
+        assert n <= 2, n
+        assert 20_001 in {r.vec_id for r in hits}
+
+    def test_hnsw_sweep_remove_then_search(self, spark, corpus, qv, hnsw_path):
+        from astro_vectordb_spark import index
+
+        idx = index.open(spark, hnsw_path)
+        idx.remove([1, 2], mode="sweep")
+        gone = [r.vec_id for r in search(spark, hnsw_path, qv, 3).collect()]
+        rep = {}
+        n = self._jobs(spark, "hnsw-remove", lambda: rep.update(
+            idx.remove(gone, mode="sweep")))
+        assert n <= 10, n
+        assert (rep["removed_rows"], rep["swept_shards"]) == (3, [0])
+        hits = []
+        n = self._jobs(spark, "hnsw-search-after-remove", lambda: hits.extend(
+            search(spark, hnsw_path, qv, 10).collect()))
+        assert n <= 2, n
+        assert len(hits) == 10 and not set(gone) & {r.vec_id for r in hits}
+
+
 class TestControlMemoStaleness:
     """Each test changes a table at the SAME path after a read filled
     the control-plane memo; the next read must see the new state."""
@@ -1365,6 +1474,114 @@ class TestControlMemoStaleness:
         assert [r.vec_id for r in search(spark, p, qv, 3).collect()] == [
             r.vec_id for r in first
         ]
+
+    def test_neardup_append_then_remove_show_in_next_open(
+        self, spark, tmp_path
+    ):
+        from astro_vectordb_spark import neardup
+        from astro_vectordb_spark.sources.vault import save_minhash_index
+
+        p = str(tmp_path / "mh_counts")
+        save_minhash_index(
+            spark.createDataFrame(_DOCS, "doc_id long, text string"), p
+        )
+        idx = neardup.open(spark, p)
+        assert idx.meta["n_rows"] == len(_DOCS)
+        idx.append(spark.createDataFrame(
+            [(50, "graph beam vector"), (51, "spill sort agg")],
+            "doc_id long, text string",
+        ))
+        assert neardup.open(spark, p).meta["n_rows"] == len(_DOCS) + 2
+        idx.remove([50, 51, 0])
+        assert neardup.open(spark, p).meta["n_rows"] == len(_DOCS) - 1
+
+    def test_meta_read_through_crashed_swap_is_not_remembered(
+        self, spark, tmp_path
+    ):
+        import os
+
+        from astro_vectordb_spark import neardup
+        from astro_vectordb_spark.sources import vault
+
+        p = str(tmp_path / "mh_swap")
+        vault.save_minhash_index(
+            spark.createDataFrame(_DOCS, "doc_id long, text string"), p
+        )
+        mp = os.path.join(p, "_meta")
+        os.rename(mp, mp + ".__swap_old")  # crash between the two renames
+        hits = vault._CONTROL_MEMO.hits
+        idx = neardup.open(spark, p)
+        assert (idx.family, idx.meta["n_rows"]) == ("minhash", len(_DOCS))
+        assert neardup.open(spark, p).meta == idx.meta
+        assert vault._CONTROL_MEMO.hits == hits  # loaded twice, kept never
+        idx.append(spark.createDataFrame(
+            [(60, "graph beam vector")], "doc_id long, text string"
+        ))
+        assert os.path.isdir(mp) and not os.path.exists(mp + ".__swap_old")
+        assert neardup.open(spark, p).meta["n_rows"] == len(_DOCS) + 1
+
+    def test_hnsw_shard_ids_follow_split_and_emptied_shard(
+        self, spark, corpus, tmp_path
+    ):
+        from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
+        from astro_vectordb_spark.sources.vault import (
+            _listing,
+            hnsw_rebalance,
+            hnsw_remove_from_index,
+            load_hnsw_index,
+            save_hnsw_index,
+        )
+
+        df, _ = corpus
+        p = str(tmp_path / "hnsw_split")
+        save_hnsw_index(hnsw_build_shards(df, num_shards=1), p, m=16)
+        meta_files = _listing(spark, p + "/_meta")
+        assert load_hnsw_index(spark, p)[1]["shard_ids"] == [0]
+        split = hnsw_rebalance(
+            spark, p, target_rows_per_shard=N // 3, skew_threshold=1.0
+        )
+        assert split == {0: [0, 1, 2]}
+        graph, meta = load_hnsw_index(spark, p)
+        assert meta["shard_ids"] == [0, 1, 2]
+        gone = [r.vec_id for r in graph.filter(F.col("shard_id") == 2)
+                .select("vec_id").collect()]
+        rep = hnsw_remove_from_index(spark, p, gone)
+        assert rep["emptied_shards"] == [2]
+        graph, meta = load_hnsw_index(spark, p)
+        assert meta["shard_ids"] == [0, 1]
+        assert graph.count() == N - len(gone)
+        assert _listing(spark, p + "/_meta") == meta_files
+
+    @pytest.mark.parametrize("quantize", [False, True])
+    def test_graph_writes_seed_the_schema_a_read_infers(
+        self, spark, corpus, qv, tmp_path, quantize
+    ):
+        from astro_vectordb_spark import index
+        from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
+        from astro_vectordb_spark.sources.vault import (
+            load_hnsw_index,
+            save_hnsw_index,
+        )
+
+        df, pts = corpus
+        p = str(tmp_path / f"hnsw_seed_{quantize}")
+        save_hnsw_index(
+            hnsw_build_shards(df, num_shards=2, quantize=quantize), p, m=16
+        )
+        idx = index.open(spark, p)
+        batch = spark.createDataFrame(
+            [(9_000 + i, [float(x) for x in pts[i]]) for i in range(3)],
+            "vec_id long, embedding array<float>",
+        )
+        for write in (lambda: idx.append(batch),
+                      lambda: idx.remove([9_000, 5], mode="sweep")):
+            write()
+            graph = []
+            n = _count_jobs(spark, f"seed-{quantize}",
+                            lambda: graph.append(load_hnsw_index(spark, p)[0]))
+            assert n == 0, n
+            assert graph[0].schema == spark.read.parquet(p + "/graph").schema
+        assert len(search(spark, p, qv, 10).collect()) == 10
 
     def test_memo_stores_only_if_version_held_and_stays_bounded(self):
         from astro_vectordb_spark.sources.vault import BoundedMemo
