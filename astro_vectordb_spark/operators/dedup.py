@@ -547,19 +547,27 @@ def minhash_signatures_sql_safe(
     ex = base.select(
         F.col(id_col), F.explode("_sh").alias("_s")
     ).withColumn("_h", _char_poly_hash(F.col("_s")))
+    # each aggregate is one parsed SQL expression (one JVM call, not
+    # a Column tree of ~10): int literals times the bigint hash, the
+    # same types and arithmetic as the oracle's
     mins = ex.groupBy(id_col).agg(
         *[
-            F.min(
-                (F.lit(2 * i + 1) * F.col("_h") + F.lit(7919 * i))
-                % F.lit(POLY_MOD)
-            ).alias(f"_h{i}")
+            F.expr(
+                f"min(({2 * i + 1} * _h + {7919 * i}) % {POLY_MOD}) AS _h{i}"
+            )
             for i in range(num_hashes)
         ]
     )
-    return mins.select(
-        F.col(id_col),
-        F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"),
+    return mins.selectExpr(
+        f"`{id_col}`",
+        f"array({', '.join(f'_h{i}' for i in range(num_hashes))}) AS sig",
     )
+
+
+def _carried(sigs: DataFrame, id_col: str, sig_col: str) -> list[str]:
+    """The columns a bucket kernel passes through: the id first, then
+    every other input column except the signature it buckets."""
+    return [id_col] + [c for c in sigs.columns if c not in (id_col, sig_col)]
 
 
 def minhash_band_table(
@@ -574,20 +582,20 @@ def minhash_band_table(
     minhashes base ``BAND_BASE`` mod ``POLY_MOD`` — identical
     arithmetic to :func:`minhash_lsh_pairs_sql_safe`'s inline band
     exprs and the oracle's list_reduce, so bands computed from STORED
-    signatures equal bands computed from text."""
+    signatures equal bands computed from text.  Every input column but
+    ``sig_col`` passes through (id first, see :func:`_carried`), so a
+    caller can carry a batch's values along its bucket rows."""
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    band_exprs = [
-        F.aggregate(
-            F.slice(F.col(sig_col), b * r + 1, r),
-            F.lit(0).cast("long"),
-            lambda acc, x: (acc * F.lit(BAND_BASE) + x) % F.lit(POLY_MOD),
-        )
+    # the whole projection is one parsed SQL expression list
+    folds = ", ".join(
+        f"aggregate(slice(`{sig_col}`, {b * r + 1}, {r}), CAST(0 AS BIGINT), "
+        f"(acc, x) -> (acc * {BAND_BASE} + x) % {POLY_MOD})"
         for b in range(bands)
-    ]
-    return sigs.select(
-        F.col(id_col),
-        F.posexplode(F.array(*band_exprs)).alias("band_idx", "band_sig"),
+    )
+    return sigs.selectExpr(
+        *[f"`{c}`" for c in _carried(sigs, id_col, sig_col)],
+        f"posexplode(array({folds})) AS (band_idx, band_sig)",
     )
 
 
@@ -837,7 +845,9 @@ def simhash_chunk_table(
     (sig >> offset) & mask.  Any pair within hamming d shares at least
     one exact chunk when len(chunks) == d + 1 (Manku et al., WWW'07).
     ``chunks`` is a list of (offset, mask) so the SQL-safe 31-bit
-    layout and the native even-width 64-bit layout share one kernel."""
+    layout and the native even-width 64-bit layout share one kernel.
+    Every other input column passes through, as in
+    :func:`minhash_band_table`."""
     chunk_exprs = [
         F.shiftrightunsigned(F.col(sig_col), off).bitwiseAND(
             F.lit(mask).cast("long")
@@ -845,7 +855,7 @@ def simhash_chunk_table(
         for off, mask in chunks
     ]
     return sigs.select(
-        id_col,
+        *_carried(sigs, id_col, sig_col),
         F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk_val"),
     )
 

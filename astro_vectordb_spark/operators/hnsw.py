@@ -637,11 +637,14 @@ def hnsw_insert_shards(
     the reference's live-index ``addPoint``/``updatePoint``
     (hnsw.ts:82-173, 497-517) at index level, without a rebuild.
 
-    New rows route to the shard that already holds their id when one
-    does (home-shard lookup — see the routing comment below; anything
-    else duplicates updated ids across shards), by id hash otherwise
-    (shards carry no semantic locality — any deterministic routing of
-    NEW ids is correct).  Each touched
+    On a one-shard index every row routes to that shard, with no
+    lookup.  Otherwise new rows route to the shard that already holds
+    their id when one does (home-shard lookup — see the routing comment
+    below; anything else duplicates updated ids across shards), by id
+    hash otherwise (shards carry no semantic locality — any
+    deterministic routing of NEW ids is correct).  A shard that gets
+    no rows emits nothing, so an empty batch touches no shard.  Each
+    touched
     shard's adjacency is loaded (``NumpyHNSW.from_rows``, no
     re-insertion of existing nodes), the new vectors are inserted with
     the normal wiring/shrink/entry-promotion path, and the shard's rows
@@ -694,37 +697,9 @@ def hnsw_insert_shards(
     routed = new_rows.select(
         F.col(id_col).cast("long").alias("vec_id"),
         F.col(vec_col).cast("array<float>").alias("embedding"),
-    )
-    # HOME-SHARD routing: an id that already lives in the graph MUST
-    # route to the shard that holds it — hash routing alone silently
-    # duplicates the node in another shard whenever the id's home
-    # doesn't match its hash (true for every build-time id, since the
-    # build distributes round-robin, and for every row moved by a
-    # rebalance split), breaking both skip-idempotency and update
-    # semantics.  The home lookup is one column-pruned scan of the
-    # graph's (vec_id, shard_id) joined against the broadcast id set
-    # of the (small) batch — no driver collect, no graph shuffle.
-    # Only genuinely new ids fall through to the hash route.
-    hash_route = F.element_at(
-        F.array(*[F.lit(int(s)) for s in shard_ids]),
-        (F.pmod(F.xxhash64(F.col("vec_id")), F.lit(len(shard_ids))) + 1).cast("int"),
-    )
-    id_home = (
-        graph.select("vec_id", "shard_id")
-        .join(F.broadcast(routed.select("vec_id").distinct()), "vec_id", "semi")
-        .groupBy("vec_id")
-        .agg(F.min("shard_id").alias("_home_shard"))
-    )
-    routed = (
-        routed.join(F.broadcast(id_home), "vec_id", "left")
-        .withColumn(
-            "shard_id",
-            F.coalesce(F.col("_home_shard"), hash_route).cast("int"),
-        )
-        .drop("_home_shard")
-        .withColumn("level", F.lit(None).cast("int"))  # marks "new"
-        .withColumn("neighbors", F.lit(None).cast("array<array<long>>"))
-        .withColumn("is_entry", F.lit(None).cast("boolean"))
+        F.lit(None).cast("int").alias("level"),  # marks "new"
+        F.lit(None).cast("array<array<long>>").alias("neighbors"),
+        F.lit(None).cast("boolean").alias("is_entry"),
     )
     if quantized:
         # union carries BOTH representations: stored rows keep their
@@ -740,19 +715,57 @@ def hnsw_insert_shards(
         ]
     else:
         cols = ["shard_id", "vec_id", "level", "neighbors", "embedding", "is_entry"]
-    # keep only touched shards' existing rows via a LAZY semi-join
-    # against the (tiny, AQE-broadcast) routed shard set — no
-    # distinct().collect() job; untouched shard partitions are pruned
-    # at scan time when the graph is the shard-partitioned table
-    existing = graph.select(*cols).join(
-        F.broadcast(routed.select("shard_id").distinct()), "shard_id", "semi"
-    )
+    if len(shard_ids) == 1:
+        # one shard is every row's home: no lookup, and the whole
+        # graph is the touched shard (it emits nothing when the batch
+        # is empty, see _insert)
+        routed = routed.withColumn("shard_id", F.lit(shard_ids[0]))
+        existing = graph.select(*cols)
+    else:
+        # HOME-SHARD routing: an id that already lives in the graph
+        # MUST route to the shard that holds it — hash routing alone
+        # silently duplicates the node in another shard whenever the
+        # id's home doesn't match its hash (true for every build-time
+        # id, since the build distributes round-robin, and for every
+        # row moved by a rebalance split), breaking both
+        # skip-idempotency and update semantics.  The home lookup is a
+        # column-pruned scan of the graph's (vec_id, shard_id)
+        # semi-joined against the broadcast batch ids; an id lives in
+        # one shard, and a semi-join ignores duplicate keys on its
+        # build side, so neither side needs a distinct or an
+        # aggregate.  Only genuinely new ids fall through to the hash
+        # route.
+        hash_route = F.element_at(
+            F.array(*[F.lit(s) for s in shard_ids]),
+            (F.pmod(F.xxhash64(F.col("vec_id")), F.lit(len(shard_ids))) + 1)
+            .cast("int"),
+        )
+        id_home = graph.select(
+            "vec_id", F.col("shard_id").alias("_home_shard")
+        ).join(F.broadcast(routed.select("vec_id")), "vec_id", "semi")
+        routed = (
+            routed.join(F.broadcast(id_home), "vec_id", "left")
+            .withColumn(
+                "shard_id",
+                F.coalesce(F.col("_home_shard"), hash_route).cast("int"),
+            )
+            .drop("_home_shard")
+        )
+        # keep only touched shards' existing rows via a LAZY semi-join
+        # against the broadcast routed shard ids — no collect job;
+        # untouched shard partitions are pruned at scan time when the
+        # graph is the shard-partitioned table
+        existing = graph.select(*cols).join(
+            F.broadcast(routed.select("shard_id")), "shard_id", "semi"
+        )
     both = existing.unionByName(routed.select(*cols))
 
     def _insert(pdf: pd.DataFrame) -> pd.DataFrame:
+        new = pdf[pdf["level"].isna()].sort_values("vec_id")
+        if new.empty:
+            return pd.DataFrame()  # no arriving rows: shard untouched
         shard = int(pdf["shard_id"].iloc[0])
         old = pdf[pdf["level"].notna()]
-        new = pdf[pdf["level"].isna()].sort_values("vec_id")
         # a batch carrying the same id twice would otherwise insert
         # duplicate nodes — keep one row per id
         new = new.drop_duplicates(subset=["vec_id"], keep="first")

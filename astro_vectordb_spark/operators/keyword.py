@@ -355,11 +355,20 @@ def bm25_topk_indexed(
     score = per_term[0]
     for p in per_term[1:]:
         score = score + p
+    # top-k THEN the score > 0 filter: every matching doc (score > 0,
+    # NaN included) sorts ahead of every other one, so this is the
+    # top-k of the matches.  Filtering first lets Spark fold the filter
+    # into a local docs relation; with at most k matches it then drops
+    # the limit, and the sort becomes a range-partitioned global sort
+    # (three more jobs) instead of a TakeOrderedAndProject.  The k rows
+    # sit in one partition either way (a folded local relation would
+    # spread them), so a consumer that ranks them adds no exchange
     out = (
         base.select(id_col, score.alias(score_col))
-        .filter(F.col(score_col) > 0)
         .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
         .limit(k)
+        .filter(F.col(score_col) > 0)
+        .coalesce(1)
     )
     return out.withColumn(score_col, F.round(F.col(score_col), SCORE_DECIMALS))
 

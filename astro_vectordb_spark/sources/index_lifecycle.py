@@ -200,14 +200,23 @@ def match_index(
     primary, buckets, meta = load_index(spark, path, family)
     ctx = IndexCtx(spark, path, meta)
     id_col = meta["id_col"]
-    # both sides of the batch plan are pinned lazily: the encode pass
-    # (shingling/signing) feeds the verify join, the bucket kernel
-    # feeds BOTH the touched-bucket prune and the candidate join —
-    # without the pins either would recompute per consumer
-    enc = family.encode(ctx, new_rows).localCheckpoint(eager=False)
-    nb = (bucketize or family.bucketize)(ctx, enc).localCheckpoint(
-        eager=False
+    vcol = family.value_col(meta)
+    # the batch's value rides its bucket rows as _v_n, so the verify
+    # step does not broadcast the encoded batch again: the minhash and
+    # simhash kernels pass extra columns through, and the value is
+    # joined back only after a kernel that drops them (RP, SemDeDup).
+    # Both frames are pinned lazily: the encode pass would otherwise
+    # recompute per consumer, and the bucket frame feeds BOTH the
+    # touched-bucket prune and the candidate join
+    enc = (
+        family.encode(ctx, new_rows)
+        .withColumn("_v_n", F.col(vcol))
+        .localCheckpoint(eager=False)
     )
+    nb = (bucketize or family.bucketize)(ctx, enc)
+    if "_v_n" not in nb.columns:
+        nb = nb.join(enc.select(id_col, "_v_n"), id_col)
+    nb = nb.localCheckpoint(eager=False)
     keys = list(family.bucket_keys)
     hist = buckets.select(F.col(id_col).alias("hist_id"), *keys)
     if max_bucket_size is not None or telemetry is not None:
@@ -226,20 +235,14 @@ def match_index(
             .drop("_rn")
         )
     cands = (
-        nb.select(F.col(id_col).alias("new_id"), *keys)
+        nb.select(F.col(id_col).alias("new_id"), *keys, "_v_n")
         .join(hist, keys)
-        .select("new_id", "hist_id")
+        .select("new_id", "hist_id", "_v_n")
     )
     if not family.unique_assignment:
-        cands = cands.distinct()
-    vcol = family.value_col(meta)
+        cands = cands.dropDuplicates(["new_id", "hist_id"])
     scored = (
         cands.join(
-            enc.select(F.col(id_col).alias("new_id"),
-                       F.col(vcol).alias("_v_n")),
-            "new_id",
-        )
-        .join(
             primary.select(F.col(id_col).alias("hist_id"),
                            F.col(vcol).alias("_v_h")),
             "hist_id",

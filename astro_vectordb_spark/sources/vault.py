@@ -40,8 +40,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DataType,
     FloatType,
     LongType,
+    MapType,
     StructField,
     StructType,
 )
@@ -77,10 +79,46 @@ def save_embeddings(
 ) -> None:
     """Write the vector table; ``sort_by`` sorts within partitions so
     parquet row-group min/max stats make key lookups skip row groups
-    (free data-skipping on top of PushedFilters)."""
+    (free data-skipping on top of PushedFilters).
+
+    An append whose batch has the table's schema (as parquet stores it:
+    every field nullable) seeds that schema under the listing the
+    append leaves, so the next :func:`load_embeddings` infers nothing.
+    The schema compared is the one remembered for the listing taken
+    before the write; with none remembered, or another schema (an
+    append may add columns), nothing is seeded and the next load
+    infers once.  Like the graph writers' seeding, this assumes one
+    writer per table."""
+    spark = df.sparkSession
+    known = None
+    if mode == "append":
+        before = _listing(spark, path)
+        if before and before[1]:
+            known = _CONTROL_MEMO.get(("schema", *before))
+        if known is not None and _as_nullable(df.schema) != known:
+            known = None
     if sort_by and sort_by in df.columns:
         df = df.sortWithinPartitions(sort_by)
     df.write.mode(mode).parquet(path)
+    if known is not None:
+        _by_listing(spark, "schema", path, _listing(spark, path), lambda: known)
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable —
+    the schema parquet stores for a written frame."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
 
 
 def compact_files(
@@ -320,6 +358,13 @@ class BoundedMemo:
         self._lock = threading.Lock()
         self.hits = self.misses = self.evictions = 0
 
+    def get(self, key):
+        """The value remembered under ``key``, or None; loads nothing."""
+        with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+            return self._entries.get(key)
+
     def fetch(self, key, load, rekey):
         """The value remembered under ``key``, else ``load()``.
 
@@ -359,26 +404,35 @@ _CONTROL_MEMO = BoundedMemo(cap=64)
 def _listing(spark: SparkSession, root: str) -> tuple | None:
     """``(qualified root URI, files)`` with ``files`` the sorted
     ``(path under root, bytes, mtime ms)`` of every file below
-    ``root`` — one recursive Hadoop listing (a single LIST round on
-    object stores), zero Spark jobs; None when ``root`` does not
-    exist.  It identifies the table VERSION: every parquet write adds
-    part files whose names carry a per-write UUID, so an append,
-    rewrite or swap changes the listing even within one mtime tick."""
+    ``root`` — one ``listStatus`` per directory, zero Spark jobs; None
+    when ``root`` does not exist.  It identifies the table VERSION:
+    every parquet write adds part files whose names carry a per-write
+    UUID, so an append, rewrite or swap changes the listing even
+    within one mtime tick.
+
+    ``listStatus``, not a recursive ``listFiles``: ``listFiles`` wraps
+    each entry in a ``LocatedFileStatus``, whose constructor reads the
+    file's owner and permissions — on a local file system without the
+    native Hadoop library that forks a shell per file, about 10x the
+    cost of this listing (measured on 300 files)."""
     from py4j.protocol import Py4JJavaError
 
     fs, hpath = _hadoop_fs(spark, root)
     try:
         base = str(fs.makeQualified(hpath).toString())
         files = []
-        it = fs.listFiles(hpath, True)
-        while it.hasNext():
-            f = it.next()
-            p = str(f.getPath().toString())
-            files.append((
-                p[len(base) + 1:] if p.startswith(base + "/") else p,
-                int(f.getLen()),
-                int(f.getModificationTime()),
-            ))
+        dirs = [hpath]
+        while dirs:
+            for st in fs.listStatus(dirs.pop()):
+                if st.isDirectory():
+                    dirs.append(st.getPath())
+                    continue
+                p = str(st.getPath().toString())
+                files.append((
+                    p[len(base) + 1:] if p.startswith(base + "/") else p,
+                    int(st.getLen()),
+                    int(st.getModificationTime()),
+                ))
     except Py4JJavaError as e:  # missing, or deleted mid-listing
         if not str(e.java_exception.getClass().getName()).endswith(
             "FileNotFoundException"
@@ -546,6 +600,50 @@ def _seed_graph_schema(
     return listing
 
 
+def _commit_graph_shards(
+    spark: SparkSession,
+    graph_path: str,
+    schema: StructType,
+    updated: DataFrame | None,
+    drop_shards=(),
+) -> tuple[DataFrame | None, tuple | None]:
+    """Commit one graph version: rewrite the shards in ``updated``
+    (dynamic partition overwrite — other shards keep their files),
+    delete the ``shard_id=N`` directories of ``drop_shards``, and seed
+    ``schema`` under the new listing (:func:`_seed_graph_schema`).
+    Returns the materialized ``updated`` and that listing.
+
+    ``updated`` is pinned with an eager ``localCheckpoint`` first: it
+    is computed from the graph files the overwrite replaces.  It is
+    written without a repartition, and each shard still lands in ONE
+    parquet file, because every graph operator emits each shard whole
+    from one partition: ``hnsw_insert_shards`` and
+    ``hnsw_remove_shards`` out of a ``groupBy("shard_id")`` shuffle
+    (AQE coalescing merges partitions, it never splits one), and
+    ``hnsw_build_shards`` one shard per ``repartition(num_shards)``
+    partition.  A union of such frames concatenates partitions, and
+    a write task writes one file per shard it holds."""
+    if updated is not None:
+        updated = updated.localCheckpoint(eager=True)
+        (
+            updated.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("shard_id")
+            .parquet(graph_path)
+        )
+    if drop_shards:
+        fs, _ = _hadoop_fs(spark, graph_path)
+        jvm = spark._jvm
+        for sid in drop_shards:
+            fs.delete(
+                jvm.org.apache.hadoop.fs.Path(
+                    os.path.join(graph_path, f"shard_id={sid}")
+                ),
+                True,
+            )
+    return updated, _seed_graph_schema(spark, graph_path, schema)
+
+
 def hnsw_append_to_index(
     spark: SparkSession,
     path: str,
@@ -570,16 +668,7 @@ def hnsw_append_to_index(
         graph, new_rows, m=meta["m"], metric=meta["metric"], seed=seed,
         on_conflict=on_conflict, shard_ids=meta["shard_ids"],
     )
-    # materialize before overwriting the path being read
-    updated = updated.localCheckpoint(eager=True)
-    (
-        updated.repartition("shard_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard_id")
-        .parquet(graph_path)
-    )
-    after = _seed_graph_schema(spark, graph_path, graph.schema)
+    _, after = _commit_graph_shards(spark, graph_path, graph.schema, updated)
     # the dynamic overwrite gives every partition it writes new part
     # files (per-write UUID names) and leaves the others' files alone,
     # so the touched shards are those holding files the old listing lacks
@@ -687,17 +776,10 @@ def hnsw_rebalance(
     updated = updated_parts[0]
     for p in updated_parts[1:]:
         updated = updated.unionByName(p)
-    updated = updated.localCheckpoint(eager=True)
-    graph_path = os.path.join(path, "graph")
-    (
-        updated.repartition("shard_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard_id")
-        .parquet(graph_path)
-    )
     # splits created NEW shard partitions; the next load lists them
-    _seed_graph_schema(spark, graph_path, graph.schema)
+    _commit_graph_shards(
+        spark, os.path.join(path, "graph"), graph.schema, updated
+    )
     return result
 
 
@@ -1533,28 +1615,14 @@ def hnsw_remove_from_index(
                     seed=seed + sid, quantize=quantized,
                 ).withColumn("shard_id", F.lit(int(sid)).cast("int"))
             )
+    updated = None
     if out_parts:
         updated = out_parts[0]
         for p in out_parts[1:]:
             updated = updated.unionByName(p)
-        updated = updated.localCheckpoint(eager=True)
-        (
-            updated.repartition("shard_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("shard_id")
-            .parquet(graph_path)
-        )
-    fs, _ = _hadoop_fs(spark, graph_path)
-    jvm = spark._jvm
-    for sid in emptied:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                os.path.join(graph_path, f"shard_id={sid}")
-            ),
-            True,
-        )
-    _seed_graph_schema(spark, graph_path, graph.schema)
+    updated, _ = _commit_graph_shards(
+        spark, graph_path, graph.schema, updated, drop_shards=emptied
+    )
     # graph-health verdict for the TOUCHED shards (the way
     # pq_append_to_index surfaces MSE drift): edge sweeps erode wiring —
     # a removed node's pruned incoming edges are never re-wired — so

@@ -636,3 +636,71 @@ class TestSweepReplayNamespace:
             spark, path, _mkdocs(spark, [corpus_rows[41]]), batch_id=5
         )
         assert rep["skipped_replay"] and rep["repaired_rows"] == 0
+
+
+def test_signature_and_band_sql_forms_match_column_trees(spark):
+    """The min aggregates of ``minhash_signatures_sql_safe`` and the
+    band folds of ``minhash_band_table`` are parsed SQL expressions; on
+    NULL, empty, short (< n tokens) and astral-code-point texts they
+    give the same rows, bit for bit, as the Column-tree forms they
+    replaced (built here from the same hash column)."""
+    from astro_vectordb_spark.functions.text import word_shingles
+    from astro_vectordb_spark.operators.dedup import (
+        BAND_BASE,
+        POLY_MOD,
+        _char_poly_hash,
+        minhash_band_table,
+        minhash_signatures_sql_safe,
+    )
+
+    texts = [
+        (0, None),
+        (1, ""),
+        (2, "one two"),
+        (3, "merge hash spark join scan"),
+        (4, "\U0001f389 party \U0001f389 time \U00010348 gothic 日本"),
+        (5, "MERGE  hash\tspark join  scan sort"),
+        (6, "\U0001d11e clef \U0001d11e clef \U0001d11e clef"),
+    ]
+    docs = spark.createDataFrame(texts, "doc_id long, text string")
+    nh, bands, n = 16, 4, 3
+    got = {r.doc_id: list(r.sig) for r in minhash_signatures_sql_safe(
+        docs, num_hashes=nh, n=n).collect()}
+    ex = (
+        docs.select("doc_id", word_shingles(F.col("text"), n).alias("_sh"))
+        .filter(F.size("_sh") > 0)
+        .select("doc_id", F.explode("_sh").alias("_s"))
+        .withColumn("_h", _char_poly_hash(F.col("_s")))
+    )
+    want = {
+        r.doc_id: list(r.sig)
+        for r in ex.groupBy("doc_id").agg(
+            F.array(*[
+                F.min((F.lit(2 * i + 1) * F.col("_h") + F.lit(7919 * i))
+                      % F.lit(POLY_MOD))
+                for i in range(nh)
+            ]).alias("sig")
+        ).collect()
+    }
+    assert got == want
+    assert set(got) == {3, 4, 5, 6}  # NULL, empty and short docs drop
+
+    sigs = spark.createDataFrame(
+        [(d, s) for d, s in sorted(got.items())]
+        + [(99, [POLY_MOD - 1] * nh), (98, [0] * nh)],
+        "doc_id long, sig array<bigint>",
+    )
+    r = nh // bands
+    old = sigs.select(
+        "doc_id",
+        F.posexplode(F.array(*[
+            F.aggregate(
+                F.slice(F.col("sig"), b * r + 1, r), F.lit(0).cast("long"),
+                lambda acc, x: (acc * F.lit(BAND_BASE) + x) % F.lit(POLY_MOD),
+            )
+            for b in range(bands)
+        ])).alias("band_idx", "band_sig"),
+    )
+    new = minhash_band_table(sigs, num_hashes=nh, bands=bands)
+    assert new.schema == old.schema
+    assert sorted(new.collect()) == sorted(old.collect())

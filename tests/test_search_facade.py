@@ -1253,6 +1253,32 @@ class TestServeControlPlane:
         )
         assert n <= 2, n
 
+    def test_hybrid_over_local_docs_with_few_matches(self, spark, served):
+        """A docs frame built from driver rows (as a pandas-fed caller
+        passes it) on a query that matches fewer than k documents: the
+        BM25 top-k stays a TakeOrderedAndProject, and the rows equal
+        those over the parquet-backed docs."""
+        from astro_vectordb_spark.search import hybrid_search_text
+        from astro_vectordb_spark.session import local_frame
+
+        paths, docs = served
+        local = local_frame(spark, _DOCS, "doc_id long, text string")
+
+        def run(d):
+            return hybrid_search_text(
+                spark, paths["doc_vectors"], paths["bm25"], d,
+                "vector graph beam", 5,
+            ).collect()
+
+        got = []
+
+        def act():
+            got[:] = run(local)
+
+        n = self._warm_jobs(spark, "hybrid-local", act)
+        assert n <= 2, n
+        assert got and got == run(docs)
+
     def test_bm25_corpus_stats_first_runs_no_job(self, spark, served):
         from astro_vectordb_spark.sources.vault import load_bm25_index
 
@@ -1315,7 +1341,7 @@ class TestMaintenanceControlPlane:
                        lambda: neardup.open(spark, minhash_path))
         assert n == 0, n
 
-    def test_minhash_match_at_most_six_jobs(self, spark, minhash_path):
+    def test_minhash_match_at_most_five_jobs(self, spark, minhash_path):
         from astro_vectordb_spark import neardup
         from astro_vectordb_spark.session import local_frame
 
@@ -1334,7 +1360,7 @@ class TestMaintenanceControlPlane:
         match()
         got = []
         n = self._jobs(spark, "nd-match", lambda: got.extend(match()))
-        assert n <= 6, n
+        assert n <= 5, n
         assert {(r.new_id, r.hist_id) for r in got} >= {(100, 0)}
 
     def test_hnsw_append_then_search(self, spark, corpus, hnsw_path):
@@ -1346,7 +1372,7 @@ class TestMaintenanceControlPlane:
         touched = []
         n = self._jobs(spark, "hnsw-append",
                        lambda: touched.extend(idx.append(batch)))
-        assert n <= 9, n
+        assert n <= 3, n
         assert touched == [0]
         probe = [float(x) + 1e-3 for x in corpus[1][7]]
         hits = []
@@ -1364,13 +1390,123 @@ class TestMaintenanceControlPlane:
         rep = {}
         n = self._jobs(spark, "hnsw-remove", lambda: rep.update(
             idx.remove(gone, mode="sweep")))
-        assert n <= 10, n
+        assert n <= 8, n
         assert (rep["removed_rows"], rep["swept_shards"]) == (3, [0])
         hits = []
         n = self._jobs(spark, "hnsw-search-after-remove", lambda: hits.extend(
             search(spark, hnsw_path, qv, 10).collect()))
         assert n <= 2, n
         assert len(hits) == 10 and not set(gone) & {r.vec_id for r in hits}
+
+    def test_two_shard_append_and_update(self, spark, corpus, tmp_path):
+        from astro_vectordb_spark import index
+        from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
+        from astro_vectordb_spark.sources.vault import (
+            load_hnsw_index,
+            save_hnsw_index,
+        )
+
+        df, pts = corpus
+        p = str(tmp_path / "hnsw2")
+        save_hnsw_index(
+            hnsw_build_shards(df, num_shards=2, ef_construction=40), p, m=16
+        )
+        idx = index.open(spark, p)
+        idx.append(self._batch(spark, corpus, 10_000))
+        batch = self._batch(spark, corpus, 20_000, n=16)
+        n = self._jobs(spark, "hnsw2-append", lambda: idx.append(batch))
+        assert n <= 6, n
+        # existing ids from both shards, with moved vectors: each must
+        # update in place in its home shard
+        upd = spark.createDataFrame(
+            [(int(i), [float(x) + 0.5 for x in pts[i]])
+             for i in range(0, 16, 2)],
+            "vec_id long, embedding array<float>",
+        )
+        idx.append(upd, on_conflict="update")
+        upd2 = upd.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x + F.lit(0.25)).alias(
+                "embedding"),
+        )
+        n = self._jobs(spark, "hnsw2-update",
+                       lambda: idx.append(upd2, on_conflict="update"))
+        assert n <= 6, n
+        graph, _ = load_hnsw_index(spark, p)
+        ids = [r.vec_id for r in graph.select("vec_id").collect()]
+        assert len(ids) == len(set(ids)) == N + 4 + 16
+        got = {r.vec_id: r.embedding for r in graph.filter(
+            F.col("vec_id") < 16).collect()}
+        for i in range(0, 16, 2):
+            assert np.allclose(got[i], pts[i] + 0.75, atol=1e-5)
+
+    def test_exact_search_after_same_schema_append(self, spark, corpus, qv,
+                                                   tmp_path):
+        from astro_vectordb_spark.sources.vault import (
+            load_embeddings,
+            save_embeddings,
+        )
+
+        df, pts = corpus
+        p = str(tmp_path / "vectors")
+        save_embeddings(df, p)
+        search(spark, p, qv, 5).collect()
+        axis = [1.0] + [0.0] * (DIM - 1)
+        save_embeddings(
+            spark.createDataFrame([(50_000, axis)],
+                                  "vec_id long, embedding array<float>"),
+            p, mode="append",
+        )
+        hits = []
+        n = self._jobs(spark, "exact-after-append", lambda: hits.extend(
+            search(spark, p, axis, 1).collect()))
+        assert n <= 1, n
+        assert hits[0].vec_id == 50_000
+        assert load_embeddings(spark, p).schema == spark.read.parquet(p).schema
+
+    def test_graph_writes_leave_one_file_per_shard(self, spark, corpus,
+                                                    tmp_path):
+        import os
+
+        from astro_vectordb_spark import index
+        from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
+        from astro_vectordb_spark.sources.vault import (
+            hnsw_rebalance,
+            save_hnsw_index,
+        )
+
+        df, _ = corpus
+        p = str(tmp_path / "hnsw4")
+        save_hnsw_index(hnsw_build_shards(df, num_shards=4), p, m=16)
+        idx = index.open(spark, p)
+
+        def parquet_files():
+            g = os.path.join(p, "graph")
+            return {
+                d: sum(f.endswith(".parquet")
+                       for f in os.listdir(os.path.join(g, d)))
+                for d in os.listdir(g) if d.startswith("shard_id=")
+            }
+
+        touched = idx.append(self._batch(spark, corpus, 30_000, n=16))
+        assert len(touched) >= 2, touched
+        rep = idx.remove([1, 2, 3, 4, 5, 6, 7, 8], mode="sweep")
+        assert len(rep["swept_shards"]) >= 2, rep
+        split = hnsw_rebalance(
+            spark, p, target_rows_per_shard=N // 8, skew_threshold=1.0
+        )
+        assert len(split) == 4 and all(len(v) >= 2 for v in split.values())
+        files = parquet_files()
+        assert len(files) > 4 and set(files.values()) == {1}, files
+
+    def test_empty_append_touches_nothing(self, spark, hnsw_path):
+        from astro_vectordb_spark import index
+        from astro_vectordb_spark.sources.vault import _listing
+
+        before = _listing(spark, hnsw_path + "/graph")
+        empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+        assert index.open(spark, hnsw_path).append(empty) == []
+        assert _listing(spark, hnsw_path + "/graph") == before
 
 
 class TestControlMemoStaleness:
@@ -1474,6 +1610,28 @@ class TestControlMemoStaleness:
         assert [r.vec_id for r in search(spark, p, qv, 3).collect()] == [
             r.vec_id for r in first
         ]
+
+    def test_append_with_extra_column_infers_the_schema(
+        self, spark, corpus, qv, tmp_path
+    ):
+        from astro_vectordb_spark.sources.vault import (
+            load_embeddings,
+            save_embeddings,
+        )
+
+        df, pts = corpus
+        p = str(tmp_path / "wider_append")
+        save_embeddings(df, p)
+        assert load_embeddings(spark, p).columns == ["vec_id", "embedding"]
+        save_embeddings(
+            spark.createDataFrame(
+                [(60_000, [float(x) for x in pts[3]], 7)],
+                "vec_id long, embedding array<float>, label int",
+            ),
+            p, mode="append",
+        )
+        assert load_embeddings(spark, p).schema == spark.read.parquet(p).schema
+        assert load_embeddings(spark, p).count() == N + 1
 
     def test_neardup_append_then_remove_show_in_next_open(
         self, spark, tmp_path

@@ -112,3 +112,36 @@ def test_similarity_join_self_pairs(spark, embeddings):
         a, b = np.array(qa, np.float64), np.array(qb, np.float64)
         s = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
         assert abs(p["score"] - s) < 1e-6
+
+
+def test_query_literal_bit_exact_with_per_element_form(spark):
+    """``score_against`` builds the query vector as one float64 array
+    literal; values and scores are bit-identical to the per-element
+    ``array(lit(...))`` form on ±0, subnormals and large magnitudes."""
+    import struct
+
+    from astro_vectordb_spark.operators.topk import score_against
+
+    q = [0.0, -0.0, 5e-324, -2.2250738585072014e-308, 1e-310,
+         1.7976931348623157e308, -1e300, 0.1, 1 / 3, -7.5]
+    corpus = spark.createDataFrame(
+        [(0, [1.0] * len(q)), (1, [float(i) - 4.0 for i in range(len(q))]),
+         (2, [1e-300] * len(q)), (3, [-0.0] * len(q))],
+        "vec_id long, embedding array<float>",
+    )
+    old_qv = F.array(*[F.lit(float(x)) for x in q])
+    lit_q = spark.range(1).select(
+        F.lit(np.asarray(q, dtype=np.float64)).alias("q")).first().q
+    old_q = spark.range(1).select(old_qv.alias("q")).first().q
+
+    def bits(xs):
+        return [struct.pack(">d", x) for x in xs]
+
+    assert bits(lit_q) == bits(old_q) == bits(q)
+    for metric in ("cosine", "euclidean"):
+        new = score_against(corpus, q, metric=metric)
+        old = score_against(corpus, old_qv, metric=metric)
+        assert new.schema == old.schema
+        assert [bits([r.score]) for r in new.orderBy("vec_id").collect()] == [
+            bits([r.score]) for r in old.orderBy("vec_id").collect()
+        ], metric
