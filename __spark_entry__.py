@@ -412,10 +412,8 @@ def simhash_index_path(spark, sf_dir: str) -> str:
         return _SIMHASH_IDX_CACHE[sf_dir]
     import tempfile
 
-    from astro_vectordb_spark.sources.vault import (
-        save_simhash_index,
-        simhash_append_to_index,
-    )
+    from astro_vectordb_spark import neardup
+    from astro_vectordb_spark.sources.vault import save_simhash_index
 
     hist = _docs(spark, sf_dir).select("doc_id", "text").filter(
         F.col("doc_id") % 5 != 4
@@ -423,8 +421,8 @@ def simhash_index_path(spark, sf_dir: str) -> str:
     path = tempfile.mkdtemp(prefix="astro_sh_idx_")
     save_simhash_index(hist.filter(F.col("doc_id") % 10 != 7), path,
                        max_hamming=3)
-    simhash_append_to_index(
-        spark, path, hist.filter(F.col("doc_id") % 10 == 7), batch_id=0
+    neardup.open(spark, path).append(
+        hist.filter(F.col("doc_id") % 10 == 7), batch_id=0,
     )
     _SIMHASH_IDX_CACHE[sf_dir] = path
     return path
@@ -451,7 +449,7 @@ def _q_simhash_index_incremental(spark, sf_dir):
     # signature/chunk/popcount arithmetic while keeping the gate out
     # of the driver window's heavy tail.  Oracle changed in lockstep
     # (the gate was never driver-signed before this round).
-    from astro_vectordb_spark.sources.vault import simhash_match_index
+    from astro_vectordb_spark import neardup
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     new = docs.filter(F.col("doc_id") % 20 == 4).unionAll(
@@ -459,8 +457,8 @@ def _q_simhash_index_incremental(spark, sf_dir):
             (F.col("doc_id") < 20) & (F.col("doc_id") % 5 != 4)
         ).select((F.col("doc_id") + 100000).alias("doc_id"), "text")
     )
-    return simhash_match_index(
-        spark, simhash_index_path(spark, sf_dir), new, max_hamming=3
+    return neardup.open(spark, simhash_index_path(spark, sf_dir)).match(
+        new, max_hamming=3,
     )
 
 
@@ -2133,18 +2131,16 @@ def rp_index_path(spark, sf_dir: str) -> str:
         return _RP_INDEX_CACHE[sf_dir]
     import tempfile
 
-    from astro_vectordb_spark.sources.vault import (
-        rp_append_to_index,
-        save_rp_index,
-    )
+    from astro_vectordb_spark import neardup
+    from astro_vectordb_spark.sources.vault import save_rp_index
 
     hist = _emb(spark, sf_dir).select("vec_id", "embedding").filter(
         F.col("vec_id") % 5 != 4
     )
     path = tempfile.mkdtemp(prefix="astro_rp_idx_")
     save_rp_index(hist.filter(F.col("vec_id") % 10 != 7), path, dim=64)
-    rp_append_to_index(
-        spark, path, hist.filter(F.col("vec_id") % 10 == 7), batch_id=0
+    neardup.open(spark, path).append(
+        hist.filter(F.col("vec_id") % 10 == 7), batch_id=0,
     )
     _RP_INDEX_CACHE[sf_dir] = path
     return path
@@ -2162,7 +2158,7 @@ def _q_rp_index_incremental(spark, sf_dir):
     # the stored plane family, the bucket partitioning, the append's
     # bucket-sync, or the verify arithmetic shifts the
     # (new_id, hist_id, score) hash.
-    from astro_vectordb_spark.sources.vault import rp_match_index
+    from astro_vectordb_spark import neardup
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     held_out = emb.filter(F.col("vec_id") % 5 == 4)
@@ -2173,8 +2169,8 @@ def _q_rp_index_incremental(spark, sf_dir):
         )
     )
     batch = held_out.unionByName(planted)
-    return rp_match_index(
-        spark, rp_index_path(spark, sf_dir), batch, threshold=0.4
+    return neardup.open(spark, rp_index_path(spark, sf_dir)).match(
+        batch, threshold=0.4,
     )
 
 
@@ -2190,7 +2186,7 @@ def _q_rp_index_multiprobe(spark, sf_dir):
     # (new_id, hist_id, score) set.  Results are a superset of
     # rp_index_incremental by construction (probes only ADD candidate
     # buckets; the exact-cosine verify is unchanged).
-    from astro_vectordb_spark.sources.vault import rp_match_index
+    from astro_vectordb_spark import neardup
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     held_out = emb.filter(F.col("vec_id") % 5 == 4)
@@ -2201,9 +2197,8 @@ def _q_rp_index_multiprobe(spark, sf_dir):
         )
     )
     batch = held_out.unionByName(planted)
-    return rp_match_index(
-        spark, rp_index_path(spark, sf_dir), batch, threshold=0.4,
-        n_probes=2,
+    return neardup.open(spark, rp_index_path(spark, sf_dir)).match(
+        batch, threshold=0.4, n_probes=2,
     )
 
 
@@ -2282,10 +2277,8 @@ def semdedup_index_path(spark, sf_dir: str) -> str:
         return _SEMDEDUP_IDX_CACHE[sf_dir]
     import tempfile
 
-    from astro_vectordb_spark.sources.semdedup_index import (
-        save_semdedup_index,
-        semdedup_append_to_index,
-    )
+    from astro_vectordb_spark import neardup
+    from astro_vectordb_spark.sources.semdedup_index import save_semdedup_index
 
     hist = _emb(spark, sf_dir).select("vec_id", "embedding").filter(
         F.col("vec_id") % 5 != 4
@@ -2295,8 +2288,8 @@ def semdedup_index_path(spark, sf_dir: str) -> str:
         hist.filter(F.col("vec_id") % 10 != 7), path,
         centroids=_semdedup_cents16(spark), dim=64,
     )
-    semdedup_append_to_index(
-        spark, path, hist.filter(F.col("vec_id") % 10 == 7), batch_id=0
+    neardup.open(spark, path).append(
+        hist.filter(F.col("vec_id") % 10 == 7), batch_id=0,
     )
     _SEMDEDUP_IDX_CACHE[sf_dir] = path
     return path
@@ -2314,13 +2307,10 @@ def _q_semdedup_fixed(spark, sf_dir):
     # (r12 verdict What's-wrong #1).  Assignment parity with the
     # one-shot semantic_dedup(centroids=...) face is pinned by
     # tests/test_semdedup_index.py; the kmeans face stays pytest-pinned.
-    from astro_vectordb_spark.sources.semdedup_index import (
-        semdedup_index_groups,
-    )
+    from astro_vectordb_spark import neardup
 
-    return semdedup_index_groups(
-        spark, semdedup_full_index_path(spark, sf_dir), eps=0.4,
-        keep="min_id",
+    return neardup.open(spark, semdedup_full_index_path(spark, sf_dir)).groups(
+        eps=0.4, keep="min_id",
     )
 
 
@@ -2330,7 +2320,7 @@ def _q_semdedup_groups_probed(spark, sf_dir):
     # a near-dup pair straddling a cell boundary INSIDE the stored
     # corpus was invisible to groups()/sweep because both members sit
     # in their (different) argmax cells.  This gate serves
-    # semdedup_index_groups from an index persisted with
+    # the semdedup groups() from an index persisted with
     # store_probe_margin=0.02: every stored row whose assignment
     # margin is thin (sim_1 - sim_2 <= 0.02) ALSO persists its rank-2
     # cell (cell_id_2, computed in the same assignment pass), and the
@@ -2340,14 +2330,10 @@ def _q_semdedup_groups_probed(spark, sf_dir):
     # with the identical (sim desc, cell_id asc) tie rule — so the
     # whole persisted dial sits on one driver hash.  The keep set is
     # a SUBSET of semdedup_fixed's (more pairs only merge groups).
-    from astro_vectordb_spark.sources.semdedup_index import (
-        semdedup_index_groups,
-    )
+    from astro_vectordb_spark import neardup
 
-    return semdedup_index_groups(
-        spark, semdedup_probed_index_path(spark, sf_dir), eps=0.4,
-        keep="min_id",
-    )
+    path = semdedup_probed_index_path(spark, sf_dir)
+    return neardup.open(spark, path).groups(eps=0.4, keep="min_id")
 
 
 def _q_semdedup_index_incremental(spark, sf_dir):
@@ -2362,9 +2348,7 @@ def _q_semdedup_index_incremental(spark, sf_dir):
     # churn, so drift in the stored centroid table, the argmax
     # assignment (ties by cell_id), the append's cell-sync, or the
     # verify arithmetic shifts the (new_id, hist_id, score) hash.
-    from astro_vectordb_spark.sources.semdedup_index import (
-        semdedup_match_index,
-    )
+    from astro_vectordb_spark import neardup
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     held_out = emb.filter(F.col("vec_id") % 5 == 4)
@@ -2375,8 +2359,8 @@ def _q_semdedup_index_incremental(spark, sf_dir):
         )
     )
     batch = held_out.unionByName(planted)
-    return semdedup_match_index(
-        spark, semdedup_index_path(spark, sf_dir), batch, eps=0.4
+    return neardup.open(spark, semdedup_index_path(spark, sf_dir)).match(
+        batch, eps=0.4,
     )
 
 
@@ -2394,9 +2378,7 @@ def _q_semdedup_index_multiprobe(spark, sf_dir):
     # dial sits on one driver hash.  Results are a superset of
     # semdedup_index_incremental by construction (probing only ADDS
     # candidate cells; the exact-cosine verify at eps is unchanged).
-    from astro_vectordb_spark.sources.semdedup_index import (
-        semdedup_match_index,
-    )
+    from astro_vectordb_spark import neardup
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     held_out = emb.filter(F.col("vec_id") % 5 == 4)
@@ -2407,9 +2389,8 @@ def _q_semdedup_index_multiprobe(spark, sf_dir):
         )
     )
     batch = held_out.unionByName(planted)
-    return semdedup_match_index(
-        spark, semdedup_index_path(spark, sf_dir), batch, eps=0.4,
-        n_probes=2, probe_margin=0.1,
+    return neardup.open(spark, semdedup_index_path(spark, sf_dir)).match(
+        batch, eps=0.4, n_probes=2, probe_margin=0.1,
     )
 
 
@@ -2421,10 +2402,10 @@ def _q_rp_index_groups(spark, sf_dir):
     # keep themselves).  The corpus is never re-projected; the oracle
     # replays buckets -> pairs -> recursive-CTE closure -> min-id from
     # the same plane literals.
-    from astro_vectordb_spark.sources.vault import rp_index_groups
+    from astro_vectordb_spark import neardup
 
-    return rp_index_groups(
-        spark, rp_index_path(spark, sf_dir), threshold=0.4
+    return neardup.open(spark, rp_index_path(spark, sf_dir)).groups(
+        threshold=0.4,
     )
 
 
@@ -2442,18 +2423,16 @@ def minhash_index_path(spark, sf_dir: str) -> str:
         return _MINHASH_INDEX_CACHE[sf_dir]
     import tempfile
 
-    from astro_vectordb_spark.sources.vault import (
-        minhash_append_to_index,
-        save_minhash_index,
-    )
+    from astro_vectordb_spark import neardup
+    from astro_vectordb_spark.sources.vault import save_minhash_index
 
     hist = _docs(spark, sf_dir).select("doc_id", "text").filter(
         F.col("doc_id") % 5 != 4
     )
     path = tempfile.mkdtemp(prefix="astro_mh_idx_")
     save_minhash_index(hist.filter(F.col("doc_id") % 10 != 7), path)
-    minhash_append_to_index(
-        spark, path, hist.filter(F.col("doc_id") % 10 == 7), batch_id=0
+    neardup.open(spark, path).append(
+        hist.filter(F.col("doc_id") % 10 == 7), batch_id=0,
     )
     _MINHASH_INDEX_CACHE[sf_dir] = path
     return path
@@ -2470,7 +2449,7 @@ def _q_minhash_index_incremental(spark, sf_dir):
     # save -> APPEND churn, so a drift in the stored hash family, the
     # band fold, the append's bands-sync, or the estimate arithmetic
     # shifts the (new_id, hist_id, est_jaccard) hash.
-    from astro_vectordb_spark.sources.vault import minhash_match_index
+    from astro_vectordb_spark import neardup
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     new = docs.filter(F.col("doc_id") % 5 == 4).unionAll(
@@ -2478,8 +2457,8 @@ def _q_minhash_index_incremental(spark, sf_dir):
             (F.col("doc_id") < 20) & (F.col("doc_id") % 5 != 4)
         ).select((F.col("doc_id") + 100000).alias("doc_id"), "text")
     )
-    return minhash_match_index(
-        spark, minhash_index_path(spark, sf_dir), new, threshold=0.5
+    return neardup.open(spark, minhash_index_path(spark, sf_dir)).match(
+        new, threshold=0.5,
     )
 
 
@@ -2492,10 +2471,10 @@ def _q_minhash_index_groups(spark, sf_dir):
     # closes the components with a recursive CTE, so index storage,
     # the est arithmetic, and the label propagation all sit on one
     # hash.
-    from astro_vectordb_spark.sources.vault import minhash_index_groups
+    from astro_vectordb_spark import neardup
 
-    return minhash_index_groups(
-        spark, minhash_index_path(spark, sf_dir), threshold=0.8
+    return neardup.open(spark, minhash_index_path(spark, sf_dir)).groups(
+        threshold=0.8,
     )
 
 
@@ -2504,7 +2483,7 @@ _MH_SWEEP_CACHE: dict[str, str] = {}
 
 def _q_minhash_apply_sweep(spark, sf_dir):
     # round 11: APPLY the retroactive sweep (verdict item 7) — build a
-    # fresh fingerprint index, minhash_apply_groups removes every
+    # fresh fingerprint index, the handle's apply_sweep removes every
     # near-dup loser through the replay-logged file-granular remove
     # path (sigs AND bands), then a probe batch of planted historical
     # copies is matched against the POST-SWEEP index.  The hash pins
@@ -2516,24 +2495,21 @@ def _q_minhash_apply_sweep(spark, sf_dir):
     # index is a fixpoint, so repeated calls serve the identical match.
     import tempfile
 
-    from astro_vectordb_spark.sources.vault import (
-        minhash_apply_groups,
-        minhash_match_index,
-        save_minhash_index,
-    )
+    from astro_vectordb_spark import neardup
+    from astro_vectordb_spark.sources.vault import save_minhash_index
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     if sf_dir not in _MH_SWEEP_CACHE:
         hist = docs.filter(F.col("doc_id") % 7 == 0)
         path = tempfile.mkdtemp(prefix="astro_mh_sweep_")
         save_minhash_index(hist, path)
-        minhash_apply_groups(spark, path, threshold=0.8, batch_id=0)
+        neardup.open(spark, path).apply_sweep(threshold=0.8, batch_id=0)
         _MH_SWEEP_CACHE[sf_dir] = path
     probe = docs.filter(
         (F.col("doc_id") < 70) & (F.col("doc_id") % 7 == 0)
     ).select((F.col("doc_id") + 200000).alias("doc_id"), "text")
-    return minhash_match_index(
-        spark, _MH_SWEEP_CACHE[sf_dir], probe, threshold=0.5
+    return neardup.open(spark, _MH_SWEEP_CACHE[sf_dir]).match(
+        probe, threshold=0.5,
     )
 
 
@@ -5661,7 +5637,7 @@ WHERE doc_id NOT IN (SELECT id FROM comp)
         # apply-the-sweep: keep set over the historical slice (same
         # signature/band/closure CTEs), then the probe batch matched
         # against ONLY the keepers — replays
-        # save -> minhash_apply_groups -> minhash_match_index
+        # save -> apply_sweep -> match (neardup.open handle)
         "minhash_apply_sweep": f"""
 WITH RECURSIVE hist AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 7 = 0

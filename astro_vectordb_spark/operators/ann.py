@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from astro_vectordb_spark.functions.vector import l2_norm
+from astro_vectordb_spark.functions.vector import l2_norm, vector_literal
 from astro_vectordb_spark.operators.topk import topk_search
 from astro_vectordb_spark.session import local_frame
 
@@ -284,7 +284,7 @@ def choose_probe_cells(
     big query; it cannot stay distributed and still prune)."""
     from astro_vectordb_spark.functions.vector import similarity
 
-    qv = F.array(*[F.lit(float(x)) for x in query_vector])
+    qv = vector_literal(query_vector)
     ranked = (
         centroids.withColumn("_s", similarity(F.col("centroid"), qv, metric))
         .orderBy(F.col("_s").desc(), F.col("cell_id"))
@@ -345,7 +345,7 @@ def choose_probe_cells_adaptive(
 
     from astro_vectordb_spark.functions.vector import similarity
 
-    qv = F.array(*[F.lit(float(x)) for x in query_vector])
+    qv = vector_literal(query_vector)
     rows = (
         centroids.withColumn("_s", similarity(F.col("centroid"), qv, metric))
         .select("cell_id", "_s")

@@ -950,7 +950,7 @@ def rp_cell_table(
     """(id, tbl, cell[, rcell]) multi-table random-hyperplane bucket
     assignment — the blocking primitive shared by :func:`rp_block_pairs`
     (one-shot self-join dedup) and the PERSISTED embedding near-dup
-    index (``vault.save_rp_index`` / ``rp_match_index``), so a batch
+    index (``vault.save_rp_index`` / ``NearDupIndex.match``), so a batch
     bucketed today joins an index built last month bit-identically.
 
     The kernel is an Arrow-batched pandas_udf, NOT a SQL expression:

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from astro_vectordb_spark.functions.text import tokens
-from astro_vectordb_spark.functions.vector import similarity
+from astro_vectordb_spark.functions.vector import similarity, vector_literal
 
 SCORE_DECIMALS = 6
 
@@ -100,11 +100,7 @@ def maxsim_score_all(
     if not query_vecs:
         raise ValueError("query_vecs must be non-empty")
     sims = [
-        similarity(
-            F.col(vec_col),
-            F.array(*[F.lit(float(x)) for x in qv]),
-            metric,
-        ).alias(f"_s{i}")
+        similarity(F.col(vec_col), vector_literal(qv), metric).alias(f"_s{i}")
         for i, qv in enumerate(query_vecs)
     ]
     scored = chunk_vecs.select(id_col, *sims)

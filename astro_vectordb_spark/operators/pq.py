@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from astro_vectordb_spark.functions.vector import (
     similarity,
     threshold_from_strength,
+    vector_literal,
 )
 from astro_vectordb_spark.session import local_frame
 
@@ -908,7 +909,7 @@ def pq_topk(
         cand = pq_candidates(
             scan, model, query_vector, k * refine_factor, id_col=id_col
         ).distinct()
-    qv = F.array(*[F.lit(float(x)) for x in query_vector])
+    qv = vector_literal(query_vector)
     out = (
         original.join(F.broadcast(cand), id_col)
         .withColumn(score_col, similarity(F.col(vec_col), qv, model.metric))
@@ -1179,7 +1180,7 @@ def ivf_pq_topk(
             model=model,
         ).select(id_col)
     cand = cand.distinct()
-    qv = F.array(*[F.lit(float(x)) for x in query_vector])
+    qv = vector_literal(query_vector)
     out = (
         original.join(F.broadcast(cand), id_col)
         .withColumn(score_col, similarity(F.col(vec_col), qv, model.metric))

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from astro_vectordb_spark.functions.vector import (
     similarity,
     threshold_from_strength,
+    vector_literal,
 )
 
 SCORE_DECIMALS = 6
@@ -154,7 +155,7 @@ def topk_search_quantized(
     if isinstance(query_vector, Column):
         qv = query_vector
     else:
-        qv = F.array(*[F.lit(float(x)) for x in query_vector])
+        qv = vector_literal(query_vector)
     cand = (
         quantized.withColumn("qscore", similarity(dequantize_expr(), qv, metric))
         .orderBy(F.col("qscore").desc(), F.col(id_col).asc())

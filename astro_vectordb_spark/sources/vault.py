@@ -2239,18 +2239,20 @@ def _bm25_apply_batch(
 
 
 # --------------------------------------------------------------------------
-# persisted near-dup fingerprint index (MinHash-LSH vault face)
+# persisted near-dup fingerprint index (MinHash-LSH)
 #
 # The batch dedup operators (operators/dedup.py) re-shingle the WHOLE
 # corpus per run — fine for a one-shot sweep, wrong for the steady
 # state of a 100 TB training-data pipeline where each day's batch must
-# be deduped against everything already ingested.  This face persists
+# be deduped against everything already ingested.  This index persists
 # the corpus's minhash SIGNATURES (num_hashes longs per doc) and its
 # LSH band-bucket table, so matching a new batch costs: shingle the
 # BATCH + one keyed join against the compact bands table + signature
 # verification on the candidates — the historical TEXT is never read
 # again.  The SQL-safe hash family (minhash_lsh_pairs_sql_safe) makes
 # the whole incremental path DuckDB-replayable, i.e. driver-hashable.
+# The near-dup builders here write an index; ``neardup.open(spark,
+# path)`` maintains it (match/append/remove/groups/sweep/compact).
 
 
 def save_minhash_index(
@@ -2268,7 +2270,7 @@ def save_minhash_index(
     family parameters and the exact indexed-doc count.  The band
     table is derived from the WRITTEN signature files (one
     computation of the expensive shingle/min pass; bands are a cheap
-    fold over stored arrays).  Thin face over the shared lifecycle
+    fold over stored arrays).  Built through the shared lifecycle
     core (:mod:`..sources.index_lifecycle`)."""
     from astro_vectordb_spark.sources.index_lifecycle import (
         MinhashFamily,
@@ -2302,7 +2304,7 @@ def minhash_bucket_telemetry(
     """Witness-skew telemetry over the persisted band table: how many
     historical witnesses live in each (band_idx, band_sig) bucket —
     restricted to the buckets ``new_docs`` would touch when given
-    (the exact join keys :func:`minhash_match_index` will hit), the
+    (the exact join keys ``NearDupIndex.match`` will hit), the
     whole index otherwise.
 
     Returns ``{"max_bucket_witnesses", "p99_bucket_witnesses",
@@ -2367,316 +2369,6 @@ def _bucket_witness_stats(
     }
 
 
-def minhash_match_index(
-    spark: SparkSession,
-    path: str,
-    new_docs: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    max_bucket_size: int | None = None,
-    telemetry: dict | None = None,
-) -> DataFrame:
-    """Match a NEW batch against the persisted index without touching
-    the historical text: shingle/sign the batch under the index's
-    stored hash family, bucket-join its bands against the persisted
-    band table (keyed join on (band_idx, band_sig) — the only
-    corpus-sized input is the compact bands table), and verify every
-    candidate by SIGNATURE AGREEMENT: est_jaccard = |{i : sig_new[i]
-    == sig_hist[i]}| / num_hashes, the standard unbiased minhash
-    estimate (E[est] = true Jaccard).  Exact-set verification is
-    impossible by design — the index deliberately does not store
-    shingle sets (that would be the corpus text again).
-
-    Returns ``(new_id, hist_id, est_jaccard)``, est rounded to 6 and
-    filtered at ``threshold``.  Deterministic end to end (integer
-    hashes; est is the exact rational k/num_hashes), so the whole
-    incremental path is oracle-hashable.
-
-    Hot-bucket guard (``max_bucket_size``, opt-in): a cluster of d
-    identical boilerplate docs in the corpus puts d rows into each of
-    its band buckets, so one probing copy joins d historical witnesses
-    per bucket — O(d x batch) candidate rows through one hot key.
-    When set, the historical side is first pruned to the buckets the
-    batch actually touches (a keyed semi-join — the corpus bands table
-    is never shuffled wholesale) and then capped at ``max_bucket_size``
-    witnesses per bucket, id-ascending (deterministic).  For exact-dup
-    clusters the cap is decision-lossless: every member of the cluster
-    carries the identical signature, so the surviving witnesses give
-    the same est as any dropped one.  For diverse hot buckets it is the
-    standard LSH recall trade (mirrors ``rp_block_pairs``'s
-    ``max_bucket_size``).  Default None = exact contract (every
-    witness), which is what the oracle replays.
-
-    Telemetry (opt-in, fills the caller's ``telemetry`` dict in
-    place): PRE-cap witness-skew stats over the buckets this batch
-    touches (``max_bucket_witnesses``/``p99_bucket_witnesses``/...,
-    see :func:`minhash_bucket_telemetry`) — the signal for when to
-    set ``max_bucket_size`` BEFORE a hot bucket becomes a straggler.
-    One extra aggregation over the batch-pruned compact band table;
-    zero cost when None."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        MinhashFamily,
-        match_index,
-    )
-
-    return match_index(
-        spark, path, MinhashFamily(text_col=text_col), new_docs,
-        threshold=threshold, max_bucket_size=max_bucket_size,
-        telemetry=telemetry,
-    )
-
-
-def minhash_append_to_index(
-    spark: SparkSession,
-    path: str,
-    new_docs: DataFrame,
-    batch_id: int | None = None,
-    dedup_ids: bool = True,
-    text_col: str = "text",
-) -> dict:
-    """Incremental insert: sign the new docs under the stored hash
-    family and append their signature + band files — touched-files-
-    only, (op, batch_id)-namespaced replay log, ``n_rows`` delta.
-
-    Crash consistency: signatures append BEFORE bands, and the band
-    append is derived from the SIGS-vs-BANDS id diff rather than the
-    batch — so a crash between the two appends (sigs present, bands
-    missing: those docs would silently never match) is REPAIRED by
-    the next append, and a replayed batch whose sigs already landed
-    still completes its missing bands."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        MinhashFamily,
-        append_to_index,
-    )
-
-    return append_to_index(
-        spark, path, MinhashFamily(text_col=text_col), new_docs,
-        batch_id=batch_id, dedup_ids=dedup_ids,
-    )
-
-
-def minhash_compact_index(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int = 4_000_000,
-    min_file_ratio: float = 2.0,
-) -> dict:
-    """Churn-aware compaction for the near-dup fingerprint index —
-    the maintenance op completing its lifecycle (save -> match ->
-    append/stream -> COMPACT): every streamed micro-batch appends at
-    least one sig file and one band file per touched band partition,
-    and file-count growth degrades the match join's scan granularity.
-
-    Same contract as ``pq_compact_index``: a no-op below
-    ``min_file_ratio`` x the ideal file count; otherwise both tables
-    rewrite through the crash-safe staged swap (``_replace_dir`` —
-    an interrupted prior swap is repaired first), dropping duplicate
-    ids (crashed-append leftovers).  Sigs are num_hashes longs and
-    bands three longs per row — compaction never touches text."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        MinhashFamily,
-        compact_index,
-    )
-
-    return compact_index(
-        spark, path, MinhashFamily(),
-        target_rows_per_file=target_rows_per_file,
-        min_file_ratio=min_file_ratio,
-    )
-
-
-def minhash_sig_self_pairs(
-    sigs: DataFrame,
-    num_hashes: int,
-    bands: int,
-    threshold: float,
-    id_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Signature-table self-pairs under the index's hash family, with
-    the exact-duplicate hot-bucket collapse built in.
-
-    Groups docs by their FULL signature and keeps the min-id
-    representative per distinct sig (exact duplicates share every band
-    bucket, so a d-copy cluster would otherwise push O(d^2 x bands)
-    rows through one join key); bands are re-derived from the rep
-    signatures (cheap stored-array fold, identical arithmetic to the
-    persisted band table); candidates (a_id < b_id) are verified by
-    signature agreement est = |matching positions| / num_hashes >=
-    ``threshold``.
-
-    Returns ``(reps, pairs)``: reps = (sig, id_col) one row per
-    distinct signature; pairs = (a_id, b_id) verified rep-level pairs.
-    Same-signature members est at exactly 1.0 against their rep, so
-    rep-level connectivity is equivalent to doc-level connectivity for
-    grouping, and a member can never head its component (the rep is
-    the group minimum).  Shared by :func:`minhash_index_groups` (the
-    retroactive sweep) and the streaming ingest's intra-batch dedup."""
-    from astro_vectordb_spark.operators.dedup import minhash_band_table
-
-    reps = sigs.groupBy("sig").agg(F.min(id_col).alias(id_col))
-    rep_bands = minhash_band_table(
-        reps, num_hashes=num_hashes, bands=bands,
-        id_col=id_col, sig_col="sig",
-    )
-    a = rep_bands.select(F.col(id_col).alias("a_id"), "band_idx", "band_sig")
-    b = rep_bands.select(F.col(id_col).alias("b_id"), "band_idx", "band_sig")
-    cands = (
-        a.join(b, ["band_idx", "band_sig"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("_sig_a", "_sig_b", lambda x, y: x == y),
-                lambda v: v,
-            )
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    )
-    pairs = (
-        cands.join(
-            reps.select(
-                F.col(id_col).alias("a_id"), F.col("sig").alias("_sig_a")
-            ),
-            "a_id",
-        )
-        .join(
-            reps.select(
-                F.col(id_col).alias("b_id"), F.col("sig").alias("_sig_b")
-            ),
-            "b_id",
-        )
-        .withColumn("_est", F.round(est, 6))
-        .filter(F.col("_est") >= F.lit(float(threshold)))
-        .select("a_id", "b_id")
-    )
-    return reps, pairs
-
-
-def minhash_index_groups(
-    spark: SparkSession,
-    path: str,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Corpus-wide dedup of the ALREADY-INGESTED corpus from its
-    fingerprint index alone — no text is read: LSH band self-join
-    (a_id < b_id) proposes candidates, signature agreement verifies
-    them at ``threshold``, connected components collapse transitive
-    groups, and one representative (min id) per component survives —
-    singletons keep themselves.  The retroactive sweep companion to
-    :func:`minhash_match_index`'s per-batch face (run it when the
-    threshold policy changes or after a backfill that skipped
-    at-ingest dedup).
-
-    Returns the KEEP set: one ``(id_col)`` row per surviving doc,
-    over the indexed ids (docs with fewer than n tokens were never
-    indexable and are not in scope).
-
-    Hot-bucket guard (exact-duplicate collapse, always on, LOSSLESS):
-    exact duplicates share their ENTIRE signature and therefore ALL
-    band buckets, so a cluster of d identical boilerplate docs would
-    put d rows into every one of its buckets and the self-join would
-    emit O(d^2 x bands) candidate rows in one straggler task — the
-    quadratic blowup :func:`rp_block_pairs`'s ``max_bucket_size``
-    already guards against.  Here the collapse is exact, not lossy:
-    the sweep first groups docs by their full signature (one shuffle
-    of the compact sigs table), keeps the min-id REPRESENTATIVE per
-    distinct signature, and runs banding/self-join/verify/CC over
-    representatives only.  Same-signature members estimate at exactly
-    1.0 >= any threshold, so in the uncollapsed algorithm every member
-    joins its representative's component and can never win it (the rep
-    IS the group minimum) — dropping them up front provably preserves
-    the keep set while the candidate stage shrinks from O(d^2) to
-    O(d).  Bands are re-derived from the representative signatures (a
-    cheap stored-array fold — identical arithmetic to the persisted
-    table), which also makes the sweep immune to sig/band drift."""
-    from astro_vectordb_spark.sources.index_lifecycle import keep_from_pairs
-
-    sigs, _, meta = load_minhash_index(spark, path)
-    id_col = meta["id_col"]
-    reps, pairs = minhash_sig_self_pairs(
-        sigs,
-        num_hashes=int(meta["num_hashes"]),
-        bands=int(meta["bands"]),
-        threshold=threshold,
-        id_col=id_col,
-    )
-    # a rep survives unless it joined a component it doesn't head;
-    # same-signature members never survive (their rep is the group
-    # minimum), so the keep set over reps IS the keep set over docs
-    return keep_from_pairs(reps, pairs, id_col)
-
-
-def minhash_remove_from_index(
-    spark: SparkSession,
-    path: str,
-    doc_ids,
-    batch_id: int | None = None,
-    op: str = "minhash_remove",
-) -> dict:
-    """Physical delete from the near-dup fingerprint index — the
-    remove face completing its lifecycle (save -> match -> append ->
-    REMOVE -> compact), mirroring ``pq_remove_from_index``:
-    file-granular on BOTH tables (flat ``sigs/``; ``bands/`` keeps its
-    band_idx partitioning via ``basePath``), touched-files-only, so a
-    100 TB index with 1k removed docs rewrites a handful of files.
-    The ``n_rows`` counter decrements by the DISTINCT sig ids actually
-    removed; the (op='minhash_remove', batch_id) replay log makes
-    redelivery a no-op.  ``doc_ids`` is an iterable of ids or a
-    one-column DataFrame (it is pinned with an eager localCheckpoint
-    first — a lazy plan reading THIS index would otherwise re-evaluate
-    mid-rewrite and see its own deletions).  ``op`` namespaces the
-    replay log (the _batch_already_committed contract): a targeted
-    remove stream and the retroactive sweep each number batches
-    independently, so they must not share a namespace — the sweep
-    passes op='minhash_sweep'."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        MinhashFamily,
-        remove_from_index,
-    )
-
-    return remove_from_index(
-        spark, path, MinhashFamily(), doc_ids, batch_id=batch_id, op=op
-    )
-
-
-def minhash_apply_groups(
-    spark: SparkSession,
-    path: str,
-    threshold: float = 0.8,
-    batch_id: int | None = None,
-) -> dict:
-    """Apply the retroactive sweep in one call: compute the keep set
-    (:func:`minhash_index_groups`) and REMOVE every other indexed doc
-    from the index through the replay-logged
-    :func:`minhash_remove_from_index` path — after it, matching a new
-    batch serves against deduplicated history only (one witness per
-    boilerplate cluster), and the dropped ids stop paying storage and
-    join traffic.  The sweep's keep set is deterministic, so a
-    replayed ``batch_id`` is a no-op even though the removal happened.
-    The sweep keeps its OWN replay namespace (op='minhash_sweep'): a
-    targeted remove stream's batch ids must never collide with a
-    scheduled sweep's (the cross-operation collision the namespaced
-    log exists to prevent).
-
-    Returns ``{"kept": n, "removed_docs": n, ...}``.  Note this drops
-    near-dup LOSERS by policy; :func:`minhash_compact_index` (file
-    compaction) is orthogonal and still applies after heavy churn."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        MinhashFamily,
-        apply_groups,
-    )
-
-    return apply_groups(
-        spark, path, MinhashFamily(),
-        keep_fn=lambda: minhash_index_groups(spark, path,
-                                             threshold=threshold),
-        batch_id=batch_id,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Persisted embedding near-dup index (RP-LSH) — round-12 verdict item 4.
 #
@@ -2684,7 +2376,7 @@ def minhash_apply_groups(
 # (save_minhash_index -> match -> append -> remove -> compact); the
 # EMBEDDING near-dup family (rp_block_pairs) recomputed its hyperplane
 # buckets from scratch every run — at 100 TB that re-projects the whole
-# corpus per batch.  These faces persist the bucket table once and let
+# corpus per batch.  This index persists the bucket table once and lets
 # each new batch bucket ONLY ITSELF and join the compact index:
 # per-batch cost is O(batch + touched buckets), independent of how much
 # history has accumulated.
@@ -2746,146 +2438,6 @@ def load_rp_index(spark: SparkSession, path: str):
     )
 
     return load_index(spark, path, RPFamily())
-
-
-def rp_match_index(
-    spark: SparkSession,
-    path: str,
-    new_rows: DataFrame,
-    threshold: float = 0.9,
-    max_bucket_size: int | None = None,
-    telemetry: dict | None = None,
-    n_probes: int = 0,
-) -> DataFrame:
-    """Match a NEW batch of vectors against the persisted index
-    without re-projecting the corpus: bucket the batch under the
-    stored hash family, join its (tbl, cell) keys against the compact
-    bucket table (the historical side is first semi-join-pruned to the
-    buckets the batch touches), and verify every candidate with the
-    EXACT cosine over the stored vectors.
-
-    Returns ``(new_id, hist_id, score)``, score rounded to 6 and
-    filtered at ``threshold``.  Deterministic end to end (the bucket
-    kernel's float64 left-fold matches the SQL twin bit-for-bit; the
-    verify is the same fold expression the one-shot face uses), so the
-    incremental path is oracle-hashable.
-
-    ``n_probes`` (opt-in, the RECALL dial): multi-probe lookup (Lv et
-    al., VLDB 2007) — the batch side also probes, per table, the
-    ``n_probes`` buckets one sign-flip away on its lowest-|projection|
-    planes.  Raising recall this way costs batch-side work only; the
-    alternative (more hash tables) multiplies the PERSISTED index —
-    corpus-sized storage — which is the wrong trade at 100 TB.  Probes
-    only add candidate buckets and the exact verify is unchanged, so
-    results are a superset of the n_probes=0 contract with zero false
-    positives (the default 0 keeps the oracle-replayable base
-    behavior).
-
-    ``max_bucket_size`` (opt-in, the hot-bucket valve): a boilerplate
-    cluster of d near-identical vectors puts d rows into each of its
-    buckets; the cap keeps the first ``max_bucket_size`` witnesses per
-    (tbl, cell), id-ascending (deterministic) — the same recall trade
-    as ``rp_block_pairs``/``minhash_match_index``.  ``telemetry``
-    (opt-in dict, filled in place) reports PRE-cap witness skew over
-    exactly the buckets this batch touches (max/p99/p50 witnesses), so
-    operators see the skew before it becomes a straggler."""
-    from astro_vectordb_spark.operators.dedup import rp_probe_cell_table
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        RPFamily,
-        match_index,
-    )
-
-    bucketize = None
-    if n_probes > 0:
-        def bucketize(ctx, primary):
-            m = ctx.meta
-            return rp_probe_cell_table(
-                primary, n_planes=int(m["n_planes"]),
-                n_tables=int(m["n_tables"]), seed=int(m["seed"]),
-                id_col=m["id_col"], vec_col=m["vec_col"],
-                dim=int(m["dim"]), n_probes=n_probes,
-            )
-
-    return match_index(
-        spark, path, RPFamily(), new_rows, threshold=threshold,
-        max_bucket_size=max_bucket_size, telemetry=telemetry,
-        bucketize=bucketize,
-    )
-
-
-def rp_append_to_index(
-    spark: SparkSession,
-    path: str,
-    new_rows: DataFrame,
-    batch_id: int | None = None,
-    dedup_ids: bool = True,
-) -> dict:
-    """Incremental insert: bucket the new vectors under the stored
-    hash family and append their vector + bucket files —
-    touched-files-only, (op='rp_append', batch_id) replay log,
-    ``n_rows`` recount.
-
-    Crash consistency (the minhash_append recipe): vectors append
-    BEFORE buckets, and the bucket append derives from the
-    VECS-vs-BUCKETS id diff rather than the batch — a crash between
-    the two appends (vectors present, buckets missing: those rows
-    would silently never match) is repaired by the next append.  The
-    steady state short-circuits the diff with two count-distinct
-    aggregations (bucket ids are always a subset of vec ids)."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        RPFamily,
-        append_to_index,
-    )
-
-    return append_to_index(
-        spark, path, RPFamily(), new_rows, batch_id=batch_id,
-        dedup_ids=dedup_ids,
-    )
-
-
-def rp_remove_from_index(
-    spark: SparkSession,
-    path: str,
-    ids,
-    batch_id: int | None = None,
-    op: str = "rp_remove",
-) -> dict:
-    """Physical delete from the embedding near-dup index —
-    file-granular on BOTH tables (flat ``vecs/``; ``buckets/`` keeps
-    its tbl partitioning), touched-files-only; (op, batch_id) replay
-    log; ``n_rows`` decrements by the distinct vec ids removed."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        RPFamily,
-        remove_from_index,
-    )
-
-    return remove_from_index(
-        spark, path, RPFamily(), ids, batch_id=batch_id, op=op
-    )
-
-
-def rp_compact_index(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int = 4_000_000,
-    min_file_ratio: float = 2.0,
-) -> dict:
-    """Churn-aware compaction for the embedding near-dup index (the
-    ``minhash_compact_index`` contract): a no-op below
-    ``min_file_ratio`` x the ideal file count; otherwise both tables
-    rewrite through the crash-safe staged swap, dropping duplicate ids
-    and re-deriving buckets FROM the compacted vectors (re-syncs any
-    vec/bucket drift in one pass, preserving the tbl partitioning)."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        RPFamily,
-        compact_index,
-    )
-
-    return compact_index(
-        spark, path, RPFamily(),
-        target_rows_per_file=target_rows_per_file,
-        min_file_ratio=min_file_ratio,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3277,118 +2829,18 @@ def _post_sweep_kept(
     )
 
 
-def rp_index_groups(
-    spark: SparkSession,
-    path: str,
-    threshold: float = 0.9,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Corpus-wide embedding dedup of the ALREADY-INGESTED corpus from
-    its persisted RP index alone — the corpus is never re-projected:
-    the stored bucket table self-joins on (tbl, cell) to propose
-    candidates (a_id < b_id), the stored vectors verify them with the
-    EXACT cosine at ``threshold``, connected components collapse
-    transitive groups, and one representative (min id) per component
-    survives — singletons keep themselves.  The retroactive sweep
-    companion to :func:`rp_match_index`'s per-batch face (the
-    ``minhash_index_groups`` contract for the embedding family).
-
-    Returns the KEEP set: one ``(id_col)`` row per surviving vector.
-
-    ``max_bucket_size`` (opt-in): caps each bucket's contribution to
-    the self-join at the first N ids (ascending — deterministic); an
-    exact-duplicate cluster keeps its connectivity through any cap
-    >= 2 (all members share every bucket, so the capped witnesses
-    still chain), diverse hot buckets trade recall as usual."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        IndexCtx,
-        RPFamily,
-        bucket_self_pairs,
-        keep_from_pairs,
-        verify_pairs,
-    )
-
-    fam = RPFamily()
-    vecs, buckets, meta = load_rp_index(spark, path)
-    ctx = IndexCtx(spark, path, meta)
-    id_col = meta["id_col"]
-    cand = bucket_self_pairs(
-        buckets, fam.bucket_keys, id_col, max_bucket_size=max_bucket_size
-    )
-    pairs = verify_pairs(ctx, fam, cand, vecs, threshold)
-    return keep_from_pairs(vecs, pairs, id_col)
-
-
-def rp_apply_groups(
-    spark: SparkSession,
-    path: str,
-    threshold: float = 0.9,
-    batch_id: int | None = None,
-    max_bucket_size: int | None = None,
-) -> dict:
-    """One-call retroactive sweep-APPLY for the embedding near-dup
-    index (the ``minhash_apply_groups`` contract): compute the keep
-    set from the index alone (:func:`rp_index_groups`), physically
-    remove every loser from vectors AND buckets
-    (file-granular, replay-logged under op='rp_sweep'), and report
-    {kept, removed_rows, skipped_replay}.  After it returns, the index
-    is a fixpoint: re-running the sweep removes nothing."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        RPFamily,
-        apply_groups,
-    )
-
-    return apply_groups(
-        spark, path, RPFamily(),
-        keep_fn=lambda: rp_index_groups(
-            spark, path, threshold=threshold,
-            max_bucket_size=max_bucket_size,
-        ),
-        batch_id=batch_id,
-    )
-
-
-
 # ---------------------------------------------------------------------------
 # Persisted SimHash near-dup index — round 13: the fourth family over
 # the shared lifecycle core (sources/index_lifecycle.py), closing the
-# gap that SimHash was the one dedup scheme with only a one-shot face
+# gap that SimHash was the one dedup scheme with only a one-shot form
 # (simhash_pairs / simhash_pairs_sql_safe re-sign the WHOLE corpus per
 # run).  Data model under ``path``: sigs/ (id, sim BIGINT), chunks/
 # (id, chunk_idx, chunk_val; partitioned by chunk_idx — a batch's
 # candidate join prunes at file level per chunk), _meta (bits,
 # max_hamming, hash_family, id_col, n_rows).  hash_family
-# 'sql_safe31' keeps every face DuckDB-replayable (the driver gate);
+# 'sql_safe31' keeps every op DuckDB-replayable (the driver gate);
 # 'native64' is the production-discrimination variant — see
 # dedup.simhash_pairs_sql_safe's discrimination-gap note.
-
-
-def _simhash_family(text_col: str = "text"):
-    from astro_vectordb_spark.sources.index_lifecycle import SimhashFamily
-
-    return SimhashFamily(text_col=text_col)
-
-
-def _simhash_thr(meta: dict, max_hamming: int | None) -> tuple[int, float]:
-    mh = int(meta["max_hamming"]) if max_hamming is None else int(max_hamming)
-    if mh > int(meta["max_hamming"]):
-        raise ValueError(
-            f"simhash index built for max_hamming={meta['max_hamming']}; "
-            f"querying at {mh} would lose the pigeonhole recall guarantee "
-            f"(chunks = max_hamming + 1 at build time)"
-        )
-    bits = int(meta["bits"])
-    return bits, (bits - mh) / bits
-
-
-def _simhash_frac_to_hamming(df: DataFrame, bits: int) -> DataFrame:
-    # exact: sim_frac is the 6-rounded rational (bits - h)/bits, and
-    # bits <= 64 keeps the round-trip error far under 0.5
-    return df.select(
-        "new_id", "hist_id",
-        F.round((F.lit(1.0) - F.col("sim_frac")) * bits, 0)
-        .cast("int").alias("hamming"),
-    )
 
 
 def save_simhash_index(
@@ -3413,7 +2865,10 @@ def save_simhash_index(
     hamming >= 8 on 31 bits the 6-decimal score rounding can drop
     pairs at exactly the threshold).  ``native64`` derives
     ``max_hamming + 1`` chunks, so any distance is honored there."""
-    from astro_vectordb_spark.sources.index_lifecycle import save_index
+    from astro_vectordb_spark.sources.index_lifecycle import (
+        SimhashFamily,
+        save_index,
+    )
 
     if hash_family not in ("sql_safe31", "native64"):
         raise ValueError(f"unknown simhash hash_family {hash_family!r}")
@@ -3428,7 +2883,7 @@ def save_simhash_index(
     params = {"bits": bits, "max_hamming": int(max_hamming),
               "hash_family": str(hash_family), "id_col": str(id_col)}
     save_index(
-        docs, path, _simhash_family(text_col), params,
+        docs, path, SimhashFamily(text_col=text_col), params,
         meta_values=(bits, int(max_hamming), str(hash_family),
                      str(id_col)),
     )
@@ -3436,139 +2891,9 @@ def save_simhash_index(
 
 def load_simhash_index(spark: SparkSession, path: str):
     """-> (sigs df, chunks df, meta dict)."""
-    from astro_vectordb_spark.sources.index_lifecycle import load_index
-
-    return load_index(spark, path, _simhash_family())
-
-
-def simhash_match_index(
-    spark: SparkSession,
-    path: str,
-    new_docs: DataFrame,
-    max_hamming: int | None = None,
-    text_col: str = "text",
-    max_bucket_size: int | None = None,
-    telemetry: dict | None = None,
-) -> DataFrame:
-    """Match a NEW batch against the persisted SimHash index without
-    re-signing history: sign the batch under the stored hash family,
-    join its pigeonhole chunks against the compact chunk table, verify
-    candidates with the exact popcount hamming.  Returns
-    ``(new_id, hist_id, hamming)`` filtered at ``max_hamming``
-    (default: the index's build distance; larger values are rejected —
-    the stored chunk count only guarantees recall up to the build
-    distance).  Same hot-bucket cap + telemetry contract as the
-    sibling families."""
-    from astro_vectordb_spark.sources.index_lifecycle import match_index
-
-    meta = _read_meta(spark, path)
-    bits, thr = _simhash_thr(meta, max_hamming)
-    out = match_index(
-        spark, path, _simhash_family(text_col), new_docs, threshold=thr,
-        max_bucket_size=max_bucket_size, telemetry=telemetry,
-    )
-    return _simhash_frac_to_hamming(out, bits)
-
-
-def simhash_append_to_index(
-    spark: SparkSession,
-    path: str,
-    new_docs: DataFrame,
-    batch_id: int | None = None,
-    dedup_ids: bool = True,
-    text_col: str = "text",
-) -> dict:
-    """Incremental insert (the shared crash-self-healing contract:
-    signatures append before chunks; the chunk append derives from the
-    stored sigs-vs-chunks id diff)."""
-    from astro_vectordb_spark.sources.index_lifecycle import append_to_index
-
-    return append_to_index(
-        spark, path, _simhash_family(text_col), new_docs,
-        batch_id=batch_id, dedup_ids=dedup_ids,
-    )
-
-
-def simhash_remove_from_index(
-    spark: SparkSession,
-    path: str,
-    doc_ids,
-    batch_id: int | None = None,
-    op: str = "simhash_remove",
-) -> dict:
-    """Physical delete — file-granular on both tables, chunks first."""
     from astro_vectordb_spark.sources.index_lifecycle import (
-        remove_from_index,
+        SimhashFamily,
+        load_index,
     )
 
-    return remove_from_index(
-        spark, path, _simhash_family(), doc_ids, batch_id=batch_id, op=op
-    )
-
-
-def simhash_compact_index(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int = 4_000_000,
-    min_file_ratio: float = 2.0,
-) -> dict:
-    """Churn-aware compaction (shared contract): staged-swap rewrite,
-    chunks re-derived from the compacted signatures."""
-    from astro_vectordb_spark.sources.index_lifecycle import compact_index
-
-    return compact_index(
-        spark, path, _simhash_family(),
-        target_rows_per_file=target_rows_per_file,
-        min_file_ratio=min_file_ratio,
-    )
-
-
-def simhash_index_groups(
-    spark: SparkSession,
-    path: str,
-    max_hamming: int | None = None,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Corpus-wide SimHash dedup of the ALREADY-INGESTED corpus from
-    its persisted index alone — no text is re-signed: chunk self-join
-    candidates (a_id < b_id), popcount-hamming verify, connected
-    components, min-id representative; singletons keep themselves.
-    Returns the KEEP set (one ``id_col`` row per survivor)."""
-    from astro_vectordb_spark.sources.index_lifecycle import (
-        IndexCtx,
-        bucket_self_pairs,
-        keep_from_pairs,
-        verify_pairs,
-    )
-
-    fam = _simhash_family()
-    sigs, chunks, meta = load_simhash_index(spark, path)
-    _, thr = _simhash_thr(meta, max_hamming)
-    ctx = IndexCtx(spark, path, meta)
-    id_col = meta["id_col"]
-    cand = bucket_self_pairs(
-        chunks, fam.bucket_keys, id_col, max_bucket_size=max_bucket_size
-    )
-    pairs = verify_pairs(ctx, fam, cand, sigs, thr)
-    return keep_from_pairs(sigs, pairs, id_col)
-
-
-def simhash_apply_groups(
-    spark: SparkSession,
-    path: str,
-    max_hamming: int | None = None,
-    batch_id: int | None = None,
-    max_bucket_size: int | None = None,
-) -> dict:
-    """One-call retroactive sweep-APPLY (the shared contract),
-    replay-logged under op='simhash_sweep'; fixpoint after."""
-    from astro_vectordb_spark.sources.index_lifecycle import apply_groups
-
-    return apply_groups(
-        spark, path, _simhash_family(),
-        keep_fn=lambda: simhash_index_groups(
-            spark, path, max_hamming=max_hamming,
-            max_bucket_size=max_bucket_size,
-        ),
-        batch_id=batch_id,
-    )
+    return load_index(spark, path, SimhashFamily())

@@ -25,14 +25,9 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import neardup
 from astro_vectordb_spark.session import get_spark, load_table
-from astro_vectordb_spark.sources import (
-    load_minhash_index,
-    minhash_append_to_index,
-    minhash_compact_index,
-    minhash_match_index,
-    save_minhash_index,
-)
+from astro_vectordb_spark.sources import load_minhash_index, save_minhash_index
 
 
 def main() -> None:
@@ -56,7 +51,7 @@ def main() -> None:
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
     )
     batch1 = day1.unionAll(planted)
-    matches = minhash_match_index(spark, path, batch1, threshold=0.9)
+    matches = neardup.open(spark, path).match(batch1, threshold=0.9)
     dup_ids = matches.select(
         F.col("new_id").alias("doc_id")
     ).distinct()
@@ -67,11 +62,11 @@ def main() -> None:
     assert n_dups >= 10  # every planted copy must be flagged
 
     novel1 = batch1.join(dup_ids, "doc_id", "left_anti")
-    rep = minhash_append_to_index(spark, path, novel1, batch_id=1)
+    rep = neardup.open(spark, path).append(novel1, batch_id=1)
     print(f"day 1: appended {rep['appended_rows']} novel docs")
 
     # replay of the same batch is a no-op (at-least-once delivery)
-    rep_replay = minhash_append_to_index(spark, path, novel1, batch_id=1)
+    rep_replay = neardup.open(spark, path).append(novel1, batch_id=1)
     assert rep_replay["skipped_replay"]
 
     # ---- day 2: dups against SEED AND DAY-1 ingest both surface ----
@@ -79,7 +74,7 @@ def main() -> None:
         (F.col("doc_id") + 2_000_000).alias("doc_id"), "text"
     )
     batch2 = day2.unionAll(planted2)
-    m2 = minhash_match_index(spark, path, batch2, threshold=0.9)
+    m2 = neardup.open(spark, path).match(batch2, threshold=0.9)
     day1_hits = m2.join(
         day1.select(F.col("doc_id").alias("hist_id")), "hist_id", "left_semi"
     ).count()
@@ -90,23 +85,21 @@ def main() -> None:
         m2.select(F.col("new_id").alias("doc_id")).distinct(),
         "doc_id", "left_anti",
     )
-    minhash_append_to_index(spark, path, novel2, batch_id=2)
+    neardup.open(spark, path).append(novel2, batch_id=2)
 
     # ---- retroactive sweep (round 11): policy change / backfill ----
     # compute the keep set from the index alone (no text read) and
     # APPLY it — near-dup losers are physically removed (file-granular,
     # replay-logged), so future matching serves deduplicated history
-    from astro_vectordb_spark.sources.vault import minhash_apply_groups
-
-    rep_s = minhash_apply_groups(spark, path, threshold=0.9, batch_id=100)
+    rep_s = neardup.open(spark, path).apply_sweep(threshold=0.9, batch_id=100)
     print(f"sweep: kept {rep_s['kept']}, removed {rep_s['removed_docs']}")
-    assert minhash_apply_groups(
-        spark, path, threshold=0.9, batch_id=100
+    assert neardup.open(spark, path).apply_sweep(
+        threshold=0.9, batch_id=100,
     )["skipped_replay"]  # replayed sweep is a no-op
 
     # ---- maintenance: compact the file growth the appends left ----
-    rep_c = minhash_compact_index(
-        spark, path, target_rows_per_file=10_000_000, min_file_ratio=1.0
+    rep_c = neardup.open(spark, path).compact(
+        target_rows_per_file=10_000_000, min_file_ratio=1.0,
     )
     print(f"compaction: {rep_c}")
     _, _, meta = load_minhash_index(spark, path)
@@ -117,13 +110,7 @@ def main() -> None:
     # persist buckets once, match each new batch against the compact
     # tables with an exact-cosine verify, sweep retroactively, and
     # bound the replay-log metadata with gc
-    from astro_vectordb_spark.sources.vault import (
-        gc,
-        rp_apply_groups,
-        rp_append_to_index,
-        rp_match_index,
-        save_rp_index,
-    )
+    from astro_vectordb_spark.sources.vault import gc, save_rp_index
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -136,7 +123,7 @@ def main() -> None:
             (F.col("vec_id") + 3_000_000).alias("vec_id"), "embedding"
         )
     )
-    mv = rp_match_index(spark, rp_path, batch_v, threshold=0.99)
+    mv = neardup.open(spark, rp_path).match(batch_v, threshold=0.99)
     exact_hits = mv.filter(F.col("score") == 1.0).count()
     print(f"embedding batch: {mv.count()} match rows, "
           f"{exact_hits} exact copies caught")
@@ -145,8 +132,10 @@ def main() -> None:
         mv.select(F.col("new_id").alias("vec_id")).distinct(),
         "vec_id", "left_anti",
     )
-    rp_append_to_index(spark, rp_path, novel_v, batch_id=1)
-    rep_rv = rp_apply_groups(spark, rp_path, threshold=0.999, batch_id=50)
+    neardup.open(spark, rp_path).append(novel_v, batch_id=1)
+    rep_rv = neardup.open(spark, rp_path).apply_sweep(
+        threshold=0.999, batch_id=50,
+    )
     print(f"embedding sweep: kept {rep_rv['kept']}, "
           f"removed {rep_rv['removed_rows']}")
     rep_gc = gc(spark, rp_path, keep_last_batches=8)

@@ -75,13 +75,11 @@ def main() -> None:
     os.makedirs(OUT, exist_ok=True)
 
     # ---- SemDeDup pair verify (semdedup_fixed / groups_probed path)
-    from astro_vectordb_spark.sources.semdedup_index import (
-        _semdedup_family,
-    )
+    from astro_vectordb_spark.sources.index_lifecycle import SemDeDupFamily
 
     sd_path = entrymod.semdedup_full_index_path(spark, sf_dir)
     vecs, cells, cents, meta = load_semdedup_index(spark, sd_path)
-    fam = _semdedup_family()
+    fam = SemDeDupFamily()
     ctx = IndexCtx(spark, sd_path, meta)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     cand = bucket_self_pairs(
@@ -103,7 +101,7 @@ def main() -> None:
     _write("semdedup_pair_verify_before.txt", _explain(before))
     _write("semdedup_pair_verify_after.txt", _explain(after))
 
-    # ---- RP pair verify (rp_index_groups path)
+    # ---- RP pair verify (rp_index_groups query path)
     from astro_vectordb_spark.sources.index_lifecycle import RPFamily
 
     rp_path = entrymod.rp_index_lifecycle_path(spark, sf_dir) if hasattr(

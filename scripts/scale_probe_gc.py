@@ -53,16 +53,13 @@ def _parquet_files(path):
 
 
 def main() -> None:
+    from astro_vectordb_spark import neardup
     from astro_vectordb_spark.sources.vault import (
         _batch_already_committed,
         gc,
         load_minhash_index,
-        minhash_append_to_index,
-        minhash_match_index,
-        minhash_remove_from_index,
         save_minhash_index,
     )
-    from astro_vectordb_spark import neardup
 
     spark = get_spark("gc-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -126,7 +123,7 @@ def main() -> None:
         ]
         if ids:
             b = 1000 * cycle + 1
-            minhash_remove_from_index(spark, path, ids, batch_id=b)
+            neardup.open(spark, path).remove(ids, batch_id=b)
             removed_ids.extend(int(x) for x in ids)
             remove_batches.append(b)
         # offline gc between cycles (no stream running): both
@@ -165,8 +162,8 @@ def main() -> None:
                ops=["minhash_append"])
         if direct_applied % 40 == 0:
             b = 5000 + direct_applied
-            minhash_remove_from_index(
-                spark, path, [2_000_000 + direct_applied - 3], batch_id=b
+            neardup.open(spark, path).remove(
+                [2_000_000 + direct_applied - 3], batch_id=b,
             )
             removed_ids.append(2_000_000 + direct_applied - 3)
             remove_batches.append(b)
@@ -182,8 +179,7 @@ def main() -> None:
     # append and its meta update — the DOCUMENTED crash state the next
     # append self-heals (bands re-sync + absolute n_rows recount).
     # One more append closes the books before the consistency checks.
-    minhash_append_to_index(
-        spark, path,
+    neardup.open(spark, path).append(
         spark.createDataFrame(
             [(3_000_000, "heal document alpha beta gamma delta epsilon "
                          "zeta eta theta")],
@@ -220,16 +216,14 @@ def main() -> None:
                                         op="minhash_remove"):
             failures.append(f"remove batch {b} lost by gc")
     # replay of a PRUNED ingest micro-batch id: no-op via horizon
-    rep = minhash_append_to_index(
-        spark, path,
+    rep = neardup.open(spark, path).append(
         spark.createDataFrame([(999, "replayed doc alpha beta gamma")],
                               "doc_id long, text string"),
         batch_id=0,
     )
     if not rep["skipped_replay"]:
         failures.append("replay of pruned ingest batch 0 applied")
-    rep = minhash_remove_from_index(spark, path, [1],
-                                    batch_id=remove_batches[0])
+    rep = neardup.open(spark, path).remove([1], batch_id=remove_batches[0])
     if not rep["skipped_replay"]:
         failures.append("replay of remove batch applied twice")
     # removed ids are really gone; the index still serves
@@ -246,8 +240,8 @@ def main() -> None:
                      "epsilon zeta eta theta 3 3")],
         "doc_id long, text string",
     )
-    if minhash_match_index(
-        spark, path, probe, threshold=0.5
+    if neardup.open(spark, path).match(
+        probe, threshold=0.5,
     ).limit(1).count() != 1:
         failures.append("post-churn index no longer serves matches")
 

@@ -4,7 +4,7 @@ measured.
 A steady-state pipeline dedups each new batch against everything
 already ingested.  The one-shot operator (minhash_lsh_pairs_sql_safe)
 re-shingles the WHOLE corpus per run; the persisted index
-(vault.save_minhash_index / minhash_match_index) stores signatures +
+(vault.save_minhash_index / neardup.open(...).match) stores signatures +
 band buckets once and matches a batch against the compact tables.
 This probe builds the index at 250k and 1M docs and checks:
 
@@ -56,10 +56,8 @@ def _codegen_text(idc):
 
 
 def main() -> None:
-    from astro_vectordb_spark.sources.vault import (
-        minhash_match_index,
-        save_minhash_index,
-    )
+    from astro_vectordb_spark import neardup
+    from astro_vectordb_spark.sources.vault import save_minhash_index
 
     spark = get_spark("minhash-index-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -119,7 +117,7 @@ def main() -> None:
 
     def _match_count(path, bdf):
         return (
-            minhash_match_index(spark, path, bdf, threshold=0.99)
+            neardup.open(spark, path).match(bdf, threshold=0.99)
             .groupBy()
             .agg(
                 F.count(F.lit(1)).alias("rows"),
@@ -207,11 +205,10 @@ def main() -> None:
     # rep-level candidate stage is O(distinct sigs).  The match face's
     # per-bucket witness cap is measured for decision parity (same
     # probe docs flagged) and wall vs the uncapped every-witness join.
-    from astro_vectordb_spark.sources.vault import (
-        load_minhash_index,
-        minhash_index_groups,
+    from astro_vectordb_spark.sources.index_lifecycle import (
         minhash_sig_self_pairs,
     )
+    from astro_vectordb_spark.sources.vault import load_minhash_index
 
     D, BASE = 50_000, 200_000
     sp = "/tmp/scale_mh/skew_docs"
@@ -240,7 +237,7 @@ def main() -> None:
     n_reps = int(reps.count())
     n_rep_pairs = int(rep_pairs.count())
     t0 = time.time()
-    keep = minhash_index_groups(spark, skew_path, threshold=0.9)
+    keep = neardup.open(spark, skew_path).groups(threshold=0.9)
     n_keep = int(keep.count())
     boiler_kept = int(keep.filter(F.col("doc_id") < D).count())
     sweep_sec = round(time.time() - t0, 2)
@@ -278,9 +275,8 @@ def main() -> None:
 
     def _match(cap):
         return (
-            minhash_match_index(
-                spark, skew_path, probe, threshold=0.99,
-                max_bucket_size=cap,
+            neardup.open(spark, skew_path).match(
+                probe, threshold=0.99, max_bucket_size=cap,
             )
             .groupBy()
             .agg(F.count(F.lit(1)).alias("rows"),

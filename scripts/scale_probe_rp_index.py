@@ -5,7 +5,7 @@ axes applied to the RP-LSH family.
 A steady-state pipeline near-dups each new embedding batch against
 everything already ingested.  The one-shot operator (rp_block_pairs)
 re-projects the WHOLE corpus through the hyperplane family per run;
-the persisted index (vault.save_rp_index / rp_match_index) stores
+the persisted index (vault.save_rp_index / neardup.open(...).match) stores
 buckets + vectors once and matches a batch against the compact
 tables.  This probe builds the index at 250k and 1M vectors and
 checks:
@@ -80,10 +80,8 @@ def _corpus(spark, n, path, id_offset=0):
 
 def main() -> None:
     from astro_vectordb_spark.operators.dedup import rp_block_pairs
-    from astro_vectordb_spark.sources.vault import (
-        rp_match_index,
-        save_rp_index,
-    )
+    from astro_vectordb_spark import neardup
+    from astro_vectordb_spark.sources.vault import save_rp_index
 
     spark = get_spark("rp-index-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -127,7 +125,7 @@ def main() -> None:
 
         def run_match():
             return (
-                rp_match_index(spark, ipath, batch, threshold=0.95)
+                neardup.open(spark, ipath).match(batch, threshold=0.95)
                 .groupBy()
                 .agg(
                     F.count(F.lit(1)).alias("pairs"),
@@ -142,7 +140,7 @@ def main() -> None:
         match_sec[n] = round(time.time() - t0, 2)
         # completeness: every planted copy must find its source at 1.0
         planted_hits = (
-            rp_match_index(spark, ipath, batch, threshold=0.999999)
+            neardup.open(spark, ipath).match(batch, threshold=0.999999)
             .filter(
                 (F.col("new_id") >= 10_000_000)
                 & (F.col("new_id") < 20_000_000)
@@ -205,7 +203,7 @@ def main() -> None:
 
     def run_match4():
         return (
-            rp_match_index(spark, big, batch4, threshold=0.95)
+            neardup.open(spark, big).match(batch4, threshold=0.95)
             .groupBy()
             .agg(F.count(F.lit(1)).alias("pairs"))
             .first()

@@ -63,11 +63,8 @@ def _vec(idc, centers):
 
 
 def main() -> None:
-    from astro_vectordb_spark.sources.semdedup_index import (
-        save_semdedup_index,
-        semdedup_append_to_index,
-        semdedup_match_index,
-    )
+    from astro_vectordb_spark import neardup
+    from astro_vectordb_spark.sources.semdedup_index import save_semdedup_index
 
     spark = get_spark("semdedup-index-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -115,12 +112,12 @@ def main() -> None:
         build_s = time.time() - t0
         batch = make_batch(corpus)
         # warm once (session plan caches), then time the match twice
-        semdedup_match_index(spark, path, batch, eps=EPS).count()
+        neardup.open(spark, path).match(batch, eps=EPS).count()
         walls = []
         planted_hits = 0
         for _ in range(2):
             t0 = time.time()
-            got = semdedup_match_index(spark, path, batch, eps=EPS)
+            got = neardup.open(spark, path).match(batch, eps=EPS)
             planted_hits = got.filter(
                 (F.col("new_id") >= 10_000_000)
                 & (F.col("new_id") - 10_000_000 == F.col("hist_id"))
@@ -153,8 +150,7 @@ def main() -> None:
     corpus4.count()
     batch = make_batch(corpus4)
     t0 = time.time()
-    semdedup_append_to_index(spark, "/tmp/scale_sd/idx_x4", batch,
-                             batch_id=1)
+    neardup.open(spark, "/tmp/scale_sd/idx_x4").append(batch, batch_id=1)
     t_append = time.time() - t0
     t0 = time.time()
     semantic_dedup(

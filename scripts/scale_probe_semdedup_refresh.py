@@ -66,11 +66,10 @@ def _vec(idc, centers, salt="c", noise=0.4):
 
 
 def run_scale(spark, mult: int) -> dict:
+    from astro_vectordb_spark import neardup
     from astro_vectordb_spark.sources.semdedup_index import (
         load_semdedup_index,
         save_semdedup_index,
-        semdedup_append_to_index,
-        semdedup_match_index,
         semdedup_refresh_index,
     )
     from astro_vectordb_spark.sources.vault import _batch_already_committed
@@ -105,7 +104,7 @@ def run_scale(spark, mult: int) -> dict:
         .cache()
     )
     drifted.count()
-    rep = semdedup_append_to_index(spark, path, drifted, batch_id=1)
+    rep = neardup.open(spark, path).append(drifted, batch_id=1)
     out["drift_batch_sim_mean"] = round(rep["batch_sim_mean"], 4)
     if not rep["batch_sim_mean"] < rep["train_sim_mean"] - 0.05:
         failures.append(
@@ -148,7 +147,7 @@ def run_scale(spark, mult: int) -> dict:
     # the refit saw the drifted rows (they were appended): the new
     # baseline covers the mixture, and the drifted slice now assigns
     # near it — the same batch re-scored must no longer scream drift
-    rep2 = semdedup_append_to_index(spark, path, drifted, batch_id=1)
+    rep2 = neardup.open(spark, path).append(drifted, batch_id=1)
     if not rep2.get("skipped_replay"):
         failures.append("replay log lost through refresh")
     if not _batch_already_committed(spark, path, 1, op="semdedup_append"):
@@ -160,7 +159,7 @@ def run_scale(spark, mult: int) -> dict:
         .select((F.col("vec_id") + 10_000_000).alias("vec_id"),
                 "embedding")
     )
-    got = semdedup_match_index(spark, path, planted, eps=EPS)
+    got = neardup.open(spark, path).match(planted, eps=EPS)
     hits = got.filter(
         (F.col("new_id") - 10_000_000 == F.col("hist_id"))
         & (F.col("score") == 1.0)

@@ -14,12 +14,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import neardup
 from astro_vectordb_spark.sources.vault import (
     _batch_already_committed,
     gc,
     load_rp_index,
-    rp_append_to_index,
-    rp_remove_from_index,
     save_rp_index,
 )
 from astro_vectordb_spark.sources.versioned import (
@@ -61,12 +60,11 @@ class TestBatchLogGC:
         save_rp_index(data.filter(F.col("vec_id") < 50), path)
         # churn: 20 ingest batches + 10 remove batches, two namespaces
         for b in range(20):
-            rp_append_to_index(
-                spark, path,
+            neardup.open(spark, path).append(
                 data.filter(F.col("vec_id") == 50 + b), batch_id=b,
             )
         for b in range(10):
-            rp_remove_from_index(spark, path, [b], batch_id=b)
+            neardup.open(spark, path).remove([b], batch_id=b)
         log = os.path.join(path, "_batches")
         files_before = len(_parquet_files(log))
         assert files_before >= 30  # one file per applied batch
@@ -76,20 +74,20 @@ class TestBatchLogGC:
         # per op: 1 horizon + at most keep_last rows
         assert rep["rows_after"] <= 2 * (1 + 3)
         # replay of a PRUNED id: still a no-op (horizon row)
-        r = rp_append_to_index(
-            spark, path, data.filter(F.col("vec_id") == 55), batch_id=5
+        r = neardup.open(spark, path).append(
+            data.filter(F.col("vec_id") == 55), batch_id=5,
         )
         assert r["skipped_replay"] is True
-        r = rp_remove_from_index(spark, path, [3], batch_id=3)
+        r = neardup.open(spark, path).remove([3], batch_id=3)
         assert r["skipped_replay"] is True
         # replay of a RETAINED id: still a no-op
-        r = rp_append_to_index(
-            spark, path, data.filter(F.col("vec_id") == 69), batch_id=19
+        r = neardup.open(spark, path).append(
+            data.filter(F.col("vec_id") == 69), batch_id=19,
         )
         assert r["skipped_replay"] is True
         # a genuinely NEW id applies
-        r = rp_append_to_index(
-            spark, path, data.filter(F.col("vec_id") == 150), batch_id=42
+        r = neardup.open(spark, path).append(
+            data.filter(F.col("vec_id") == 150), batch_id=42,
         )
         assert r["skipped_replay"] is False and r["appended_rows"] == 1
         _, _, meta = load_rp_index(spark, path)
@@ -99,11 +97,10 @@ class TestBatchLogGC:
         path = str(tmp_path / "idx2")
         save_rp_index(data.filter(F.col("vec_id") < 30), path)
         for b in range(8):
-            rp_append_to_index(
-                spark, path,
+            neardup.open(spark, path).append(
                 data.filter(F.col("vec_id") == 30 + b), batch_id=b,
             )
-        rp_remove_from_index(spark, path, [0], batch_id=2)
+        neardup.open(spark, path).remove([0], batch_id=2)
         gc(spark, path, keep_last_batches=1)
         # the remove namespace's horizon (2) must not mask append id 5,
         # nor the append horizon mask remove id 1
@@ -116,16 +113,14 @@ class TestBatchLogGC:
         path = str(tmp_path / "idx3")
         save_rp_index(data.filter(F.col("vec_id") < 30), path)
         for b in range(6):
-            rp_append_to_index(
-                spark, path,
+            neardup.open(spark, path).append(
                 data.filter(F.col("vec_id") == 30 + b), batch_id=b,
             )
         gc(spark, path, keep_last_batches=2)
         # more churn on top of the compacted log, then GC again: the
         # prior horizon must fold into the new one
         for b in range(6, 10):
-            rp_append_to_index(
-                spark, path,
+            neardup.open(spark, path).append(
                 data.filter(F.col("vec_id") == 30 + b), batch_id=b,
             )
         rep = gc(spark, path, keep_last_batches=2)
@@ -170,11 +165,7 @@ class TestStreamingGC:
         """gc_every compacts the replay log from inside foreachBatch —
         after many micro-batches the log stays at a bounded file
         count and replays remain no-ops."""
-        from astro_vectordb_spark import neardup
-        from astro_vectordb_spark.sources.vault import (
-            rp_match_index,
-            save_rp_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_rp_index
 
         path = str(tmp_path / "idx_sgc")
         save_rp_index(data.filter(F.col("vec_id") < 40), path)
@@ -204,8 +195,8 @@ class TestStreamingGC:
         probe = spark.createDataFrame(
             [(900_000, fixed)], "vec_id long, embedding array<double>"
         )
-        assert rp_match_index(
-            spark, path, probe, threshold=0.999
+        assert neardup.open(spark, path).match(
+            probe, threshold=0.999,
         ).limit(1).count() == 1
 
 
@@ -217,12 +208,11 @@ class TestGCOpsFilterAndConcurrency:
     def _churn(self, spark, data, path, n_app=8, n_rem=4):
         save_rp_index(data.filter(F.col("vec_id") < 30), path)
         for b in range(n_app):
-            rp_append_to_index(
-                spark, path,
+            neardup.open(spark, path).append(
                 data.filter(F.col("vec_id") == 30 + b), batch_id=b,
             )
         for b in range(n_rem):
-            rp_remove_from_index(spark, path, [b], batch_id=b)
+            neardup.open(spark, path).remove([b], batch_id=b)
 
     def test_ops_filter_compacts_only_own_namespace(self, spark, data,
                                                     tmp_path):

@@ -2,7 +2,9 @@
 ``LocalRelation`` with the same schema and bit-identical values as
 ``spark.createDataFrame(<list>, schema)``, and no library module builds
 a frame from rows any other way.  Also guarded here: no module reads an
-index's ``_meta`` table except through the memoized ``vault._read_meta``."""
+index's ``_meta`` table except through the memoized ``vault._read_meta``,
+and every library import in the scripts, examples and driver entry
+resolves."""
 
 from __future__ import annotations
 
@@ -126,6 +128,34 @@ def test_no_library_frame_from_rows_outside_the_helper():
     assert not hits, "route these through session.local_frame: " + ", ".join(
         hits
     )
+
+
+def test_script_imports_from_the_library_resolve():
+    """Every ``from astro_vectordb_spark... import name`` in
+    ``scripts/``, ``examples/`` and ``__spark_entry__.py`` names an
+    attribute (or submodule) that exists.  No test runs those files, so
+    a removed library function would otherwise break them silently."""
+    import importlib
+
+    root = PKG.parent
+    files = [root / "__spark_entry__.py", *sorted(root.glob("scripts/*.py")),
+             *sorted(root.glob("examples/*.py"))]
+    missing = []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.ImportFrom) and node.module
+                    and node.module.split(".")[0] == PKG.name):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                if hasattr(mod, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ModuleNotFoundError:
+                    missing.append(f"{path.relative_to(root)}:{node.lineno} "
+                                   f"{node.module}.{alias.name}")
+    assert not missing, "unresolved imports: " + ", ".join(missing)
 
 
 def test_driver_side_ids_frame_has_no_aggregate(spark):

@@ -7,10 +7,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import neardup
 from astro_vectordb_spark.sources.vault import (
     load_minhash_index,
-    minhash_append_to_index,
-    minhash_match_index,
     save_minhash_index,
 )
 
@@ -49,8 +48,8 @@ class TestMatch:
         )
         got = {
             (int(r.new_id), int(r.hist_id)): float(r.est_jaccard)
-            for r in minhash_match_index(
-                spark, index_path, new, threshold=0.9
+            for r in neardup.open(spark, index_path).match(
+                new, threshold=0.9,
             ).collect()
         }
         for i in range(5):
@@ -73,8 +72,8 @@ class TestMatch:
             w if j != 2 else "zzz" for j, w in enumerate(base.split())
         )
         new = _mkdocs(spark, [(300000, mutated)])
-        rows = minhash_match_index(
-            spark, index_path, new, threshold=0.01
+        rows = neardup.open(spark, index_path).match(
+            new, threshold=0.01,
         ).filter(F.col("hist_id") == 7).collect()
         sigs, _, meta = load_minhash_index(spark, index_path)
         hist_sig = sigs.filter(F.col("doc_id") == 7).first()["sig"]
@@ -97,15 +96,15 @@ class TestMatch:
             assert not rows
         # and an exact copy is always a candidate with est exactly 1.0
         copy = _mkdocs(spark, [(300001, dict(corpus_rows)[7])])
-        crow = minhash_match_index(
-            spark, index_path, copy, threshold=0.01
+        crow = neardup.open(spark, index_path).match(
+            copy, threshold=0.01,
         ).filter(F.col("hist_id") == 7).collect()
         assert crow and float(crow[0].est_jaccard) == 1.0
 
     def test_threshold_filters(self, spark, corpus_rows, index_path):
         new = _mkdocs(spark, [(100000 + i, t) for i, t in corpus_rows[:3]])
-        low = minhash_match_index(spark, index_path, new, threshold=0.2)
-        high = minhash_match_index(spark, index_path, new, threshold=0.99)
+        low = neardup.open(spark, index_path).match(new, threshold=0.2)
+        high = neardup.open(spark, index_path).match(new, threshold=0.99)
         assert low.count() >= high.count() >= 3
 
 
@@ -113,17 +112,17 @@ class TestAppend:
     def test_append_then_match(self, spark, corpus_rows, tmp_path):
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, corpus_rows[:40]), path)
-        rep = minhash_append_to_index(
-            spark, path, _mkdocs(spark, corpus_rows[40:]), batch_id=0
+        rep = neardup.open(spark, path).append(
+            _mkdocs(spark, corpus_rows[40:]), batch_id=0,
         )
         assert rep["appended_rows"] == 20 and not rep["skipped_replay"]
         # a copy of an APPENDED doc must now match
         new = _mkdocs(spark, [(100000, corpus_rows[50][1])])
-        got = minhash_match_index(spark, path, new, threshold=0.9).collect()
+        got = neardup.open(spark, path).match(new, threshold=0.9).collect()
         assert any(int(r.hist_id) == 50 for r in got)
         # replay of the same batch is a no-op
-        rep2 = minhash_append_to_index(
-            spark, path, _mkdocs(spark, corpus_rows[40:]), batch_id=0
+        rep2 = neardup.open(spark, path).append(
+            _mkdocs(spark, corpus_rows[40:]), batch_id=0,
         )
         assert rep2["skipped_replay"]
         # n_rows counter is exact
@@ -160,8 +159,8 @@ class TestAppend:
     def test_dedup_ids_anti_join(self, spark, corpus_rows, tmp_path):
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, corpus_rows[:40]), path)
-        rep = minhash_append_to_index(
-            spark, path, _mkdocs(spark, corpus_rows[30:50]), batch_id=1
+        rep = neardup.open(spark, path).append(
+            _mkdocs(spark, corpus_rows[30:50]), batch_id=1,
         )
         assert rep["appended_rows"] == 10  # 30..39 already indexed
         sigs, _, meta = load_minhash_index(spark, path)
@@ -188,19 +187,19 @@ class TestAppend:
         # doc 55 itself is invisible (other cyclic near-dups in the
         # fixture corpus may still match — that's the corpus, not the
         # index)
-        assert not minhash_match_index(
-            spark, path, probe, threshold=0.9
+        assert not neardup.open(spark, path).match(
+            probe, threshold=0.9,
         ).filter(F.col("hist_id") == 55).collect()
         # any subsequent append repairs the diff
-        rep = minhash_append_to_index(
-            spark, path, _mkdocs(spark, [corpus_rows[56]]), batch_id=2
+        rep = neardup.open(spark, path).append(
+            _mkdocs(spark, [corpus_rows[56]]), batch_id=2,
         )
         # the batch's OWN contribution and the predecessor's repaired
         # leftover are reported separately (conflating them overstated
         # the batch's contribution)
         assert rep["appended_rows"] == 1
         assert rep["repaired_rows"] == 1
-        got = minhash_match_index(spark, path, probe, threshold=0.9).collect()
+        got = neardup.open(spark, path).match(probe, threshold=0.9).collect()
         assert any(int(r.hist_id) == 55 for r in got)
         _, _, meta = load_minhash_index(spark, path)
         assert int(meta["n_rows"]) == 42
@@ -228,8 +227,8 @@ class TestParityWithBatchOperator:
         }
         idx = {
             (int(r.new_id), int(r.hist_id))
-            for r in minhash_match_index(
-                spark, index_path, _mkdocs(spark, new_rows), threshold=1.0
+            for r in neardup.open(spark, index_path).match(
+                _mkdocs(spark, new_rows), threshold=1.0,
             ).collect()
         }
         assert batch <= idx  # exact-Jaccard-1.0 pairs all surface at est 1.0
@@ -241,8 +240,6 @@ class TestStreamingIngest:
         """Stream integration: streamed docs become matchable in the
         persisted index (the per-batch semantics are pinned by
         test_neardup_facade.TestIngestBatch)."""
-        from astro_vectordb_spark import neardup
-
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, corpus_rows[:40]), path)
         body = "streamed body of fresh unseen words"
@@ -257,8 +254,8 @@ class TestStreamingIngest:
         finally:
             q.stop()
         probe = _mkdocs(spark, [(900000, body)])
-        assert minhash_match_index(
-            spark, path, probe, threshold=0.9
+        assert neardup.open(spark, path).match(
+            probe, threshold=0.9,
         ).limit(1).count(), "streamed docs never became matchable"
 
 
@@ -272,13 +269,12 @@ class TestCompact:
         from astro_vectordb_spark.operators.dedup import (
             minhash_signatures_sql_safe,
         )
-        from astro_vectordb_spark.sources.vault import minhash_compact_index
 
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, corpus_rows[:30]), path)
         for b, i in enumerate(range(30, 40)):
-            minhash_append_to_index(
-                spark, path, _mkdocs(spark, [corpus_rows[i]]), batch_id=b + 1
+            neardup.open(spark, path).append(
+                _mkdocs(spark, [corpus_rows[i]]), batch_id=b + 1,
             )
         # plant a duplicate-id sig row (crashed-append leftover shape)
         minhash_signatures_sql_safe(
@@ -286,38 +282,32 @@ class TestCompact:
         ).write.mode("append").parquet(os.path.join(path, "sigs"))
         before = {
             (int(r.new_id), int(r.hist_id))
-            for r in minhash_match_index(
-                spark, path,
-                _mkdocs(spark, [(100000, corpus_rows[35][1])]),
-                threshold=0.9,
+            for r in neardup.open(spark, path).match(
+                _mkdocs(spark, [(100000, corpus_rows[35][1])]), threshold=0.9,
             ).collect()
         }
-        rep = minhash_compact_index(
-            spark, path, target_rows_per_file=1_000_000, min_file_ratio=1.0
+        rep = neardup.open(spark, path).compact(
+            target_rows_per_file=1_000_000, min_file_ratio=1.0,
         )
         assert rep["compacted"] and rep["target_files"] == 1
         sigs, _, _ = load_minhash_index(spark, path)
         assert sigs.groupBy("doc_id").count().filter("count > 1").count() == 0
         after = {
             (int(r.new_id), int(r.hist_id))
-            for r in minhash_match_index(
-                spark, path,
-                _mkdocs(spark, [(100000, corpus_rows[35][1])]),
-                threshold=0.9,
+            for r in neardup.open(spark, path).match(
+                _mkdocs(spark, [(100000, corpus_rows[35][1])]), threshold=0.9,
             ).collect()
         }
         assert after == before
         # well-sized table -> no-op
-        rep2 = minhash_compact_index(
-            spark, path, target_rows_per_file=1_000_000, min_file_ratio=2.0
+        rep2 = neardup.open(spark, path).compact(
+            target_rows_per_file=1_000_000, min_file_ratio=2.0,
         )
         assert not rep2["compacted"]
 
 
 class TestIndexGroups:
     def test_groups_keep_min_id_and_singletons(self, spark, tmp_path):
-        from astro_vectordb_spark.sources.vault import minhash_index_groups
-
         rows = [
             (1, "alpha beta gamma delta epsilon zeta"),
             (2, "alpha beta gamma delta epsilon zeta"),   # copy of 1
@@ -329,9 +319,7 @@ class TestIndexGroups:
         save_minhash_index(_mkdocs(spark, rows), path)
         keep = sorted(
             int(r.doc_id)
-            for r in minhash_index_groups(
-                spark, path, threshold=0.9
-            ).collect()
+            for r in neardup.open(spark, path).groups(threshold=0.9).collect()
         )
         assert keep == [1, 5, 6]  # min id of {1,2,9} + the singletons
 
@@ -362,8 +350,7 @@ class TestHotBucketGuard:
         representative for the whole cluster — rep count and rep-level
         pair count are O(distinct sigs), independent of d — and the
         keep set is exactly {min id} plus the unique docs."""
-        from astro_vectordb_spark.sources.vault import (
-            minhash_index_groups,
+        from astro_vectordb_spark.sources.index_lifecycle import (
             minhash_sig_self_pairs,
         )
 
@@ -383,7 +370,7 @@ class TestHotBucketGuard:
         assert pairs.count() < 50  # never scales with d
         keep = {
             int(r.doc_id)
-            for r in minhash_index_groups(spark, path, threshold=0.8).collect()
+            for r in neardup.open(spark, path).groups(threshold=0.8).collect()
         }
         assert 0 in keep
         assert not any(0 < k < d for k in keep)  # all copies collapsed
@@ -399,7 +386,6 @@ class TestHotBucketGuard:
             connected_components,
             minhash_signatures_sql_safe,
         )
-        from astro_vectordb_spark.sources.vault import minhash_index_groups
 
         rows = corpus_rows[:30] + [
             (500 + i, corpus_rows[i][1]) for i in range(6)  # exact dups
@@ -408,7 +394,7 @@ class TestHotBucketGuard:
         save_minhash_index(_mkdocs(spark, rows), path)
         got = sorted(
             int(r.doc_id)
-            for r in minhash_index_groups(spark, path, threshold=0.9).collect()
+            for r in neardup.open(spark, path).groups(threshold=0.9).collect()
         )
         # brute-force reference: all-pairs est over the signatures
         sigs = minhash_signatures_sql_safe(_mkdocs(spark, rows)).collect()
@@ -446,10 +432,10 @@ class TestHotBucketGuard:
         path = str(tmp_path / "idx")
         save_minhash_index(self._planted(spark, d, n_unique=5), path)
         probe = _mkdocs(spark, [(999_999, self.BOILER)])
-        full = minhash_match_index(spark, path, probe, threshold=0.9)
+        full = neardup.open(spark, path).match(probe, threshold=0.9)
         assert full.count() == d
-        capped = minhash_match_index(
-            spark, path, probe, threshold=0.9, max_bucket_size=5
+        capped = neardup.open(spark, path).match(
+            probe, threshold=0.9, max_bucket_size=5,
         ).collect()
         assert 0 < len(capped) <= 5
         assert {int(r.new_id) for r in capped} == {999_999}
@@ -546,13 +532,9 @@ class TestRemoveAndApply:
     def test_remove_physically_deletes_both_tables(
         self, spark, corpus_rows, tmp_path
     ):
-        from astro_vectordb_spark.sources.vault import (
-            minhash_remove_from_index,
-        )
-
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, corpus_rows[:40]), path)
-        rep = minhash_remove_from_index(spark, path, [3, 5], batch_id=0)
+        rep = neardup.open(spark, path).remove([3, 5], batch_id=0)
         assert rep["removed_docs"] == 2
         sigs, bands, meta = load_minhash_index(spark, path)
         assert sigs.filter(F.col("doc_id").isin([3, 5])).count() == 0
@@ -560,19 +542,15 @@ class TestRemoveAndApply:
         assert int(meta["n_rows"]) == 38
         # removed docs stop matching
         probe = _mkdocs(spark, [(100000, corpus_rows[3][1])])
-        got = minhash_match_index(spark, path, probe, threshold=0.9)
+        got = neardup.open(spark, path).match(probe, threshold=0.9)
         assert not any(int(r.hist_id) == 3 for r in got.collect())
         # replay is a no-op
-        rep2 = minhash_remove_from_index(spark, path, [3, 5], batch_id=0)
+        rep2 = neardup.open(spark, path).remove([3, 5], batch_id=0)
         assert rep2["skipped_replay"]
 
     def test_apply_groups_removes_losers_and_serves_post_sweep(
         self, spark, tmp_path
     ):
-        from astro_vectordb_spark.sources.vault import (
-            minhash_apply_groups,
-        )
-
         rows = [
             (1, "alpha beta gamma delta epsilon zeta"),
             (2, "alpha beta gamma delta epsilon zeta"),   # copy of 1
@@ -582,17 +560,17 @@ class TestRemoveAndApply:
         ]
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, rows), path)
-        rep = minhash_apply_groups(spark, path, threshold=0.9, batch_id=0)
+        rep = neardup.open(spark, path).apply_sweep(threshold=0.9, batch_id=0)
         assert rep["removed_docs"] == 2 and rep["kept"] == 3
         sigs, _, _ = load_minhash_index(spark, path)
         assert sorted(int(r.doc_id) for r in sigs.collect()) == [1, 5, 6]
         # post-sweep serving: a copy of the boilerplate matches ONLY
         # the surviving representative
         probe = _mkdocs(spark, [(100, rows[0][1])])
-        got = minhash_match_index(spark, path, probe, threshold=0.9)
+        got = neardup.open(spark, path).match(probe, threshold=0.9)
         assert sorted(int(r.hist_id) for r in got.collect()) == [1]
         # replayed sweep is a no-op
-        rep2 = minhash_apply_groups(spark, path, threshold=0.9, batch_id=0)
+        rep2 = neardup.open(spark, path).apply_sweep(threshold=0.9, batch_id=0)
         assert rep2["skipped_replay"]
 
 
@@ -603,25 +581,22 @@ class TestSweepReplayNamespace:
         """The sweep and a targeted remove stream each number batches
         from 0 — they must not share a replay namespace (the
         cross-operation collision the namespaced log prevents)."""
-        from astro_vectordb_spark.sources.vault import (
-            minhash_apply_groups,
-            minhash_remove_from_index,
-        )
-
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, corpus_rows[:40]), path)
-        rep_s = minhash_apply_groups(spark, path, threshold=0.9, batch_id=0)
+        rep_s = neardup.open(spark, path).apply_sweep(
+            threshold=0.9, batch_id=0,
+        )
         assert not rep_s.get("skipped_replay", False)
         # a remove with the SAME batch_id must still apply
-        rep_r = minhash_remove_from_index(spark, path, [3], batch_id=0)
+        rep_r = neardup.open(spark, path).remove([3], batch_id=0)
         assert not rep_r.get("skipped_replay", False)
         assert rep_r["removed_docs"] == 1
         # and each op's own replay stays a no-op
-        assert minhash_apply_groups(
-            spark, path, threshold=0.9, batch_id=0
+        assert neardup.open(spark, path).apply_sweep(
+            threshold=0.9, batch_id=0,
         )["skipped_replay"]
-        assert minhash_remove_from_index(
-            spark, path, [3], batch_id=0
+        assert neardup.open(spark, path).remove(
+            [3], batch_id=0,
         )["skipped_replay"]
 
     def test_replayed_append_reports_repaired_rows_key(
@@ -629,11 +604,11 @@ class TestSweepReplayNamespace:
     ):
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, corpus_rows[:40]), path)
-        minhash_append_to_index(
-            spark, path, _mkdocs(spark, [corpus_rows[41]]), batch_id=5
+        neardup.open(spark, path).append(
+            _mkdocs(spark, [corpus_rows[41]]), batch_id=5,
         )
-        rep = minhash_append_to_index(
-            spark, path, _mkdocs(spark, [corpus_rows[41]]), batch_id=5
+        rep = neardup.open(spark, path).append(
+            _mkdocs(spark, [corpus_rows[41]]), batch_id=5,
         )
         assert rep["skipped_replay"] and rep["repaired_rows"] == 0
 

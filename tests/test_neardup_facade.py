@@ -1,7 +1,9 @@
 """Unified near-dup facade (round-14 verdict item 5): ``neardup.open``
 auto-detects the family from ``_meta`` and returns one handle whose
-match/append/remove/compact/groups/apply_sweep delegate to the family
-faces — the dedup analogue of the ``search.search`` kind matrix.
+match/append/remove/compact/groups/apply_sweep call the shared
+lifecycle with the family object — the dedup analogue of the
+``search.search`` kind matrix, and the only near-dup maintenance
+surface.
 """
 
 import numpy as np
@@ -146,6 +148,97 @@ class TestKindMatrix:
         save_ivf_index(assigned, centroids, path)
         with pytest.raises(ValueError, match="not a near-dup index"):
             neardup.open(spark, path)
+
+
+# The keywords (with their defaults) each family's maintenance calls
+# have always taken, per handle method.
+_TEXT_MATCH = {"text_col": "text", "max_bucket_size": None,
+               "telemetry": None}
+_COMPACT = {"target_rows_per_file": 4_000_000, "min_file_ratio": 2.0}
+HANDLE_KW = {
+    "minhash": {
+        "match": {"threshold": 0.8, **_TEXT_MATCH},
+        "append": {"batch_id": None, "dedup_ids": True, "text_col": "text"},
+        "remove": {"batch_id": None, "op": "minhash_remove"},
+        "compact": _COMPACT,
+        "groups": {"threshold": 0.8},
+        "apply_sweep": {"threshold": 0.8, "batch_id": None},
+    },
+    "simhash": {
+        "match": {"max_hamming": None, **_TEXT_MATCH},
+        "append": {"batch_id": None, "dedup_ids": True, "text_col": "text"},
+        "remove": {"batch_id": None, "op": "simhash_remove"},
+        "compact": _COMPACT,
+        "groups": {"max_hamming": None, "max_bucket_size": None},
+        "apply_sweep": {"max_hamming": None, "batch_id": None,
+                        "max_bucket_size": None},
+    },
+    "rp": {
+        "match": {"threshold": 0.9, "max_bucket_size": None,
+                  "telemetry": None, "n_probes": 0},
+        "append": {"batch_id": None, "dedup_ids": True},
+        "remove": {"batch_id": None, "op": "rp_remove"},
+        "compact": _COMPACT,
+        "groups": {"threshold": 0.9, "max_bucket_size": None},
+        "apply_sweep": {"threshold": 0.9, "batch_id": None,
+                        "max_bucket_size": None},
+    },
+    "semdedup": {
+        "match": {"eps": 0.95, "max_bucket_size": None, "telemetry": None,
+                  "n_probes": 1, "probe_margin": 0.05},
+        "append": {"batch_id": None, "dedup_ids": True},
+        "remove": {"batch_id": None, "op": "semdedup_remove"},
+        "compact": _COMPACT,
+        "groups": {"eps": 0.95, "keep": "min_id", "max_cluster_rows": None,
+                   "use_stored_probes": True},
+        "apply_sweep": {"eps": 0.95, "keep": "min_id", "batch_id": None,
+                        "max_cluster_rows": None},
+    },
+}
+_SCORE_COL = {"minhash": "est_jaccard", "simhash": "hamming", "rp": "score",
+              "semdedup": "score"}
+
+
+@pytest.fixture(scope="module")
+def contract_indexes(spark, corpora, tmp_path_factory):
+    root = tmp_path_factory.mktemp("nd_contract")
+    paths = {}
+    for family in FAMILIES:
+        paths[family] = str(root / family)
+        _build(spark, corpora, family, paths[family])
+    return paths
+
+
+@pytest.mark.parametrize("method", list(HANDLE_KW["minhash"]))
+@pytest.mark.parametrize("family", FAMILIES)
+def test_handle_keyword_contract(spark, corpora, contract_indexes, family,
+                                 method):
+    """The handle takes exactly the keywords each family's maintenance
+    calls have always taken, at their old defaults: each one is
+    accepted; every keyword another family takes for the same method
+    (and a made-up one) raises TypeError; a SimHash distance above the
+    build distance raises ValueError."""
+    docs, vecs, _ = corpora
+    idx = neardup.open(spark, contract_indexes[family])
+    call = getattr(idx, method)
+    batch = (docs if family in ("minhash", "simhash") else vecs).limit(0)
+    args = {"match": (batch,), "append": (batch,), "remove": ([],)}.get(
+        method, ())
+    accepted = HANDLE_KW[family][method]
+    out = call(*args, **accepted)
+    if method == "match":
+        assert out.columns == ["new_id", "hist_id", _SCORE_COL[family]]
+    elif method == "groups":
+        assert out.columns == [idx.meta["id_col"]]
+    else:
+        assert isinstance(out, dict)
+    foreign = {k for kws in HANDLE_KW.values() for k in kws[method]}
+    for kw in sorted(foreign - set(accepted)) + ["bogus"]:
+        with pytest.raises(TypeError):
+            call(*args, **{kw: 1})
+    if family == "simhash" and "max_hamming" in accepted:
+        with pytest.raises(ValueError, match="max_hamming"):
+            call(*args, max_hamming=idx.meta["max_hamming"] + 1)
 
 
 class TestStreamDispatch:

@@ -1,6 +1,6 @@
 """Round-12 pins: the four ADVICE findings.
 
-1. ``minhash_apply_groups`` on a LEGACY ``_meta`` (no ``n_rows``
+1. The minhash ``apply_sweep`` on a LEGACY ``_meta`` (no ``n_rows``
    column) must not raise after the removal committed — it falls back
    to counting distinct ids in ``sigs/``.
 2. The PQ append faces' success-path reports carry
@@ -11,7 +11,7 @@
    candidates must equal the reference driver-side per-cell-LUT
    construction (``_adc_lut_residual``) on both metrics, including a
    probed SUBSET of cells (the server-side centroid filter path).
-4. ``minhash_append_to_index``'s backlog measure short-circuits on the
+4. The minhash ``append``'s backlog measure short-circuits on the
    healthy path (counts agree -> no anti-join) and still reports
    ``repaired_rows: 0`` / the exact appended count.
 """
@@ -41,9 +41,9 @@ _CORPUS = (
 
 class TestApplyGroupsLegacyMeta:
     def test_sweep_on_meta_without_n_rows(self, spark, tmp_path):
+        from astro_vectordb_spark import neardup
         from astro_vectordb_spark.sources.vault import (
             load_minhash_index,
-            minhash_apply_groups,
             save_minhash_index,
         )
 
@@ -63,7 +63,7 @@ class TestApplyGroupsLegacyMeta:
         spark.createDataFrame(legacy_pdf, legacy.schema).write.parquet(
             os.path.join(path, "_meta")
         )
-        rep = minhash_apply_groups(spark, path, threshold=0.9, batch_id=1)
+        rep = neardup.open(spark, path).apply_sweep(threshold=0.9, batch_id=1)
         # 4 of the 5 boilerplate copies drop; kept falls back to the
         # distinct sig-id count (legacy meta has no counter)
         assert rep["removed_docs"] == 4
@@ -207,10 +207,8 @@ class TestBucketTelemetry:
     def test_match_fills_telemetry_with_planted_cluster(
         self, spark, tmp_path
     ):
-        from astro_vectordb_spark.sources.vault import (
-            minhash_match_index,
-            save_minhash_index,
-        )
+        from astro_vectordb_spark import neardup
+        from astro_vectordb_spark.sources.vault import save_minhash_index
 
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, _CORPUS), path)
@@ -218,8 +216,8 @@ class TestBucketTelemetry:
         # all 5 planted witnesses
         probe = _mkdocs(spark, [(9000, _CORPUS[-1][1])])
         tel: dict = {}
-        out = minhash_match_index(
-            spark, path, probe, threshold=0.9, telemetry=tel
+        out = neardup.open(spark, path).match(
+            probe, threshold=0.9, telemetry=tel,
         )
         assert tel["max_bucket_witnesses"] == 5
         assert tel["p50_bucket_witnesses"] == 5  # probe touches ONLY
@@ -229,18 +227,15 @@ class TestBucketTelemetry:
         assert out.count() == 5
 
     def test_pre_cap_stats_unchanged_by_cap(self, spark, tmp_path):
-        from astro_vectordb_spark.sources.vault import (
-            minhash_match_index,
-            save_minhash_index,
-        )
+        from astro_vectordb_spark import neardup
+        from astro_vectordb_spark.sources.vault import save_minhash_index
 
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, _CORPUS), path)
         probe = _mkdocs(spark, [(9000, _CORPUS[-1][1])])
         tel: dict = {}
-        out = minhash_match_index(
-            spark, path, probe, threshold=0.9, max_bucket_size=2,
-            telemetry=tel,
+        out = neardup.open(spark, path).match(
+            probe, threshold=0.9, max_bucket_size=2, telemetry=tel,
         )
         # capped match serves 2 witnesses, telemetry still reports the
         # pre-cap skew of 5
@@ -270,16 +265,16 @@ class TestBucketTelemetry:
 
 class TestAppendBacklogShortCircuit:
     def test_healthy_append_reports_zero_repair(self, spark, tmp_path):
+        from astro_vectordb_spark import neardup
         from astro_vectordb_spark.sources.vault import (
             load_minhash_index,
-            minhash_append_to_index,
             save_minhash_index,
         )
 
         path = str(tmp_path / "idx")
         save_minhash_index(_mkdocs(spark, _CORPUS[:10]), path)
-        rep = minhash_append_to_index(
-            spark, path, _mkdocs(spark, _CORPUS[10:15]), batch_id=1
+        rep = neardup.open(spark, path).append(
+            _mkdocs(spark, _CORPUS[10:15]), batch_id=1,
         )
         assert rep == {
             "appended_rows": 5, "repaired_rows": 0, "skipped_replay": False

@@ -14,14 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from astro_vectordb_spark.operators.dedup import rp_cell_table
-from astro_vectordb_spark.sources.vault import (
-    load_rp_index,
-    rp_append_to_index,
-    rp_compact_index,
-    rp_match_index,
-    rp_remove_from_index,
-    save_rp_index,
-)
+from astro_vectordb_spark import neardup
+from astro_vectordb_spark.sources.vault import load_rp_index, save_rp_index
 
 DIM = 16
 N = 400
@@ -88,7 +82,7 @@ class TestMatch:
         batch = df.filter(F.col("vec_id") < 5).select(
             (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
         )
-        got = rp_match_index(spark, path, batch, threshold=0.99)
+        got = neardup.open(spark, path).match(batch, threshold=0.99)
         pairs = {(r["new_id"], r["hist_id"], r["score"])
                  for r in got.collect()}
         for i in range(5):
@@ -102,8 +96,8 @@ class TestMatch:
         batch = df.filter(F.col("vec_id") >= 300)
         got = {
             (r["new_id"], r["hist_id"], r["score"])
-            for r in rp_match_index(
-                spark, path, batch, threshold=0.95
+            for r in neardup.open(spark, path).match(
+                batch, threshold=0.95,
             ).collect()
         }
         # one-shot face over the union, restricted to cross pairs,
@@ -138,12 +132,13 @@ class TestMatch:
             (F.col("vec_id") + 99999).alias("vec_id"), "embedding"
         )
         tel: dict = {}
-        full = rp_match_index(spark, path2, batch, threshold=0.99,
-                              telemetry=tel)
+        full = neardup.open(spark, path2).match(
+            batch, threshold=0.99, telemetry=tel,
+        )
         n_full = full.count()
         assert tel["max_bucket_witnesses"] >= 60
-        capped = rp_match_index(
-            spark, path2, batch, threshold=0.99, max_bucket_size=10
+        capped = neardup.open(spark, path2).match(
+            batch, threshold=0.99, max_bucket_size=10,
         )
         n_capped = capped.count()
         assert 0 < n_capped < n_full
@@ -156,7 +151,7 @@ class TestAppend:
         newbies = df.filter(
             (F.col("vec_id") >= 300) & (F.col("vec_id") < 350)
         )
-        rep = rp_append_to_index(spark, path, newbies, batch_id=1)
+        rep = neardup.open(spark, path).append(newbies, batch_id=1)
         assert rep["appended_rows"] == 50
         assert rep["skipped_replay"] is False
         _, _, meta = load_rp_index(spark, path)
@@ -165,7 +160,7 @@ class TestAppend:
         probe = newbies.limit(1).select(
             (F.col("vec_id") + 500000).alias("vec_id"), "embedding"
         )
-        got = rp_match_index(spark, path, probe, threshold=0.99)
+        got = neardup.open(spark, path).match(probe, threshold=0.99)
         assert got.count() >= 1
 
     def test_append_replay_noop(self, spark, data, index):
@@ -174,8 +169,8 @@ class TestAppend:
         newbies = df.filter(
             (F.col("vec_id") >= 300) & (F.col("vec_id") < 320)
         )
-        rp_append_to_index(spark, path, newbies, batch_id=7)
-        rep = rp_append_to_index(spark, path, newbies, batch_id=7)
+        neardup.open(spark, path).append(newbies, batch_id=7)
+        rep = neardup.open(spark, path).append(newbies, batch_id=7)
         assert rep["skipped_replay"] is True
         _, _, meta = load_rp_index(spark, path)
         assert meta["n_rows"] == 320
@@ -183,8 +178,8 @@ class TestAppend:
     def test_append_dedups_known_ids(self, spark, data, index):
         df, _ = data
         path, _ = index
-        rep = rp_append_to_index(
-            spark, path, df.filter(F.col("vec_id") < 10), batch_id=2
+        rep = neardup.open(spark, path).append(
+            df.filter(F.col("vec_id") < 10), batch_id=2,
         )
         assert rep["appended_rows"] == 0
         _, _, meta = load_rp_index(spark, path)
@@ -203,8 +198,7 @@ class TestAppend:
         orphans.select("vec_id", "embedding").write.mode("append").parquet(
             f"{path}/vecs"
         )
-        rep = rp_append_to_index(
-            spark, path,
+        rep = neardup.open(spark, path).append(
             df.filter((F.col("vec_id") >= 380) & (F.col("vec_id") < 382)),
             batch_id=9,
         )
@@ -221,20 +215,20 @@ class TestRemoveCompact:
     def test_remove_then_no_match(self, spark, data, index):
         df, _ = data
         path, _ = index
-        rep = rp_remove_from_index(spark, path, [0, 1, 2], batch_id=3)
+        rep = neardup.open(spark, path).remove([0, 1, 2], batch_id=3)
         assert rep["removed_rows"] == 3
         _, _, meta = load_rp_index(spark, path)
         assert meta["n_rows"] == 297
         probe = df.filter(F.col("vec_id") == 0).select(
             (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
         )
-        got = rp_match_index(spark, path, probe, threshold=0.999999)
+        got = neardup.open(spark, path).match(probe, threshold=0.999999)
         assert got.filter(F.col("hist_id").isin([0, 1, 2])).count() == 0
 
     def test_remove_replay_noop(self, spark, index):
         path, _ = index
-        rp_remove_from_index(spark, path, [5], batch_id=4)
-        rep = rp_remove_from_index(spark, path, [5], batch_id=4)
+        neardup.open(spark, path).remove([5], batch_id=4)
+        rep = neardup.open(spark, path).remove([5], batch_id=4)
         assert rep["skipped_replay"] is True
 
     def test_compact_dedups_and_heals(self, spark, data, index):
@@ -242,12 +236,11 @@ class TestRemoveCompact:
         path, _ = index
         # many tiny appends -> file growth
         for b in range(5):
-            rp_append_to_index(
-                spark, path,
+            neardup.open(spark, path).append(
                 df.filter(F.col("vec_id") == 300 + b), batch_id=100 + b,
             )
-        rep = rp_compact_index(
-            spark, path, target_rows_per_file=10_000, min_file_ratio=1.0
+        rep = neardup.open(spark, path).compact(
+            target_rows_per_file=10_000, min_file_ratio=1.0,
         )
         assert rep["compacted"] is True
         vecs, buckets, meta = load_rp_index(spark, path)
@@ -259,8 +252,8 @@ class TestRemoveCompact:
         probe = df.filter(F.col("vec_id") == 300).select(
             (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
         )
-        assert rp_match_index(
-            spark, path, probe, threshold=0.99
+        assert neardup.open(spark, path).match(
+            probe, threshold=0.99,
         ).count() >= 1
 
 
@@ -270,8 +263,6 @@ class TestStreamingIngest:
         """Stream integration: streamed vectors become matchable in the
         persisted index (the per-batch semantics are pinned by
         test_neardup_facade.TestIngestBatch)."""
-        from astro_vectordb_spark import neardup
-
         df, X = data
         path, _ = index
         fixed = [float(x) for x in X[399]]
@@ -290,8 +281,8 @@ class TestStreamingIngest:
         probe = spark.createDataFrame(
             [(950_000, fixed)], "vec_id long, embedding array<double>"
         )
-        assert rp_match_index(
-            spark, path, probe, threshold=0.99
+        assert neardup.open(spark, path).match(
+            probe, threshold=0.99,
         ).limit(1).count()
 
 
@@ -304,10 +295,7 @@ class TestGroupsApply:
             connected_components,
             rp_block_pairs,
         )
-        from astro_vectordb_spark.sources.vault import (
-            rp_index_groups,
-            save_rp_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_rp_index
 
         df, _ = data
         # plant duplicate clusters: copies of vectors 0..4
@@ -319,7 +307,7 @@ class TestGroupsApply:
         save_rp_index(corpus, path, n_planes=6, n_tables=8, seed=11)
         got = {
             r["vec_id"]
-            for r in rp_index_groups(spark, path, threshold=0.98).collect()
+            for r in neardup.open(spark, path).groups(threshold=0.98).collect()
         }
         pairs = rp_block_pairs(
             corpus, threshold=0.98, n_planes=6, n_tables=8, seed=11,
@@ -344,7 +332,6 @@ class TestGroupsApply:
     def test_apply_sweep_fixpoint(self, spark, data, tmp_path):
         from astro_vectordb_spark.sources.vault import (
             load_rp_index,
-            rp_apply_groups,
             save_rp_index,
         )
 
@@ -357,17 +344,23 @@ class TestGroupsApply:
         save_rp_index(corpus, path, n_planes=6, n_tables=8, seed=11)
         # threshold above any natural same-cluster cosine (sigma 0.05)
         # so ONLY the 8 exact planted copies are losers
-        rep = rp_apply_groups(spark, path, threshold=0.9999, batch_id=1)
+        rep = neardup.open(spark, path).apply_sweep(
+            threshold=0.9999, batch_id=1,
+        )
         assert rep["removed_rows"] == 8
         assert rep["kept"] == 60
         vecs, buckets, meta = load_rp_index(spark, path)
         assert meta["n_rows"] == 60
         assert buckets.filter(F.col("vec_id") >= 5000).count() == 0
         # fixpoint: a second sweep (new batch id) removes nothing
-        rep2 = rp_apply_groups(spark, path, threshold=0.9999, batch_id=2)
+        rep2 = neardup.open(spark, path).apply_sweep(
+            threshold=0.9999, batch_id=2,
+        )
         assert rep2["removed_rows"] == 0
         # replay of the FIRST sweep is a no-op
-        rep3 = rp_apply_groups(spark, path, threshold=0.9999, batch_id=1)
+        rep3 = neardup.open(spark, path).apply_sweep(
+            threshold=0.9999, batch_id=1,
+        )
         assert rep3["skipped_replay"] is True
 
 
@@ -416,8 +409,7 @@ class TestReviewRegressions:
         assert buckets.filter(F.col("vec_id") == 3).count() == 0
         assert vecs.filter(F.col("vec_id") == 3).count() == 1
         # the next append's self-heal re-buckets the orphaned vector
-        rep = rp_append_to_index(
-            spark, path,
+        rep = neardup.open(spark, path).append(
             df.filter(F.col("vec_id") == 399), batch_id=77,
         )
         assert rep["repaired_rows"] == 1
@@ -427,7 +419,7 @@ class TestReviewRegressions:
         probe = df.filter(F.col("vec_id") == 3).select(
             (F.col("vec_id") + 880000).alias("vec_id"), "embedding"
         )
-        got = rp_match_index(spark, path, probe, threshold=0.999999)
+        got = neardup.open(spark, path).match(probe, threshold=0.999999)
         assert got.filter(F.col("hist_id") == 3).count() == 1
 
 
@@ -470,10 +462,7 @@ class TestMultiProbe:
         pairs on this corpus (measured vs the exact O(n^2) ground
         truth)."""
         from astro_vectordb_spark.operators.dedup import similarity_join
-        from astro_vectordb_spark.sources.vault import (
-            rp_match_index,
-            save_rp_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_rp_index
 
         df, _ = data
         hist = df.filter(F.col("vec_id") < 300)
@@ -483,14 +472,14 @@ class TestMultiProbe:
         save_rp_index(hist, path, n_planes=8, n_tables=2, seed=11)
         base = {
             (r["new_id"], r["hist_id"])
-            for r in rp_match_index(
-                spark, path, batch, threshold=0.95
+            for r in neardup.open(spark, path).match(
+                batch, threshold=0.95,
             ).collect()
         }
         probed = {
             (r["new_id"], r["hist_id"])
-            for r in rp_match_index(
-                spark, path, batch, threshold=0.95, n_probes=3
+            for r in neardup.open(spark, path).match(
+                batch, threshold=0.95, n_probes=3,
             ).collect()
         }
         assert base <= probed

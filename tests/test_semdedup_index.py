@@ -16,15 +16,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import neardup
 from astro_vectordb_spark.sources.semdedup_index import (
     load_semdedup_index,
     save_semdedup_index,
-    semdedup_append_to_index,
-    semdedup_apply_groups,
-    semdedup_compact_index,
-    semdedup_index_groups,
-    semdedup_match_index,
-    semdedup_remove_from_index,
 )
 
 DIM = 16
@@ -123,7 +118,7 @@ class TestMatch:
         df, _ = data
         path, _ = index
         probe = df.filter(F.col("vec_id") >= 1000)  # copies of 0..9
-        got = semdedup_match_index(spark, path, probe, eps=0.999)
+        got = neardup.open(spark, path).match(probe, eps=0.999)
         pairs = {(r["new_id"], r["hist_id"], r["score"])
                  for r in got.collect()}
         for i in range(10):
@@ -136,7 +131,7 @@ class TestMatch:
         probe = df.filter(
             (F.col("vec_id") >= 200) & (F.col("vec_id") < 220)
         )
-        got = semdedup_match_index(spark, path, probe, eps=0.99999)
+        got = neardup.open(spark, path).match(probe, eps=0.99999)
         assert got.count() == 0
 
     def test_telemetry_and_cap(self, spark, data, index):
@@ -144,15 +139,15 @@ class TestMatch:
         path, _ = index
         probe = df.filter(F.col("vec_id") >= 1000)
         tel = {}
-        semdedup_match_index(
-            spark, path, probe, eps=0.999, telemetry=tel
+        neardup.open(spark, path).match(
+            probe, eps=0.999, telemetry=tel,
         ).count()
         assert tel["n_buckets"] >= 1
         assert tel["max_bucket_witnesses"] >= tel["p50_bucket_witnesses"]
-        capped = semdedup_match_index(
-            spark, path, probe, eps=0.999, max_bucket_size=1
+        capped = neardup.open(spark, path).match(
+            probe, eps=0.999, max_bucket_size=1,
         )
-        full = semdedup_match_index(spark, path, probe, eps=0.999)
+        full = neardup.open(spark, path).match(probe, eps=0.999)
         assert capped.count() <= full.count()
 
 
@@ -164,17 +159,17 @@ class TestAppendRemove:
         batch = df.filter(
             (F.col("vec_id") >= 200) & (F.col("vec_id") < 250)
         )
-        rep = semdedup_append_to_index(spark, path, batch, batch_id=1)
+        rep = neardup.open(spark, path).append(batch, batch_id=1)
         assert rep["appended_rows"] == 50 and not rep["skipped_replay"]
         vecs, cells, _, meta = load_semdedup_index(spark, path)
         assert meta["n_rows"] == 250 and cells.count() == 250
-        rep2 = semdedup_append_to_index(spark, path, batch, batch_id=1)
+        rep2 = neardup.open(spark, path).append(batch, batch_id=1)
         assert rep2["skipped_replay"]
         # appended vectors are now matchable history
         probe = batch.select(
             (F.col("vec_id") + 5000).alias("vec_id"), "embedding"
         )
-        got = semdedup_match_index(spark, path, probe, eps=0.999)
+        got = neardup.open(spark, path).match(probe, eps=0.999)
         assert got.filter(
             F.col("new_id") - 5000 == F.col("hist_id")
         ).count() == 50
@@ -183,14 +178,13 @@ class TestAppendRemove:
                                                 index):
         df, _ = data
         path, _ = index
-        rep = semdedup_remove_from_index(spark, path, [0, 1, 2],
-                                         batch_id=0)
+        rep = neardup.open(spark, path).remove([0, 1, 2], batch_id=0)
         assert rep["removed_rows"] == 3
         vecs, cells, _, meta = load_semdedup_index(spark, path)
         assert meta["n_rows"] == 197
         assert vecs.filter(F.col("vec_id") < 3).count() == 0
         assert cells.filter(F.col("vec_id") < 3).count() == 0
-        rep2 = semdedup_remove_from_index(spark, path, [3], batch_id=0)
+        rep2 = neardup.open(spark, path).remove([3], batch_id=0)
         assert rep2["skipped_replay"]
 
 
@@ -208,10 +202,9 @@ class TestDriftAndRefresh:
         assert meta["train_sim_mean"] > 0.95
         assert meta["train_sim_p95"] >= meta["train_sim_mean"]
         # an in-distribution batch reports ~baseline similarity
-        rep = semdedup_append_to_index(
-            spark, path, df.filter(
-                (F.col("vec_id") >= 200) & (F.col("vec_id") < 250)
-            ), batch_id=1,
+        rep = neardup.open(spark, path).append(
+            df.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 250)),
+            batch_id=1,
         )
         assert rep["train_sim_mean"] == pytest.approx(
             meta["train_sim_mean"])
@@ -224,10 +217,10 @@ class TestDriftAndRefresh:
             [(5000 + i, [float(x) for x in far[i]]) for i in range(40)],
             "vec_id long, embedding array<double>",
         )
-        rep2 = semdedup_append_to_index(spark, path, drifted, batch_id=2)
+        rep2 = neardup.open(spark, path).append(drifted, batch_id=2)
         assert rep2["batch_sim_mean"] < rep2["train_sim_mean"] - 0.2
         # replay-skipped batches never recompute stats
-        rep3 = semdedup_append_to_index(spark, path, drifted, batch_id=2)
+        rep3 = neardup.open(spark, path).append(drifted, batch_id=2)
         assert rep3["skipped_replay"] and "batch_sim_mean" not in rep3
 
     def test_legacy_index_reports_none_baseline(self, spark, data,
@@ -248,8 +241,7 @@ class TestDriftAndRefresh:
             "k int, metric string, id_col string, vec_col string, "
             "dim int, n_rows long",
         ).coalesce(1).write.mode("overwrite").parquet(mp)
-        rep = semdedup_append_to_index(
-            spark, path,
+        rep = neardup.open(spark, path).append(
             df.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 120)),
             batch_id=1,
         )
@@ -290,10 +282,12 @@ class TestDriftAndRefresh:
             == {tuple(r) for r in
                 want[1].select("vec_id", "cell_id").collect()}
         )
-        g_ref = {r["vec_id"] for r in semdedup_index_groups(
-            spark, p_ref, eps=0.95).collect()}
-        g_fresh = {r["vec_id"] for r in semdedup_index_groups(
-            spark, p_fresh, eps=0.95).collect()}
+        g_ref = {r["vec_id"] for r in neardup.open(spark, p_ref).groups(
+            eps=0.95,
+        ).collect()}
+        g_fresh = {r["vec_id"] for r in neardup.open(spark, p_fresh).groups(
+            eps=0.95,
+        ).collect()}
         assert g_ref == g_fresh
         # replay log preserved through the refresh: vectors untouched
         assert got[0].count() == 200
@@ -310,16 +304,15 @@ class TestDriftAndRefresh:
         path = str(tmp_path / "sd_log")
         save_semdedup_index(df.filter(F.col("vec_id") < 100), path,
                             centroids=cents)
-        semdedup_append_to_index(
-            spark, path,
+        neardup.open(spark, path).append(
             df.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 150)),
             batch_id=7,
         )
         semdedup_refresh_index(spark, path, k_cells=K, seed=5)
         assert _batch_already_committed(spark, path, 7,
                                         op="semdedup_append")
-        rep = semdedup_append_to_index(
-            spark, path, df.filter(F.col("vec_id") < 150), batch_id=7
+        rep = neardup.open(spark, path).append(
+            df.filter(F.col("vec_id") < 150), batch_id=7,
         )
         assert rep["skipped_replay"]
         _, _, _, meta = load_semdedup_index(spark, path)
@@ -332,8 +325,7 @@ class TestGroupsAndSweep:
         df, cents = data
         path = str(tmp_path / "sd_grp")
         save_semdedup_index(df, path, centroids=cents)  # incl. planted
-        keep = semdedup_index_groups(spark, path, eps=0.999,
-                                     keep="min_id")
+        keep = neardup.open(spark, path).groups(eps=0.999, keep="min_id")
         kept = {r["vec_id"] for r in keep.collect()}
         for i in range(10):
             assert i in kept and (1000 + i) not in kept
@@ -345,8 +337,7 @@ class TestGroupsAndSweep:
         df, cents = data
         path = str(tmp_path / "sd_far")
         save_semdedup_index(df, path, centroids=cents)
-        keep = semdedup_index_groups(spark, path, eps=0.999,
-                                     keep="farthest")
+        keep = neardup.open(spark, path).groups(eps=0.999, keep="farthest")
         kept = {r["vec_id"] for r in keep.collect()}
         # exact duplicates tie on centroid sim -> min id wins the tie,
         # so each planted pair keeps exactly one member
@@ -359,17 +350,17 @@ class TestGroupsAndSweep:
         df, cents = data
         path = str(tmp_path / "sd_sweep")
         save_semdedup_index(df, path, centroids=cents)
-        rep = semdedup_apply_groups(spark, path, eps=0.999, batch_id=0)
+        rep = neardup.open(spark, path).apply_sweep(eps=0.999, batch_id=0)
         assert rep["removed_rows"] == 10 and rep["kept"] == N
         # fixpoint: a second sweep removes nothing
-        rep2 = semdedup_apply_groups(spark, path, eps=0.999, batch_id=1)
+        rep2 = neardup.open(spark, path).apply_sweep(eps=0.999, batch_id=1)
         assert rep2["removed_rows"] == 0
         # replayed sweep is a no-op
-        rep3 = semdedup_apply_groups(spark, path, eps=0.999, batch_id=0)
+        rep3 = neardup.open(spark, path).apply_sweep(eps=0.999, batch_id=0)
         assert rep3["skipped_replay"]
         # post-sweep: a planted copy's original still serves matches
         probe = df.filter(F.col("vec_id") >= 1000)
-        got = semdedup_match_index(spark, path, probe, eps=0.999)
+        got = neardup.open(spark, path).match(probe, eps=0.999)
         assert got.filter(F.col("new_id") == 1000).count() == 1
 
 
@@ -378,12 +369,11 @@ class TestCompact:
         df, _ = data
         path, _ = index
         for b in range(6):
-            semdedup_append_to_index(
-                spark, path,
+            neardup.open(spark, path).append(
                 df.filter(F.col("vec_id") == 200 + b), batch_id=b,
             )
-        rep = semdedup_compact_index(
-            spark, path, target_rows_per_file=10_000, min_file_ratio=1.0
+        rep = neardup.open(spark, path).compact(
+            target_rows_per_file=10_000, min_file_ratio=1.0,
         )
         assert rep["compacted"] is True
         vecs, cells, _, meta = load_semdedup_index(spark, path)
@@ -391,9 +381,7 @@ class TestCompact:
         assert meta["n_rows"] == 206
         # still serves after the staged swaps
         probe = df.filter(F.col("vec_id") >= 1000)
-        assert semdedup_match_index(
-            spark, path, probe, eps=0.999
-        ).count() >= 10
+        assert neardup.open(spark, path).match(probe, eps=0.999).count() >= 10
 
 
 class TestStreaming:
@@ -401,8 +389,6 @@ class TestStreaming:
                                              tmp_path, parquet_stream):
         """Streaming ingest: intra-batch + vs-history semantic dedup,
         replay-logged appends, gc_every bounding the log."""
-        from astro_vectordb_spark import neardup
-
         df, cents = data
         path = str(tmp_path / "sd_stream")
         save_semdedup_index(
@@ -462,19 +448,19 @@ class TestStoredBoundaryProbes:
         base_path = str(tmp_path / "sd_nb")
         save_semdedup_index(hist, base_path, centroids=cents, dim=DIM)
         kept = {int(r[0]) for r in
-                semdedup_index_groups(spark, base_path, eps=0.99).collect()}
+                neardup.open(spark, base_path).groups(eps=0.99).collect()}
         assert kept == {0, 1, 2}  # boundary pair missed by design
         probed_path = str(tmp_path / "sd_pb")
         save_semdedup_index(hist, probed_path, centroids=cents, dim=DIM,
                             store_probe_margin=0.1)
         kept2 = {int(r[0]) for r in
-                 semdedup_index_groups(spark, probed_path,
-                                       eps=0.99).collect()}
+                 neardup.open(spark, probed_path).groups(eps=0.99).collect()}
         assert kept2 == {0, 1}  # pair found, min-id representative
         # opt-out restores the base semantics on the same index
         kept3 = {int(r[0]) for r in
-                 semdedup_index_groups(spark, probed_path, eps=0.99,
-                                       use_stored_probes=False).collect()}
+                 neardup.open(spark, probed_path).groups(
+                     eps=0.99, use_stored_probes=False,
+                 ).collect()}
         assert kept3 == {0, 1, 2}
 
     def test_storage_overhead_bounded_and_cell1_unchanged(
@@ -509,8 +495,8 @@ class TestStoredBoundaryProbes:
             hist.filter(F.col("vec_id") < 2), path, centroids=cents,
             dim=DIM, store_probe_margin=0.1,
         )
-        rep = semdedup_append_to_index(
-            spark, path, hist.filter(F.col("vec_id") == 2), batch_id=1
+        rep = neardup.open(spark, path).append(
+            hist.filter(F.col("vec_id") == 2), batch_id=1,
         )
         assert rep["appended_rows"] == 1
         _, cells, _, _ = load_semdedup_index(spark, path)
@@ -521,11 +507,12 @@ class TestStoredBoundaryProbes:
         assert got[0] == (0, None)       # confident: no second cell
         assert got[1] == (1, 0) and got[2] == (0, 1)
         kept = {int(r[0]) for r in
-                semdedup_index_groups(spark, path, eps=0.99).collect()}
+                neardup.open(spark, path).groups(eps=0.99).collect()}
         assert kept == {0, 1}
         # compact re-derives the probe cells from the stored vectors
-        semdedup_compact_index(spark, path, target_rows_per_file=1,
-                               min_file_ratio=0.0)
+        neardup.open(spark, path).compact(
+            target_rows_per_file=1, min_file_ratio=0.0,
+        )
         _, cells2, _, _ = load_semdedup_index(spark, path)
         got2 = {int(r.vec_id): (int(r.cell_id),
                                 None if r.cell_id_2 is None
@@ -538,7 +525,7 @@ class TestStoredBoundaryProbes:
         path = str(tmp_path / "sd_sw")
         save_semdedup_index(hist, path, centroids=cents, dim=DIM,
                             store_probe_margin=0.1)
-        rep = semdedup_apply_groups(spark, path, eps=0.99, batch_id=9)
+        rep = neardup.open(spark, path).apply_sweep(eps=0.99, batch_id=9)
         assert rep["removed_rows"] == 1
         vecs, _, _, _ = load_semdedup_index(spark, path)
         assert {int(r.vec_id) for r in vecs.select("vec_id").collect()} \
@@ -561,7 +548,7 @@ class TestStoredBoundaryProbes:
         assert "cell_id_2" in cells.columns
         assert cells.filter(F.col("cell_id_2").isNotNull()).count() == 2
         kept = {int(r[0]) for r in
-                semdedup_index_groups(spark, path, eps=0.99).collect()}
+                neardup.open(spark, path).groups(eps=0.99).collect()}
         assert kept == {0, 1}
         # retune wider; then drop the dial entirely
         semdedup_refresh_index(spark, path, centroids=cents,
@@ -574,7 +561,7 @@ class TestStoredBoundaryProbes:
         assert meta3["probe_margin"] is None
         assert "cell_id_2" not in cells3.columns
         kept3 = {int(r[0]) for r in
-                 semdedup_index_groups(spark, path, eps=0.99).collect()}
+                 neardup.open(spark, path).groups(eps=0.99).collect()}
         assert kept3 == {0, 1, 2}
 
     def test_probed_keep_set_is_subset_of_base(self, spark, data,
@@ -589,9 +576,9 @@ class TestStoredBoundaryProbes:
         save_semdedup_index(hist, p1, centroids=cents,
                             store_probe_margin=0.3)
         k0 = {int(r[0]) for r in
-              semdedup_index_groups(spark, p0, eps=0.95).collect()}
+              neardup.open(spark, p0).groups(eps=0.95).collect()}
         k1 = {int(r[0]) for r in
-              semdedup_index_groups(spark, p1, eps=0.95).collect()}
+              neardup.open(spark, p1).groups(eps=0.95).collect()}
         assert k1 <= k0
 
 
@@ -621,16 +608,18 @@ class TestBoundaryMultiProbe:
             [(100, [0.714, 0.70] + [0.0] * (DIM - 2))],
             "vec_id long, embedding array<double>",
         )
-        base = semdedup_match_index(spark, path, batch, eps=0.9)
+        base = neardup.open(spark, path).match(batch, eps=0.9)
         assert base.count() == 0  # argmax cells differ: missed
-        mp = semdedup_match_index(spark, path, batch, eps=0.9,
-                                  n_probes=2, probe_margin=0.1)
+        mp = neardup.open(spark, path).match(
+            batch, eps=0.9, n_probes=2, probe_margin=0.1,
+        )
         got = mp.collect()
         assert [(r["new_id"], r["hist_id"]) for r in got] == [(100, 1)]
         assert got[0]["score"] > 0.99
         # a margin too thin to reach the runner-up probes nothing extra
-        tight = semdedup_match_index(spark, path, batch, eps=0.9,
-                                     n_probes=2, probe_margin=1e-6)
+        tight = neardup.open(spark, path).match(
+            batch, eps=0.9, n_probes=2, probe_margin=1e-6,
+        )
         assert tight.count() == 0
         del math
 
@@ -641,14 +630,12 @@ class TestBoundaryMultiProbe:
         batch = df.filter(F.col("vec_id") >= 200)
         base = {
             (r["new_id"], r["hist_id"])
-            for r in semdedup_match_index(spark, path, batch,
-                                          eps=0.9).collect()
+            for r in neardup.open(spark, path).match(batch, eps=0.9).collect()
         }
         mp = {
             (r["new_id"], r["hist_id"])
-            for r in semdedup_match_index(
-                spark, path, batch, eps=0.9, n_probes=2,
-                probe_margin=0.2,
+            for r in neardup.open(spark, path).match(
+                batch, eps=0.9, n_probes=2, probe_margin=0.2,
             ).collect()
         }
         assert mp >= base

@@ -15,15 +15,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from astro_vectordb_spark.operators.dedup import simhash_pairs_sql_safe
+from astro_vectordb_spark import neardup
 from astro_vectordb_spark.sources.vault import (
     load_simhash_index,
     save_simhash_index,
-    simhash_append_to_index,
-    simhash_apply_groups,
-    simhash_compact_index,
-    simhash_index_groups,
-    simhash_match_index,
-    simhash_remove_from_index,
 )
 
 
@@ -77,7 +72,7 @@ class TestSaveLoadMatch:
         batch = data.filter(F.col("doc_id") >= 1000)
         got = {
             (r["new_id"], r["hist_id"], r["hamming"])
-            for r in simhash_match_index(spark, path, batch).collect()
+            for r in neardup.open(spark, path).match(batch).collect()
         }
         combined = simhash_pairs_sql_safe(
             hist.unionByName(batch), max_hamming=3
@@ -98,9 +93,9 @@ class TestSaveLoadMatch:
         probe = spark.createDataFrame([(5, "x y z")],
                                       "doc_id long, text string")
         with pytest.raises(ValueError, match="pigeonhole"):
-            simhash_match_index(spark, path, probe, max_hamming=5)
+            neardup.open(spark, path).match(probe, max_hamming=5)
         # tighter query distance is fine (subset of build guarantee)
-        simhash_match_index(spark, path, probe, max_hamming=1).count()
+        neardup.open(spark, path).match(probe, max_hamming=1).count()
 
     def test_sql_safe31_build_distance_capped(self, spark, data, tmp_path):
         """The SQL-safe family's chunk layout is FIXED at 4 chunks, so
@@ -123,17 +118,17 @@ class TestLifecycle:
         batch = data.filter(
             (F.col("doc_id") >= 100) & (F.col("doc_id") < 110)
         )
-        rep = simhash_append_to_index(spark, path, batch, batch_id=1)
+        rep = neardup.open(spark, path).append(batch, batch_id=1)
         assert rep["appended_rows"] == 10 and not rep["skipped_replay"]
-        assert simhash_append_to_index(
-            spark, path, batch, batch_id=1
+        assert neardup.open(spark, path).append(
+            batch, batch_id=1,
         )["skipped_replay"]
         sigs, chunks, meta = load_simhash_index(spark, path)
         assert meta["n_rows"] == 110 and chunks.count() == 440
-        rep = simhash_remove_from_index(spark, path, [0, 1], batch_id=0)
+        rep = neardup.open(spark, path).remove([0, 1], batch_id=0)
         assert rep["removed_docs"] == 2
-        assert simhash_remove_from_index(
-            spark, path, [2], batch_id=0
+        assert neardup.open(spark, path).remove(
+            [2], batch_id=0,
         )["skipped_replay"]
         sigs, chunks, meta = load_simhash_index(spark, path)
         assert meta["n_rows"] == 108
@@ -143,8 +138,8 @@ class TestLifecycle:
     def test_groups_and_sweep_fixpoint(self, spark, data, tmp_path):
         path = str(tmp_path / "sh_grp")
         save_simhash_index(data, path, max_hamming=3)  # incl. planted
-        keep = {r["doc_id"] for r in simhash_index_groups(
-            spark, path, max_hamming=0
+        keep = {r["doc_id"] for r in neardup.open(spark, path).groups(
+            max_hamming=0,
         ).collect()}
         # every planted exact copy has an identical-signature partner
         # with a smaller id -> it can never survive.  (The original i
@@ -154,31 +149,29 @@ class TestLifecycle:
         # copy-side assertion is sound.)
         for i in range(10):
             assert (2000 + i) not in keep
-        rep = simhash_apply_groups(spark, path, max_hamming=0, batch_id=0)
+        rep = neardup.open(spark, path).apply_sweep(max_hamming=0, batch_id=0)
         assert rep["removed_docs"] >= 10
-        rep2 = simhash_apply_groups(spark, path, max_hamming=0,
-                                    batch_id=1)
+        rep2 = neardup.open(spark, path).apply_sweep(max_hamming=0, batch_id=1)
         assert rep2["removed_docs"] == 0  # fixpoint
-        assert simhash_apply_groups(
-            spark, path, max_hamming=0, batch_id=0
+        assert neardup.open(spark, path).apply_sweep(
+            max_hamming=0, batch_id=0,
         )["skipped_replay"]
 
     def test_compact_after_churn(self, spark, data, index):
         path, _ = index
         for b in range(5):
-            simhash_append_to_index(
-                spark, path,
+            neardup.open(spark, path).append(
                 data.filter(F.col("doc_id") == 100 + b), batch_id=b,
             )
-        rep = simhash_compact_index(
-            spark, path, target_rows_per_file=10_000, min_file_ratio=1.0
+        rep = neardup.open(spark, path).compact(
+            target_rows_per_file=10_000, min_file_ratio=1.0,
         )
         assert rep["compacted"] is True
         sigs, chunks, meta = load_simhash_index(spark, path)
         assert sigs.count() == 105 and meta["n_rows"] == 105
         # still serves
         probe = data.filter(F.col("doc_id") >= 2000)
-        assert simhash_match_index(spark, path, probe).filter(
+        assert neardup.open(spark, path).match(probe).filter(
             F.col("hamming") == 0
         ).count() >= 10
 
@@ -193,15 +186,14 @@ class TestNativeFamily:
         assert meta["bits"] == 64 and meta["hash_family"] == "native64"
         assert chunks.count() == 400
         probe = data.filter(F.col("doc_id") >= 2000)  # exact copies
-        got = simhash_match_index(spark, path, probe)
+        got = neardup.open(spark, path).match(probe)
         zeros = {
             (r["new_id"], r["hist_id"])
             for r in got.filter(F.col("hamming") == 0).collect()
         }
         for i in range(10):
             assert (2000 + i, i) in zeros
-        rep = simhash_append_to_index(
-            spark, path,
+        rep = neardup.open(spark, path).append(
             data.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 105)),
             batch_id=7,
         )
@@ -211,8 +203,6 @@ class TestNativeFamily:
 class TestStreaming:
     def test_stream_ingest_dedups_and_serves(self, spark, data,
                                              tmp_path, parquet_stream):
-        from astro_vectordb_spark import neardup
-
         path = str(tmp_path / "sh_stream")
         save_simhash_index(
             data.filter(F.col("doc_id") < 100), path, max_hamming=3

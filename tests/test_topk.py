@@ -114,12 +114,21 @@ def test_similarity_join_self_pairs(spark, embeddings):
         assert abs(p["score"] - s) < 1e-6
 
 
-def test_query_literal_bit_exact_with_per_element_form(spark):
-    """``score_against`` builds the query vector as one float64 array
-    literal; values and scores are bit-identical to the per-element
-    ``array(lit(...))`` form on ±0, subnormals and large magnitudes."""
+def test_query_literal_bit_exact_with_per_element_form(spark, monkeypatch):
+    """Every query-vector site builds the vector as one float64 array
+    literal (``vector.vector_literal``); values and scores are
+    bit-identical to the per-element ``array(lit(...))`` form on ±0,
+    subnormals and large magnitudes, and so are the IVF probe cells,
+    the PQ/ADC, IVF-PQ, quantized and multivector MaxSim results."""
     import struct
 
+    from astro_vectordb_spark.functions.vector import vector_literal
+    from astro_vectordb_spark.operators import (
+        ann,
+        multivector,
+        pq,
+        quantize,
+    )
     from astro_vectordb_spark.operators.topk import score_against
 
     q = [0.0, -0.0, 5e-324, -2.2250738585072014e-308, 1e-310,
@@ -145,3 +154,56 @@ def test_query_literal_bit_exact_with_per_element_form(spark):
         assert [bits([r.score]) for r in new.orderBy("vec_id").collect()] == [
             bits([r.score]) for r in old.orderBy("vec_id").collect()
         ], metric
+    # the one literal's elements read nullable; the per-element form's
+    # do not — values and downstream result schemas are unaffected
+    assert spark.range(1).select(vector_literal(q).alias("q")).schema[
+        "q"].dataType.containsNull
+    assert not spark.range(1).select(old_qv.alias("q")).schema[
+        "q"].dataType.containsNull
+
+    # the other sites: each result with the per-element form patched
+    # into its module equals the one-literal result bit for bit
+    rng = np.random.RandomState(11)
+    X = rng.randn(64, 8)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(64)],
+        "vec_id long, embedding array<float>",
+    ).cache()
+    qv = [float(x) for x in X[3] + 0.01]
+    _, cents = ann.ivf_build_sampled(vecs, k_cells=4, seed=3)
+    model = pq.pq_train(vecs, m=4, ks=8, max_rows=64, seed=3)
+    codes = pq.pq_encode(vecs, model)
+    enc, ivf_cents, ivf_model = pq.ivf_pq_build(
+        vecs, k_cells=4, m=4, ks=8, max_rows=64, seed=3
+    )
+    quant = quantize.quantize_embeddings(vecs)
+    chunks = vecs.select((F.col("vec_id") % 8).alias("doc_id"), "embedding")
+    cases = [
+        (ann, lambda: ann.choose_probe_cells(cents, qv, 2)),
+        (ann, lambda: ann.choose_probe_cells_adaptive(cents, qv)),
+        (pq, lambda: pq.pq_topk(codes, vecs, qv, 5, model)),
+        (pq, lambda: pq.ivf_pq_topk(enc, ivf_cents, vecs, qv, 5, ivf_model,
+                                    nprobe=2)),
+        (quantize, lambda: quantize.topk_search_quantized(quant, vecs, qv, 5)),
+        (multivector, lambda: multivector.maxsim_score_all(
+            chunks, [qv, [float(x) for x in X[5]]])),
+    ]
+
+    def run(fn):
+        out = fn()
+        if isinstance(out, list):  # IVF probe cells
+            return out, None
+        rows = out.orderBy(*out.columns).collect()
+        return [[bits([v])[0] if isinstance(v, float) else v for v in r]
+                for r in rows], out.schema
+
+    def per_element(values):
+        return F.array(*[F.lit(float(x)) for x in values])
+
+    for mod, fn in cases:
+        new = run(fn)
+        with monkeypatch.context() as mp:
+            mp.setattr(mod, "vector_literal", per_element)
+            old = run(fn)
+        assert new[0] and new == old, mod.__name__
+    vecs.unpersist()
