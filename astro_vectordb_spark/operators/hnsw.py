@@ -573,7 +573,7 @@ def hnsw_build_shards(
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # partitionId is the id within the STAGE: when several build
-        # plans execute as one unioned stage (hnsw_rebalance splitting
+        # plans execute as one unioned stage (a rebalance splitting
         # multiple shards), each branch's ids are offset by the
         # preceding branches' partition counts.  The branch owns
         # exactly num_shards CONSECUTIVE stage partitions (repartition
@@ -650,7 +650,7 @@ def hnsw_insert_shards(
     the normal wiring/shrink/entry-promotion path, and the shard's rows
     are re-emitted.  Returns updated graph rows for ONLY the touched
     shards — write them back with a dynamic partition overwrite
-    (``sources.vault.hnsw_append_to_index``) so untouched shards keep
+    (``index.open(...).append``) so untouched shards keep
     their files.  Cost: O(batch x log shard_rows) insert work plus a
     rewrite of touched shards, vs the reference's full-snapshot rewrite
     per mutation (driver/driver.ts:147).
@@ -869,15 +869,15 @@ def hnsw_remove_shards(
     updated rows for ONLY the touched shards — write back with a
     dynamic partition overwrite.  A shard holding none of the ids
     emits nothing, but it is still scanned and grouped: pass only the
-    shards known to hold ids (``vault.hnsw_remove_from_index`` filters
+    shards known to hold ids (``index.open(...).remove`` filters
     ``graph`` to them, which prunes the scan at the file listing).
 
     Cost: a scan + sweep of touched shards instead of a full graph
     rebuild — the right tool for SMALL removals.  Repeated sweeps
     erode wiring quality the same way ``on_conflict='update'`` batches
     do (pruned incoming edges are never re-wired); pair with
-    ``hnsw_rebalance(min_degree_frac=...)`` for periodic repair, or
-    use the rebuild mode of ``vault.hnsw_remove_from_index`` when a
+    ``index.open(...).rebalance(min_degree_frac=...)`` for periodic
+    repair, or use the rebuild mode of ``index.open(...).remove`` when a
     shard loses a large fraction of its rows.
 
     ``remove_ids``: iterable of longs (bounded — it ships to workers
@@ -942,7 +942,7 @@ def hnsw_shard_health(
     - ``frac_below``: fraction of nodes whose level-0 out-degree is
       under ``min_degree_frac * m`` — the per-node view that catches a
       degraded REGION of an otherwise-healthy shard.
-    - ``needs_repair``: the SAME verdict rule ``hnsw_rebalance(
+    - ``needs_repair``: the SAME verdict rule ``rebalance(
       min_degree_frac=...)`` uses to pick shards to rebuild (mean
       degree below the floor; shards with ``n_rows <= m`` exempt —
       their degree is bounded by n-1, not m), so the metric and the

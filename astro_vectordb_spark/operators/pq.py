@@ -979,7 +979,7 @@ def ivf_pq_residual_frame(
 ) -> DataFrame:
     """(id, residual) = prep(v) - centroid[cell] for every assigned
     row — the residual training corpus shared by :func:`ivf_pq_build`
-    and the vault's ``ivf_pq_refresh_index`` refit.  A bounded
+    and the IVF-PQ ``index.open(...).refresh`` refit.  A bounded
     mapInPandas over the assigned rows (the k_cells centroid matrix
     broadcasts); trained with identity prep downstream — residuals
     must NOT be re-normalized (prep applies to the VECTOR, the

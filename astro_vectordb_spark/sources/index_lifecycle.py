@@ -331,7 +331,7 @@ def append_to_index(
     post-dedup batch; its dict merges into the report.  The hook is
     how a family surfaces append-time telemetry — SemDeDup reports
     per-batch assignment-similarity drift vs the train-time baseline
-    (the ``pq_append_to_index`` batch-MSE pattern) — without the core
+    (the PQ appends' batch-MSE pattern) — without the core
     knowing the family's statistics.  A replay-skipped batch never
     calls it."""
     v = _v()

@@ -176,7 +176,7 @@ def save_semdedup_index(
     # centroid over the stored corpus — ONE join of the two compact
     # stored tables (n x 1), not a second n x k assignment pass.  The
     # append reports each batch against this yardstick (the
-    # pq_append_to_index batch-MSE pattern for the semantic family).
+    # PQ appends' batch-MSE pattern for the semantic family).
     from astro_vectordb_spark.sources.vault import _read_meta
 
     m, p, _ = _stored_assignment_stats(spark, path)

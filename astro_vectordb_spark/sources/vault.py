@@ -194,73 +194,6 @@ def load_ivf_index(
     return assigned, centroids, cell_stats, _read_meta(spark, path)
 
 
-def ivf_append_to_index(
-    spark: SparkSession, path: str, new_rows: DataFrame, spill: int = 1
-) -> None:
-    """Incremental insert into a PERSISTED IVF index: assign new rows
-    under the existing centroids (``ann.ivf_append`` semantics at
-    storage level), APPEND their files into the cell-partitioned
-    vectors table (touched cells gain files; nothing rewrites), and
-    refresh the cell radius stats so ``ivf_search_exact`` stays exact
-    (the stale-stats pruning hazard).  Centroids are untouched —
-    rebuild via ``rebuild_index`` when drift warrants."""
-    import numpy as np
-
-    from astro_vectordb_spark.operators.ann import (
-        ivf_cell_stats,
-        make_cell_assigner,
-    )
-
-    assigned_path = os.path.join(path, "vectors")
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    meta = _read_meta(spark, path)
-    metric = meta["metric"]
-
-    cents = centroids.orderBy("cell_id").collect()
-    C = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    cell_ids = np.array([r["cell_id"] for r in cents])
-    assign = make_cell_assigner(C, metric=metric, spill=spill, cell_ids=cell_ids)
-
-    appended = new_rows.withColumn("cell_id", F.explode(assign(F.col("embedding"))))
-    existing_cols = spark.read.parquet(assigned_path).columns
-    missing = set(existing_cols) - set(appended.columns)
-    if missing:
-        raise ValueError(
-            f"new_rows lacks columns {sorted(missing)} of the persisted "
-            "vector table — align schemas before appending"
-        )
-    appended = appended.select(*existing_cols)
-    (
-        appended.repartition("cell_id")
-        .write.mode("append")
-        .partitionBy("cell_id")
-        .parquet(assigned_path)
-    )
-    stats_path = os.path.join(path, "cell_stats")
-    _recover_swap(spark, stats_path)
-    if _fs_exists(spark, stats_path):
-        old_stats = spark.read.parquet(stats_path)
-        new_stats = ivf_cell_stats(appended, centroids, metric=metric)
-        merge = (
-            F.min("min_sim").alias("min_sim")
-            if metric == "cosine"
-            else F.max("max_dist").alias("max_dist")
-        )
-        merged = old_stats.unionByName(new_stats).groupBy("cell_id").agg(merge)
-        # crash-safe swap: the merge reads the live stats files while
-        # writing a staging sibling (see _replace_dir)
-        _replace_dir(
-            spark,
-            lambda staging: merged.write.mode("overwrite").parquet(staging),
-            stats_path,
-        )
-    # corpus counter for the filtered faces (insert-new-only contract:
-    # distinct new ids == ids added; see _update_meta_n_rows)
-    _update_meta_n_rows(
-        spark, path, delta=new_rows.select("vec_id").distinct().count()
-    )
-
-
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` via the Hadoop FileSystem API —
     resolves the scheme (``file://``, ``hdfs://``, ``s3a://``, ...)
@@ -644,145 +577,6 @@ def _commit_graph_shards(
     return updated, _seed_graph_schema(spark, graph_path, schema)
 
 
-def hnsw_append_to_index(
-    spark: SparkSession,
-    path: str,
-    new_rows: DataFrame,
-    seed: int = 42,
-    on_conflict: str = "skip",
-) -> list[int]:
-    """Incremental insert into a PERSISTED sharded HNSW index — the
-    reference's live ``addPoint`` (hnsw.ts:82-173) at storage level:
-    only the shard partitions that received new vectors are rewritten
-    (dynamic partition overwrite); every other shard keeps its files.
-    ``on_conflict="update"`` makes an arriving id that already exists
-    replace its vector in place (the reference's id-stable
-    ``updatePoint``, hnsw.ts:497-517, without a rebuild); see
-    ``hnsw_insert_shards`` for the full conflict contract.
-    Returns the touched shard ids."""
-    from astro_vectordb_spark.operators.hnsw import hnsw_insert_shards
-
-    graph, meta, before = _load_hnsw(spark, path)
-    graph_path = os.path.join(path, "graph")
-    updated = hnsw_insert_shards(
-        graph, new_rows, m=meta["m"], metric=meta["metric"], seed=seed,
-        on_conflict=on_conflict, shard_ids=meta["shard_ids"],
-    )
-    _, after = _commit_graph_shards(spark, graph_path, graph.schema, updated)
-    # the dynamic overwrite gives every partition it writes new part
-    # files (per-write UUID names) and leaves the others' files alone,
-    # so the touched shards are those holding files the old listing lacks
-    old = {f[0] for f in before[1]}
-    return _graph_file_stats(
-        f for f in (after[1] if after else ()) if f[0] not in old
-    )[0]
-
-
-def hnsw_rebalance(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_shard: int = 250_000,
-    skew_threshold: float = 2.0,
-    seed: int = 42,
-    min_degree_frac: float | None = None,
-) -> dict[int, list[int]]:
-    """Split oversized HNSW shards — the maintenance op for
-    append-heavy growth (``hnsw_append_to_index`` routes by hash, so
-    shards grow uniformly, but the shard COUNT fixed at build time
-    eventually makes every shard oversized).
-
-    A shard exceeding ``skew_threshold * target_rows_per_shard`` is
-    split into ceil(n/target) new shards (its rows re-sharded, each
-    split's graph rebuilt from vectors); one split keeps the old shard
-    id so the dynamic partition overwrite replaces the old files, the
-    rest get fresh ids.  Shards within budget keep their files
-    untouched.  Returns {old_shard_id: [split shard ids]} (empty =
-    nothing to do; a compacted-in-place shard maps to [itself]).
-    Single-writer maintenance op, like compaction.
-
-    ``min_degree_frac`` additionally rebuilds DEGRADED shards in
-    place: ``on_conflict='update'`` batches erode a graph over time
-    (an update is remove + re-add; the removed node's pruned incoming
-    edges are never re-wired, so surviving nodes lose links batch
-    after batch and recall decays).  A shard whose mean level-0
-    out-degree falls below ``min_degree_frac * m`` is rebuilt from its
-    vectors at full construction quality — same rows, same shard id,
-    fresh wiring.  The degree statistic comes from the same one-pass
-    aggregation as the row counts (no extra job); shards with
-    ``n <= m`` rows are exempt (their degree is bounded by n-1, not
-    m).  The reference never implemented its graph-cleaning TODO
-    (README.md:78-81); this is that maintenance op, per shard and
-    incremental."""
-    from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
-
-    graph, meta, _ = _load_hnsw(spark, path)
-    stats = {
-        r["shard_id"]: (r["n"], r["deg"])
-        for r in graph.groupBy("shard_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(F.size(F.element_at("neighbors", 1))).alias("deg"),
-        ).collect()
-    }
-    counts = {s: n for s, (n, _) in stats.items()}
-    limit = skew_threshold * target_rows_per_shard
-    oversized = {s: n for s, n in counts.items() if n > limit}
-    degraded = set()
-    if min_degree_frac is not None:
-        floor_deg = float(min_degree_frac) * meta["m"]
-        degraded = {
-            s
-            for s, (n, deg) in stats.items()
-            if s not in oversized and n > meta["m"] and deg < floor_deg
-        }
-    if not oversized and not degraded:
-        return {}
-    next_id = max(counts) + 1
-    result: dict[int, list[int]] = {}
-    updated_parts = []
-    quantized = "qvec" in graph.columns
-    for sid in sorted(set(oversized) | degraded):
-        n = counts[sid]
-        parts = -(-n // target_rows_per_shard) if sid in oversized else 1
-        if quantized:
-            # dequantize for the rebuild; re-quantizing on emit is
-            # bit-stable (max|code| = 127 by construction recovers the
-            # exact original scale), so codes survive the round trip
-            rows = graph.filter(F.col("shard_id") == sid).select(
-                "vec_id",
-                F.transform(
-                    F.col("qvec"),
-                    lambda q: (q.cast("double") * F.col("qscale")).cast("float"),
-                ).alias("embedding"),
-            )
-        else:
-            rows = graph.filter(F.col("shard_id") == sid).select(
-                "vec_id", "embedding"
-            )
-        split = hnsw_build_shards(
-            rows, num_shards=parts, m=meta["m"], metric=meta["metric"],
-            seed=seed + sid, quantize=quantized,
-        )
-        # remap split ids: 0 keeps the old shard id (overwrites its
-        # partition), the rest get fresh ids
-        new_ids = [sid] + [next_id + i for i in range(parts - 1)]
-        next_id += parts - 1
-        mapping = F.array(*[F.lit(int(x)) for x in new_ids])
-        split = split.withColumn(
-            "shard_id",
-            F.element_at(mapping, F.col("shard_id") + 1).cast("int"),
-        )
-        updated_parts.append(split)
-        result[sid] = new_ids
-    updated = updated_parts[0]
-    for p in updated_parts[1:]:
-        updated = updated.unionByName(p)
-    # splits created NEW shard partitions; the next load lists them
-    _commit_graph_shards(
-        spark, os.path.join(path, "graph"), graph.schema, updated
-    )
-    return result
-
-
 def save_bucketed(
     df: DataFrame,
     table: str,
@@ -832,56 +626,6 @@ def rebuild_index(
     assigned, centroids = ivf_build(live_rows, k_cells=k_cells, metric=metric, **kwargs)
     stats = ivf_cell_stats(assigned, centroids, metric=metric)
     return assigned, centroids, stats
-
-
-def hnsw_index_stats(spark: SparkSession, path: str) -> dict:
-    """Operational health report for a persisted HNSW index — the
-    numbers an operator needs to decide WHEN to run
-    ``hnsw_rebalance`` (oversized shards, degraded wiring) without
-    reading any code: per-shard row counts, mean level-0 out-degree
-    (erodes under ``on_conflict='update'`` churn; compare against m),
-    max level, plus the metadata the serve path keys on (metric, m,
-    quantized storage, clustered_safe, on-disk bytes).
-
-    Cost: the index load (one Hadoop LIST; memoized schema and
-    `_meta`), and ONE Spark aggregation over the graph (|shards|
-    result rows — bounded control plane).
-    The reference's astrovault has no introspection surface at all;
-    this is the rebuildGraphNodes-era TODO (README.md:78-81) made
-    observable."""
-    graph, meta, listing = _load_hnsw(spark, path)
-    total_bytes = _graph_file_stats(listing[1])[4]
-    per_shard = {
-        int(r["shard_id"]): {
-            "rows": int(r["n"]),
-            "mean_degree_l0": round(float(r["deg"]), 2),
-            "max_level": int(r["max_lvl"]),
-        }
-        for r in graph.groupBy("shard_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(F.size(F.element_at("neighbors", 1))).alias("deg"),
-            F.max("level").alias("max_lvl"),
-        ).collect()
-    }
-    rows_per_shard = [s["rows"] for s in per_shard.values()]
-    return {
-        "path": path,
-        "m": meta["m"],
-        "metric": meta["metric"],
-        "quantized": "qvec" in graph.columns,
-        "clustered_safe": meta["clustered_safe"],
-        "num_shards": len(per_shard),
-        "total_rows": sum(rows_per_shard),
-        "max_shard_rows": max(rows_per_shard, default=0),
-        "min_shard_rows": min(rows_per_shard, default=0),
-        "graph_file_bytes": total_bytes,
-        "mean_degree_l0": round(
-            sum(s["mean_degree_l0"] * s["rows"] for s in per_shard.values())
-            / max(sum(rows_per_shard), 1),
-            2,
-        ),
-        "shards": per_shard,
-    }
 
 
 def save_pq_index(
@@ -964,16 +708,27 @@ def load_pq_index(spark: SparkSession, path: str):
     """Load (encoded, model, meta) — the codebooks collect to the
     driver (bounded: m*ks rows) and rebuild the PQModel; the code table
     stays distributed."""
+    encoded = _read_maybe_swapped(spark, os.path.join(path, "codes"))
+    model, meta = _load_pq_model(spark, path)
+    return encoded, model, meta
+
+
+def _load_pq_model(spark: SparkSession, path: str):
+    """(PQModel, meta) of a PQ or IVF-PQ index: the codebook rows
+    (codebooks, OPQ rotation and ``train_mse`` sentinels) collected to
+    the driver, with the metric, dim and residual flag of ``_meta``."""
     from astro_vectordb_spark.operators.pq import PQModel
 
-    encoded = _read_maybe_swapped(spark, os.path.join(path, "codes"))
     cb_rows = [
         (r["subspace"], r["code"], r["centroid"])
         for r in spark.read.parquet(os.path.join(path, "codebooks")).collect()
     ]
     meta = _read_meta(spark, path)
-    model = PQModel.from_rows(cb_rows, metric=meta["metric"], dim=meta["dim"])
-    return encoded, model, meta
+    model = PQModel.from_rows(
+        cb_rows, metric=meta["metric"], dim=meta["dim"],
+        residual=bool(meta.get("residual", False)),
+    )
+    return model, meta
 
 
 def save_ivf_pq_index(
@@ -1004,19 +759,9 @@ def save_ivf_pq_index(
 def load_ivf_pq_index(spark: SparkSession, path: str):
     """Load (encoded, centroids, model, meta); codes stay distributed
     with their cell partitioning intact."""
-    from astro_vectordb_spark.operators.pq import PQModel
-
     encoded = _read_maybe_swapped(spark, os.path.join(path, "codes"))
     centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    cb_rows = [
-        (r["subspace"], r["code"], r["centroid"])
-        for r in spark.read.parquet(os.path.join(path, "codebooks")).collect()
-    ]
-    meta = _read_meta(spark, path)
-    model = PQModel.from_rows(
-        cb_rows, metric=meta["metric"], dim=meta["dim"],
-        residual=bool(meta.get("residual", False)),
-    )
+    model, meta = _load_pq_model(spark, path)
     return encoded, centroids, model, meta
 
 
@@ -1095,7 +840,7 @@ def _batch_already_committed(
     a row with ``horizon = true`` asserts every batch_id <= its
     batch_id for its op namespace is already applied, replacing the
     individually-pruned rows.  Sound because Structured Streaming
-    numbers one query's micro-batches monotonically and the faces
+    numbers one query's micro-batches monotonically and the writers
     apply them in order — an id at-or-below a recorded horizon can
     only be a redelivery of an applied batch (that is also why each
     stream MUST own its op namespace; see the paragraph above)."""
@@ -1138,191 +883,6 @@ def _record_batch(
     ).write.mode("append").parquet(os.path.join(path, "_batches"))
 
 
-def pq_append_to_index(
-    spark: SparkSession,
-    path: str,
-    new_rows: DataFrame,
-    batch_id: int | None = None,
-    dedup_ids: bool = True,
-) -> dict:
-    """Incremental insert into a persisted PQ index: encode the new
-    rows under the EXISTING codebooks and append their files to the
-    codes table — nothing rewrites, same touched-files-only contract
-    as ``ivf_append_to_index``/``hnsw_append_to_index``.
-
-    Returns a drift report: the appended batch's mean squared
-    quantization error vs the corpus baseline (recomputed over the
-    pre-append codes' reconstruction error would need the floats, so
-    the baseline is the batch-independent codebook variance proxy —
-    we report the batch MSE and leave the retrain decision to the
-    caller).  A batch MSE far above previous batches means the new
-    data has drifted off the trained codebooks: searches stay correct
-    (stage 2 re-ranks exactly) but stage-1 ordering degrades — rebuild
-    via ``pq_train`` + ``save_pq_index`` when it matters.
-    """
-    from astro_vectordb_spark.operators.pq import (
-        pq_encode,
-        pq_reconstruction_mse,
-    )
-
-    if _batch_already_committed(spark, path, batch_id, op="pq_append"):
-        return {"appended_rows": 0, "skipped_replay": True}
-    existing, model, meta = load_pq_index(spark, path)
-    if dedup_ids:
-        # insert-new-only contract: an id already in the codes table
-        # is skipped (updates go through rebuild), so an at-least-once
-        # redelivery without a batch_id is still idempotent; intra-batch
-        # duplicate ids collapse too — otherwise the duplicate code rows
-        # land in the table and the physical count inflates the _meta
-        # n_rows counter (defined as DISTINCT vec_ids) with no
-        # reconciliation path.  The pick is DETERMINISTIC (min-struct),
-        # not dropDuplicates' partition-order-arbitrary row
-        new_rows = _dedup_ids_deterministic(new_rows).join(
-            existing.select("vec_id"), on="vec_id", how="left_anti"
-        )
-    # meta delta is DISTINCT ids; with dedup_ids the physical count IS
-    # distinct (one job), without it the distinct is computed explicitly
-    n_appended = (
-        new_rows.count()
-        if dedup_ids
-        else new_rows.select("vec_id").distinct().count()
-    )
-    batch_mse = (
-        pq_reconstruction_mse(new_rows, model) if n_appended else None
-    )
-    if n_appended:
-        pq_encode(new_rows, model).write.mode("append").parquet(
-            os.path.join(path, "codes")
-        )
-        _update_meta_n_rows(spark, path, delta=n_appended)
-    _record_batch(spark, path, batch_id, op="pq_append")
-    return {
-        "appended_rows": n_appended,
-        "batch_mse": batch_mse,
-        "m": meta["m"],
-        "ks": meta["ks"],
-        # report-shape parity with the replay-hit path and the minhash
-        # append family: callers read rep["skipped_replay"] uniformly
-        "skipped_replay": False,
-    }
-
-
-def ivf_pq_append_to_index(
-    spark: SparkSession,
-    path: str,
-    new_rows: DataFrame,
-    batch_id: int | None = None,
-    dedup_ids: bool = True,
-) -> dict:
-    """Incremental insert into a persisted IVF-PQ index: assign new
-    rows under the existing centroids, encode under the existing
-    codebooks, and append files into only the touched cell partitions
-    (dynamic partition append — untouched cells' files are never
-    rewritten)."""
-    import numpy as np
-
-    from astro_vectordb_spark.operators.ann import make_cell_assigner
-    from astro_vectordb_spark.operators.pq import (
-        pq_encode,
-        pq_reconstruction_mse,
-    )
-
-    if _batch_already_committed(spark, path, batch_id, op="ivf_pq_append"):
-        return {"appended_rows": 0, "touched_cells": [], "skipped_replay": True}
-    existing, centroids, model, meta = load_ivf_pq_index(spark, path)
-    if dedup_ids:
-        # anti-join vs the table AND intra-batch id collapse — keeps the
-        # codes table duplicate-free and the _meta distinct-id counter
-        # exact, with a deterministic min-struct pick (see
-        # pq_append_to_index)
-        new_rows = _dedup_ids_deterministic(new_rows).join(
-            existing.select("vec_id"), on="vec_id", how="left_anti"
-        )
-    cents = centroids.orderBy("cell_id").collect()
-    C = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    cell_ids = np.array([r["cell_id"] for r in cents])
-    assign = make_cell_assigner(
-        C, metric=meta["metric"], cell_ids=cell_ids
-    )
-    assigned = new_rows.withColumn(
-        "cell_id", F.explode(assign(F.col("embedding")))
-    )
-    n_appended = (
-        new_rows.count()
-        if dedup_ids
-        else new_rows.select("vec_id").distinct().count()
-    )
-    residual = bool(meta.get("residual", False)) or bool(
-        getattr(model, "residual", False)
-    )
-    # drift report: raw indexes measure raw-space reconstruction MSE;
-    # a residual index's fidelity is relative to each row's assigned
-    # centroid, so its batch MSE is measured in RESIDUAL space (the
-    # same space its persisted train_mse was measured in — pq_train on
-    # the residual frame with identity prep), keeping the two
-    # comparable for the retrain decision ivf_pq_refresh_index answers
-    batch_mse = None
-    if n_appended:
-        if residual:
-            from astro_vectordb_spark.operators.pq import (
-                PQModel,
-                ivf_pq_residual_frame,
-            )
-
-            resid = ivf_pq_residual_frame(
-                assigned, centroids, meta["metric"]
-            )
-            shim = PQModel(
-                model.codebooks, metric="dot", dim=model.dim,
-                rotation=model.rotation,
-            )
-            batch_mse = pq_reconstruction_mse(resid, shim)
-        else:
-            batch_mse = pq_reconstruction_mse(new_rows, model)
-    touched: list = []
-    if n_appended:
-        if residual:
-            from astro_vectordb_spark.operators.pq import (
-                ivf_pq_encode_residual,
-            )
-
-            out = ivf_pq_encode_residual(assigned, model, centroids)
-        else:
-            codes = pq_encode(new_rows, model)
-            out = assigned.select("vec_id", "cell_id").join(codes, on="vec_id")
-        touched = sorted(
-            r["cell_id"] for r in out.select("cell_id").distinct().collect()
-        )
-        out.write.mode("append").partitionBy("cell_id").parquet(
-            os.path.join(path, "codes")
-        )
-        _update_meta_n_rows(spark, path, delta=n_appended)
-    _record_batch(spark, path, batch_id, op="ivf_pq_append")
-    return {
-        "appended_rows": n_appended,
-        "touched_cells": touched,
-        "batch_mse": batch_mse,
-        "skipped_replay": False,
-    }
-
-
-def _dedup_ids_deterministic(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """One row per id, picked DETERMINISTICALLY: min by the struct of
-    the remaining columns.  ``dropDuplicates`` keeps a partition-order-
-    arbitrary row, so a batch carrying one id twice with different
-    embeddings could persist DIFFERENT codes across two replays of the
-    same logical batch — breaking the deterministic-replay contract
-    the append family's replay log is built on."""
-    others = [c for c in df.columns if c != id_col]
-    if not others:
-        return df.distinct()
-    return (
-        df.groupBy(id_col)
-        .agg(F.min(F.struct(*others)).alias("_r"))
-        .select(id_col, *[F.col(f"_r.{c}").alias(c) for c in others])
-    )
-
-
 def _as_ids_df(spark: SparkSession, vec_ids) -> DataFrame:
     """Normalize an id collection (iterable of longs or a DataFrame
     with a vec_id column) into a one-column DataFrame of distinct ids.
@@ -1351,8 +911,9 @@ def _remove_rows_by_file(
     counter in ``_meta`` (spill-redundant IVF assignment makes
     physical rows > ids) and is computed over the touched files only.
 
-    Shared core of the PQ and IVF remove faces — a 100-TB table with
-    1k removed ids rewrites a handful of files, never the table.
+    Shared core of the IVF and PQ-kind removes (``index.open``) — a
+    100-TB table with 1k removed ids rewrites a handful of files, never
+    the table.
     Write-then-delete ordering: a crash between the two leaves
     duplicate survivor rows (never lost rows); the next remove or
     compaction dedups them.
@@ -1404,367 +965,6 @@ def _remove_rows_by_file(
     return n_before - n_after, touched, n_ids_removed
 
 
-def ivf_remove_from_index(
-    spark: SparkSession,
-    path: str,
-    vec_ids,
-    batch_id: int | None = None,
-) -> dict:
-    """Physical delete from a persisted IVF index — the storage-level
-    lifecycle op completing the append face (``ivf_append_to_index``):
-    removed vec_ids leave the cell-partitioned vectors table entirely
-    (touched-files-only rewrite, see ``_remove_rows_by_file``), and
-    the cell radius stats of the touched cells are RECOMPUTED from
-    their survivors so ``ivf_search_exact``'s pruning bound tightens
-    back (a stale post-delete radius is merely conservative — correct
-    but looser — unlike the append direction, where staleness would
-    be a correctness hazard).  Emptied cells lose their stats row.
-    Reference analogue: ``removePoint`` (hnsw.ts:179-226) at storage
-    level."""
-    from astro_vectordb_spark.operators.ann import ivf_cell_stats
-
-    if _batch_already_committed(spark, path, batch_id, op="ivf_remove"):
-        return {"removed_rows": 0, "touched_files": 0,
-                "skipped_replay": True}
-    _recover_swap(spark, os.path.join(path, "cell_stats"))
-    ids = _as_ids_df(spark, vec_ids)
-    vectors_path = os.path.join(path, "vectors")
-    removed, touched, n_ids_removed = _remove_rows_by_file(
-        spark, vectors_path, ids
-    )
-    touched_cells = sorted({
-        int(seg.split("=", 1)[1])
-        for f in touched
-        for seg in f.split("/")
-        if seg.startswith("cell_id=")
-    })
-    stats_path = os.path.join(path, "cell_stats")
-    if touched_cells and _fs_exists(spark, stats_path):
-        centroids = spark.read.parquet(os.path.join(path, "centroids"))
-        meta = _read_meta(spark, path)
-        survivors = spark.read.parquet(vectors_path).filter(
-            F.col("cell_id").isin(touched_cells)
-        )
-        fresh = ivf_cell_stats(survivors, centroids, metric=meta["metric"])
-        old = spark.read.parquet(stats_path)
-        merged = old.filter(
-            ~F.col("cell_id").isin(touched_cells)
-        ).unionByName(fresh)
-        # crash-safe swap, same contract as pq_compact_index: the merge
-        # reads the live stats files while writing a staging sibling
-        _replace_dir(
-            spark,
-            lambda staging: merged.write.mode("overwrite").parquet(staging),
-            stats_path,
-        )
-    if n_ids_removed:
-        _update_meta_n_rows(spark, path, delta=-n_ids_removed)
-    _record_batch(spark, path, batch_id, op="ivf_remove")
-    return {"removed_rows": removed, "touched_files": len(touched),
-            "touched_cells": touched_cells}
-
-
-def hnsw_remove_from_index(
-    spark: SparkSession,
-    path: str,
-    vec_ids,
-    batch_id: int | None = None,
-    seed: int = 42,
-    mode: str = "auto",
-    sweep_max_frac: float = 0.2,
-    max_sweep_ids: int = 100_000,
-    min_degree_frac: float = 0.5,
-    auto_repair: bool = False,
-) -> dict:
-    """Physical delete from a persisted sharded HNSW index — the
-    storage-level face of the reference's ``removeNodeFromGraph``
-    (hnsw.ts:179-226), which the tombstone path (``crud.
-    tombstone_delete`` + ``live()``) deliberately avoids: tombstoned
-    ids still occupy graph wiring and beam budget forever.
-
-    Two per-shard strategies, chosen by removal fraction:
-
-    - **sweep** (``operators.hnsw.hnsw_remove_shards``): load the
-      shard adjacency, tombstone-unlink the ids, re-emit survivors —
-      a scan + O(rows x M) edge sweep, the cheap path for SMALL
-      removals (measured: seconds, vs a ~60 s/shard full rebuild at
-      25k rows).  Wiring quality erodes under repeated sweeps; pair
-      with ``hnsw_rebalance(min_degree_frac=...)`` for periodic
-      repair.
-    - **rebuild**: reconstruct the shard from its surviving vectors
-      at full construction quality — the right call when a shard
-      loses a large fraction of its rows (same rebuild
-      ``hnsw_rebalance`` applies to degraded shards).
-
-    ``mode="auto"`` (default) sweeps shards losing at most
-    ``sweep_max_frac`` of their rows and rebuilds the rest;
-    ``"sweep"``/``"rebuild"`` force one strategy.  Only touched
-    shards' files are replaced (dynamic partition overwrite); a shard
-    emptied entirely has its partition directory deleted, and the next
-    load's listing drops it from the shard list (``_meta`` is not
-    rewritten).  Single-writer maintenance op; replayed ``batch_id`` is a
-    no-op via the ``_batches`` log.
-
-    The report carries a per-touched-shard graph-health block
-    (``operators.hnsw.hnsw_shard_health``: mean live level-0 degree,
-    fraction of nodes under ``min_degree_frac * M``, and a
-    ``needs_repair`` verdict using the SAME rule ``hnsw_rebalance``
-    repairs by) — so sweep erosion is measured at the moment it
-    happens instead of discovered as a recall drop.  ``auto_repair=
-    True`` triggers the rebalance immediately when any touched shard
-    is flagged; ``max_sweep_ids`` bounds the driver-collected id set
-    the sweep closure ships (larger sets force rebuild mode, which
-    anti-joins distributed)."""
-    from astro_vectordb_spark.operators.hnsw import (
-        hnsw_build_shards,
-        hnsw_remove_shards,
-    )
-
-    if mode not in ("auto", "sweep", "rebuild"):
-        raise ValueError(
-            f"mode must be 'auto', 'sweep' or 'rebuild', got {mode!r}"
-        )
-    if _batch_already_committed(spark, path, batch_id, op="hnsw_remove"):
-        return {"removed_rows": 0, "touched_shards": [],
-                "skipped_replay": True}
-    # a driver-side id collection stays a driver-side (deduplicated)
-    # list: the sweep guard is its len() and the sweep ships it as is
-    rm_ids = (
-        None if isinstance(vec_ids, DataFrame)
-        else list(dict.fromkeys(int(v) for v in vec_ids))
-    )
-    ids = _as_ids_df(spark, vec_ids if rm_ids is None else rm_ids)
-    graph_path = os.path.join(path, "graph")
-    graph, meta, _ = _load_hnsw(spark, path)
-    # one aggregation pass: per-shard totals + hit counts -> touched
-    # set, removal fractions, emptied detection — no survivor rescans
-    totals, hit_counts = {}, {}
-    for r in (
-        graph.select("vec_id", "shard_id")
-        .join(ids.withColumn("_hit", F.lit(1)), "vec_id", "left")
-        .groupBy("shard_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.count("_hit").alias("hits"))
-        .collect()
-    ):
-        totals[r["shard_id"]] = r["n"]
-        if r["hits"]:
-            hit_counts[r["shard_id"]] = r["hits"]
-    touched = sorted(hit_counts)
-    if not touched:
-        _record_batch(spark, path, batch_id, op="hnsw_remove")
-        return {"removed_rows": 0, "touched_shards": []}
-    emptied = [s for s in touched if hit_counts[s] >= totals[s]]
-    live_touched = [s for s in touched if s not in emptied]
-    if mode == "sweep":
-        sweep_shards = list(live_touched)
-    elif mode == "rebuild":
-        sweep_shards = []
-    else:
-        sweep_shards = [
-            s for s in live_touched
-            if hit_counts[s] / totals[s] <= sweep_max_frac
-        ]
-    rebuild_shards = [s for s in live_touched if s not in sweep_shards]
-    quantized = "qvec" in graph.columns
-
-    # closure-size guard: the sweep path collects the remove-id set to
-    # the driver and ships it in every shard task — fine for the bounded
-    # erasure batches it exists for, but nothing stops a caller passing
-    # an unbounded DataFrame.  A set above max_sweep_ids forces rebuild
-    # mode (rebuild anti-joins the ids distributed, never collecting).
-    if sweep_shards and (
-        len(rm_ids) if rm_ids is not None
-        else ids.limit(max_sweep_ids + 1).count()
-    ) > max_sweep_ids:
-        rebuild_shards = sorted(set(rebuild_shards) | set(sweep_shards))
-        sweep_shards = []
-
-    out_parts = []
-    if sweep_shards:
-        if rm_ids is None:
-            rm_ids = [r["vec_id"] for r in ids.collect()]  # bounded batch
-        out_parts.append(
-            hnsw_remove_shards(
-                graph.filter(F.col("shard_id").isin(sweep_shards)),
-                rm_ids, m=meta["m"], metric=meta["metric"],
-            )
-        )
-    if rebuild_shards:
-        in_rb = graph.filter(F.col("shard_id").isin(rebuild_shards))
-        if quantized:
-            survivors = in_rb.join(ids, "vec_id", "left_anti").select(
-                "vec_id",
-                "shard_id",
-                F.transform(
-                    F.col("qvec"),
-                    lambda q: (q.cast("double") * F.col("qscale")).cast("float"),
-                ).alias("embedding"),
-            )
-        else:
-            survivors = in_rb.join(ids, "vec_id", "left_anti").select(
-                "vec_id", "shard_id", "embedding"
-            )
-        survivors = survivors.localCheckpoint(eager=True)
-        for sid in rebuild_shards:
-            rows = survivors.filter(F.col("shard_id") == sid).select(
-                "vec_id", "embedding"
-            )
-            out_parts.append(
-                hnsw_build_shards(
-                    rows, num_shards=1, m=meta["m"], metric=meta["metric"],
-                    seed=seed + sid, quantize=quantized,
-                ).withColumn("shard_id", F.lit(int(sid)).cast("int"))
-            )
-    updated = None
-    if out_parts:
-        updated = out_parts[0]
-        for p in out_parts[1:]:
-            updated = updated.unionByName(p)
-    updated, _ = _commit_graph_shards(
-        spark, graph_path, graph.schema, updated, drop_shards=emptied
-    )
-    # graph-health verdict for the TOUCHED shards (the way
-    # pq_append_to_index surfaces MSE drift): edge sweeps erode wiring —
-    # a removed node's pruned incoming edges are never re-wired — so
-    # every remove reports mean live degree / under-wired fraction and a
-    # needs_repair verdict per touched shard (one codegen agg over the
-    # rows just written; |touched| output rows).  auto_repair=True runs
-    # hnsw_rebalance(min_degree_frac=...) immediately — same rows, same
-    # shard ids, fresh wiring — so churn-heavy pipelines can't silently
-    # decay; the default reports and leaves scheduling to the caller.
-    health: list[dict] = []
-    needs_repair: list[int] = []
-    if out_parts:
-        from astro_vectordb_spark.operators.hnsw import hnsw_shard_health
-
-        health = [
-            r.asDict()
-            for r in hnsw_shard_health(
-                updated, m=meta["m"], min_degree_frac=min_degree_frac
-            )
-            .orderBy("shard_id")
-            .collect()
-        ]
-        needs_repair = [h["shard_id"] for h in health if h["needs_repair"]]
-    repaired: dict[int, list[int]] = {}
-    if auto_repair and needs_repair:
-        repaired = hnsw_rebalance(
-            spark, path, seed=seed, min_degree_frac=min_degree_frac
-        )
-    _record_batch(spark, path, batch_id, op="hnsw_remove")
-    return {
-        "removed_rows": int(sum(hit_counts.values())),
-        "touched_shards": touched,
-        "swept_shards": sweep_shards,
-        "rebuilt_shards": rebuild_shards,
-        "emptied_shards": emptied,
-        "health": health,
-        "needs_repair": needs_repair,
-        "repaired": repaired,
-    }
-
-
-def pq_remove_from_index(
-    spark: SparkSession,
-    path: str,
-    vec_ids,
-    batch_id: int | None = None,
-) -> dict:
-    """Physical delete from a persisted PQ / IVF-PQ codes table —
-    the lifecycle op the append family lacked: without it, deleted
-    vec_ids sit in the codes table forever, permanently wasting ADC
-    candidate budget (stage-2 re-rank hides them from RESULTS, but a
-    heavily-churned index silently degrades recall-per-refine).
-    Reference analogue: ``removePoint`` tombstone-compaction intent
-    (hnsw.ts:179-226) applied to the quantized index.
-
-    Touched-files-only, like the appends: the hidden
-    ``_metadata.file_path`` column locates the parquet files that
-    actually contain the removed ids (bounded by |vec_ids|), ONLY
-    those files' survivors are rewritten (as fresh appended files),
-    and the old files are deleted — a 100-TB codes table with 1k
-    removed ids rewrites a handful of files, never the table.  Works
-    identically for flat PQ and cell-partitioned IVF-PQ codes
-    (``basePath`` keeps the cell_id partition column when re-reading
-    the touched leaf files).
-
-    Single-writer maintenance op (same contract as
-    ``hnsw_rebalance``).  Crash between the survivor append and the
-    old-file delete leaves duplicate survivor rows: serving is
-    unaffected (``pq_topk``/``pq_batch_candidates`` dedup candidate
-    ids) and ``pq_compact_index`` repairs the files; a replayed
-    ``batch_id`` is a no-op via the ``_batches`` log recorded on
-    completion.
-    """
-    if _batch_already_committed(spark, path, batch_id, op="pq_remove"):
-        return {"removed_rows": 0, "touched_files": 0,
-                "skipped_replay": True}
-    _recover_swap(spark, os.path.join(path, "codes"))
-    ids = _as_ids_df(spark, vec_ids)
-    removed, touched, n_ids_removed = _remove_rows_by_file(
-        spark, os.path.join(path, "codes"), ids
-    )
-    if n_ids_removed:
-        _update_meta_n_rows(spark, path, delta=-n_ids_removed)
-    _record_batch(spark, path, batch_id, op="pq_remove")
-    return {"removed_rows": removed, "touched_files": len(touched)}
-
-
-def pq_compact_index(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int = 4_000_000,
-    min_file_ratio: float = 2.0,
-) -> dict:
-    """Churn-aware compaction for a persisted PQ / IVF-PQ codes table
-    — the maintenance op mirroring ``hnsw_rebalance``: a long
-    append/remove history leaves many small files (every streamed
-    micro-batch appends at least one; every remove rewrites touched
-    files into fresh ones), and file-count growth degrades scan task
-    granularity and object-store listing.
-
-    Trigger: compaction rewrites only when the file count exceeds
-    ``min_file_ratio`` x the ideal count for ``target_rows_per_file``
-    (so a well-sized table is a no-op — returns without a write).
-    The rewrite coalesces to the ideal file count (per cell partition
-    for IVF-PQ) and drops duplicate vec_ids, repairing any
-    crashed-remove leftovers.  Codes are m bytes/vector, so even a
-    full compaction is ~32x cheaper than rewriting the float table.
-    """
-    codes_path = os.path.join(path, "codes")
-    _recover_swap(spark, codes_path)  # repair any interrupted prior swap
-    codes = spark.read.parquet(codes_path)
-    n_files = codes.select(
-        F.col("_metadata.file_path")
-    ).distinct().count()
-    n_rows = codes.count()
-    ideal = max(1, -(-n_rows // target_rows_per_file))
-    if n_files <= min_file_ratio * ideal:
-        return {"compacted": False, "files": n_files, "rows": n_rows}
-    partitioned = "cell_id" in codes.columns
-    dedup_keys = ["vec_id", "cell_id"] if partitioned else ["vec_id"]
-    survivors = codes.dropDuplicates(dedup_keys)
-
-    # crash-safe swap (not an in-place overwrite): the rewrite reads the
-    # LIVE files while writing a staging sibling, then two renames swap
-    # it in — a crash or executor loss mid-compaction (a PQ handle's
-    # stream_remove triggers this automatically via compact_every) can
-    # no longer lose the codes table, matching _remove_rows_by_file's
-    # write-then-delete ordering.
-    def _write(staging: str) -> None:
-        writer = (
-            survivors.repartition(ideal, "cell_id")
-            .write.mode("overwrite").partitionBy("cell_id")
-            if partitioned
-            else survivors.repartition(ideal).write.mode("overwrite")
-        )
-        writer.parquet(staging)
-
-    _replace_dir(spark, _write, codes_path)
-    return {"compacted": True, "files_before": n_files, "rows": n_rows,
-            "target_files": ideal}
-
-
 def _write_codebooks(spark: SparkSession, model, path: str) -> None:
     """Staged-swap the tiny codebook table (codebooks + OPQ rotation
     sentinel rows + the ``train_mse`` baseline sentinel)."""
@@ -1776,196 +976,6 @@ def _write_codebooks(spark: SparkSession, model, path: str) -> None:
         ).write.mode("overwrite").parquet(staging)
 
     _replace_dir(spark, _write, os.path.join(path, "codebooks"))
-
-
-def _refresh_corpus(
-    spark: SparkSession,
-    stored_ids: DataFrame,
-    vectors: DataFrame,
-    id_col: str,
-    face: str,
-) -> DataFrame:
-    """The re-encode corpus for a PQ-family refresh: ``vectors``
-    restricted to the ids currently in the codes table, duplicate ids
-    collapsed deterministically.  Raises when coverage is incomplete —
-    a stored id whose floats are missing cannot be re-encoded under
-    new codebooks (and silently dropping it would shrink the index)."""
-    corpus = _dedup_ids_deterministic(vectors, id_col=id_col).join(
-        stored_ids, id_col
-    )
-    n_stored = stored_ids.count()
-    n_corpus = corpus.count()
-    if n_corpus < n_stored:
-        raise ValueError(
-            f"{face}: vectors frame covers {n_corpus}/{n_stored} stored "
-            f"ids — every id in the codes table needs its float vector "
-            f"to re-encode (pass the same corpus the index was built "
-            f"and appended from)"
-        )
-    return corpus
-
-
-def pq_refresh_index(
-    spark: SparkSession,
-    path: str,
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_rows: int = 50_000,
-    seed: int = 42,
-    opq_iters: int | None = None,
-) -> dict:
-    """Retrain the codebooks and RE-ENCODE the stored codes table in
-    place — the answer to ``pq_append_to_index``'s MSE drift report
-    (the same report->refresh symmetry ``semdedup_refresh_index``
-    gives the semantic family): when batch MSE climbs far above the
-    ``train_mse`` baseline, the new data has drifted off the trained
-    codebooks and stage-1 ADC ordering degrades; refresh refits and
-    restores it WITHOUT a rebuild.
-
-    What it does NOT pay: the float ``vectors`` table (the big one) is
-    never rewritten, nothing re-ingests, and the ``_batches`` replay
-    log is preserved verbatim — a stream appending through the refresh
-    keeps its exactly-once contract.  What it does pay: one bounded
-    codebook refit (``pq_train``'s driver-side hash-sample — never a
-    corpus-scaling fit) and ONE corpus encode pass staged-swapped into
-    ``codes/`` (m bytes/vector — ~32x smaller than the float table a
-    rebuild also rewrites).  ``vectors`` must cover every stored id
-    (the codes table defines membership; coverage is checked).
-
-    ``opq_iters=None`` keeps the family: models persisted with an OPQ
-    rotation refresh with OPQ (8 alternations), plain models refresh
-    plain.  ``m``/``ks``/``metric`` come from ``_meta`` — refresh
-    never changes the index shape (that is a rebuild).
-
-    Crash ordering: the new codes swap first, then the codebooks.  A
-    crash between the swaps leaves codes/codebooks mismatched — ADC
-    stage-1 ordering is garbage until healed (stage-2 still re-ranks
-    its candidates exactly) — and re-running the refresh (idempotent:
-    deterministic sample + seed) heals it.  Single-writer maintenance
-    op, same contract as ``pq_compact_index``.
-
-    Returns ``{"reencoded_rows", "train_mse_before", "train_mse_after",
-    "rotation"}``."""
-    from astro_vectordb_spark.operators.pq import pq_encode, pq_train
-
-    _recover_swap(spark, os.path.join(path, "codes"))
-    encoded, old_model, meta = load_pq_index(spark, path)
-    stored = encoded.select(id_col).distinct().localCheckpoint(eager=True)
-    corpus = _refresh_corpus(spark, stored, vectors, id_col,
-                             "pq_refresh_index")
-    if opq_iters is None:
-        opq_iters = 8 if old_model.rotation is not None else 0
-    model = pq_train(
-        corpus, m=int(meta["m"]), ks=int(meta["ks"]),
-        metric=meta["metric"], vec_col=vec_col, id_col=id_col,
-        max_rows=max_rows, seed=seed, opq_iters=opq_iters,
-    )
-    fresh = pq_encode(corpus, model, id_col=id_col, vec_col=vec_col)
-
-    def _write(staging: str) -> None:
-        fresh.write.mode("overwrite").parquet(staging)
-
-    _replace_dir(spark, _write, os.path.join(path, "codes"))
-    _write_codebooks(spark, model, path)
-    return {
-        "reencoded_rows": int(stored.count()),
-        "train_mse_before": old_model.train_mse,
-        "train_mse_after": model.train_mse,
-        "rotation": model.rotation is not None,
-    }
-
-
-def ivf_pq_refresh_index(
-    spark: SparkSession,
-    path: str,
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_rows: int = 50_000,
-    seed: int = 42,
-    opq_iters: int | None = None,
-) -> dict:
-    """:func:`pq_refresh_index` for a cell-partitioned IVF-PQ index:
-    refit the codebooks (on cell RESIDUALS when the model is
-    residual-encoded) and re-encode the codes table in place — the
-    CENTROIDS and every row's cell assignment stay frozen, so the
-    cell partitioning (the file-pruning contract serving relies on)
-    is preserved verbatim and no assignment pass is paid.  Centroid
-    drift is a different, cheaper signal with its own lifecycle
-    answer (rebuild, or SemDeDup-style reassignment); codebook drift
-    is what the per-batch MSE report measures.
-
-    Same coverage check, crash ordering (codes swap, then codebooks;
-    re-run to heal), replay-log preservation, and report shape as the
-    flat face."""
-    from astro_vectordb_spark.operators.pq import (
-        PQModel,
-        ivf_pq_encode_residual,
-        ivf_pq_residual_frame,
-        pq_encode,
-        pq_train,
-    )
-
-    _recover_swap(spark, os.path.join(path, "codes"))
-    encoded, centroids, old_model, meta = load_ivf_pq_index(spark, path)
-    # one stored row per id with its frozen cell (duplicate code rows
-    # from at-least-once appends collapse to the min cell)
-    stored = (
-        encoded.groupBy(id_col)
-        .agg(F.min("cell_id").alias("cell_id"))
-        .localCheckpoint(eager=True)
-    )
-    corpus = _refresh_corpus(
-        spark, stored.select(id_col), vectors, id_col,
-        "ivf_pq_refresh_index",
-    )
-    assigned = corpus.join(stored, id_col)
-    if opq_iters is None:
-        opq_iters = 8 if old_model.rotation is not None else 0
-    if old_model.residual:
-        resid = ivf_pq_residual_frame(
-            assigned, centroids, meta["metric"], id_col=id_col,
-            vec_col=vec_col,
-        )
-        base = pq_train(
-            resid, m=int(meta["m"]), ks=int(meta["ks"]), metric="dot",
-            vec_col=vec_col, id_col=id_col, max_rows=max_rows,
-            seed=seed, opq_iters=opq_iters,
-        )
-        model = PQModel(
-            base.codebooks, metric=meta["metric"], dim=base.dim,
-            residual=True, rotation=base.rotation,
-            train_mse=base.train_mse,
-        )
-        fresh = ivf_pq_encode_residual(
-            assigned, model, centroids, id_col=id_col, vec_col=vec_col
-        )
-    else:
-        model = pq_train(
-            corpus, m=int(meta["m"]), ks=int(meta["ks"]),
-            metric=meta["metric"], vec_col=vec_col, id_col=id_col,
-            max_rows=max_rows, seed=seed, opq_iters=opq_iters,
-        )
-        fresh = assigned.select(id_col, "cell_id").join(
-            pq_encode(corpus, model, id_col=id_col, vec_col=vec_col),
-            id_col,
-        )
-
-    def _write(staging: str) -> None:
-        fresh.repartition("cell_id").write.mode("overwrite").partitionBy(
-            "cell_id"
-        ).parquet(staging)
-
-    _replace_dir(spark, _write, os.path.join(path, "codes"))
-    _write_codebooks(spark, model, path)
-    return {
-        "reencoded_rows": int(stored.count()),
-        "train_mse_before": old_model.train_mse,
-        "train_mse_after": model.train_mse,
-        "rotation": model.rotation is not None,
-        "residual": bool(old_model.residual),
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -1999,7 +1009,7 @@ def _bm25_table_dirs(path: str) -> dict[str, str] | None:
     ``stats/`` multi-table layout OR the legacy (pre-multi-commit)
     layout of separate versioned ``term_stats/`` + ``corpus_stats/``
     (+ ``batches/``) tables — an index persisted under the old layout
-    stays loadable, and its first ``bm25_append_to_index`` migrates it
+    stays loadable, and its first BM25 append or remove migrates it
     (the merged tables commit into the new layout; the legacy
     directories become dead data).  None when nothing is committed."""
     from astro_vectordb_spark.sources.versioned import (
@@ -2085,157 +1095,6 @@ def load_bm25_index(spark: SparkSession, path: str):
         spark.read.schema(ts_schema).parquet(ts_dir),
         local_frame(spark, cs_rows, cs_schema),
     )
-
-
-def bm25_append_to_index(
-    spark: SparkSession,
-    path: str,
-    new_docs: DataFrame,
-    batch_id: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict:
-    """Incremental insert into a persisted BM25 index: merge the new
-    batch's term/corpus statistics (``keyword.bm25_append_stats`` —
-    additive df counts, exact integer totals) and commit the merged
-    tables as a new version.  The rewrite is VOCABULARY-sized, never
-    corpus-sized.
-
-    Exactly-once under at-least-once redelivery: the applied-batch log
-    is committed IN the same version as the merged statistics (one
-    pointer swap covers all three tables), so there is no crash window
-    where the stats reflect a batch the log does not — a replayed
-    ``batch_id`` is either fully applied (and skipped) or not applied
-    at all (and re-merged cleanly).  This is stronger than the PQ
-    appends' side-car ``_batches`` log, which BM25 needs because
-    statistics merges have no id-level anti-join fallback."""
-    from astro_vectordb_spark.operators.keyword import bm25_append_stats
-
-    def _merge(ts, cs):
-        return bm25_append_stats(
-            ts, cs, new_docs, id_col=id_col, text_col=text_col
-        )
-
-    return _bm25_apply_batch(
-        spark, path, new_docs, batch_id, "append", "appended_docs", _merge
-    )
-
-
-def bm25_remove_from_index(
-    spark: SparkSession,
-    path: str,
-    removed_docs: DataFrame,
-    batch_id: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    strict: bool = True,
-) -> dict:
-    """Incremental DELETE from a persisted BM25 index — the lexical
-    counterpart of ``pq/ivf/hnsw_remove_from_index``, completing the
-    build → append → remove lifecycle for every index kind.  Subtracts
-    the batch's term/corpus statistics exactly
-    (``keyword.bm25_remove_stats`` — df decrements, exact integer
-    totals; remove-then-query == rebuild-on-survivors bit-for-bit) and
-    commits the decremented tables as a new version; the rewrite is
-    VOCABULARY-sized, never corpus-sized.
-
-    ``removed_docs`` must carry the documents' ORIGINAL (id, text)
-    rows (the statistics store no postings — read the rows from the
-    corpus table before deleting them there; the GDPR-erasure flow is
-    remove-here-then-delete-there).  ``strict`` (default) fails the
-    commit if any document frequency would go negative — see
-    ``bm25_remove_stats``.
-
-    The applied-batch log records ``(op, batch_id)`` — an ingest
-    stream and a remove stream on the SAME index number their
-    micro-batches independently from 0, so op-unaware replay detection
-    would let ingest batch N mask remove batch N (silently dropping
-    the erasure) and vice versa.  Legacy logs without the op column
-    keep their historical match-any behavior."""
-    from astro_vectordb_spark.operators.keyword import bm25_remove_stats
-
-    def _merge(ts, cs):
-        return bm25_remove_stats(
-            ts, cs, removed_docs, id_col=id_col, text_col=text_col,
-            strict=strict,
-        )
-
-    return _bm25_apply_batch(
-        spark, path, removed_docs, batch_id, "remove", "removed_docs", _merge
-    )
-
-
-def _bm25_apply_batch(
-    spark: SparkSession,
-    path: str,
-    docs: DataFrame,
-    batch_id: int | None,
-    op: str,
-    count_key: str,
-    merge_fn,
-) -> dict:
-    """Shared append/remove machinery: read the live tables (legacy
-    layouts migrate), check the op-namespaced replay log, apply the
-    statistics merge, and commit stats + log as ONE version (a single
-    pointer swap — a replayed ``(op, batch_id)`` is either fully
-    applied or not at all; there is no half-applied crash window)."""
-    from astro_vectordb_spark.sources.versioned import (
-        commit_version_multi,
-        current_version,
-    )
-
-    stats_path = os.path.join(path, "stats")
-    tables = _read_bm25_tables(spark, path)  # legacy layouts migrate here
-    if tables is None:
-        raise FileNotFoundError(f"no committed BM25 index at {path}")
-    log = tables.get("batches")
-    if log is not None and "op" not in log.columns:
-        # legacy log rows predate op-namespacing: null op = match-any,
-        # exactly their historical behavior
-        log = log.withColumn("op", F.lit(None).cast("string"))
-    if (
-        batch_id is not None
-        and log is not None
-        and log.filter(
-            (F.col("batch_id") == int(batch_id))
-            & (F.col("op").isNull() | (F.col("op") == op))
-        ).limit(1).count()
-        > 0
-    ):
-        return {count_key: 0, "skipped_replay": True}
-    ts, cs = tables["term_stats"], tables["corpus_stats"]
-    n_docs = docs.count()
-    if n_docs == 0 and batch_id is None:
-        return {count_key: 0}
-    mts, mcs = merge_fn(ts, cs) if n_docs else (ts, cs)
-    if log is None:
-        log = local_frame(spark, [], "batch_id long, op string")
-    mlog = (
-        log.unionByName(
-            local_frame(
-                spark,
-                [(int(batch_id), op)], "batch_id long, op string"
-            )
-        )
-        if batch_id is not None
-        else log
-    )
-    # materialize BEFORE the swap: the merge plans read the live
-    # version the commit is about to garbage-collect
-    mats = [t.cache() for t in (mts, mcs, mlog)]
-    for t in mats:
-        t.count()
-    try:
-        v = int((current_version(stats_path) or "v0")[1:]) + 1
-        commit_version_multi(
-            {"term_stats": mats[0], "corpus_stats": mats[1],
-             "batches": mats[2]},
-            stats_path, v,
-        )
-    finally:
-        for t in mats:
-            t.unpersist()
-    return {count_key: n_docs}
 
 
 # --------------------------------------------------------------------------
@@ -2775,7 +1634,7 @@ def reset_op_log(spark: SparkSession, path: str, op: str | None) -> dict:
 
     Only call this when the op's ALREADY-APPLIED effects are accounted
     for (e.g. the rebound stream replays from a source offset at or
-    after the index's current state, or the faces' id-level
+    after the index's current state, or the appends' id-level
     ``dedup_ids`` anti-join is acceptable as the only guard).  The
     rewrite goes through the crash-safe staged swap.  Returns
     ``{"removed_rows", "rows_after"}``."""

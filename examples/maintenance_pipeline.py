@@ -4,9 +4,10 @@ persisted index healthy over months of mutation.
 
 build + persist HNSW -> serve baseline -> churn (sweep-removes +
 re-appends) -> READ THE HEALTH VERDICT the remove reports ->
-threshold-flag degraded shards -> hnsw_rebalance repair -> verify
+threshold-flag degraded shards -> rebalance() repair -> verify
 recall recovered; then the PQ side: append/remove churn ->
-pq_compact_index (crash-safe swap) repairs file growth.
+compact() (crash-safe swap) repairs file growth, all through
+``index.open``.
 
 The health loop is the piece the reference never shipped (its
 graph-cleaning TODO, README.md:78-81): edge sweeps are the CHEAP
@@ -29,6 +30,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.operators.hnsw import (
     hnsw_build_shards,
     hnsw_query_shards,
@@ -38,13 +40,7 @@ from astro_vectordb_spark.operators.pq import pq_encode, pq_train
 from astro_vectordb_spark.operators.topk import topk_search
 from astro_vectordb_spark.session import get_spark
 from astro_vectordb_spark.sources.vault import (
-    hnsw_append_to_index,
-    hnsw_rebalance,
-    hnsw_remove_from_index,
     load_hnsw_index,
-    pq_append_to_index,
-    pq_compact_index,
-    pq_remove_from_index,
     save_hnsw_index,
     save_pq_index,
 )
@@ -95,8 +91,8 @@ def main() -> None:
     for kmod in range(5):
         batch = emb.filter(F.col("vec_id") % 5 == kmod)
         ids = [r["vec_id"] for r in batch.select("vec_id").collect()]
-        last = hnsw_remove_from_index(spark, path, ids, mode="sweep")
-        hnsw_append_to_index(spark, path, batch, seed=100 + kmod)
+        last = index.open(spark, path).remove(ids, mode="sweep")
+        index.open(spark, path).append(batch, seed=100 + kmod)
     print("post-churn health (from the remove report):", [
         (h["shard_id"], round(h["mean_degree"], 2), h["needs_repair"])
         for h in last["health"]
@@ -114,7 +110,7 @@ def main() -> None:
     ]
     print(f"flagged at min_degree_frac={frac:.2f}: shards {flagged}")
     if flagged:
-        repaired = hnsw_rebalance(spark, path, min_degree_frac=frac)
+        repaired = index.open(spark, path).rebalance(min_degree_frac=frac)
         print("rebalance repaired:", repaired)
     print(f"post-repair recall@10: {recall_at_10(spark, path, emb, qv):.2f}")
 
@@ -125,9 +121,9 @@ def main() -> None:
     for kmod in range(4):  # fragment the codes table with churn
         batch = emb.filter(F.col("vec_id") % 4 == kmod)
         ids = [r["vec_id"] for r in batch.select("vec_id").collect()]
-        pq_remove_from_index(spark, pq_path, ids)
-        pq_append_to_index(spark, pq_path, batch)
-    rep = pq_compact_index(spark, pq_path, target_rows_per_file=1_000_000)
+        index.open(spark, pq_path).remove(ids)
+        index.open(spark, pq_path).append(batch)
+    rep = index.open(spark, pq_path).compact(target_rows_per_file=1_000_000)
     print("pq compaction:", rep)
 
     spark.stop()

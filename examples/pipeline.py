@@ -16,6 +16,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.functions.embed import embed_text
 from astro_vectordb_spark.operators.ann import (
     ivf_build_sampled,
@@ -131,7 +132,6 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         hnsw_query_shards,
     )
     from astro_vectordb_spark.sources.vault import (
-        hnsw_append_to_index,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -142,7 +142,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         shards = auto_num_shards(old.count())
         graph = hnsw_build_shards(old, num_shards=max(shards, 2))
         save_hnsw_index(graph, d, m=16, metric="cosine")
-        touched = hnsw_append_to_index(spark, d, new)
+        touched = index.open(spark, d).append(new)
         g, meta = load_hnsw_index(spark, d)
         # serve with the safety + cache metadata: clustered only while
         # no shard file splits; token-keyed worker cache for repeats
@@ -173,10 +173,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     #     searchAstroDB); same call works for exact parquet, IVF,
     #     HNSW, PQ, IVF-PQ
     from astro_vectordb_spark.search import search
-    from astro_vectordb_spark.sources.vault import (
-        pq_remove_from_index,
-        save_pq_index,
-    )
+    from astro_vectordb_spark.sources.vault import save_pq_index
     from astro_vectordb_spark.operators.pq import pq_encode, pq_train
 
     model = pq_train(emb, m=8, ks=32, max_rows=20_000)
@@ -184,7 +181,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     save_pq_index(pq_encode(emb, model), model, pq_dir)
     # churn lifecycle: physically remove some ids (touched-files-only
     # rewrite), then serve through the facade
-    pq_remove_from_index(spark, pq_dir, [1, 2, 3])
+    index.open(spark, pq_dir).remove([1, 2, 3])
     hits = search(spark, pq_dir, qv, k=5, vectors=emb)
     print(f"[11] facade over churned PQ index: {hits.count()} hits")
 

@@ -21,6 +21,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.functions.embed import embed_text
 from astro_vectordb_spark.operators.hnsw import (
     auto_num_shards,
@@ -44,7 +45,6 @@ from astro_vectordb_spark.operators.rerank import (
 from astro_vectordb_spark.operators.topk import filtered_topk, score_against
 from astro_vectordb_spark.session import get_spark
 from astro_vectordb_spark.sources.vault import (
-    hnsw_index_stats,
     load_hnsw_index,
     save_hnsw_index,
 )
@@ -81,7 +81,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     term_stats.write.mode("overwrite").parquet(f"{stats_path}/terms")
     corpus_stats.write.mode("overwrite").parquet(f"{stats_path}/corpus")
 
-    print("index health:", hnsw_index_stats(spark, index_path))
+    print("index health:", index.open(spark, index_path).health())
 
     # ---- query time ------------------------------------------------
     # the query is doc 0's first chunk, like a RAG lookup

@@ -50,6 +50,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.session import get_spark
 
 N_ROWS = 200_000
@@ -147,11 +148,7 @@ def main() -> None:
         hnsw_build_shards,
     )
     from astro_vectordb_spark.operators.topk import batch_topk
-    from astro_vectordb_spark.sources.vault import (
-        hnsw_append_to_index,
-        hnsw_rebalance,
-        save_hnsw_index,
-    )
+    from astro_vectordb_spark.sources.vault import save_hnsw_index
 
     log("synthesizing corpus")
     corpus = synth_corpus(spark, "/tmp/scale/hnsw_corpus")
@@ -224,7 +221,7 @@ def main() -> None:
         )
     )
     t0 = time.time()
-    touched = hnsw_append_to_index(spark, index_path, new_rows)
+    touched = index.open(spark, index_path).append(new_rows)
     res["insert_3rows_sec"] = round(time.time() - t0, 2)
     res["touched_shards"] = touched
     after = graph_file_state(index_path)
@@ -253,11 +250,9 @@ def main() -> None:
 
     # ---- storage-level remove (touched-shards-only) ---------------------
     log("read-your-writes done; storage-level remove")
-    from astro_vectordb_spark.sources.vault import hnsw_remove_from_index
-
     before_rm = graph_file_state(index_path)
     t0 = time.time()
-    rm = hnsw_remove_from_index(spark, index_path, new_ids)
+    rm = index.open(spark, index_path).remove(new_ids)
     res["remove_3rows_sec"] = round(time.time() - t0, 2)
     res["remove_touched_shards"] = rm["touched_shards"]
     after_rm = graph_file_state(index_path)
@@ -294,8 +289,7 @@ def main() -> None:
     # ---- rebalance (split every oversized shard) -----------------------
     t0 = time.time()
     log("rebalancing")
-    splits = hnsw_rebalance(
-        spark, index_path,
+    splits = index.open(spark, index_path).rebalance(
         target_rows_per_shard=ROWS_PER_SHARD // 2,
         skew_threshold=1.5,
     )

@@ -1,9 +1,9 @@
 """PQ / IVF-PQ refresh probe: codebook retrain-in-place, measured.
 
-Round-15 verdict item 3: ``pq_append_to_index`` / ``ivf_pq_append_to_
-index`` report per-batch quantization MSE against the persisted
-``train_mse`` baseline (the WHEN); ``pq_refresh_index`` /
-``ivf_pq_refresh_index`` are the HOW — refit the codebooks on a
+Round-15 verdict item 3: the PQ / IVF-PQ ``index.open(...).append``
+reports per-batch quantization MSE against the persisted
+``train_mse`` baseline (the WHEN); ``index.open(...).refresh`` is the
+HOW — refit the codebooks on a
 bounded driver-side sample, re-encode the stored codes table through a
 staged swap, leave the float vectors, the cell assignments, and the
 ``_batches`` replay log untouched.  Claims this probe pins:
@@ -49,6 +49,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.session import get_spark
 
 DIM = 32
@@ -106,8 +107,6 @@ def run_scale(spark, mult: int) -> dict:
     from astro_vectordb_spark.operators.pq import ivf_pq_build
     from astro_vectordb_spark.sources.vault import (
         _batch_already_committed,
-        ivf_pq_append_to_index,
-        ivf_pq_refresh_index,
         save_ivf_pq_index,
     )
 
@@ -150,7 +149,7 @@ def run_scale(spark, mult: int) -> dict:
     out["build_s"] = round(time.time() - t0, 1)
     out["train_mse"] = round(float(model.train_mse), 5)
 
-    rep = ivf_pq_append_to_index(spark, path, drifted, batch_id=1)
+    rep = index.open(spark, path).append(drifted, batch_id=1)
     out["drift_batch_mse"] = round(rep["batch_mse"], 5)
     if not rep["batch_mse"] > 1.5 * model.train_mse:
         failures.append(
@@ -178,7 +177,7 @@ def run_scale(spark, mult: int) -> dict:
 
     # refresh vs full rebuild from the same vectors
     t0 = time.time()
-    rrep = ivf_pq_refresh_index(spark, path, full, seed=11)
+    rrep = index.open(spark, path).refresh(full, seed=11)
     out["refresh_s"] = round(time.time() - t0, 1)
     out["train_mse_after"] = round(rrep["train_mse_after"], 5)
     t0 = time.time()
@@ -214,7 +213,7 @@ def run_scale(spark, mult: int) -> dict:
         3,
     )
 
-    rep2 = ivf_pq_append_to_index(spark, path, drifted, batch_id=1)
+    rep2 = index.open(spark, path).append(drifted, batch_id=1)
     if not rep2.get("skipped_replay"):
         failures.append("replay log lost through refresh")
     if not _batch_already_committed(spark, path, 1, op="ivf_pq_append"):

@@ -35,6 +35,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.session import get_spark
 
 RATIO_CAP = 6.0  # 4x data, +50% headroom
@@ -515,12 +516,7 @@ def main() -> None:
     # the touched-files contract that makes churn affordable at 100 TB
     import os as _os
 
-    from astro_vectordb_spark.sources.vault import (
-        pq_remove_from_index,
-        save_pq_index,
-    )
-
-    from astro_vectordb_spark.sources.vault import pq_append_to_index
+    from astro_vectordb_spark.sources.vault import save_pq_index
 
     idx_path = "/tmp/scale_ret/pq_rm_idx"
     save_pq_index(encoded.repartition(64), model, idx_path)
@@ -540,10 +536,9 @@ def main() -> None:
     new_rows = corpus.limit(1000).select(
         (F.col("vec_id") + 200_000_000).alias("vec_id"), "embedding"
     )
-    pq_append_to_index(spark, idx_path, new_rows.coalesce(1))
+    index.open(spark, idx_path).append(new_rows.coalesce(1))
     t0 = time.time()
-    rep = pq_remove_from_index(
-        spark, idx_path,
+    rep = index.open(spark, idx_path).remove(
         new_rows.select("vec_id"),
     )
     rm_sec = round(time.time() - t0, 2)

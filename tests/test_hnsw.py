@@ -5,6 +5,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.operators.hnsw import NumpyHNSW, hnsw_batch_topk
 from astro_vectordb_spark.operators.topk import batch_topk
 
@@ -116,7 +117,6 @@ def test_hnsw_incremental_insert_persisted(spark, embeddings, tmp_path):
         hnsw_query_shards,
     )
     from astro_vectordb_spark.sources.vault import (
-        hnsw_append_to_index,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -136,7 +136,7 @@ def test_hnsw_incremental_insert_persisted(spark, embeddings, tmp_path):
         if d.startswith("shard_id=")
     }
 
-    touched = hnsw_append_to_index(spark, p, new)
+    touched = index.open(spark, p).append(new)
     assert touched  # at least one shard got rows
 
     # untouched shards kept their exact files
@@ -214,7 +214,6 @@ def test_hnsw_append_is_idempotent(spark, embeddings, tmp_path):
     not duplicate nodes."""
     from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
     from astro_vectordb_spark.sources.vault import (
-        hnsw_append_to_index,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -227,8 +226,8 @@ def test_hnsw_append_is_idempotent(spark, embeddings, tmp_path):
     p = str(tmp_path / "hnsw_idem")
     save_hnsw_index(graph, p, m=16, metric="cosine")
 
-    hnsw_append_to_index(spark, p, new)
-    hnsw_append_to_index(spark, p, new)  # retry replay
+    index.open(spark, p).append(new)
+    index.open(spark, p).append(new)  # retry replay
     g, _ = load_hnsw_index(spark, p)
     assert g.count() == 350
     assert g.select("vec_id").distinct().count() == 350
@@ -242,7 +241,6 @@ def test_hnsw_rebalance_splits_oversized_shards(spark, embeddings, tmp_path):
         hnsw_query_shards,
     )
     from astro_vectordb_spark.sources.vault import (
-        hnsw_rebalance,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -253,9 +251,9 @@ def test_hnsw_rebalance_splits_oversized_shards(spark, embeddings, tmp_path):
     save_hnsw_index(graph, p, m=16, metric="cosine")
 
     # within budget: no-op
-    assert hnsw_rebalance(spark, p, target_rows_per_shard=n) == {}
+    assert index.open(spark, p).rebalance(target_rows_per_shard=n) == {}
 
-    plan = hnsw_rebalance(spark, p, target_rows_per_shard=n // 4)
+    plan = index.open(spark, p).rebalance(target_rows_per_shard=n // 4)
     assert 0 in plan and len(plan[0]) >= 4
 
     g, meta = load_hnsw_index(spark, p)
@@ -580,7 +578,6 @@ def test_hnsw_rebalance_multiple_oversized_shards(spark, embeddings, tmp_path):
         hnsw_query_shards,
     )
     from astro_vectordb_spark.sources.vault import (
-        hnsw_rebalance,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -592,8 +589,8 @@ def test_hnsw_rebalance_multiple_oversized_shards(spark, embeddings, tmp_path):
 
     # every shard (~167 rows) is oversized at target 60 -> all three
     # split, into ~3 parts each, in ONE rebalance call
-    plan = hnsw_rebalance(
-        spark, p, target_rows_per_shard=60, skew_threshold=1.0
+    plan = index.open(spark, p).rebalance(
+        target_rows_per_shard=60, skew_threshold=1.0
     )
     assert set(plan) == {0, 1, 2}, plan
     assert all(len(v) >= 2 for v in plan.values()), plan
@@ -639,7 +636,6 @@ def test_hnsw_serve_index_cache_token(spark, embeddings, tmp_path):
         hnsw_query_shards,
     )
     from astro_vectordb_spark.sources.vault import (
-        hnsw_append_to_index,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -676,7 +672,7 @@ def test_hnsw_serve_index_cache_token(spark, embeddings, tmp_path):
     # mutate the index: the token MUST change and the new vector MUST
     # be served (a stale cache would miss it)
     new = embeddings.filter(F.col("vec_id") == 301).select("vec_id", "embedding")
-    hnsw_append_to_index(spark, p, new)
+    index.open(spark, p).append(new)
     g2, meta2 = load_hnsw_index(spark, p)
     assert meta2["cache_token"] != tok1
     probe_q = new.select(
@@ -795,8 +791,6 @@ def test_hnsw_quantized_append_and_rebalance(spark, embeddings, tmp_path):
         hnsw_query_shards,
     )
     from astro_vectordb_spark.sources.vault import (
-        hnsw_append_to_index,
-        hnsw_rebalance,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -812,7 +806,7 @@ def test_hnsw_quantized_append_and_rebalance(spark, embeddings, tmp_path):
     }
 
     new = embeddings.filter(F.col("vec_id") == 301).select("vec_id", "embedding")
-    touched = hnsw_append_to_index(spark, p, new)
+    touched = index.open(spark, p).append(new)
     assert len(touched) == 1
     g2, meta2 = load_hnsw_index(spark, p)
     rows2 = {r["vec_id"]: (list(r["qvec"]), r["qscale"]) for r in g2.collect()}
@@ -831,8 +825,8 @@ def test_hnsw_quantized_append_and_rebalance(spark, embeddings, tmp_path):
     assert hits[0]["vec_id"] == 301
 
     # force a split: tiny target -> every shard oversized
-    result = hnsw_rebalance(
-        spark, p, target_rows_per_shard=60, skew_threshold=1.5, seed=7
+    result = index.open(spark, p).rebalance(
+        target_rows_per_shard=60, skew_threshold=1.5, seed=7
     )
     assert result, "expected at least one split"
     g3, meta3 = load_hnsw_index(spark, p)
@@ -853,8 +847,6 @@ def test_hnsw_rebalance_compacts_degraded_shards(spark, embeddings, tmp_path):
     from astro_vectordb_spark.operators.hnsw import hnsw_query_shards
     from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
     from astro_vectordb_spark.sources.vault import (
-        hnsw_append_to_index,
-        hnsw_rebalance,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -889,7 +881,7 @@ def test_hnsw_rebalance_compacts_degraded_shards(spark, embeddings, tmp_path):
                 "embedding", lambda x: x + F.lit(0.05 * (rnd + 1))
             ).cast("array<float>").alias("embedding"),
         )
-        hnsw_append_to_index(spark, p, upd, on_conflict="update")
+        index.open(spark, p).append(upd, on_conflict="update")
     churned = mean_degree()
     # row counts flat through updates (home-shard routing: no
     # duplicate nodes, no tombstone rows persist)
@@ -900,8 +892,8 @@ def test_hnsw_rebalance_compacts_degraded_shards(spark, embeddings, tmp_path):
 
     # compact: threshold 0.95 -> floor 15.2, degraded shards rebuild
     # in place
-    result = hnsw_rebalance(
-        spark, p, target_rows_per_shard=10_000, min_degree_frac=0.95, seed=3
+    result = index.open(spark, p).rebalance(
+        target_rows_per_shard=10_000, min_degree_frac=0.95, seed=3
     )
     assert result and all(v == [s] for s, v in result.items()), result
     after = mean_degree()
@@ -925,8 +917,8 @@ def test_hnsw_rebalance_compacts_degraded_shards(spark, embeddings, tmp_path):
 
     # threshold respected: a second compaction pass with a low
     # threshold is a no-op (fresh wiring is healthy)
-    assert hnsw_rebalance(
-        spark, p, target_rows_per_shard=10_000, min_degree_frac=0.2, seed=4
+    assert index.open(spark, p).rebalance(
+        target_rows_per_shard=10_000, min_degree_frac=0.2, seed=4
     ) == {}
 
 
@@ -939,7 +931,6 @@ def test_hnsw_insert_routes_to_home_shard(spark, embeddings, tmp_path):
     no-op) and 'update' (vector replaced in place, count flat)."""
     from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
     from astro_vectordb_spark.sources.vault import (
-        hnsw_append_to_index,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -950,7 +941,7 @@ def test_hnsw_insert_routes_to_home_shard(spark, embeddings, tmp_path):
     save_hnsw_index(g, p, m=16, metric="cosine")
 
     # skip-mode replay of ALL build-time ids: nothing changes
-    hnsw_append_to_index(spark, p, base.select("vec_id", "embedding"))
+    index.open(spark, p).append(base.select("vec_id", "embedding"))
     g1, _ = load_hnsw_index(spark, p)
     assert g1.count() == 200
     dups = (
@@ -966,7 +957,7 @@ def test_hnsw_insert_routes_to_home_shard(spark, embeddings, tmp_path):
         .cast("array<float>")
         .alias("embedding"),
     )
-    hnsw_append_to_index(spark, p, upd, on_conflict="update")
+    index.open(spark, p).append(upd, on_conflict="update")
     g2, _ = load_hnsw_index(spark, p)
     assert g2.count() == 200
     assert g2.groupBy("vec_id").count().filter(F.col("count") > 1).count() == 0
@@ -1094,16 +1085,13 @@ def test_hnsw_index_stats_surface(spark, embeddings, tmp_path):
     """Operational introspection: per-shard rows/degree/levels plus
     the serve-path metadata, from one bounded aggregation."""
     from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
-    from astro_vectordb_spark.sources.vault import (
-        hnsw_index_stats,
-        save_hnsw_index,
-    )
+    from astro_vectordb_spark.sources.vault import save_hnsw_index
 
     n = embeddings.count()
     graph = hnsw_build_shards(embeddings, num_shards=4, ef_construction=64)
     p = str(tmp_path / "hnsw_stats")
     save_hnsw_index(graph, p, m=16, metric="cosine")
-    st = hnsw_index_stats(spark, p)
+    st = index.open(spark, p).health()
     assert st["num_shards"] == 4
     assert st["total_rows"] == n
     assert sum(s["rows"] for s in st["shards"].values()) == n
@@ -1118,4 +1106,4 @@ def test_hnsw_index_stats_surface(spark, embeddings, tmp_path):
     )
     pq = str(tmp_path / "hnsw_stats_q")
     save_hnsw_index(gq, pq, m=16, metric="cosine")
-    assert hnsw_index_stats(spark, pq)["quantized"] is True
+    assert index.open(spark, pq).health()["quantized"] is True

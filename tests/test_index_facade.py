@@ -1,9 +1,9 @@
 """Unified ANN/lexical index maintenance facade (round-15 verdict
 item 6): ``index.open(spark, path)`` auto-detects ivf / hnsw / pq /
-ivf_pq / bm25 from the on-disk layout and dispatches append / remove /
-compact / rebalance / health / refresh / gc / search to that kind's
-faces — the maintenance analogue of ``search.search`` and
-``neardup.open``."""
+ivf_pq / bm25 from the on-disk layout and calls that kind's object
+for append / remove / compact / rebalance / health / refresh / gc /
+search — the maintenance analogue of ``search.search`` and
+``neardup.open``, and the only maintenance surface of these kinds."""
 
 import numpy as np
 import pytest
@@ -254,3 +254,117 @@ class TestDetection:
         save_minhash_index(docs, path)
         with pytest.raises(ValueError, match="neardup"):
             index.open(spark, path)
+
+
+# The keywords (with their defaults) each kind's maintenance has always
+# taken, per handle method; a method missing for a kind raises the
+# ValueError matched in LACKS.
+_PQ_KW = {
+    "append": {"batch_id": None, "dedup_ids": True},
+    "remove": {"batch_id": None},
+    "compact": {"target_rows_per_file": 4_000_000, "min_file_ratio": 2.0},
+    "refresh": {"id_col": "vec_id", "vec_col": "embedding",
+                "max_rows": 50_000, "seed": 42, "opq_iters": None},
+}
+HANDLE_KW = {
+    "ivf": {"append": {"spill": 1}, "remove": {"batch_id": None}},
+    "hnsw": {
+        "append": {"seed": 42, "on_conflict": "skip"},
+        "remove": {"batch_id": None, "seed": 42, "mode": "auto",
+                   "sweep_max_frac": 0.2, "max_sweep_ids": 100_000,
+                   "min_degree_frac": 0.5, "auto_repair": False},
+        "rebalance": {"target_rows_per_shard": 250_000,
+                      "skew_threshold": 2.0, "seed": 42,
+                      "min_degree_frac": None},
+        "health": {},
+    },
+    "pq": _PQ_KW,
+    "ivf_pq": _PQ_KW,
+    "bm25": {
+        "append": {"batch_id": None, "id_col": "doc_id", "text_col": "text"},
+        "remove": {"batch_id": None, "id_col": "doc_id", "text_col": "text",
+                   "strict": True},
+    },
+}
+METHODS = ["append", "remove", "compact", "rebalance", "health", "refresh"]
+LACKS = {
+    "compact": "has no compaction face",
+    "rebalance": "rebalance is an HNSW face",
+    "health": "health stats are an HNSW face",
+    "refresh": "has no refresh face",
+}
+
+
+@pytest.fixture(scope="module")
+def contract_indexes(spark, embeddings, tmp_path_factory):
+    from astro_vectordb_spark.operators.ann import ivf_build
+    from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
+    from astro_vectordb_spark.operators.keyword import bm25_term_stats
+    from astro_vectordb_spark.operators.pq import (
+        ivf_pq_build,
+        pq_encode,
+        pq_train,
+    )
+    from astro_vectordb_spark.sources.vault import (
+        save_bm25_index,
+        save_hnsw_index,
+        save_ivf_index,
+        save_ivf_pq_index,
+        save_pq_index,
+    )
+
+    root = tmp_path_factory.mktemp("idx_contract")
+    paths = {k: str(root / k) for k in HANDLE_KW}
+    save_ivf_index(*ivf_build(embeddings, k_cells=4), paths["ivf"])
+    save_hnsw_index(
+        hnsw_build_shards(embeddings, num_shards=2, ef_construction=40),
+        paths["hnsw"], m=16,
+    )
+    model = pq_train(embeddings, m=8, ks=16, max_rows=N, seed=3)
+    save_pq_index(pq_encode(embeddings, model), model, paths["pq"])
+    enc, cents, model = ivf_pq_build(embeddings, k_cells=4, m=8, ks=16,
+                                     max_rows=N, seed=3)
+    save_ivf_pq_index(enc, cents, model, paths["ivf_pq"])
+    docs = spark.createDataFrame(
+        [(i, f"spark join plan {i % 5}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    save_bm25_index(*bm25_term_stats(docs), paths["bm25"])
+    return paths, docs
+
+
+@pytest.mark.parametrize("method", METHODS)
+@pytest.mark.parametrize("kind", list(HANDLE_KW))
+def test_handle_keyword_contract(spark, embeddings, contract_indexes, kind,
+                                 method):
+    """The handle takes exactly the keywords each kind's maintenance
+    has always taken, at their old defaults: each one is accepted;
+    every keyword another kind takes for the same method (and a
+    made-up one) raises TypeError; a method the kind lacks raises its
+    ValueError whatever the keywords."""
+    paths, docs = contract_indexes
+    idx = index.open(spark, paths[kind])
+    call = getattr(idx, method)
+    batch = (docs if kind == "bm25" else embeddings).limit(0)
+    args = {"append": (batch,),
+            "remove": (batch,) if kind == "bm25" else ([],),
+            "refresh": (embeddings,)}.get(method, ())
+    accepted = HANDLE_KW[kind].get(method)
+    if accepted is None:
+        hint = ("use rebalance\\(\\)" if (kind, method) == ("hnsw", "compact")
+                else LACKS[method])
+        for kw in ({}, {"bogus": 1}):
+            with pytest.raises(ValueError, match=hint):
+                call(*args, **kw)
+        return
+    out = call(*args, **accepted)
+    if (kind, method) == ("ivf", "append"):
+        assert out is None
+    elif (kind, method) == ("hnsw", "append"):
+        assert out == []
+    else:
+        assert isinstance(out, dict)
+    foreign = {k for kws in HANDLE_KW.values() for k in kws.get(method, {})}
+    for kw in sorted(foreign - set(accepted)) + ["bogus"]:
+        with pytest.raises(TypeError):
+            call(*args, **{kw: 1})

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.operators.keyword import bm25_score_all, bm25_topk
 from astro_vectordb_spark.operators.rerank import mmr_rerank, rrf_fuse
 from astro_vectordb_spark.operators.topk import filtered_topk, score_against, topk_search
@@ -344,7 +345,6 @@ class TestBm25Append:
     def test_persisted_append_and_replay(self, spark, tmp_path):
         from astro_vectordb_spark.operators.keyword import bm25_term_stats
         from astro_vectordb_spark.sources.vault import (
-            bm25_append_to_index,
             load_bm25_index,
             save_bm25_index,
         )
@@ -353,13 +353,13 @@ class TestBm25Append:
         path = str(tmp_path / "bm25_idx")
         ts, cs = bm25_term_stats(docs.filter("doc_id < 30"))
         save_bm25_index(ts, cs, path)
-        rep = bm25_append_to_index(
-            spark, path, docs.filter("doc_id >= 30"), batch_id=1
+        rep = index.open(spark, path).append(
+            docs.filter("doc_id >= 30"), batch_id=1
         )
         assert rep["appended_docs"] == 30
         # replay: no-op via the _batches log
-        rep2 = bm25_append_to_index(
-            spark, path, docs.filter("doc_id >= 30"), batch_id=1
+        rep2 = index.open(spark, path).append(
+            docs.filter("doc_id >= 30"), batch_id=1
         )
         assert rep2.get("skipped_replay") and rep2["appended_docs"] == 0
         ts2, cs2 = load_bm25_index(spark, path)

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.operators.pq import (
     PQModel,
     ivf_pq_build,
@@ -213,7 +214,6 @@ class TestServing:
                                         tmp_path):
         from astro_vectordb_spark.sources.vault import (
             load_pq_index,
-            pq_append_to_index,
             save_pq_index,
         )
 
@@ -224,7 +224,7 @@ class TestServing:
         path = str(tmp_path / "opq_app")
         save_pq_index(enc, opq, path)
         newbie = df.filter(F.col("vec_id") >= N - 50)
-        pq_append_to_index(spark, path, newbie, batch_id=1)
+        index.open(spark, path).append(newbie, batch_id=1)
         codes, loaded, _ = load_pq_index(spark, path)
         # appended rows must be encoded THROUGH the persisted rotation:
         # identical to encoding them with the in-session model
@@ -251,7 +251,6 @@ class TestVaultAppendResidualOPQ:
         )
         from astro_vectordb_spark.operators.ann import make_cell_assigner
         from astro_vectordb_spark.sources.vault import (
-            ivf_pq_append_to_index,
             load_ivf_pq_index,
             save_ivf_pq_index,
         )
@@ -265,7 +264,7 @@ class TestVaultAppendResidualOPQ:
         )
         path = str(tmp_path / "opq_res_idx")
         save_ivf_pq_index(enc, cents, model, path)
-        rep = ivf_pq_append_to_index(spark, path, newbie, batch_id=1)
+        rep = index.open(spark, path).append(newbie, batch_id=1)
         assert rep["skipped_replay"] is False
         codes, cents2, loaded, meta = load_ivf_pq_index(spark, path)
         assert loaded.residual and loaded.rotation is not None

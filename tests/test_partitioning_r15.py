@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.operators.partitioning import (
     ensure_scan_parallelism,
     scan_partitions,
@@ -55,7 +56,6 @@ class TestBm25StatsLocalRelation:
 
         from astro_vectordb_spark.operators.keyword import bm25_term_stats
         from astro_vectordb_spark.sources.vault import (
-            bm25_append_to_index,
             load_bm25_index,
             save_bm25_index,
         )
@@ -89,7 +89,7 @@ class TestBm25StatsLocalRelation:
                 {"doc_id": [100, 101], "text": ["gamma delta", "gamma"]}
             )
         )
-        bm25_append_to_index(spark, path, more, batch_id=1)
+        index.open(spark, path).append(more, batch_id=1)
         _, cs3 = load_bm25_index(spark, path)
         got3 = cs3.first().asDict()
         assert got3["n"] == want_cs["n"] + 2

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.operators.pq import (
     PQModel,
     pq_candidates,
@@ -409,7 +410,6 @@ class TestPqAppend:
     def test_pq_append_and_search(self, corpus, model, tmp_path):
         from astro_vectordb_spark.sources.vault import (
             load_pq_index,
-            pq_append_to_index,
             save_pq_index,
         )
 
@@ -422,7 +422,7 @@ class TestPqAppend:
             [(10_000 + i, [float(x) for x in pts[7]]) for i in range(5)],
             "vec_id long, embedding array<float>",
         )
-        rep = pq_append_to_index(spark, path, new)
+        rep = index.open(spark, path).append(new)
         assert rep["appended_rows"] == 5 and rep["batch_mse"] >= 0.0
         enc2, model2, _ = load_pq_index(spark, path)
         assert enc2.count() == N + 5
@@ -436,7 +436,6 @@ class TestPqAppend:
     def test_ivf_pq_append_touches_cells(self, corpus, tmp_path):
         from astro_vectordb_spark.operators.pq import ivf_pq_build
         from astro_vectordb_spark.sources.vault import (
-            ivf_pq_append_to_index,
             load_ivf_pq_index,
             save_ivf_pq_index,
         )
@@ -452,7 +451,7 @@ class TestPqAppend:
             [(20_000 + i, [float(x) for x in pts[3]]) for i in range(4)],
             "vec_id long, embedding array<float>",
         )
-        rep = ivf_pq_append_to_index(spark, path, new)
+        rep = index.open(spark, path).append(new)
         assert rep["appended_rows"] == 4
         # identical vectors land in exactly one cell
         assert len(rep["touched_cells"]) == 1
@@ -466,10 +465,7 @@ class TestPqAppend:
 
     def test_append_drift_signal(self, corpus, model, tmp_path):
         # far-off-manifold batch reports much larger MSE than in-dist
-        from astro_vectordb_spark.sources.vault import (
-            pq_append_to_index,
-            save_pq_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_pq_index
 
         df, pts = corpus
         spark = df.sparkSession
@@ -484,8 +480,8 @@ class TestPqAppend:
             [(30_001, [float(x) for x in rng.normal(size=DIM)])],
             "vec_id long, embedding array<float>",
         )
-        mse_in = pq_append_to_index(spark, path, indist)["batch_mse"]
-        mse_off = pq_append_to_index(spark, path, off)["batch_mse"]
+        mse_in = index.open(spark, path).append(indist)["batch_mse"]
+        mse_off = index.open(spark, path).append(off)["batch_mse"]
         # cosine-normalized 4-d subspaces keep the gap moderate
         # (measured 0.21 vs 0.15 with these seeds) — the signal is the
         # ordering, pinned with margin
@@ -497,7 +493,6 @@ class TestPqAppend:
         # no-op via the anti-join insert-new-only contract
         from astro_vectordb_spark.sources.vault import (
             load_pq_index,
-            pq_append_to_index,
             save_pq_index,
         )
 
@@ -509,13 +504,13 @@ class TestPqAppend:
             [(40_000 + i, [float(x) for x in pts[2]]) for i in range(3)],
             "vec_id long, embedding array<float>",
         )
-        rep1 = pq_append_to_index(spark, path, new, batch_id=7)
+        rep1 = index.open(spark, path).append(new, batch_id=7)
         assert rep1["appended_rows"] == 3
         # replayed batch_id: fast-path skip, nothing re-read
-        rep2 = pq_append_to_index(spark, path, new, batch_id=7)
+        rep2 = index.open(spark, path).append(new, batch_id=7)
         assert rep2["appended_rows"] == 0 and rep2.get("skipped_replay")
         # same ids, new batch_id: anti-join drops them all
-        rep3 = pq_append_to_index(spark, path, new, batch_id=8)
+        rep3 = index.open(spark, path).append(new, batch_id=8)
         assert rep3["appended_rows"] == 0
         enc2, model2, _ = load_pq_index(spark, path)
         assert enc2.count() == N + 3
@@ -529,7 +524,6 @@ class TestPqAppend:
     def test_ivf_pq_append_idempotent_replay(self, corpus, tmp_path):
         from astro_vectordb_spark.operators.pq import ivf_pq_build
         from astro_vectordb_spark.sources.vault import (
-            ivf_pq_append_to_index,
             load_ivf_pq_index,
             save_ivf_pq_index,
         )
@@ -545,12 +539,12 @@ class TestPqAppend:
             [(50_000, [float(x) for x in pts[5]])],
             "vec_id long, embedding array<float>",
         )
-        assert ivf_pq_append_to_index(spark, path, new, batch_id=3)[
+        assert index.open(spark, path).append(new, batch_id=3)[
             "appended_rows"
         ] == 1
-        rep = ivf_pq_append_to_index(spark, path, new, batch_id=3)
+        rep = index.open(spark, path).append(new, batch_id=3)
         assert rep["appended_rows"] == 0 and rep.get("skipped_replay")
-        rep = ivf_pq_append_to_index(spark, path, new, batch_id=4)
+        rep = index.open(spark, path).append(new, batch_id=4)
         assert rep["appended_rows"] == 0
         enc2, _, _, _ = load_ivf_pq_index(spark, path)
         assert enc2.filter("vec_id = 50000").count() == 1
@@ -592,7 +586,7 @@ class TestFilteredPq:
 class TestPqRemove:
     """Delete + compaction lifecycle for persisted PQ / IVF-PQ codes
     tables — closes the one index-lifecycle asymmetry vs HNSW (which
-    has remove_many + hnsw_rebalance)."""
+    has remove_many + rebalance)."""
 
     def test_remove_then_query_equals_fresh_rebuild(
         self, corpus, model, tmp_path
@@ -601,8 +595,6 @@ class TestPqRemove:
         # == index freshly built on the surviving rows
         from astro_vectordb_spark.sources.vault import (
             load_pq_index,
-            pq_append_to_index,
-            pq_remove_from_index,
             save_pq_index,
         )
 
@@ -615,8 +607,8 @@ class TestPqRemove:
 
         path = str(tmp_path / "pq_churn")
         save_pq_index(pq_encode(half_a, model), model, path)
-        pq_append_to_index(spark, path, half_b)
-        rep = pq_remove_from_index(spark, path, removed_ids)
+        index.open(spark, path).append(half_b)
+        rep = index.open(spark, path).remove(removed_ids)
         assert rep["removed_rows"] == len(removed_ids)
         assert rep["touched_files"] > 0
 
@@ -644,11 +636,7 @@ class TestPqRemove:
     ):
         import os as _os
 
-        from astro_vectordb_spark.sources.vault import (
-            pq_append_to_index,
-            pq_remove_from_index,
-            save_pq_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_pq_index
 
         df, pts = corpus
         spark = df.sparkSession
@@ -659,11 +647,11 @@ class TestPqRemove:
             [(30_000 + i, [float(x) for x in pts[2]]) for i in range(3)],
             "vec_id long, embedding array<float>",
         )
-        pq_append_to_index(spark, path, new)
+        index.open(spark, path).append(new)
         codes_dir = _os.path.join(path, "codes")
         before = set(_os.listdir(codes_dir))
         # removing only appended ids must leave the base files alone
-        rep = pq_remove_from_index(spark, path, [30_000, 30_001, 30_002])
+        rep = index.open(spark, path).remove([30_000, 30_001, 30_002])
         after = set(_os.listdir(codes_dir))
         base_files = {f for f in before if f.endswith(".parquet")}
         assert rep["removed_rows"] == 3
@@ -673,7 +661,6 @@ class TestPqRemove:
     def test_remove_idempotent_replay(self, corpus, model, tmp_path):
         from astro_vectordb_spark.sources.vault import (
             load_pq_index,
-            pq_remove_from_index,
             save_pq_index,
         )
 
@@ -681,9 +668,9 @@ class TestPqRemove:
         spark = df.sparkSession
         path = str(tmp_path / "pq_rm_idem")
         save_pq_index(pq_encode(df, model), model, path)
-        rep1 = pq_remove_from_index(spark, path, [1, 2, 3], batch_id=11)
+        rep1 = index.open(spark, path).remove([1, 2, 3], batch_id=11)
         assert rep1["removed_rows"] == 3
-        rep2 = pq_remove_from_index(spark, path, [1, 2, 3], batch_id=11)
+        rep2 = index.open(spark, path).remove([1, 2, 3], batch_id=11)
         assert rep2.get("skipped_replay") and rep2["removed_rows"] == 0
         enc, _, _ = load_pq_index(spark, path)
         assert enc.count() == N - 3
@@ -694,7 +681,6 @@ class TestPqRemove:
         from astro_vectordb_spark.operators.pq import ivf_pq_build
         from astro_vectordb_spark.sources.vault import (
             load_ivf_pq_index,
-            pq_remove_from_index,
             save_ivf_pq_index,
         )
 
@@ -711,7 +697,7 @@ class TestPqRemove:
             r.vec_id for r in enc0.filter(enc0.cell_id == target_cell)
             .select("vec_id").limit(5).collect()
         ]
-        rep = pq_remove_from_index(spark, path, ids_in_cell)
+        rep = index.open(spark, path).remove(ids_in_cell)
         assert rep["removed_rows"] == len(ids_in_cell)
         enc2, _, _, _ = load_ivf_pq_index(spark, path)
         assert enc2.filter(
@@ -724,8 +710,6 @@ class TestPqRemove:
     def test_compact_coalesces_and_dedups(self, corpus, model, tmp_path):
         from astro_vectordb_spark.sources.vault import (
             load_pq_index,
-            pq_append_to_index,
-            pq_compact_index,
             save_pq_index,
         )
 
@@ -739,31 +723,28 @@ class TestPqRemove:
                  for i in range(3)],
                 "vec_id long, embedding array<float>",
             )
-            pq_append_to_index(spark, path, new)
-        rep = pq_compact_index(
-            spark, path, target_rows_per_file=10_000_000
+            index.open(spark, path).append(new)
+        rep = index.open(spark, path).compact(
+            target_rows_per_file=10_000_000
         )
         assert rep["compacted"] and rep["files_before"] > 1
         enc, _, _ = load_pq_index(spark, path)
         assert enc.count() == N + 12
         assert enc.select("vec_id").distinct().count() == N + 12
         # a second compaction is a no-op (well-sized now)
-        rep2 = pq_compact_index(
-            spark, path, target_rows_per_file=10_000_000
+        rep2 = index.open(spark, path).compact(
+            target_rows_per_file=10_000_000
         )
         assert rep2["compacted"] is False
 
     def test_compact_noop_when_well_sized(self, corpus, model, tmp_path):
-        from astro_vectordb_spark.sources.vault import (
-            pq_compact_index,
-            save_pq_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_pq_index
 
         df, _ = corpus
         spark = df.sparkSession
         path = str(tmp_path / "pq_cmp_noop")
         save_pq_index(pq_encode(df.coalesce(1), model), model, path)
-        rep = pq_compact_index(spark, path, target_rows_per_file=10_000_000)
+        rep = index.open(spark, path).compact(target_rows_per_file=10_000_000)
         assert rep["compacted"] is False
 
 

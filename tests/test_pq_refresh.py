@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.operators.pq import (
     ivf_pq_build,
     ivf_pq_topk,
@@ -19,12 +20,8 @@ from astro_vectordb_spark.operators.pq import (
 )
 from astro_vectordb_spark.sources.vault import (
     _batch_already_committed,
-    ivf_pq_append_to_index,
-    ivf_pq_refresh_index,
     load_ivf_pq_index,
     load_pq_index,
-    pq_append_to_index,
-    pq_refresh_index,
     save_ivf_pq_index,
     save_pq_index,
 )
@@ -102,7 +99,7 @@ class TestPqRefresh:
                          seed=7)
         path = str(tmp_path / name)
         save_pq_index(pq_encode(dfa, model), model, path)
-        rep = pq_append_to_index(spark, path, dfb, batch_id=5)
+        rep = index.open(spark, path).append(dfb, batch_id=5)
         return path, model, rep
 
     def test_refresh_equals_fresh_build(self, spark, corpora, tmp_path):
@@ -112,8 +109,8 @@ class TestPqRefresh:
         vector rewrite a fresh build pays."""
         dfa, dfb, both, A, B = corpora
         path, _, _ = self._drifted_index(spark, corpora, tmp_path, "pq_eq")
-        rep = pq_refresh_index(spark, path, both, max_rows=N + N_DRIFT,
-                               seed=7)
+        rep = index.open(spark, path).refresh(both, max_rows=N + N_DRIFT,
+                                              seed=7)
         assert rep["reencoded_rows"] == N + N_DRIFT
         fresh_model = pq_train(both, m=8, ks=16, metric="cosine",
                                max_rows=N + N_DRIFT, seed=7)
@@ -144,7 +141,7 @@ class TestPqRefresh:
                                                "pq_drift")
         assert rep["batch_mse"] > 2.0 * model.train_mse  # the signal
         before = _recall(spark, path, both, A, B)
-        out = pq_refresh_index(spark, path, both, seed=7)
+        out = index.open(spark, path).refresh(both, seed=7)
         assert out["train_mse_before"] == pytest.approx(model.train_mse)
         # the refit accommodates the drifted rows: baseline well under
         # the stale codebooks' error on them
@@ -158,20 +155,20 @@ class TestPqRefresh:
         path, _, _ = self._drifted_index(spark, corpora, tmp_path,
                                          "pq_cov")
         with pytest.raises(ValueError, match="covers"):
-            pq_refresh_index(spark, path, dfa)  # missing the appended B
+            index.open(spark, path).refresh(dfa)  # missing the appended B
 
     def test_replay_log_preserved(self, spark, corpora, tmp_path):
         dfa, dfb, both, _, _ = corpora
         path, _, _ = self._drifted_index(spark, corpora, tmp_path,
                                          "pq_replay")
-        pq_refresh_index(spark, path, both, seed=7)
+        index.open(spark, path).refresh(both, seed=7)
         # the pre-refresh batch still dedups...
-        rep = pq_append_to_index(spark, path, dfb, batch_id=5)
+        rep = index.open(spark, path).append(dfb, batch_id=5)
         assert rep["skipped_replay"]
         assert _batch_already_committed(spark, path, 5, op="pq_append")
         # ...and appends keep flowing after the refresh
         extra = _df(spark, _clustered(seed=9, n=10), start_id=20_000)
-        rep2 = pq_append_to_index(spark, path, extra, batch_id=6)
+        rep2 = index.open(spark, path).append(extra, batch_id=6)
         assert rep2["appended_rows"] == 10
 
     def test_crash_between_swaps_heals_on_rerun(self, spark, corpora,
@@ -190,9 +187,9 @@ class TestPqRefresh:
 
         monkeypatch.setattr(v, "_write_codebooks", boom)
         with pytest.raises(RuntimeError, match="injected"):
-            v.pq_refresh_index(spark, path, both, seed=7)
+            index.open(spark, path).refresh(both, seed=7)
         monkeypatch.undo()
-        out = pq_refresh_index(spark, path, both, seed=7)
+        out = index.open(spark, path).refresh(both, seed=7)
         assert out["reencoded_rows"] == N + N_DRIFT
         fresh_model = pq_train(both, m=8, ks=16, metric="cosine",
                                seed=7)
@@ -209,8 +206,8 @@ class TestPqRefresh:
                        seed=7, opq_iters=4)
         path = str(tmp_path / "pq_opq")
         save_pq_index(pq_encode(dfa, opq), opq, path)
-        pq_append_to_index(spark, path, dfb, batch_id=1)
-        out = pq_refresh_index(spark, path, both, seed=7)
+        index.open(spark, path).append(dfb, batch_id=1)
+        out = index.open(spark, path).refresh(both, seed=7)
         assert out["rotation"] is True
         _, got, _ = load_pq_index(spark, path)
         assert got.rotation is not None and got.train_mse is not None
@@ -226,7 +223,7 @@ class TestIvfPqRefresh:
         )
         path = str(tmp_path / name)
         save_ivf_pq_index(encoded, centroids, model, path)
-        rep = ivf_pq_append_to_index(spark, path, dfb, batch_id=3)
+        rep = index.open(spark, path).append(dfb, batch_id=3)
         return path, model, rep
 
     def _cells(self, spark, path):
@@ -243,7 +240,7 @@ class TestIvfPqRefresh:
                                        "ivfpq_raw", residual=False)
         assert rep["batch_mse"] > 2.0 * model.train_mse
         cells_before = self._cells(spark, path)
-        out = ivf_pq_refresh_index(spark, path, both, seed=7)
+        out = index.open(spark, path).refresh(both, seed=7)
         assert out["reencoded_rows"] == N + N_DRIFT
         assert out["train_mse_after"] < rep["batch_mse"] / 2.0
         # centroids + every row's cell assignment are untouched — the
@@ -277,7 +274,7 @@ class TestIvfPqRefresh:
         assert rep["batch_mse"] is not None
         assert rep["batch_mse"] > 2.0 * model.train_mse
         cells_before = self._cells(spark, path)
-        out = ivf_pq_refresh_index(spark, path, both, seed=7)
+        out = index.open(spark, path).refresh(both, seed=7)
         assert out["residual"] is True and out["rotation"] is True
         assert out["train_mse_after"] < rep["batch_mse"] / 2.0
         assert self._cells(spark, path) == cells_before

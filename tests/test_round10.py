@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.operators.topk import topk_search
 from astro_vectordb_spark.search import search, search_batch
 
@@ -184,8 +185,6 @@ class TestMetaNRows:
     ):
         from astro_vectordb_spark.operators.ann import ivf_build
         from astro_vectordb_spark.sources.vault import (
-            ivf_append_to_index,
-            ivf_remove_from_index,
             load_ivf_index,
             save_ivf_index,
         )
@@ -197,20 +196,18 @@ class TestMetaNRows:
         save_ivf_index(assigned, cents, path)
         assert load_ivf_index(spark, path)[3]["n_rows"] == 500
 
-        ivf_append_to_index(
-            spark, path, df.filter(F.col("vec_id") >= 500)
+        index.open(spark, path).append(
+            df.filter(F.col("vec_id") >= 500)
         )
         assert load_ivf_index(spark, path)[3]["n_rows"] == N
 
-        ivf_remove_from_index(spark, path, list(range(0, N, 10)))
+        index.open(spark, path).remove(list(range(0, N, 10)))
         assert load_ivf_index(spark, path)[3]["n_rows"] == N - N // 10
 
     def test_pq_counter_and_spill_distinctness(self, spark, corpus, tmp_path):
         from astro_vectordb_spark.operators.pq import pq_encode, pq_train
         from astro_vectordb_spark.sources.vault import (
             load_pq_index,
-            pq_append_to_index,
-            pq_remove_from_index,
             save_pq_index,
         )
 
@@ -221,14 +218,14 @@ class TestMetaNRows:
         save_pq_index(pq_encode(base, model), model, path)
         assert load_pq_index(spark, path)[2]["n_rows"] == 550
 
-        rep = pq_append_to_index(
-            spark, path, df.filter(F.col("vec_id") >= 540)
+        rep = index.open(spark, path).append(
+            df.filter(F.col("vec_id") >= 540)
         )
         # dedup_ids: the 10 overlapping ids are skipped, counter exact
         assert rep["appended_rows"] == N - 550
         assert load_pq_index(spark, path)[2]["n_rows"] == N
 
-        pq_remove_from_index(spark, path, [1, 2, 3, 999_999])
+        index.open(spark, path).remove([1, 2, 3, 999_999])
         # the phantom id removes nothing; counter drops by 3
         assert load_pq_index(spark, path)[2]["n_rows"] == N - 3
 
@@ -240,7 +237,6 @@ class TestMetaNRows:
         # decrement by ids, not by swept rows
         from astro_vectordb_spark.operators.ann import ivf_build_sampled
         from astro_vectordb_spark.sources.vault import (
-            ivf_remove_from_index,
             load_ivf_index,
             save_ivf_index,
         )
@@ -252,7 +248,7 @@ class TestMetaNRows:
         meta = load_ivf_index(spark, path)[3]
         assert meta["n_rows"] == N
 
-        rep = ivf_remove_from_index(spark, path, [0, 1, 2, 3, 4])
+        rep = index.open(spark, path).remove([0, 1, 2, 3, 4])
         assert rep["removed_rows"] == 10  # 2 cells x 5 ids
         assert load_ivf_index(spark, path)[3]["n_rows"] == N - 5
 
@@ -549,10 +545,7 @@ class TestStreamRepairEvery:
             hnsw_query_shards,
             hnsw_shard_health,
         )
-        from astro_vectordb_spark import index
         from astro_vectordb_spark.sources.vault import (
-            hnsw_append_to_index,
-            hnsw_remove_from_index,
             load_hnsw_index,
             save_hnsw_index,
         )
@@ -581,8 +574,8 @@ class TestStreamRepairEvery:
         for kmod in range(5):
             batch = df.filter(F.col("vec_id") % 5 == kmod)
             ids = [r["vec_id"] for r in batch.select("vec_id").collect()]
-            hnsw_remove_from_index(spark, path, ids, mode="sweep")
-            hnsw_append_to_index(spark, path, batch, seed=100 + kmod)
+            index.open(spark, path).remove(ids, mode="sweep")
+            index.open(spark, path).append(batch, seed=100 + kmod)
         graph1, meta1 = load_hnsw_index(spark, path)
         eroded = {
             r["shard_id"]: r["mean_degree"]

@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
+
 
 @pytest.fixture(scope="module")
 def hybrid_paths(spark, tmp_path_factory):
@@ -256,7 +258,6 @@ class TestResidualIvfPq:
         from astro_vectordb_spark.operators.pq import ivf_pq_build
         from astro_vectordb_spark.search import search
         from astro_vectordb_spark.sources.vault import (
-            ivf_pq_append_to_index,
             load_ivf_pq_index,
             save_ivf_pq_index,
         )
@@ -270,8 +271,8 @@ class TestResidualIvfPq:
         save_ivf_pq_index(enc, cents, model, path)
         _, _, loaded, meta = load_ivf_pq_index(spark, path)
         assert loaded.residual and bool(meta["residual"])
-        rep = ivf_pq_append_to_index(
-            spark, path, df.filter(F.col("vec_id") >= 3800), batch_id=0
+        rep = index.open(spark, path).append(
+            df.filter(F.col("vec_id") >= 3800), batch_id=0
         )
         assert rep["appended_rows"] == 200
         # round 15: residual appends report batch_mse in RESIDUAL space

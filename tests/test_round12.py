@@ -24,6 +24,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
+
 
 def _mkdocs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
@@ -91,10 +93,7 @@ class TestPqAppendReportShape:
         self, spark, vecs, tmp_path
     ):
         from astro_vectordb_spark.operators.pq import pq_encode, pq_train
-        from astro_vectordb_spark.sources.vault import (
-            pq_append_to_index,
-            save_pq_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_pq_index
 
         df, rows = vecs
         base = df.filter(F.col("vec_id") < 250)
@@ -102,20 +101,17 @@ class TestPqAppendReportShape:
         path = str(tmp_path / "pq")
         save_pq_index(pq_encode(base, model), model, path)
         new = df.filter(F.col("vec_id") >= 250)
-        rep = pq_append_to_index(spark, path, new, batch_id=7)
+        rep = index.open(spark, path).append(new, batch_id=7)
         assert rep["appended_rows"] == 50
         assert rep["skipped_replay"] is False
-        replay = pq_append_to_index(spark, path, new, batch_id=7)
+        replay = index.open(spark, path).append(new, batch_id=7)
         assert replay["skipped_replay"] is True
 
     def test_ivf_pq_append_success_reports_not_replayed(
         self, spark, vecs, tmp_path
     ):
         from astro_vectordb_spark.operators.pq import ivf_pq_build
-        from astro_vectordb_spark.sources.vault import (
-            ivf_pq_append_to_index,
-            save_ivf_pq_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_ivf_pq_index
 
         df, rows = vecs
         base = df.filter(F.col("vec_id") < 250)
@@ -125,10 +121,10 @@ class TestPqAppendReportShape:
         path = str(tmp_path / "ivfpq")
         save_ivf_pq_index(enc, cents, model, path)
         new = df.filter(F.col("vec_id") >= 250)
-        rep = ivf_pq_append_to_index(spark, path, new, batch_id=3)
+        rep = index.open(spark, path).append(new, batch_id=3)
         assert rep["appended_rows"] == 50
         assert rep["skipped_replay"] is False
-        replay = ivf_pq_append_to_index(spark, path, new, batch_id=3)
+        replay = index.open(spark, path).append(new, batch_id=3)
         assert replay["skipped_replay"] is True
 
 

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.operators.topk import topk_search
 from astro_vectordb_spark.search import detect_index_kind, search
 
@@ -390,7 +391,6 @@ class TestStorageRemoves:
             ivf_cell_stats,
         )
         from astro_vectordb_spark.sources.vault import (
-            ivf_remove_from_index,
             load_ivf_index,
             save_ivf_index,
         )
@@ -404,7 +404,7 @@ class TestStorageRemoves:
             cell_stats=stats,
         )
         remove_ids = [0, 8, 16, 24, 32]
-        rep = ivf_remove_from_index(spark, path, remove_ids)
+        rep = index.open(spark, path).remove(remove_ids)
         assert rep["removed_rows"] == len(remove_ids)
         assert rep["touched_cells"]
         vec2, _, stats2, _ = load_ivf_index(spark, path)
@@ -419,10 +419,7 @@ class TestStorageRemoves:
 
     def test_ivf_remove_replay_noop(self, spark, corpus, tmp_path):
         from astro_vectordb_spark.operators.ann import ivf_build
-        from astro_vectordb_spark.sources.vault import (
-            ivf_remove_from_index,
-            save_ivf_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_ivf_index
 
         df, _ = corpus
         assigned, cents = ivf_build(df, k_cells=8)
@@ -430,10 +427,10 @@ class TestStorageRemoves:
         save_ivf_index(
             assigned.select("vec_id", "embedding", "cell_id"), cents, path
         )
-        assert ivf_remove_from_index(spark, path, [1, 2], batch_id=5)[
+        assert index.open(spark, path).remove([1, 2], batch_id=5)[
             "removed_rows"
         ] == 2
-        rep = ivf_remove_from_index(spark, path, [1, 2], batch_id=5)
+        rep = index.open(spark, path).remove([1, 2], batch_id=5)
         assert rep.get("skipped_replay")
 
     def test_hnsw_remove_rebuilds_touched_shards(self, spark, corpus, tmp_path):
@@ -442,7 +439,6 @@ class TestStorageRemoves:
             hnsw_query_shards,
         )
         from astro_vectordb_spark.sources.vault import (
-            hnsw_remove_from_index,
             load_hnsw_index,
             save_hnsw_index,
         )
@@ -454,7 +450,7 @@ class TestStorageRemoves:
         # remove the exact top-3 neighbors of query 17
         exact = _exact_ids(df, [float(x) for x in pts[17]])
         remove_ids = exact[:3]
-        rep = hnsw_remove_from_index(spark, path, remove_ids)
+        rep = index.open(spark, path).remove(remove_ids)
         assert rep["removed_rows"] == len(remove_ids)
         g2, meta2 = load_hnsw_index(spark, path)
         assert g2.filter(g2.vec_id.isin(remove_ids)).count() == 0
@@ -485,7 +481,6 @@ class TestStorageRemoves:
 
         from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
         from astro_vectordb_spark.sources.vault import (
-            hnsw_remove_from_index,
             load_hnsw_index,
             save_hnsw_index,
         )
@@ -502,7 +497,7 @@ class TestStorageRemoves:
         shard0_ids = [
             r["vec_id"] for r in g0.filter("shard_id = 0").collect()
         ]
-        rep = hnsw_remove_from_index(spark, spark_path, shard0_ids)
+        rep = index.open(spark, spark_path).remove(shard0_ids)
         assert rep["emptied_shards"] == [0]
         g2, meta2 = load_hnsw_index(spark, spark_path)
         assert g2.filter("shard_id = 0").count() == 0
@@ -569,10 +564,7 @@ class TestHnswRemoveModes:
         return df, pts, path
 
     def test_auto_sweeps_small_rebuilds_large(self, spark, tmp_path):
-        from astro_vectordb_spark.sources.vault import (
-            hnsw_remove_from_index,
-            load_hnsw_index,
-        )
+        from astro_vectordb_spark.sources.vault import load_hnsw_index
 
         df, pts, path = self._index(spark, tmp_path, "modes")
         g0, _ = load_hnsw_index(spark, path)
@@ -584,7 +576,7 @@ class TestHnswRemoveModes:
         # small removal from shard A (sweep), >20% of shard B (rebuild)
         small = sorted(by_shard[0])[:3]
         big = sorted(by_shard[1])[: int(0.5 * len(by_shard[1]))]
-        rep = hnsw_remove_from_index(spark, path, small + big)
+        rep = index.open(spark, path).remove(small + big)
         assert rep["swept_shards"] == [0]
         assert rep["rebuilt_shards"] == [1]
         assert rep["removed_rows"] == len(small) + len(big)
@@ -592,21 +584,16 @@ class TestHnswRemoveModes:
         assert g2.filter(g2.vec_id.isin(small + big)).count() == 0
 
     def test_forced_rebuild_mode(self, spark, tmp_path):
-        from astro_vectordb_spark.sources.vault import hnsw_remove_from_index
-
         _, _, path = self._index(spark, tmp_path, "forced")
-        rep = hnsw_remove_from_index(spark, path, [1, 2], mode="rebuild")
+        rep = index.open(spark, path).remove([1, 2], mode="rebuild")
         assert rep["swept_shards"] == [] and rep["rebuilt_shards"]
 
     def test_quantized_sweep_serves_correctly(self, spark, tmp_path):
         from astro_vectordb_spark.operators.hnsw import hnsw_query_shards
-        from astro_vectordb_spark.sources.vault import (
-            hnsw_remove_from_index,
-            load_hnsw_index,
-        )
+        from astro_vectordb_spark.sources.vault import load_hnsw_index
 
         df, pts, path = self._index(spark, tmp_path, "qsweep", quantize=True)
-        rep = hnsw_remove_from_index(spark, path, [10, 20, 30], mode="sweep")
+        rep = index.open(spark, path).remove([10, 20, 30], mode="sweep")
         assert rep["removed_rows"] == 3 and rep["swept_shards"]
         g2, meta2 = load_hnsw_index(spark, path)
         assert "qvec" in g2.columns  # codes survive the sweep losslessly
@@ -700,14 +687,11 @@ class TestHybridFacade:
             bm25_topk_indexed,
         )
         from astro_vectordb_spark.search import hybrid_search
-        from astro_vectordb_spark.sources.vault import (
-            bm25_remove_from_index,
-            load_bm25_index,
-        )
+        from astro_vectordb_spark.sources.vault import load_bm25_index
 
         docs, vec_path, bm25_path = self._build(spark, tmp_path)
         removed = docs.filter("doc_id in (6, 7)")
-        bm25_remove_from_index(spark, bm25_path, removed)
+        index.open(spark, bm25_path).remove(removed)
         survivors = docs.filter("doc_id not in (6, 7)")
         # the survivor corpus must also drop the removed vectors: use
         # allowed_ids-free plain re-write for the vector side
@@ -1364,8 +1348,6 @@ class TestMaintenanceControlPlane:
         assert {(r.new_id, r.hist_id) for r in got} >= {(100, 0)}
 
     def test_hnsw_append_then_search(self, spark, corpus, hnsw_path):
-        from astro_vectordb_spark import index
-
         idx = index.open(spark, hnsw_path)
         idx.append(self._batch(spark, corpus, 10_000))
         batch = self._batch(spark, corpus, 20_000)
@@ -1382,8 +1364,6 @@ class TestMaintenanceControlPlane:
         assert 20_001 in {r.vec_id for r in hits}
 
     def test_hnsw_sweep_remove_then_search(self, spark, corpus, qv, hnsw_path):
-        from astro_vectordb_spark import index
-
         idx = index.open(spark, hnsw_path)
         idx.remove([1, 2], mode="sweep")
         gone = [r.vec_id for r in search(spark, hnsw_path, qv, 3).collect()]
@@ -1399,7 +1379,6 @@ class TestMaintenanceControlPlane:
         assert len(hits) == 10 and not set(gone) & {r.vec_id for r in hits}
 
     def test_two_shard_append_and_update(self, spark, corpus, tmp_path):
-        from astro_vectordb_spark import index
         from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
         from astro_vectordb_spark.sources.vault import (
             load_hnsw_index,
@@ -1468,12 +1447,8 @@ class TestMaintenanceControlPlane:
                                                     tmp_path):
         import os
 
-        from astro_vectordb_spark import index
         from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
-        from astro_vectordb_spark.sources.vault import (
-            hnsw_rebalance,
-            save_hnsw_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_hnsw_index
 
         df, _ = corpus
         p = str(tmp_path / "hnsw4")
@@ -1492,21 +1467,125 @@ class TestMaintenanceControlPlane:
         assert len(touched) >= 2, touched
         rep = idx.remove([1, 2, 3, 4, 5, 6, 7, 8], mode="sweep")
         assert len(rep["swept_shards"]) >= 2, rep
-        split = hnsw_rebalance(
-            spark, p, target_rows_per_shard=N // 8, skew_threshold=1.0
+        split = index.open(spark, p).rebalance(
+            target_rows_per_shard=N // 8, skew_threshold=1.0
         )
         assert len(split) == 4 and all(len(v) >= 2 for v in split.values())
         files = parquet_files()
         assert len(files) > 4 and set(files.values()) == {1}, files
 
     def test_empty_append_touches_nothing(self, spark, hnsw_path):
-        from astro_vectordb_spark import index
         from astro_vectordb_spark.sources.vault import _listing
 
         before = _listing(spark, hnsw_path + "/graph")
         empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
         assert index.open(spark, hnsw_path).append(empty) == []
         assert _listing(spark, hnsw_path + "/graph") == before
+
+    @pytest.fixture(scope="class")
+    def kind_paths(self, spark, corpus, tmp_path_factory):
+        """One IVF (with cell stats), PQ, IVF-PQ and BM25 index each:
+        the kinds whose maintenance the perfbench churn does not run."""
+        from astro_vectordb_spark.operators.ann import (
+            ivf_build,
+            ivf_cell_stats,
+        )
+        from astro_vectordb_spark.operators.keyword import bm25_term_stats
+        from astro_vectordb_spark.operators.pq import (
+            ivf_pq_build,
+            pq_encode,
+            pq_train,
+        )
+        from astro_vectordb_spark.sources.vault import (
+            save_bm25_index,
+            save_ivf_index,
+            save_ivf_pq_index,
+            save_pq_index,
+        )
+
+        df, _ = corpus
+        root = tmp_path_factory.mktemp("maint_kinds")
+        paths = {k: str(root / k) for k in ("ivf", "pq", "ivf_pq", "bm25")}
+        assigned, cents = ivf_build(df, k_cells=4)
+        save_ivf_index(assigned, cents, paths["ivf"],
+                       cell_stats=ivf_cell_stats(assigned, cents))
+        model = pq_train(df, m=8, ks=16, max_rows=N, seed=3)
+        save_pq_index(pq_encode(df, model), model, paths["pq"])
+        enc, c2, m2 = ivf_pq_build(df, k_cells=4, m=8, ks=16, max_rows=N,
+                                   seed=3)
+        save_ivf_pq_index(enc, c2, m2, paths["ivf_pq"])
+        ts, cs = bm25_term_stats(
+            spark.createDataFrame(_DOCS, "doc_id long, text string"))
+        save_bm25_index(ts, cs, paths["bm25"])
+        return paths
+
+    @staticmethod
+    def _local_batch(spark, corpus, kind, first_id, n=4):
+        from astro_vectordb_spark.session import local_frame
+
+        if kind == "bm25":
+            return local_frame(
+                spark, [(first_id + i, _DOCS[i][1]) for i in range(n)],
+                "doc_id long, text string",
+            )
+        _, pts = corpus
+        return local_frame(
+            spark,
+            [(first_id + i, [float(x) + 1e-3 for x in pts[(7 * i) % N]])
+             for i in range(n)],
+            "vec_id long, embedding array<float>",
+        )
+
+    # Jobs of a warm call on the kinds perfbench does not measure,
+    # counted before the kind objects replaced the per-kind vault
+    # functions; each pin is that count.  IVF's append keeps no replay
+    # log, so it takes no batch_id.
+    @pytest.mark.parametrize("kind,op,bound", [
+        ("ivf", "append", 18), ("ivf", "remove", 26),
+        ("pq", "append", 22), ("pq", "remove", 24),
+        ("ivf_pq", "append", 32), ("ivf_pq", "remove", 24),
+        ("bm25", "append", 22), ("bm25", "remove", 31),
+    ])
+    def test_kind_write_job_pins(self, spark, corpus, kind_paths, kind, op,
+                                 bound):
+        idx = index.open(spark, kind_paths[kind])
+        logged = kind != "ivf"
+        if op == "append":
+            calls = [(self._local_batch(spark, corpus, kind, first), bid)
+                     for first, bid in ((40_000, 1), (50_000, 2))]
+            run = idx.append
+        else:
+            # BM25 removes the docs it indexed (the statistics need the
+            # text); the vector kinds remove stored ids
+            calls = [
+                (self._local_batch(spark, corpus, kind, first, n=2)
+                 if kind == "bm25" else [first, first + 1], bid)
+                for first, bid in ((0, 3), (2, 4))
+            ]
+            run = idx.remove
+        kws = [{"batch_id": bid} if logged else {} for _, bid in calls]
+        run(calls[0][0], **kws[0])
+        rep = []
+        n = self._jobs(spark, f"{kind}-{op}",
+                       lambda: rep.append(run(calls[1][0], **kws[1])))
+        assert n <= bound, n
+        if kind == "ivf" and op == "append":
+            assert rep == [None]
+        else:
+            assert not rep[0].get("skipped_replay"), rep
+
+    @pytest.mark.parametrize("rewrite,bound", [(False, 6), (True, 9)])
+    def test_pq_compact_job_pins(self, spark, kind_paths, rewrite, bound):
+        idx = index.open(spark, kind_paths["pq"])
+        # min_file_ratio=0 rewrites every time, into one file
+        kw = ({"target_rows_per_file": 10 * N, "min_file_ratio": 0.0}
+              if rewrite else {})
+        idx.compact(**kw)
+        rep = {}
+        n = self._jobs(spark, f"pq-compact-{rewrite}",
+                       lambda: rep.update(idx.compact(**kw)))
+        assert n <= bound, n
+        assert rep["compacted"] is rewrite
 
 
 class TestControlMemoStaleness:
@@ -1684,8 +1763,6 @@ class TestControlMemoStaleness:
         from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
         from astro_vectordb_spark.sources.vault import (
             _listing,
-            hnsw_rebalance,
-            hnsw_remove_from_index,
             load_hnsw_index,
             save_hnsw_index,
         )
@@ -1695,15 +1772,15 @@ class TestControlMemoStaleness:
         save_hnsw_index(hnsw_build_shards(df, num_shards=1), p, m=16)
         meta_files = _listing(spark, p + "/_meta")
         assert load_hnsw_index(spark, p)[1]["shard_ids"] == [0]
-        split = hnsw_rebalance(
-            spark, p, target_rows_per_shard=N // 3, skew_threshold=1.0
+        split = index.open(spark, p).rebalance(
+            target_rows_per_shard=N // 3, skew_threshold=1.0
         )
         assert split == {0: [0, 1, 2]}
         graph, meta = load_hnsw_index(spark, p)
         assert meta["shard_ids"] == [0, 1, 2]
         gone = [r.vec_id for r in graph.filter(F.col("shard_id") == 2)
                 .select("vec_id").collect()]
-        rep = hnsw_remove_from_index(spark, p, gone)
+        rep = index.open(spark, p).remove(gone)
         assert rep["emptied_shards"] == [2]
         graph, meta = load_hnsw_index(spark, p)
         assert meta["shard_ids"] == [0, 1]
@@ -1714,7 +1791,6 @@ class TestControlMemoStaleness:
     def test_graph_writes_seed_the_schema_a_read_infers(
         self, spark, corpus, qv, tmp_path, quantize
     ):
-        from astro_vectordb_spark import index
         from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
         from astro_vectordb_spark.sources.vault import (
             load_hnsw_index,

@@ -190,7 +190,7 @@ class TestAppendRemove:
 
 class TestDriftAndRefresh:
     """Round-14 verdict item 2: append-time drift telemetry (the
-    pq_append_to_index batch-MSE pattern) + the staged-swap retrain
+    PQ appends' batch-MSE pattern) + the staged-swap retrain
     face."""
 
     def test_save_persists_baseline_and_append_reports_drift(

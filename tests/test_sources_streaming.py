@@ -8,6 +8,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark import index
 from astro_vectordb_spark.sources.vault import (
     compact,
     load_ivf_index,
@@ -349,7 +350,6 @@ def test_stream_index_ingest_live_hnsw(spark, embeddings, tmp_path,
     """Streaming vectors land in the persisted sharded HNSW index and
     become searchable — the reference's live addPoint loop, one
     micro-batch at a time, touched shards only."""
-    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.hnsw import (
         hnsw_build_shards,
         hnsw_query_shards,
@@ -404,7 +404,6 @@ def test_ivf_append_to_index_storage_level(spark, embeddings, tmp_path):
     )
     from astro_vectordb_spark.operators.topk import topk_search
     from astro_vectordb_spark.sources.vault import (
-        ivf_append_to_index,
         load_ivf_index,
         save_ivf_index,
     )
@@ -422,7 +421,7 @@ def test_ivf_append_to_index_storage_level(spark, embeddings, tmp_path):
         for d in os.listdir(os.path.join(p, "vectors"))
         if d.startswith("cell_id=")
     }
-    ivf_append_to_index(spark, p, new)
+    index.open(spark, p).append(new)
     # pre-existing files all still present (append adds, never rewrites)
     for d, before in files_before.items():
         now = set(glob.glob(os.path.join(p, "vectors", d, "*.parquet")))
@@ -475,7 +474,6 @@ def test_hnsw_meta_on_scheme_qualified_uri(spark, embeddings, tmp_path):
     os.listdir-based lister fails this with FileNotFoundError."""
     from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
     from astro_vectordb_spark.sources.vault import (
-        hnsw_append_to_index,
         load_hnsw_index,
         save_hnsw_index,
     )
@@ -493,7 +491,7 @@ def test_hnsw_meta_on_scheme_qualified_uri(spark, embeddings, tmp_path):
     n_before = g.count()
 
     new = embeddings.filter(F.col("vec_id") == 201).select("vec_id", "embedding")
-    touched = hnsw_append_to_index(spark, uri, new)
+    touched = index.open(spark, uri).append(new)
     assert len(touched) == 1
     g2, meta2 = load_hnsw_index(spark, uri)
     assert meta2["cache_token"] != tok1
@@ -595,7 +593,6 @@ def test_stream_pq_ingest_live_index(spark, tmp_path, parquet_stream):
     the persisted index, encoded under the frozen codebooks."""
     import numpy as np
 
-    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.pq import pq_encode, pq_train
     from astro_vectordb_spark.sources.vault import save_pq_index
 
@@ -634,7 +631,6 @@ def test_stream_pq_ingest_live_index(spark, tmp_path, parquet_stream):
 def test_stream_bm25_ingest_merges_stats(spark, tmp_path, parquet_stream):
     """foreachBatch BM25 ingest: streamed docs merge into the persisted
     term/corpus statistics via versioned commits."""
-    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.keyword import bm25_term_stats
     from astro_vectordb_spark.sources.vault import (
         load_bm25_index,
@@ -723,7 +719,6 @@ class TestMultiTableCommit:
         # append is visible, its batch_id is too — replay is a no-op
         from astro_vectordb_spark.operators.keyword import bm25_term_stats
         from astro_vectordb_spark.sources.vault import (
-            bm25_append_to_index,
             load_bm25_index,
             save_bm25_index,
         )
@@ -736,10 +731,10 @@ class TestMultiTableCommit:
         ts, cs = bm25_term_stats(docs.filter("doc_id < 5"))
         save_bm25_index(ts, cs, path)
         new = docs.filter("doc_id >= 5")
-        assert bm25_append_to_index(spark, path, new, batch_id=42)[
+        assert index.open(spark, path).append(new, batch_id=42)[
             "appended_docs"
         ] == 5
-        rep = bm25_append_to_index(spark, path, new, batch_id=42)
+        rep = index.open(spark, path).append(new, batch_id=42)
         assert rep.get("skipped_replay")
         _, cs2 = load_bm25_index(spark, path)
         assert cs2.first()["n"] == 10  # no double count
@@ -760,7 +755,6 @@ def test_stream_pq_remove_deletes_ids(spark, tmp_path, parquet_stream):
     from the persisted codes table (touched-files-only rewrite)."""
     import numpy as np
 
-    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.pq import pq_encode, pq_train
     from astro_vectordb_spark.sources.vault import save_pq_index
 
@@ -795,7 +789,6 @@ def test_pq_remove_batch_auto_compacts(spark, tmp_path):
     (delete traffic otherwise grows the file count without bound)."""
     import numpy as np
 
-    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.pq import pq_encode, pq_train
     from astro_vectordb_spark.sources.vault import save_pq_index
     from astro_vectordb_spark.streaming.upsert import micro_batch
@@ -835,7 +828,6 @@ def test_stream_hnsw_remove_deletes_ids(spark, tmp_path, parquet_stream):
     index is safe because the replay log is namespaced per op."""
     import numpy as np
 
-    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
     from astro_vectordb_spark.sources.vault import save_hnsw_index
 
@@ -867,7 +859,6 @@ def test_stream_ivf_remove_deletes_ids(spark, tmp_path, parquet_stream):
     cell-partitioned vectors table; touched cells' stats recompute."""
     import numpy as np
 
-    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.ann import ivf_build, ivf_cell_stats
     from astro_vectordb_spark.sources.vault import save_ivf_index
 
@@ -898,7 +889,7 @@ def test_stream_ivf_remove_deletes_ids(spark, tmp_path, parquet_stream):
 
 
 class TestBM25Remove:
-    """bm25_remove_from_index: the lexical index's delete face —
+    """BM25 ``index.open(...).remove``: the lexical index's delete —
     exact statistic decrements, op-namespaced replay log."""
 
     def _docs(self, spark):
@@ -910,7 +901,6 @@ class TestBM25Remove:
     def test_remove_equals_rebuild_on_survivors(self, spark, tmp_path):
         from astro_vectordb_spark.operators.keyword import bm25_term_stats
         from astro_vectordb_spark.sources.vault import (
-            bm25_remove_from_index,
             load_bm25_index,
             save_bm25_index,
         )
@@ -921,7 +911,7 @@ class TestBM25Remove:
         save_bm25_index(ts, cs, path)
 
         removed = docs.filter("doc_id >= 8")  # 2 'beta delta' + the unique doc
-        rep = bm25_remove_from_index(spark, path, removed)
+        rep = index.open(spark, path).remove(removed)
         assert rep["removed_docs"] == 3
 
         ts2, cs2 = load_bm25_index(spark, path)
@@ -939,10 +929,7 @@ class TestBM25Remove:
         import pytest as _pytest
 
         from astro_vectordb_spark.operators.keyword import bm25_term_stats
-        from astro_vectordb_spark.sources.vault import (
-            bm25_remove_from_index,
-            save_bm25_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_bm25_index
 
         docs = self._docs(spark)
         path = str(tmp_path / "bm25_rm_strict")
@@ -952,7 +939,7 @@ class TestBM25Remove:
             [(99, "omicron sigma")], "doc_id long, text string"
         )
         with _pytest.raises(ValueError, match="negative"):
-            bm25_remove_from_index(spark, path, alien)
+            index.open(spark, path).remove(alien)
 
     def test_ingest_and_remove_batches_do_not_mask(self, spark, tmp_path):
         # an ingest stream and a remove stream each number micro-batches
@@ -961,8 +948,6 @@ class TestBM25Remove:
         # stays a no-op
         from astro_vectordb_spark.operators.keyword import bm25_term_stats
         from astro_vectordb_spark.sources.vault import (
-            bm25_append_to_index,
-            bm25_remove_from_index,
             load_bm25_index,
             save_bm25_index,
         )
@@ -973,20 +958,20 @@ class TestBM25Remove:
         save_bm25_index(ts, cs, path)
 
         new = docs.filter("doc_id >= 6 and doc_id < 10")
-        assert bm25_append_to_index(spark, path, new, batch_id=0)[
+        assert index.open(spark, path).append(new, batch_id=0)[
             "appended_docs"
         ] == 4
         # remove stream's batch 0 must EXECUTE despite append batch 0
-        rep = bm25_remove_from_index(
-            spark, path, docs.filter("doc_id in (8, 9)"), batch_id=0
+        rep = index.open(spark, path).remove(
+            docs.filter("doc_id in (8, 9)"), batch_id=0
         )
         assert rep["removed_docs"] == 2 and not rep.get("skipped_replay")
         # each op's own redelivery is a no-op
-        assert bm25_append_to_index(spark, path, new, batch_id=0).get(
+        assert index.open(spark, path).append(new, batch_id=0).get(
             "skipped_replay"
         )
-        assert bm25_remove_from_index(
-            spark, path, docs.filter("doc_id in (8, 9)"), batch_id=0
+        assert index.open(spark, path).remove(
+            docs.filter("doc_id in (8, 9)"), batch_id=0
         ).get("skipped_replay")
         _, cs2 = load_bm25_index(spark, path)
         assert cs2.first()["n"] == 8  # 6 + 4 - 2, applied exactly once each
@@ -997,11 +982,7 @@ class TestBM25Remove:
         import os as _os
 
         from astro_vectordb_spark.operators.keyword import bm25_term_stats
-        from astro_vectordb_spark.sources.vault import (
-            bm25_append_to_index,
-            bm25_remove_from_index,
-            save_bm25_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_bm25_index
         from astro_vectordb_spark.sources.versioned import (
             commit_version_multi,
         )
@@ -1018,18 +999,17 @@ class TestBM25Remove:
         new = spark.createDataFrame(
             [(50, "alpha")], "doc_id long, text string"
         )
-        assert bm25_append_to_index(spark, path, new, batch_id=5).get(
+        assert index.open(spark, path).append(new, batch_id=5).get(
             "skipped_replay"
         )
-        assert bm25_remove_from_index(
-            spark, path, docs.filter("doc_id = 0"), batch_id=5
+        assert index.open(spark, path).remove(
+            docs.filter("doc_id = 0"), batch_id=5
         ).get("skipped_replay")
 
 
 def test_stream_bm25_remove_subtracts_stats(spark, tmp_path, parquet_stream):
     """foreachBatch BM25 delete: streamed (doc_id, text) rows subtract
     from the persisted term/corpus statistics — the erasure stream."""
-    from astro_vectordb_spark import index
     from astro_vectordb_spark.operators.keyword import bm25_term_stats
     from astro_vectordb_spark.sources.vault import (
         load_bm25_index,

@@ -5,11 +5,11 @@
   micro-batches from 0, so batch_id alone collides — the remove's batch
   N was silently skipped because the INGEST had recorded N (dropping a
   GDPR erasure), and the reverse masked appends.
-- ``pq_compact_index`` / the IVF ``cell_stats`` merges replace live
+- PQ ``compact()`` / the IVF ``cell_stats`` merges replace live
   directories via a staged write + two renames (``_replace_dir``)
   instead of an in-place ``mode('overwrite')`` that clears files before
   the new write commits.
-- ``hnsw_remove_from_index``'s sweep path force-rebuilds when the
+- the HNSW ``remove()`` sweep path force-rebuilds when the
   remove-id set exceeds a closure-safe size instead of collecting it
   unbounded to the driver.
 - ``load_bm25_index`` falls back to the legacy (pre-multi-commit)
@@ -23,6 +23,8 @@ import os
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from astro_vectordb_spark import index
 
 N, DIM = 400, 16
 
@@ -53,19 +55,15 @@ class TestReplayLogNamespacing:
     def test_remove_not_masked_by_append_batch_id(self, spark, vecs, tmp_path):
         """The r8 bug: ingest records batch 0, remove's batch 0 was then
         skipped as a replay and the deletion silently dropped."""
-        from astro_vectordb_spark.sources.vault import (
-            pq_append_to_index,
-            pq_remove_from_index,
-        )
 
         path = str(tmp_path / "pq")
         _mk_pq(spark, vecs.filter(F.col("vec_id") < 300), path)
         extra = vecs.filter(F.col("vec_id") >= 300)
-        rep_a = pq_append_to_index(spark, path, extra, batch_id=0)
+        rep_a = index.open(spark, path).append(extra, batch_id=0)
         assert rep_a["appended_rows"] == 100
 
-        rep_r = pq_remove_from_index(
-            spark, path, list(range(0, 20)), batch_id=0
+        rep_r = index.open(spark, path).remove(
+            list(range(0, 20)), batch_id=0
         )
         assert not rep_r.get("skipped_replay", False)
         assert rep_r["removed_rows"] == 20
@@ -73,10 +71,10 @@ class TestReplayLogNamespacing:
         assert live.filter(F.col("vec_id") < 20).count() == 0
 
         # replays of each op under its OWN namespace stay no-ops
-        assert pq_remove_from_index(
-            spark, path, list(range(0, 20)), batch_id=0
+        assert index.open(spark, path).remove(
+            list(range(0, 20)), batch_id=0
         )["skipped_replay"]
-        assert pq_append_to_index(spark, path, extra, batch_id=0)[
+        assert index.open(spark, path).append(extra, batch_id=0)[
             "skipped_replay"
         ]
 
@@ -149,23 +147,17 @@ class TestReplaceDirSwap:
         assert encoded.count() == N
 
     def test_compact_recovers_then_compacts(self, spark, vecs, tmp_path):
-        from astro_vectordb_spark.sources.vault import (
-            pq_append_to_index,
-            pq_compact_index,
-        )
-
         path = str(tmp_path / "pq4")
         _mk_pq(spark, vecs.filter(F.col("vec_id") < 200), path)
         for i in range(4):  # fragment the codes table
-            pq_append_to_index(
-                spark, path,
+            index.open(spark, path).append(
                 vecs.filter(F.col("vec_id") % 4 == i).filter(
                     F.col("vec_id") >= 200
                 ),
             )
         codes = os.path.join(path, "codes")
         os.rename(codes, codes + ".__swap_old")  # simulated crash state
-        rep = pq_compact_index(spark, path, target_rows_per_file=10_000)
+        rep = index.open(spark, path).compact(target_rows_per_file=10_000)
         assert rep["compacted"]
         live = spark.read.parquet(codes)
         assert live.count() == N
@@ -183,10 +175,7 @@ class TestMetaCrashSafety:
         leave _meta missing, making every subsequent load fail.  Now:
         readers fall back to the retired copy; the next meta-writing op
         repairs the live path."""
-        from astro_vectordb_spark.sources.vault import (
-            load_pq_index,
-            pq_remove_from_index,
-        )
+        from astro_vectordb_spark.sources.vault import load_pq_index
 
         path = str(tmp_path / "pqm")
         _mk_pq(spark, vecs, path)
@@ -194,7 +183,7 @@ class TestMetaCrashSafety:
         os.rename(mp, mp + ".__swap_old")  # simulated mid-swap crash
         _, _, meta = load_pq_index(spark, path)  # still loadable
         assert int(meta["n_rows"]) == N
-        rep = pq_remove_from_index(spark, path, [0, 1], batch_id=0)
+        rep = index.open(spark, path).remove([0, 1], batch_id=0)
         assert rep["removed_rows"] == 2
         assert os.path.exists(mp)  # live path repaired by the update
         assert not os.path.exists(mp + ".__swap_old")
@@ -233,16 +222,13 @@ class TestMetaCrashSafety:
         """pq_append fed a batch carrying each id twice: the duplicate
         rows collapse before encoding, so neither the codes table nor
         the DISTINCT-id n_rows counter inflates."""
-        from astro_vectordb_spark.sources.vault import (
-            load_pq_index,
-            pq_append_to_index,
-        )
+        from astro_vectordb_spark.sources.vault import load_pq_index
 
         path = str(tmp_path / "pqd")
         _mk_pq(spark, vecs.filter(F.col("vec_id") < 300), path)
         extra = vecs.filter(F.col("vec_id") >= 300)
         doubled = extra.unionAll(extra)
-        rep = pq_append_to_index(spark, path, doubled, batch_id=7)
+        rep = index.open(spark, path).append(doubled, batch_id=7)
         assert rep["appended_rows"] == 100
         encoded, _, meta = load_pq_index(spark, path)
         assert int(meta["n_rows"]) == N
@@ -254,7 +240,6 @@ class TestMetaCrashSafety:
     ):
         from astro_vectordb_spark.operators.pq import ivf_pq_build
         from astro_vectordb_spark.sources.vault import (
-            ivf_pq_append_to_index,
             load_ivf_pq_index,
             save_ivf_pq_index,
         )
@@ -266,8 +251,8 @@ class TestMetaCrashSafety:
         )
         save_ivf_pq_index(encoded, centroids, model, path)
         extra = vecs.filter(F.col("vec_id") >= 300)
-        rep = ivf_pq_append_to_index(
-            spark, path, extra.unionAll(extra), batch_id=1
+        rep = index.open(spark, path).append(
+            extra.unionAll(extra), batch_id=1
         )
         assert rep["appended_rows"] == 100
         codes, _, _, meta = load_ivf_pq_index(spark, path)
@@ -279,16 +264,13 @@ class TestMetaCrashSafety:
 class TestHnswSweepGuard:
     def test_oversized_id_set_forces_rebuild(self, spark, vecs, tmp_path):
         from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
-        from astro_vectordb_spark.sources.vault import (
-            hnsw_remove_from_index,
-            save_hnsw_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_hnsw_index
 
         path = str(tmp_path / "hnsw")
         graph = hnsw_build_shards(vecs, num_shards=2, m=8, seed=4)
         save_hnsw_index(graph, path, m=8, metric="cosine")
-        rep = hnsw_remove_from_index(
-            spark, path, [1, 2, 3], mode="sweep", max_sweep_ids=2
+        rep = index.open(spark, path).remove(
+            [1, 2, 3], mode="sweep", max_sweep_ids=2
         )
         assert rep["swept_shards"] == []
         assert rep["rebuilt_shards"]
@@ -310,8 +292,6 @@ class TestHnswChurnHealth:
             hnsw_shard_health,
         )
         from astro_vectordb_spark.sources.vault import (
-            hnsw_append_to_index,
-            hnsw_remove_from_index,
             load_hnsw_index,
             save_hnsw_index,
         )
@@ -341,8 +321,8 @@ class TestHnswChurnHealth:
         for kmod in range(5):
             batch = df.filter(F.col("vec_id") % 5 == kmod)
             ids = [r["vec_id"] for r in batch.select("vec_id").collect()]
-            last_rep = hnsw_remove_from_index(spark, path, ids, mode="sweep")
-            hnsw_append_to_index(spark, path, batch, seed=100 + kmod)
+            last_rep = index.open(spark, path).remove(ids, mode="sweep")
+            index.open(spark, path).append(batch, seed=100 + kmod)
         return df, pts, path, fresh, last_rep
 
     def test_health_reported_and_degrades(self, spark, churned):
@@ -361,10 +341,7 @@ class TestHnswChurnHealth:
             hnsw_shard_health,
         )
         from astro_vectordb_spark.operators.topk import topk_search
-        from astro_vectordb_spark.sources.vault import (
-            hnsw_rebalance,
-            load_hnsw_index,
-        )
+        from astro_vectordb_spark.sources.vault import load_hnsw_index
 
         df, pts, path, fresh, _ = churned
         graph, meta = load_hnsw_index(spark, path)
@@ -379,7 +356,7 @@ class TestHnswChurnHealth:
         flagged = hnsw_shard_health(graph, m=8, min_degree_frac=frac)
         assert all(r["needs_repair"] for r in flagged.collect())
 
-        repaired = hnsw_rebalance(spark, path, min_degree_frac=frac)
+        repaired = index.open(spark, path).rebalance(min_degree_frac=frac)
         assert repaired, "degraded shards must be rebuilt"
         graph2, meta2 = load_hnsw_index(spark, path)
         healed = hnsw_shard_health(graph2, m=8, min_degree_frac=frac)
@@ -405,10 +382,7 @@ class TestHnswChurnHealth:
 
     def test_auto_repair_triggers_rebalance(self, spark, tmp_path):
         from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
-        from astro_vectordb_spark.sources.vault import (
-            hnsw_remove_from_index,
-            save_hnsw_index,
-        )
+        from astro_vectordb_spark.sources.vault import save_hnsw_index
 
         rng = np.random.RandomState(5)
         pts = rng.normal(size=(200, DIM)).astype(np.float32)
@@ -421,8 +395,8 @@ class TestHnswChurnHealth:
         save_hnsw_index(graph, path, m=8, metric="cosine")
         # min_degree_frac=1.0: any realistic shard is "degraded", so the
         # trigger mechanics are observable without deep churn
-        rep = hnsw_remove_from_index(
-            spark, path, [0, 1], mode="sweep",
+        rep = index.open(spark, path).remove(
+            [0, 1], mode="sweep",
             min_degree_frac=1.0, auto_repair=True,
         )
         assert rep["needs_repair"]
@@ -442,10 +416,7 @@ class TestBm25LegacyLayout:
         return ts, cs
 
     def test_legacy_loads_and_first_append_migrates(self, spark, tmp_path):
-        from astro_vectordb_spark.sources.vault import (
-            bm25_append_to_index,
-            load_bm25_index,
-        )
+        from astro_vectordb_spark.sources.vault import load_bm25_index
 
         docs = spark.createDataFrame(
             [(i, f"alpha beta doc {i}") for i in range(20)],
@@ -462,14 +433,14 @@ class TestBm25LegacyLayout:
             [(100 + i, f"gamma doc {i}") for i in range(5)],
             "doc_id long, text string",
         )
-        rep = bm25_append_to_index(spark, path, new, batch_id=1)
+        rep = index.open(spark, path).append(new, batch_id=1)
         assert rep["appended_docs"] == 5
         ts2, cs2 = load_bm25_index(spark, path)
         assert cs2.first()["n"] == 25
         # migrated into the multi-table layout
         assert os.path.exists(os.path.join(path, "stats", "_CURRENT"))
         # replay of the migrating batch is a no-op
-        assert bm25_append_to_index(spark, path, new, batch_id=1)[
+        assert index.open(spark, path).append(new, batch_id=1)[
             "skipped_replay"
         ]
 
@@ -482,10 +453,7 @@ class TestDeterministicDupPick:
         persist the same code regardless of row arrival order (the
         deterministic-replay contract; dropDuplicates kept an
         arbitrary row)."""
-        from astro_vectordb_spark.sources.vault import (
-            load_pq_index,
-            pq_append_to_index,
-        )
+        from astro_vectordb_spark.sources.vault import load_pq_index
 
         e1 = [float(i) / 100 for i in range(DIM)]
         e2 = [float(DIM - i) / 100 for i in range(DIM)]
@@ -497,7 +465,7 @@ class TestDeterministicDupPick:
                 [(9999, order[0]), (9999, order[1])],
                 "vec_id long, embedding array<float>",
             ).repartition(2)
-            pq_append_to_index(spark, path, batch, batch_id=1)
+            index.open(spark, path).append(batch, batch_id=1)
             enc, _, _ = load_pq_index(spark, path)
             rows = enc.filter(F.col("vec_id") == 9999).collect()
             assert len(rows) == 1

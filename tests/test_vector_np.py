@@ -87,3 +87,23 @@ def test_connected_components_warns_on_non_convergence(spark):
         comp = connected_components(pairs, max_iter=10).collect()
         assert not any("did not converge" in str(x.message) for x in w)
     assert {r["component"] for r in comp} == {0}
+
+
+def test_keep_from_pairs_converges_past_twenty_hops(spark):
+    """The default propagation runs until no label changes: a chain
+    0 - 100 - ... - 120 - 1 puts id 1 22 hops from the minimum, past
+    the former 20-round default, and keeps exactly one member."""
+    import warnings
+
+    from astro_vectordb_spark.sources.index_lifecycle import keep_from_pairs
+
+    chain = [0, *range(100, 121), 1]
+    pairs = spark.createDataFrame(
+        list(zip(chain, chain[1:])), "a_id long, b_id long"
+    )
+    universe = spark.createDataFrame([(i,) for i in chain], "doc_id long")
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        keep = keep_from_pairs(universe, pairs, "doc_id").collect()
+        assert not any("did not converge" in str(x.message) for x in w)
+    assert {r["doc_id"] for r in keep} == {0}
