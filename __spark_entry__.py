@@ -343,10 +343,7 @@ def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_scan_parallelism,
     )
 
-    return ensure_scan_parallelism(
-        load_table(spark, sf_dir, "documents"),
-        cache_key=f"{sf_dir}/documents",
-    )
+    return ensure_scan_parallelism(load_table(spark, sf_dir, "documents"))
 
 
 def _q_embedding_near_dup_blocked(spark, sf_dir):

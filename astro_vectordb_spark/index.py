@@ -544,9 +544,13 @@ class _PQ(_Kind):
 
         return pq_encode(rows, model)
 
-    def _append_codes(self, codes: DataFrame, path: str) -> dict:
+    def _count(self, new_rows, assigned, dedup_ids) -> tuple[int, dict]:
+        """-> (rows the append adds, kind report keys)."""
+        return (new_rows.count() if dedup_ids
+                else new_rows.select("vec_id").distinct().count()), {}
+
+    def _append_codes(self, codes: DataFrame, path: str) -> None:
         codes.write.mode("append").parquet(os.path.join(path, "codes"))
-        return {}
 
     def append(self, spark, path, new_rows, batch_id: int | None = None,
                dedup_ids: bool = True) -> dict:
@@ -565,14 +569,14 @@ class _PQ(_Kind):
                 existing.select("vec_id"), on="vec_id", how="left_anti"
             )
         assigned = self._assign(new_rows, centroids, meta)
-        n = (new_rows.count() if dedup_ids
-             else new_rows.select("vec_id").distinct().count())
+        n, counted = self._count(new_rows, assigned, dedup_ids)
         rep = {"appended_rows": n, "batch_mse": None, **self._shape(meta)}
         if n:
             rep["batch_mse"] = self._batch_mse(new_rows, assigned, centroids,
                                                model, meta)
-            rep.update(self._append_codes(
-                self._encode(new_rows, assigned, centroids, model), path))
+            self._append_codes(
+                self._encode(new_rows, assigned, centroids, model), path)
+            rep.update(counted)
             vault._update_meta_n_rows(spark, path, delta=n)
         return {**rep, "skipped_replay": False}
 
@@ -721,14 +725,20 @@ class _IVFPQ(_PQ):
             super()._encode(rows, assigned, centroids, model), on="vec_id"
         )
 
-    def _append_codes(self, codes: DataFrame, path: str) -> dict:
-        touched = sorted(
-            r["cell_id"] for r in codes.select("cell_id").distinct().collect()
-        )
+    def _count(self, new_rows, assigned, dedup_ids) -> tuple[int, dict]:
+        # the touched cells ride the row count's one aggregation over
+        # the cell assignment, so the encode plan runs only in the write
+        row = assigned.agg(
+            (F.count(F.lit(1)) if dedup_ids
+             else F.count_distinct("vec_id")).alias("n"),
+            F.sort_array(F.collect_set("cell_id")).alias("cells"),
+        ).first()
+        return int(row["n"]), {"touched_cells": list(row["cells"])}
+
+    def _append_codes(self, codes: DataFrame, path: str) -> None:
         codes.write.mode("append").partitionBy("cell_id").parquet(
             os.path.join(path, "codes")
         )
-        return {"touched_cells": touched}
 
     def _stored(self, encoded: DataFrame, id_col: str) -> DataFrame:
         # one row per id with its frozen cell (duplicate code rows from

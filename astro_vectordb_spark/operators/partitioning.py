@@ -19,8 +19,9 @@ files):
   round-robin repartition when no id column is given.
 
 The partition-count probe runs no job (plan-to-RDD translation only)
-and is memoized per logical path so repeated reads of the same table
-decide once per session.
+and is memoized per (input files, default parallelism): repeated reads
+of the same table decide once, and a table rewritten at the same path
+lists new part files, so it is probed again.
 """
 
 from __future__ import annotations
@@ -28,44 +29,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# (path-or-key, parallelism) -> scan partition count.
-#
-# STATIC-INPUT ASSUMPTION (documented per round-16 ADVICE): the memo
-# never invalidates, so it is only correct for tables whose file/row-
-# group layout is fixed for the session — the driver-provided testdata
-# parquets the entry module keys it on.  A table REWRITTEN in-session
-# at the same path would keep the stale count and could mis-decide the
-# repartition (a perf-only risk, never correctness: both branches
-# compute the same rows).  Callers with mutable tables should pass
-# cache_key=None (probe every call) or key on a layout fingerprint.
-_SCAN_PARTS_CACHE: dict[tuple[str, int], int] = {}
+from astro_vectordb_spark.sources.vault import BoundedMemo
+
+# (sorted input files, default parallelism) -> scan partition count.
+# ``inputFiles()`` lists the relation's files without a job; part-file
+# names change on every rewrite, so an entry is never served for a
+# layout it was not probed on.
+_SCAN_PARTS_CACHE = BoundedMemo(cap=64)
 
 
-def scan_partitions(df: DataFrame, cache_key: str | None = None) -> int:
-    """Physical partition count of ``df``'s scan (no job runs)."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if cache_key is not None:
-        hit = _SCAN_PARTS_CACHE.get((cache_key, par))
-        if hit is not None:
-            return hit
-    n = df.rdd.getNumPartitions()
-    if cache_key is not None:
-        _SCAN_PARTS_CACHE[(cache_key, par)] = n
-    return n
+def scan_partitions(df: DataFrame) -> int:
+    """Physical partition count of ``df``'s scan (no job runs).  The
+    memo assumes ``df`` is the read itself (projections and filters
+    keep its split count; a repartition above it would not).  A frame
+    with no input files (a range, a local relation) is probed every
+    call."""
+    files = df.inputFiles()
+    par = df.sparkSession.sparkContext.defaultParallelism
+    key = (tuple(sorted(files)), par) if files else None
+    return _SCAN_PARTS_CACHE.fetch(
+        key, lambda: df.rdd.getNumPartitions(), lambda: key
+    )
 
 
 def ensure_scan_parallelism(
     df: DataFrame,
     id_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Repartition ``df`` up to the session's default parallelism IF
     its scan under-parallelizes (see module docstring); no-op — and no
     plan change — otherwise."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if scan_partitions(df, cache_key=cache_key) >= target:
+    if scan_partitions(df) >= target:
         return df
     if id_col is not None:
         return df.repartition(target, F.col(id_col))

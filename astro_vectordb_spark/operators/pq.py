@@ -12,12 +12,18 @@ for Nearest Neighbor Search"): per query, precompute LUT[j, c] =
 approximate score is ``sum_j LUT[j, code_j]`` — m table lookups, no
 float vector ever read.
 
+One kernel per meaning: every encoder assigns codes through
+``_assign_codes``, every serving path — single-query or batch, flat or
+residual, with or without the OPQ rotation — builds its tables through
+``_adc_tables`` and scores through ``_adc_scores``.
+
 Spark mapping (two-stage, same contract as topk_search_quantized):
 
   1. ADC scan over the COMPACT (id, pq_code) table — an Arrow-batched
-     ``mapInPandas`` kernel (NumPy take + sum over an (m, ks) LUT
-     shipped with the task closure; the codebook itself travels as ONE
-     SparkContext broadcast, never per-task pickled).  Each Arrow batch
+     ``mapInPandas`` kernel (NumPy take + sum over (m, ks) tables the
+     task builds from ONE SparkContext broadcast of model-sized state:
+     codebooks, rotation, the query and, for residual codes, the
+     probed centroids — never per-task pickled).  Each Arrow batch
      emits only its local top ``k*refine`` rows, so the global
      TakeOrdered sees partitions x k*refine rows, not the corpus.
   2. exact re-rank: broadcast the candidate ids into the
@@ -67,8 +73,8 @@ class PQModel:
     vectors, so the same m x ks budget spends its codewords on the
     fine structure), which lets the stage-2 ``refine_factor`` drop —
     the term whose join traffic grows at 100 TB.  Serving builds its
-    ADC LUT per (query, probed cell) against that cell's centroid;
-    see ``_adc_lut_residual``.
+    ADC tables per (query, probed cell) against that cell's centroid;
+    see ``_adc_tables``.
 
     ``rotation`` (OPQ, Ge et al. CVPR 2013 "Optimized Product
     Quantization", non-parametric variant) is an optional (dim, dim)
@@ -108,11 +114,16 @@ class PQModel:
             np.float32(train_mse)
         )
 
-    def _rot64(self) -> np.ndarray | None:
-        """float64 view of the rotation for worker-side math (None when
-        the model is unrotated)."""
-        return None if self.rotation is None else self.rotation.astype(
-            np.float64
+    def kernel_state(self) -> tuple:
+        """``(codebooks, metric, dsub, rotation)`` in float64 (rotation
+        None when unrotated) — the model-sized state every worker-side
+        kernel (encode, LUT build, reconstruction error) unpacks from
+        one broadcast."""
+        return (
+            self.codebooks.astype(np.float64), self.metric, self.dsub,
+            None if self.rotation is None else self.rotation.astype(
+                np.float64
+            ),
         )
 
     # -- persistence (tiny: m * ks * dsub floats; the OPQ rotation
@@ -222,17 +233,128 @@ def _pq_fit(
     )
 
 
+def _assign_codes(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(n, m) nearest-codeword index per subspace of the prepared rows
+    ``X`` against float64 ``codebooks`` (m, ks, dsub) — the one argmin
+    behind the training reconstruction, ``pq_encode`` and the residual
+    encode, so persisted codes come from one float64 expression."""
+    m, _, dsub = codebooks.shape
+    codes = np.empty((X.shape[0], m), dtype=np.int64)
+    for j in range(m):
+        cb = codebooks[j]
+        # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2 ; ||x||^2 constant in argmin
+        d = -2.0 * (X[:, j * dsub : (j + 1) * dsub] @ cb.T) + (cb * cb).sum(
+            axis=1
+        )
+        codes[:, j] = d.argmin(axis=1)
+    return codes
+
+
+def _decode_codes(codes: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(n, dim) reconstruction: each subspace's codeword, concatenated."""
+    return np.concatenate(
+        [codebooks[j][codes[:, j]] for j in range(len(codebooks))], axis=1
+    )
+
+
 def _pq_reconstruct(mat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
     """Encode-then-decode ``mat`` against ``codebooks`` (the OPQ
     alternation's quantized target Y_hat)."""
-    m, _, dsub = codebooks.shape
-    rec = np.empty_like(mat)
-    for j in range(m):
-        cb = codebooks[j]
-        sub = mat[:, j * dsub : (j + 1) * dsub]
-        d = -2.0 * (sub @ cb.T) + (cb * cb).sum(axis=1)
-        rec[:, j * dsub : (j + 1) * dsub] = cb[d.argmin(axis=1)]
-    return rec
+    return _decode_codes(_assign_codes(mat, codebooks), codebooks)
+
+
+def _unpack_codes(col: pd.Series) -> np.ndarray:
+    """Stored ``pq_code`` bytes (code - 128) -> (n, m) codeword indexes."""
+    return np.stack(col.to_numpy()).astype(np.int32) + 128
+
+
+def _centroid_table(centroids: DataFrame) -> tuple[np.ndarray, dict]:
+    """The (k_cells, dim) float64 centroid matrix in cell_id order and
+    its cell_id -> row map (k_cells rows collect to the driver)."""
+    cents = centroids.orderBy("cell_id").collect()
+    return (
+        np.array([r["centroid"] for r in cents], dtype=np.float64),
+        {int(r["cell_id"]): i for i, r in enumerate(cents)},
+    )
+
+
+def _residuals(
+    pdf: pd.DataFrame, vec_col: str, metric: str, C: np.ndarray, pos: dict
+) -> np.ndarray:
+    """prep(v) - centroid[cell_id] per row.  Residuals are never
+    re-normalized: prep applies to the VECTOR (cosine's unit sphere),
+    the residual is a plain difference in that space, so centroid +
+    decode(code) reconstructs v_hat additively."""
+    X = _prep(np.stack(pdf[vec_col].to_numpy()), metric)
+    rows = np.array(
+        [pos[int(c)] for c in pdf["cell_id"].to_numpy()], dtype=np.int64
+    )
+    return X - C[rows]
+
+
+def _adc_tables(
+    codebooks: np.ndarray,
+    metric: str,
+    dsub: int,
+    Q: np.ndarray,
+    rotation: np.ndarray | None = None,
+    centroid: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one ADC LUT builder: ``(luts, consts)`` with luts (nq, m, ks)
+    and consts (nq,) such that score(q, row) = consts[q] + sum_j
+    luts[q, j, code_j] (:func:`_adc_scores`).  ``Q`` holds raw query
+    rows; cosine preps them onto the unit sphere.  cosine/dot score the
+    dot product; euclidean the negated squared distance (monotone in
+    the true euclidean similarity, which stage 2 re-ranks exactly).
+
+    ``centroid`` = one cell of RESIDUAL codes, v_hat = c + r:
+
+    - cosine/dot: q.v_hat = q.c + q.r -> luts[q, j, w] = q_j.w (the
+      flat table), consts = q.c;
+    - euclidean: -||q - c - r||^2 = -||q - c||^2 + 2 (q - c).r - ||r||^2
+      -> luts[q, j, w] = 2 (q - c)_j.w - ||w||^2, consts = -||q - c||^2.
+
+    The constants matter: candidates from different cells compete in
+    one global cut, so scores must be comparable ACROSS cells.  Flat
+    euclidean folds -||q_j||^2 into each subspace's table and keeps
+    consts at 0.  ``rotation`` (OPQ) rotates the queries and the
+    centroid into the codebooks' space; every identity above holds
+    there verbatim (q'.c' = q.c, ||q'-c'|| = ||q-c||)."""
+    Qp = _prep(Q, metric)
+    c = None if centroid is None else np.asarray(centroid, dtype=np.float64)
+    if rotation is not None:
+        Qp = Qp @ rotation
+        c = None if c is None else c @ rotation
+    nq = Qp.shape[0]
+    m, ks, _ = codebooks.shape
+    luts = np.empty((nq, m, ks), dtype=np.float64)
+    if metric in ("cosine", "dot"):
+        for j in range(m):
+            luts[:, j, :] = Qp[:, j * dsub : (j + 1) * dsub] @ codebooks[j].T
+        consts = np.zeros(nq) if c is None else Qp @ c
+    elif metric == "euclidean":
+        QC = Qp if c is None else Qp - c[None, :]
+        for j in range(m):
+            cb = codebooks[j]
+            qs = QC[:, j * dsub : (j + 1) * dsub]
+            luts[:, j, :] = 2.0 * (qs @ cb.T) - (cb * cb).sum(axis=1)[None, :]
+            if c is None:
+                luts[:, j, :] -= (qs * qs).sum(axis=1)[:, None]
+        consts = np.zeros(nq) if c is None else -(QC * QC).sum(axis=1)
+    else:
+        raise ValueError(f"unknown metric: {metric}")
+    return luts, consts
+
+
+def _adc_scores(
+    luts: np.ndarray, consts: np.ndarray, codes: np.ndarray
+) -> np.ndarray:
+    """(nq, n) ADC scores of ``codes`` (n, m): consts[q] + sum_j
+    luts[q, j, codes[:, j]] — the one scorer of every ADC scan."""
+    s = np.broadcast_to(consts[:, None], (len(consts), len(codes))).copy()
+    for j in range(luts.shape[1]):
+        s += luts[:, j, codes[:, j]]
+    return s
 
 
 def pq_train(
@@ -339,110 +461,10 @@ def pq_encode(
     """(id, pq_code ARRAY<TINYINT>) — one signed byte per subspace
     (code - 128, so ks=256 fits; decode adds 128 back).  Arrow-batched
     argmin against the broadcast codebooks; linear, shuffle-free."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (model.codebooks.astype(np.float64), model.metric, model.dsub,
-         model._rot64())
+    return _encode(
+        df.select(id_col, vec_col), model, vec_col, None,
+        f"{id_col} long, pq_code array<tinyint>",
     )
-    m = model.m
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codebooks, metric, dsub, rot = bc.value
-        cnorms = [(codebooks[j] ** 2).sum(axis=1) for j in range(len(codebooks))]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = _prep(np.stack(pdf[vec_col].to_numpy()), metric)
-            if rot is not None:
-                X = X @ rot
-            codes = np.empty((len(pdf), m), dtype=np.int16)
-            for j in range(m):
-                sub = X[:, j * dsub : (j + 1) * dsub]
-                d = -2.0 * (sub @ codebooks[j].T) + cnorms[j]
-                codes[:, j] = d.argmin(axis=1)
-            out = pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "pq_code": list((codes - 128).astype(np.int8)),
-                }
-            )
-            yield out
-
-    return df.select(id_col, vec_col).mapInPandas(
-        encode, schema=f"{id_col} long, pq_code array<tinyint>"
-    )
-
-
-def _adc_lut(model: PQModel, query: np.ndarray) -> np.ndarray:
-    """(m, ks) float64 LUT: LUT[j, c] = score contribution of code c in
-    subspace j.  cosine/dot -> dot product; euclidean -> negated
-    squared distance (monotone in the true euclidean similarity, which
-    stage 2 re-ranks exactly).  OPQ models rotate the query into the
-    codebooks' space first (rotation preserves both dot products and
-    euclidean distances, so the score contract is unchanged)."""
-    q = _prep(query[None, :], model.metric)[0]
-    rot = model._rot64()
-    if rot is not None:
-        q = q @ rot
-    lut = np.empty((model.m, model.ks), dtype=np.float64)
-    for j in range(model.m):
-        qs = q[j * model.dsub : (j + 1) * model.dsub]
-        cb = model.codebooks[j].astype(np.float64)
-        if model.metric in ("cosine", "dot"):
-            lut[j] = cb @ qs
-        elif model.metric == "euclidean":
-            diff = cb - qs
-            lut[j] = -(diff * diff).sum(axis=1)
-        else:
-            raise ValueError(f"unknown metric: {model.metric}")
-    return lut
-
-
-def _adc_lut_residual(
-    model: PQModel, query: np.ndarray, centroid: np.ndarray
-) -> tuple[np.ndarray, float]:
-    """Per-(query, cell) ADC table for RESIDUAL codes: ``(lut, const)``
-    with score(row) = const + sum_j lut[j, code_j], exactly the raw
-    ADC's contract once the cell identity v_hat = centroid + residual
-    is substituted:
-
-    - cosine/dot: q_hat . v_hat = q_hat . c  +  q_hat . r
-      -> lut[j, w] = q_hat_j . w (CELL-INDEPENDENT), const = q_hat . c
-      (the per-cell part is one scalar offset — cheap).
-    - euclidean: -||q - c - r||^2
-      = -||q - c||^2 + 2 (q - c) . r - ||r||^2
-      -> lut[j, w] = 2 (q - c)_j . w - ||w||^2 (a TRUE per-cell
-      table), const = -||q - c||^2.  The constants matter: candidates
-      from different cells compete in one global cut, so scores must
-      be comparable ACROSS cells, not just within one.
-
-    OPQ residual models rotate BOTH the query and the centroid —
-    every identity above holds verbatim in the rotated space because
-    the rotation is orthogonal (q'.c' = q.c, ||q'-c'|| = ||q-c||).
-    """
-    q = _prep(query[None, :], model.metric)[0]
-    c = np.asarray(centroid, dtype=np.float64)
-    rot = model._rot64()
-    if rot is not None:
-        q = q @ rot
-        c = c @ rot
-    lut = np.empty((model.m, model.ks), dtype=np.float64)
-    if model.metric in ("cosine", "dot"):
-        for j in range(model.m):
-            cb = model.codebooks[j].astype(np.float64)
-            lut[j] = cb @ q[j * model.dsub : (j + 1) * model.dsub]
-        const = float(q @ c)
-    elif model.metric == "euclidean":
-        qc = q - c
-        for j in range(model.m):
-            cb = model.codebooks[j].astype(np.float64)
-            lut[j] = 2.0 * (cb @ qc[j * model.dsub : (j + 1) * model.dsub]) - (
-                cb * cb
-            ).sum(axis=1)
-        const = -float(qc @ qc)
-    else:
-        raise ValueError(f"unknown metric: {model.metric}")
-    return lut, const
 
 
 def ivf_pq_encode_residual(
@@ -453,159 +475,124 @@ def ivf_pq_encode_residual(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, cell_id, pq_code) with codes quantizing the CELL RESIDUAL
-    prep(v) - centroid[cell_id].  Same Arrow-batched shuffle-free
-    shape as ``pq_encode``; the k_cells centroid matrix rides the same
-    broadcast as the codebooks.  Residuals are never re-normalized —
-    prep applies to the VECTOR (cosine's unit sphere), the residual is
-    a plain difference in that space, so centroid + decode(code)
-    reconstructs v_hat additively."""
-    spark = assigned.sparkSession
-    cents = centroids.orderBy("cell_id").collect()
-    C = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    cid = np.array([int(r["cell_id"]) for r in cents], dtype=np.int64)
-    pos = {int(c): i for i, c in enumerate(cid)}
-    bc = spark.sparkContext.broadcast(
-        (model.codebooks.astype(np.float64), model.metric, model.dsub,
-         C, pos, model._rot64())
+    prep(v) - centroid[cell_id] (see ``_residuals``).  Same
+    Arrow-batched shuffle-free kernel as ``pq_encode``; the k_cells
+    centroid matrix rides the same broadcast as the codebooks."""
+    return _encode(
+        assigned.select(id_col, "cell_id", vec_col), model, vec_col,
+        _centroid_table(centroids),
+        f"{id_col} long, cell_id int, pq_code array<tinyint>",
     )
-    m = model.m
+
+
+def _encode(
+    frame: DataFrame, model: PQModel, vec_col: str, cells: tuple | None,
+    schema: str,
+) -> DataFrame:
+    """The encode kernel of both faces: every column of ``frame`` but
+    ``vec_col`` passes through and ``pq_code`` is appended, typed by
+    ``schema``.  ``cells`` = ``_centroid_table`` output for residual
+    codes, None for raw ones; OPQ models quantize the rotated vector
+    (or residual)."""
+    bc = frame.sparkSession.sparkContext.broadcast(
+        (model.kernel_state(), cells)
+    )
+    keep = [c for c in frame.columns if c != vec_col]
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codebooks, metric, dsub, C_, pos_, rot = bc.value
-        cnorms = [
-            (codebooks[j] ** 2).sum(axis=1) for j in range(len(codebooks))
-        ]
+        (codebooks, metric, _, rot), cells_ = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = _prep(np.stack(pdf[vec_col].to_numpy()), metric)
-            rows_c = np.array(
-                [pos_[int(c)] for c in pdf["cell_id"].to_numpy()],
-                dtype=np.int64,
-            )
-            R = X - C_[rows_c]
-            if rot is not None:  # OPQ: codes quantize the ROTATED residual
-                R = R @ rot
-            codes = np.empty((len(pdf), m), dtype=np.int16)
-            for j in range(m):
-                sub = R[:, j * dsub : (j + 1) * dsub]
-                d = -2.0 * (sub @ codebooks[j].T) + cnorms[j]
-                codes[:, j] = d.argmin(axis=1)
+            if cells_ is None:
+                X = _prep(np.stack(pdf[vec_col].to_numpy()), metric)
+            else:
+                X = _residuals(pdf, vec_col, metric, *cells_)
+            if rot is not None:
+                X = X @ rot
+            codes = _assign_codes(X, codebooks)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
-                    "cell_id": pdf["cell_id"].to_numpy(),
+                    **{c: pdf[c].to_numpy() for c in keep},
                     "pq_code": list((codes - 128).astype(np.int8)),
                 }
             )
 
-    return assigned.select(id_col, "cell_id", vec_col).mapInPandas(
-        encode, schema=f"{id_col} long, cell_id int, pq_code array<tinyint>"
-    )
+    return frame.mapInPandas(encode, schema=schema)
 
 
-def _residual_pq_candidates(
-    probed: DataFrame,
+def _adc_candidates(
+    scan: DataFrame,
     model: PQModel,
     query_vector: Sequence[float],
-    cells: Sequence[int],
-    centroids: DataFrame,
     n_candidates: int,
     id_col: str = "vec_id",
     with_scores: bool = False,
+    cells: Sequence[int] | None = None,
+    centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """ADC scan over residual codes, each row scored with ITS cell's
-    (lut, const), global top ``n_candidates`` comparable across cells
-    by construction.
+    """The one single-query ADC scan: approximate scores over the
+    compressed table, global top ``n_candidates``.  Per Arrow batch
+    only the batch-local top survives, so the final TakeOrdered sees
+    O(partitions * n) rows.
 
-    Scale shape (this was a driver hazard): the driver never
-    materializes per-cell LUTs.  It broadcasts MODEL-sized state —
-    codebooks (m x ks x dsub) + the PROBED centroids (collected under
-    a server-side ``isin`` filter, never the full centroid table) —
-    and executors derive each cell's table lazily for only the cells
-    their own partitions contain (codes are partitioned by cell_id,
-    so a task touches few cells).  cosine/dot need ONE shared LUT
-    plus a scalar q.c offset per cell (see ``_adc_lut_residual``'s
-    derivation); euclidean builds its true per-cell table on first
-    touch.  Under the adaptive all-cells fallback the old shape
-    shipped k_cells*m*ks float64 tables per query (~1 GB at 65k
-    cells, m=8, ks=256); this ships the IVF model itself."""
-    spark = probed.sparkSession
-    cset = sorted({int(c) for c in cells})
-    # server-side filter for selective probes; past ~1k cells a giant
-    # In-list costs more than collecting the (bounded, model-sized)
-    # centroid table and filtering driver-side
-    if len(cset) <= 1024:
-        cent_src = centroids.filter(F.col("cell_id").isin(cset)).collect()
-    else:
-        want = set(cset)
-        cent_src = [
-            r for r in centroids.collect() if int(r["cell_id"]) in want
-        ]
-    cent_rows = {
-        int(r["cell_id"]): np.asarray(r["centroid"], dtype=np.float64)
-        for r in cent_src
-    }
-    q = _prep(
-        np.asarray(query_vector, dtype=np.float64)[None, :], model.metric
-    )[0]
-    rot = model._rot64()
-    if rot is not None:
-        # OPQ: rotate the query and the (bounded, driver-side) probed
-        # centroids once — all executor-side residual identities hold
-        # verbatim in the rotated space (orthogonal rotation)
-        q = q @ rot
-        cent_rows = {c: v @ rot for c, v in cent_rows.items()}
+    Raw codes score through ONE shared table per task.  RESIDUAL codes
+    (``model.residual``; ``cells`` are the probed cells, ``centroids``
+    the IVF centroid table) score each row with ITS cell's (luts,
+    consts), built on the executors on first touch — codes are
+    partitioned by cell_id, so a task touches few cells.  The driver
+    never materializes per-cell tables: it broadcasts MODEL-sized
+    state, the codebooks plus the PROBED centroids (collected under a
+    server-side ``isin`` filter, never the full centroid table).  Under
+    the adaptive all-cells fallback, per-cell tables would be
+    k_cells*m*ks float64 per query (~1 GB at 65k cells, m=8, ks=256)."""
+    spark = scan.sparkSession
+    cols, cents = [id_col, "pq_code"], None
+    if model.residual:
+        cols.append("cell_id")
+        cset = sorted({int(c) for c in cells})
+        # server-side filter for selective probes; past ~1k cells a
+        # giant In-list costs more than collecting the (bounded,
+        # model-sized) centroid table and filtering driver-side
+        if len(cset) <= 1024:
+            src = centroids.filter(F.col("cell_id").isin(cset)).collect()
+        else:
+            want = set(cset)
+            src = [r for r in centroids.collect() if int(r["cell_id"]) in want]
+        cents = {
+            int(r["cell_id"]): np.asarray(r["centroid"], dtype=np.float64)
+            for r in src
+        }
     bc = spark.sparkContext.broadcast(
-        (model.codebooks.astype(np.float64), model.metric, model.dsub,
-         q, cent_rows)
+        (model.kernel_state(),
+         np.asarray(query_vector, dtype=np.float64)[None, :], cents)
     )
     n_local = n_candidates
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codebooks, metric, dsub, q_, cents = bc.value
-        m = len(codebooks)
-        shared_lut = None
-        if metric in ("cosine", "dot"):
-            # cell-independent table: lut[j, w] = q_j . codeword
-            shared_lut = np.stack(
-                [codebooks[j] @ q_[j * dsub : (j + 1) * dsub]
-                 for j in range(m)]
-            )
-        tabs: dict = {}  # per-cell (lut, const), built on first touch
+        (codebooks, metric, dsub, rot), Q, cents_ = bc.value
+        tables: dict = {}  # cell (None = raw codes) -> (luts, consts)
 
-        def _cell_table(c: int):
-            t = tabs.get(c)
-            if t is None:
-                cent = cents[c]
-                if shared_lut is not None:
-                    t = (shared_lut, float(q_ @ cent))
-                else:  # euclidean: true per-cell table (see derivation)
-                    qc = q_ - cent
-                    lut = np.stack(
-                        [2.0 * (codebooks[j]
-                                @ qc[j * dsub : (j + 1) * dsub])
-                         - (codebooks[j] * codebooks[j]).sum(axis=1)
-                         for j in range(m)]
-                    )
-                    t = (lut, -float(qc @ qc))
-                tabs[c] = t
-            return t
+        def _scores(codes: np.ndarray, cell: int | None) -> np.ndarray:
+            if cell not in tables:
+                tables[cell] = _adc_tables(
+                    codebooks, metric, dsub, Q, rot,
+                    None if cell is None else cents_[cell],
+                )
+            return _adc_scores(*tables[cell], codes)[0]
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            codes = np.stack(pdf["pq_code"].to_numpy()).astype(np.int32) + 128
-            cells_ = pdf["cell_id"].to_numpy()
-            s = np.empty(len(pdf), dtype=np.float64)
-            for c in np.unique(cells_):
-                lut, const = _cell_table(int(c))
-                sel = cells_ == c
-                sub = codes[sel]
-                acc = np.full(sub.shape[0], const, dtype=np.float64)
-                for j in range(lut.shape[0]):
-                    acc += lut[j][sub[:, j]]
-                s[sel] = acc
+            codes = _unpack_codes(pdf["pq_code"])
+            if cents_ is None:
+                s = _scores(codes, None)
+            else:
+                cells_ = pdf["cell_id"].to_numpy()
+                s = np.empty(len(pdf), dtype=np.float64)
+                for c in np.unique(cells_):
+                    sel = cells_ == c
+                    s[sel] = _scores(codes[sel], int(c))
             if len(s) > n_local:
                 keep = np.argpartition(-s, n_local - 1)[:n_local]
             else:
@@ -614,7 +601,7 @@ def _residual_pq_candidates(
                 {id_col: pdf[id_col].to_numpy()[keep], "adc_score": s[keep]}
             )
 
-    scored = probed.select(id_col, "cell_id", "pq_code").mapInPandas(
+    scored = scan.select(*cols).mapInPandas(
         score, schema=f"{id_col} long, adc_score double"
     )
     top = scored.orderBy(
@@ -631,39 +618,12 @@ def pq_candidates(
     id_col: str = "vec_id",
     with_scores: bool = False,
 ) -> DataFrame:
-    """ADC scan: approximate scores over the compressed table, global
-    top ``n_candidates``.  Per Arrow batch only the batch-local top
-    survives, so the final TakeOrdered sees O(partitions * n) rows."""
-    spark = encoded.sparkSession
-    lut = _adc_lut(model, np.asarray(query_vector, dtype=np.float64))
-    bc = spark.sparkContext.broadcast(lut)
-    n_local = n_candidates
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        table = bc.value  # (m, ks)
-        m = table.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["pq_code"].to_numpy()).astype(np.int32) + 128
-            s = np.zeros(len(pdf), dtype=np.float64)
-            for j in range(m):
-                s += table[j][codes[:, j]]
-            if len(s) > n_local:
-                keep = np.argpartition(-s, n_local - 1)[:n_local]
-            else:
-                keep = np.arange(len(s))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy()[keep], "adc_score": s[keep]}
-            )
-
-    scored = encoded.mapInPandas(
-        score, schema=f"{id_col} long, adc_score double"
+    """ADC candidates of a flat PQ index: ``(id)``, or ``(id,
+    adc_score)`` with ``with_scores`` — see :func:`_adc_candidates`."""
+    return _adc_candidates(
+        encoded, model, query_vector, n_candidates, id_col=id_col,
+        with_scores=with_scores,
     )
-    top = scored.orderBy(
-        F.col("adc_score").desc(), F.col(id_col).asc()
-    ).limit(n_candidates)
-    return top if with_scores else top.select(id_col)
 
 
 def adc_sigma(model: PQModel, query_vector: Sequence[float]) -> float | None:
@@ -932,25 +892,17 @@ def pq_reconstruction_mse(
     distributed, returns one double)."""
     enc = pq_encode(df, model, id_col=id_col, vec_col=vec_col)
     joined = df.select(id_col, vec_col).join(enc, on=id_col)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (model.codebooks.astype(np.float64), model.metric, model.dsub,
-         model._rot64())
-    )
+    bc = df.sparkSession.sparkContext.broadcast(model.kernel_state())
 
     def err(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codebooks, metric, dsub, rot = bc.value
-        m = len(codebooks)
+        codebooks, metric, _, rot = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = _prep(np.stack(pdf[vec_col].to_numpy()), metric)
             if rot is not None:  # MSE is rotation-invariant; compare in
                 X = X @ rot      # the codebooks' (rotated) space
-            codes = np.stack(pdf["pq_code"].to_numpy()).astype(np.int32) + 128
-            rec = np.concatenate(
-                [codebooks[j][codes[:, j]] for j in range(m)], axis=1
-            )
+            rec = _decode_codes(_unpack_codes(pdf["pq_code"]), codebooks)
             se = ((X - rec) ** 2).sum(axis=1)
             yield pd.DataFrame({"se": se, "n": np.ones_like(se)})
 
@@ -965,10 +917,9 @@ def pq_reconstruction_mse(
 # Partition pruning (open nprobe/k_cells of the files) multiplies with
 # PQ compression (read m bytes per vector in those files): a query
 # touches ~ nprobe/k_cells * m/(4*dim) of the float-corpus bytes.
-# Codes encode the RAW vector, not the cell residual: the two-stage
-# exact re-rank restores full precision regardless, and raw codes keep
-# one codebook (residual codebooks would buy stage-1 accuracy the
-# re-rank does not need at refine >= 8).
+# Codes encode the RAW vector by default (one codebook; the two-stage
+# exact re-rank restores full precision); ``residual=True`` encodes the
+# cell residual instead (see ``ivf_pq_build``).
 
 def ivf_pq_residual_frame(
     assigned: DataFrame,
@@ -982,28 +933,22 @@ def ivf_pq_residual_frame(
     and the IVF-PQ ``index.open(...).refresh`` refit.  A bounded
     mapInPandas over the assigned rows (the k_cells centroid matrix
     broadcasts); trained with identity prep downstream — residuals
-    must NOT be re-normalized (prep applies to the VECTOR, the
-    residual is a plain difference in that space)."""
-    spark = assigned.sparkSession
-    cents = centroids.orderBy("cell_id").collect()
-    C = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    pos = {int(r["cell_id"]): i for i, r in enumerate(cents)}
-    bcr = spark.sparkContext.broadcast((C, pos, metric))
+    must NOT be re-normalized (see ``_residuals``).  Kept apart from
+    the residual encode: chaining the two frames would add an Arrow
+    round trip per row."""
+    bc = assigned.sparkSession.sparkContext.broadcast(
+        (_centroid_table(centroids), metric)
+    )
 
     def _resid(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C_, pos_, met = bcr.value
+        (C, pos), met = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = _prep(np.stack(pdf[vec_col].to_numpy()), met)
-            rows_c = np.array(
-                [pos_[int(c)] for c in pdf["cell_id"].to_numpy()],
-                dtype=np.int64,
-            )
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
-                    vec_col: list((X - C_[rows_c]).astype(np.float64)),
+                    vec_col: list(_residuals(pdf, vec_col, met, C, pos)),
                 }
             )
 
@@ -1157,28 +1102,21 @@ def ivf_pq_topk(
     probed = encoded.filter(F.col("cell_id").isin(cells))
     if allowed_ids is not None:
         probed = restrict_to_allowed(probed, allowed_ids, id_col=id_col)
-    # .distinct(): spill-redundant IVF assignment (SPANN-style) stores
-    # a vector in several cells, so two probed copies of one id must
-    # not both reach the re-rank (bounded rows — cheap)
-    if model.residual:
-        # residual codes: one ADC table per (query, probed cell)
-        # against that cell's centroid — see _adc_lut_residual
-        cand = _residual_pq_candidates(
-            probed, model, query_vector, cells, centroids,
-            k * refine_factor, id_col=id_col,
-            with_scores=adaptive_refine,
-        )
-    else:
-        cand = pq_candidates(
-            probed, model, query_vector, k * refine_factor, id_col=id_col,
-            with_scores=adaptive_refine,
-        )
+    # residual codes score per (query, probed cell) against that cell's
+    # centroid; raw codes ignore cells/centroids
+    cand = _adc_candidates(
+        probed, model, query_vector, k * refine_factor, id_col=id_col,
+        with_scores=adaptive_refine, cells=cells, centroids=centroids,
+    )
     if adaptive_refine:
         cand = adaptive_refine_cut(
             cand, k, adc_sigma(model, query_vector),
             refine_min=refine_min, sigma_mult=sigma_mult, id_col=id_col,
             model=model,
         ).select(id_col)
+    # .distinct(): spill-redundant IVF assignment (SPANN-style) stores
+    # a vector in several cells, so two probed copies of one id must
+    # not both reach the re-rank (bounded rows — cheap)
     cand = cand.distinct()
     qv = vector_literal(query_vector)
     out = (
@@ -1192,176 +1130,28 @@ def ivf_pq_topk(
         id_col, F.round(F.col(score_col), SCORE_DECIMALS).alias(score_col)
     )
 
-
-def pq_batch_candidates(
-    encoded: DataFrame,
-    model: PQModel,
-    queries: Sequence[tuple[int, Sequence[float]]],
-    n_candidates: int,
-    id_col: str = "vec_id",
-    with_scores: bool = False,
-) -> DataFrame:
-    """Per-query ADC candidates for a query BATCH in one corpus pass.
-
-    The (|Q|, m, ks) LUT tensor ships as one broadcast; each Arrow
-    batch scores every query against its codes with a single gather +
-    tensordot-free sum and keeps only the batch-local top
-    ``n_candidates`` PER QUERY — the stage-2 rank sees
-    |Q| x partitions x n rows, never |Q| x |C|.  Same contract shape
-    as ``operators/topk.batch_topk``'s prereduce."""
-    spark = encoded.sparkSession
-    qids = [int(q) for q, _ in queries]
-    luts = np.stack(
-        [_adc_lut(model, np.asarray(v, dtype=np.float64)) for _, v in queries]
-    )  # (|Q|, m, ks)
-    bc = spark.sparkContext.broadcast((qids, luts))
-    n_local = n_candidates
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, tables = bc.value
-        nq, m, _ = tables.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["pq_code"].to_numpy()).astype(np.int32) + 128
-            ids = pdf[id_col].to_numpy()
-            # scores[q, row] = sum_j tables[q, j, codes[row, j]]
-            s = np.zeros((nq, len(pdf)), dtype=np.float64)
-            for j in range(m):
-                s += tables[:, j, codes[:, j]]
-            # one vectorized per-query cut (argpartition along axis 1)
-            # instead of a Python loop over queries
-            if s.shape[1] > n_local:
-                keep2d = np.argpartition(-s, n_local - 1, axis=1)[:, :n_local]
-            else:
-                keep2d = np.tile(np.arange(s.shape[1]), (nq, 1))
-            k_eff = keep2d.shape[1]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(
-                        np.asarray(ids_q, dtype=np.int64), k_eff
-                    ),
-                    id_col: ids[keep2d.ravel()],
-                    "adc_score": np.take_along_axis(s, keep2d, axis=1).ravel(),
-                }
-            )
-
-    scored = encoded.mapInPandas(
-        score, schema=f"query_id long, {id_col} long, adc_score double"
-    )
-    from astro_vectordb_spark.operators.topk import rank_topk_per_query
-
-    if with_scores:
-        # the adaptive-refine pool: the same global per-query cut,
-        # keeping the raw ADC score + rank for the error-bound margin
-        # (the single-query pq_candidates(with_scores=True) contract)
-        return rank_topk_per_query(
-            scored, n_candidates, id_col=id_col, query_id_col="query_id",
-            score_col="adc_score", num_salts=1, round_scores=False,
-        )
-    # .distinct(): duplicate vec_id rows in the codes table (re-append
-    # / streaming retry) must not surface the same candidate twice per
-    # query — bounded rows (|Q| * n_candidates), cheap
-    return rank_topk_per_query(
-        scored, n_candidates, id_col=id_col, query_id_col="query_id",
-        score_col="adc_score", num_salts=1,
-    ).select("query_id", id_col).distinct()
-
-
-def _adc_luts(
-    codebooks: np.ndarray, metric: str, dsub: int, Q: np.ndarray,
-    rotation: np.ndarray | None = None,
-) -> np.ndarray:
-    """(nq, m, ks) LUT tensor for a query BATCH — the worker-side
-    vectorized twin of ``_adc_lut`` (no PQModel object needed, so it
-    runs off the broadcast codebook tuple inside a task).
-    ``rotation`` = OPQ query rotation into the codebooks' space."""
-    m = len(codebooks)
-    Qp = _prep(Q, metric)
-    if rotation is not None:
-        Qp = Qp @ rotation
-    nq = Qp.shape[0]
-    ks = codebooks[0].shape[0]
-    lut = np.empty((nq, m, ks), dtype=np.float64)
-    for j in range(m):
-        qs = Qp[:, j * dsub : (j + 1) * dsub]  # (nq, dsub)
-        cb = codebooks[j].astype(np.float64)  # (ks, dsub)
-        if metric in ("cosine", "dot"):
-            lut[:, j, :] = qs @ cb.T
-        elif metric == "euclidean":
-            # -||q_j - c||^2 = 2 q.c - ||c||^2 - ||q_j||^2
-            lut[:, j, :] = (
-                2.0 * (qs @ cb.T)
-                - (cb * cb).sum(axis=1)[None, :]
-                - (qs * qs).sum(axis=1)[:, None]
-            )
-        else:
-            raise ValueError(f"unknown metric: {metric}")
-    return lut
-
-
-def _adc_luts_residual(
-    codebooks: np.ndarray,
-    metric: str,
-    dsub: int,
-    Q: np.ndarray,
-    centroid: np.ndarray,
-    rotation: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batch twin of ``_adc_lut_residual`` for one cell: ``(luts,
-    consts)`` with luts (nq, m, ks) and consts (nq,) such that
-    score(q, row) = consts[q] + sum_j luts[q, j, code_j] equals the
-    raw ADC on v_hat = centroid + residual.  ``rotation`` = OPQ:
-    queries AND the centroid rotate; every identity holds in the
-    rotated space (orthogonal)."""
-    m = len(codebooks)
-    Qp = _prep(Q, metric)
-    nq = Qp.shape[0]
-    ks = codebooks[0].shape[0]
-    c = np.asarray(centroid, dtype=np.float64)
-    if rotation is not None:
-        Qp = Qp @ rotation
-        c = c @ rotation
-    lut = np.empty((nq, m, ks), dtype=np.float64)
-    if metric in ("cosine", "dot"):
-        for j in range(m):
-            cb = codebooks[j].astype(np.float64)
-            lut[:, j, :] = Qp[:, j * dsub : (j + 1) * dsub] @ cb.T
-        const = Qp @ c
-    elif metric == "euclidean":
-        QC = Qp - c[None, :]
-        for j in range(m):
-            cb = codebooks[j].astype(np.float64)
-            lut[:, j, :] = (
-                2.0 * (QC[:, j * dsub : (j + 1) * dsub] @ cb.T)
-                - (cb * cb).sum(axis=1)[None, :]
-            )
-        const = -(QC * QC).sum(axis=1)
-    else:
-        raise ValueError(f"unknown metric: {metric}")
-    return lut, const
-
-
 def _make_cogroup_adc_kernel(
-    bc, n_local: int, id_col: str, query_id_col: str, query_vec_col: str,
-    residual: bool = False, centroid_col: str = "centroid",
+    spark, model: PQModel, n_local: int, id_col: str, query_id_col: str,
+    query_vec_col: str,
 ):
     """Cogroup serve kernel shared by the hash-blocked PQ batch face
     and the cell-probed IVF-PQ batch face: one side is a codes slice,
     the other the query rows paired with it; builds the slice's ADC
-    LUTs worker-side and emits the block-local top ``n_local`` per
-    query.  Query-sliced scoring: a (|Q|, |block|) float64 matrix at
-    large |Q| is multi-GB of temporaries per j-gather (measured: 18
-    workers at 4 GB RES each, >50% SYSTEM cpu = allocator churn, at
-    50k x 6k); 512-query slices cap the temp at ~25 MB with identical
-    float64 math (per-query sums are independent).
+    tables worker-side from one broadcast of ``model.kernel_state()``
+    and emits the block-local top ``n_local`` per query.  Query-sliced
+    scoring: a (|Q|, |block|) float64 matrix at large |Q| is multi-GB
+    of temporaries per j-gather (measured: 18 workers at 4 GB RES
+    each, >50% SYSTEM cpu = allocator churn, at 50k x 6k); 512-query
+    slices cap the temp at ~25 MB with identical float64 math
+    (per-query sums are independent).
 
-    ``residual=True`` (IVF-PQ residual codes): the query side carries
-    the group's cell centroid in ``centroid_col`` (a cogroup is one
-    cell, or one salt of one cell, so the column is constant within
-    the group) and the LUTs build per (query, cell) via
-    ``_adc_luts_residual`` — scores stay comparable across cells
-    because every group adds its own exact constant."""
+    Residual codes: the query side carries the group's cell centroid
+    in a ``centroid`` column (a cogroup is one cell, or one salt of
+    one cell, so the column is constant within the group) and the
+    tables build per (query, cell) — scores stay comparable across
+    cells because every group adds its own exact constant."""
+    bc = spark.sparkContext.broadcast(model.kernel_state())
+    residual = model.residual
 
     def _serve(cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
         if len(cpdf) == 0 or len(qpdf) == 0:
@@ -1371,8 +1161,7 @@ def _make_cogroup_adc_kernel(
                 {query_id_col: "int64", id_col: "int64", "adc_score": "float64"}
             )
         codebooks, metric, dsub, rot = bc.value
-        m = len(codebooks)
-        codes = np.stack(cpdf["pq_code"].to_numpy()).astype(np.int32) + 128
+        codes = _unpack_codes(cpdf["pq_code"])
         ids = cpdf[id_col].to_numpy()
         # id-ascending column order: with it, every boundary-tie pick
         # below is "first by id", making the local cut a deterministic
@@ -1387,7 +1176,7 @@ def _make_cogroup_adc_kernel(
         qids_all = qpdf[query_id_col].to_numpy()
         qmat_all = np.stack(qpdf[query_vec_col].to_numpy()).astype(np.float64)
         cent = (
-            np.asarray(qpdf[centroid_col].iloc[0], dtype=np.float64)
+            np.asarray(qpdf["centroid"].iloc[0], dtype=np.float64)
             if residual
             else None
         )
@@ -1395,22 +1184,13 @@ def _make_cogroup_adc_kernel(
         q_slice = 512
         for lo in range(0, len(qids_all), q_slice):
             qids = qids_all[lo : lo + q_slice]
-            if residual:
-                luts, consts = _adc_luts_residual(
-                    codebooks, metric, dsub,
-                    qmat_all[lo : lo + q_slice], cent, rotation=rot,
-                )
-                s = np.broadcast_to(
-                    consts[:, None], (len(qids), len(ids))
-                ).copy()
-            else:
-                luts = _adc_luts(
+            s = _adc_scores(
+                *_adc_tables(
                     codebooks, metric, dsub, qmat_all[lo : lo + q_slice],
-                    rotation=rot,
-                )
-                s = np.zeros((len(qids), len(ids)), dtype=np.float64)
-            for j in range(m):
-                s += luts[:, j, codes[:, j]]
+                    rot, cent,
+                ),
+                codes,
+            )
             if s.shape[1] > n_local:
                 # O(B) partition for the threshold, then exact
                 # boundary-tie resolution by id (columns are
@@ -1460,10 +1240,11 @@ def pq_batch_topk_cogrouped(
     refine_min: int = 4,
     sigma_mult: float = 3.0,
 ) -> DataFrame:
-    """Batch PQ search WITHOUT driver-side query materialization — the
-    very-large-|Q| face (``pq_batch_topk`` collects the query set to
-    build one LUT tensor; past ~1e6 queries that single machine is the
-    bottleneck).  Mirrors ``hnsw_query_shards_cogrouped``.
+    """Batch face of ``pq_topk``, WITHOUT driver-side query
+    materialization: no single machine ever holds the query set or its
+    LUT tensor, so |Q| is unbounded.  Mirrors
+    ``hnsw_query_shards_cogrouped``.  Output: (query_id, id, score,
+    rank) — same contract as ``batch_topk``.
 
     Shape: the compact codes table is hash-blocked on id, queries are
     replicated once per block (|Q| x n_blocks rows — data-parallel, no
@@ -1471,22 +1252,24 @@ def pq_batch_topk_cogrouped(
     its full query slice; the task builds the slice's LUTs from raw
     query vectors (tiny: m*ks*dsub flops per query) and emits the
     block-local ADC top ``k*refine_factor`` per query.  The global
-    candidate cut and the exact re-rank are then identical to the
-    broadcast face, so both faces return bit-identical results (the
-    equivalence tests pin this).  Cost vs broadcast: one shuffle of
-    the m-bytes-per-vector codes table (not the float corpus) +
-    |Q| x n_blocks query replication, in exchange for unbounded |Q|.
-    The final joins are plain (AQE-planned) — no broadcast of the
-    candidate or query frames, which at large |Q| would not fit."""
+    candidate cut is the single-query face's (score desc, id asc)
+    order per query, and the exact re-rank decides the output, so each
+    query's rows equal ``pq_topk``'s (the equivalence tests pin this).
+    Cost: one shuffle of the m-bytes-per-vector codes table (not the
+    float corpus) + |Q| x n_blocks query replication.  The final joins
+    are plain (AQE-planned) — no broadcast of the candidate or query
+    frames, which at large |Q| would not fit.
+
+    ``adaptive_refine``: per-query error-bound cut of the stage-2 pool
+    (:func:`adaptive_refine_cut_batch`) — ``refine_factor`` becomes
+    the ceiling and each query keeps only the candidates its own ADC
+    margin cannot rule out; legacy models degrade to the fixed pool
+    bit-identically."""
     from astro_vectordb_spark.operators.topk import rank_topk_per_query
 
     spark = encoded.sparkSession
     if n_blocks is None:
         n_blocks = max(2, spark.sparkContext.defaultParallelism)
-    bc = spark.sparkContext.broadcast(
-        (model.codebooks.astype(np.float64), model.metric, model.dsub,
-         model._rot64())
-    )
     n_local = k * refine_factor
     codes_b = encoded.select(id_col, "pq_code").withColumn(
         "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
@@ -1498,7 +1281,7 @@ def pq_batch_topk_cogrouped(
     )
     out_schema = f"{query_id_col} long, {id_col} long, adc_score double"
     _serve = _make_cogroup_adc_kernel(
-        bc, n_local, id_col=id_col, query_id_col=query_id_col,
+        spark, model, n_local, id_col=id_col, query_id_col=query_id_col,
         query_vec_col=query_vec_col,
     )
 
@@ -1507,9 +1290,8 @@ def pq_batch_topk_cogrouped(
         .cogroup(q_rep.groupBy("__blk"))
         .applyInPandas(lambda left, right: _serve(left, right), out_schema)
     )
-    # global candidate cut: same (score desc, id asc) order as
-    # pq_batch_candidates -> identical candidate sets to the broadcast
-    # face; prereduce (num_salts) keeps the exchange at
+    # global candidate cut: the single-query scan's (score desc, id
+    # asc) order per query; prereduce (num_salts) keeps the exchange at
     # |partitions| x |Q| x n rows
     pool = rank_topk_per_query(
         hits, n_local, id_col=id_col, query_id_col=query_id_col,
@@ -1583,8 +1365,8 @@ def ivf_pq_batch_topk_cogrouped(
     ``cell_id`` serves each cell's codes against exactly the queries
     probing it (the same worker-side LUT kernel as the hash-blocked
     face — nothing materializes on the driver, |Q| unbounded); the
-    global candidate cut and exact re-rank are identical to the other
-    batch faces.  With spill-redundant assignment a copy probed via
+    global candidate cut and exact re-rank are the hash-blocked
+    face's.  With spill-redundant assignment a copy probed via
     two cells scores identically in both, and the post-cut
     ``distinct()`` collapses it.
 
@@ -1626,10 +1408,6 @@ def ivf_pq_batch_topk_cogrouped(
         sel = max(n_allowed / max(n_total, 1), 1e-9)
         widen = max(1, math.ceil(1.0 / sel))
         encoded = restrict_to_allowed(encoded, allowed_ids, id_col=id_col)
-    bc = spark.sparkContext.broadcast(
-        (model.codebooks.astype(np.float64), model.metric, model.dsub,
-         model._rot64())
-    )
     n_local = k * refine_factor
     q_cells = probe_table_batch(
         queries, centroids, nprobe, metric=model.metric, widen=widen,
@@ -1645,8 +1423,8 @@ def ivf_pq_batch_topk_cogrouped(
             F.broadcast(centroids.select("cell_id", "centroid")), "cell_id"
         )
     _serve = _make_cogroup_adc_kernel(
-        bc, n_local, id_col=id_col, query_id_col=query_id_col,
-        query_vec_col=query_vec_col, residual=model.residual,
+        spark, model, n_local, id_col=id_col, query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
     )
     codes = encoded.select(id_col, "pq_code", "cell_id")
     if max_group_rows is not None:
@@ -1714,70 +1492,4 @@ def ivf_pq_batch_topk_cogrouped(
     return rank_topk_per_query(
         exact, k, id_col=id_col, query_id_col=query_id_col,
         score_col=score_col, num_salts=8,
-    )
-
-
-def pq_batch_topk(
-    encoded: DataFrame,
-    original: DataFrame,
-    queries: DataFrame,
-    k: int,
-    model: PQModel,
-    refine_factor: int = 32,
-    strength: float = 0.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    score_col: str = "score",
-    adaptive_refine: bool = False,
-    refine_min: int = 4,
-    sigma_mult: float = 3.0,
-) -> DataFrame:
-    """Batch face of ``pq_topk``: one compressed-corpus pass produces
-    every query's ADC candidates, then one broadcast join + exact
-    re-rank ranks them.  Output: (query_id, id, score, rank) — same
-    contract as ``batch_topk``.
-
-    ``adaptive_refine``: per-query error-bound cut of the stage-2 pool
-    (:func:`adaptive_refine_cut_batch`) — ``refine_factor`` becomes
-    the ceiling; the global per-query pool is ranked once and each
-    query keeps only the candidates its own ADC margin cannot rule
-    out.  The stage-2 exact re-rank join — the term that grows with
-    BOTH |Q| and corpus vector width — shrinks to the kept fraction;
-    off by default, legacy models degrade to the fixed pool
-    bit-identically."""
-    from astro_vectordb_spark.operators.topk import rank_topk_per_query
-
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    cand = pq_batch_candidates(
-        encoded,
-        model,
-        [(r[query_id_col], r[query_vec_col]) for r in qrows],
-        k * refine_factor,
-        id_col=id_col,
-        with_scores=adaptive_refine,
-    )
-    if adaptive_refine:
-        # the pool is the same global per-query cut the fixed path
-        # makes (with raw scores + rank); the error-bound cut keeps
-        # what each query's ADC margin cannot rule out, and the
-        # distinct mirrors the fixed path's duplicate-id guard
-        cand = adaptive_refine_cut_batch(
-            cand, k, model, queries=queries, refine_min=refine_min,
-            sigma_mult=sigma_mult, id_col=id_col,
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-        ).select(query_id_col, id_col).distinct()
-    exact = (
-        original.join(F.broadcast(cand), id_col)
-        .join(F.broadcast(queries), query_id_col)
-        .withColumn(
-            score_col,
-            similarity(F.col(vec_col), F.col(query_vec_col), model.metric),
-        )
-        .filter(F.col(score_col) > threshold_from_strength(strength))
-    )
-    return rank_topk_per_query(
-        exact, k, id_col=id_col, query_id_col=query_id_col,
-        score_col=score_col, num_salts=1,
     )

@@ -199,8 +199,7 @@ def main() -> None:
     # driver jobs)
     from astro_vectordb_spark.operators.pq import (
         adaptive_refine_cut_batch,
-        pq_batch_candidates,
-        pq_batch_topk,
+        pq_batch_topk_cogrouped,
     )
 
     qdf = spark.createDataFrame(
@@ -210,7 +209,7 @@ def main() -> None:
 
     def batch_recall(adaptive: bool):
         got: dict = {}
-        for r in pq_batch_topk(
+        for r in pq_batch_topk_cogrouped(
             encoded, corpus, qdf, K, model, refine_factor=REFINE_MAX,
             adaptive_refine=adaptive, refine_min=REFINE_MIN,
             sigma_mult=SIGMA_MULT,
@@ -227,10 +226,21 @@ def main() -> None:
     t0 = time.time()
     rb_adapt = batch_recall(True)
     tb_adapt = time.time() - t0
-    pool = pq_batch_candidates(
-        encoded, model, [(i, q) for i, q in enumerate(queries)],
-        K * REFINE_MAX, with_scores=True,
-    )
+    # the global per-query pool the batch cut sees: each query's ADC
+    # candidates ranked by (adc desc, id asc)
+    from functools import reduce
+
+    from pyspark.sql import DataFrame, Window
+
+    pool = reduce(DataFrame.unionByName, [
+        pq_candidates(encoded, model, q, K * REFINE_MAX, with_scores=True)
+        .withColumn("query_id", F.lit(i).cast("long"))
+        for i, q in enumerate(queries)
+    ])
+    pool = pool.withColumn("rank", F.row_number().over(
+        Window.partitionBy("query_id").orderBy(
+            F.col("adc_score").desc(), F.col("vec_id").asc())
+    )).cache()
     pb_fixed = pool.count() / NQ
     pb_adapt = adaptive_refine_cut_batch(
         pool, K, model, queries=qdf, refine_min=REFINE_MIN,

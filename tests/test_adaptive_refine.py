@@ -441,12 +441,29 @@ class TestBatchAdaptive:
             "query_id long, query_vec array<double>",
         )
 
+    def _global_pool(self, spark, enc, model, X, qids, n):
+        """The global per-query ADC pool ``(query_id, vec_id,
+        adc_score, rank)`` a batch face hands the cut: each query's
+        single-query candidates, ranked by (adc desc, id asc)."""
+        rows = []
+        for q in qids:
+            cand = sorted(
+                (-r["adc_score"], r["vec_id"])
+                for r in pq_candidates(
+                    enc, model, [float(x) for x in X[q]], n,
+                    with_scores=True,
+                ).collect()
+            )
+            rows += [(q, v, -s, i + 1) for i, (s, v) in enumerate(cand)]
+        return spark.createDataFrame(
+            rows, "query_id long, vec_id long, adc_score double, rank int"
+        )
+
     def test_batch_face_matches_exact_and_shrinks(self, spark, data,
                                                   model_enc):
         from astro_vectordb_spark.operators.pq import (
             adaptive_refine_cut_batch,
-            pq_batch_candidates,
-            pq_batch_topk,
+            pq_batch_topk_cogrouped,
         )
 
         df, X = data
@@ -454,7 +471,7 @@ class TestBatchAdaptive:
         qids = [0, 123, 777]
         queries = self._queries(spark, X, qids)
         got = {}
-        for r in pq_batch_topk(
+        for r in pq_batch_topk_cogrouped(
             enc, df, queries, 10, model, refine_factor=32,
             adaptive_refine=True,
         ).collect():
@@ -464,18 +481,14 @@ class TestBatchAdaptive:
             want = _exact_topk(df, [float(x) for x in X[q]], 10)
             assert [v for _, v in sorted(got[q])] == want, q
         # the cut strictly shrinks the global pool on clustered data
-        pool = pq_batch_candidates(
-            enc, model,
-            [(q, [float(x) for x in X[q]]) for q in qids], 320,
-            with_scores=True,
-        )
+        pool = self._global_pool(spark, enc, model, X, qids, 320)
         kept = adaptive_refine_cut_batch(pool, 10, model,
                                          queries=queries).count()
         assert kept < pool.count()
 
     def test_batch_face_legacy_identical_to_fixed(self, spark, data,
                                                   model_enc):
-        from astro_vectordb_spark.operators.pq import pq_batch_topk
+        from astro_vectordb_spark.operators.pq import pq_batch_topk_cogrouped
 
         df, X = data
         model, enc = model_enc
@@ -483,31 +496,33 @@ class TestBatchAdaptive:
         queries = self._queries(spark, X, [3, 99])
         fixed = sorted(
             (r.query_id, r.rank, r.vec_id, r.score)
-            for r in pq_batch_topk(enc, df, queries, 10, legacy,
-                                   refine_factor=16).collect()
+            for r in pq_batch_topk_cogrouped(enc, df, queries, 10, legacy,
+                                             refine_factor=16).collect()
         )
         adapt = sorted(
             (r.query_id, r.rank, r.vec_id, r.score)
-            for r in pq_batch_topk(enc, df, queries, 10, legacy,
-                                   refine_factor=16,
-                                   adaptive_refine=True).collect()
+            for r in pq_batch_topk_cogrouped(enc, df, queries, 10, legacy,
+                                             refine_factor=16,
+                                             adaptive_refine=True).collect()
         )
         assert fixed == adapt
 
     def test_cogrouped_adaptive_matches_broadcast_adaptive(
             self, spark, data, model_enc):
-        from astro_vectordb_spark.operators.pq import (
-            pq_batch_topk,
-            pq_batch_topk_cogrouped,
-        )
+        # reference: the single-query adaptive face, query by query
+        from astro_vectordb_spark.operators.pq import pq_batch_topk_cogrouped
 
         df, X = data
         model, enc = model_enc
-        queries = self._queries(spark, X, [0, 123, 777, 1500])
+        qids = [0, 123, 777, 1500]
+        queries = self._queries(spark, X, qids)
         want = sorted(
-            (r.query_id, r.rank, r.vec_id, r.score)
-            for r in pq_batch_topk(enc, df, queries, 10, model,
-                                   adaptive_refine=True).collect()
+            (q, i + 1, r.vec_id, r.score)
+            for q in qids
+            for i, r in enumerate(
+                pq_topk(enc, df, [float(x) for x in X[q]], 10, model,
+                        adaptive_refine=True).collect()
+            )
         )
         got = sorted(
             (r.query_id, r.rank, r.vec_id, r.score)

@@ -39,13 +39,37 @@ class TestEnsureScanParallelism:
         out = ensure_scan_parallelism(df)
         assert out.count() == 100
 
-    def test_cache_key_memoizes(self, spark):
+    def test_cache_key_memoizes(self, spark, tmp_path):
+        # the probe is memoized per (input files, parallelism): a second
+        # read of the same files hits, a rewrite at the same path lists
+        # new part files and re-probes, and a frame with no input files
+        # is probed every call without being remembered
         from astro_vectordb_spark.operators import partitioning as P
 
-        P._SCAN_PARTS_CACHE.clear()
-        df = spark.range(10).coalesce(1)
-        scan_partitions(df, cache_key="k1")
-        assert any(k[0] == "k1" for k in P._SCAN_PARTS_CACHE)
+        memo = P._SCAN_PARTS_CACHE
+        path = str(tmp_path / "t")
+        spark.range(10).coalesce(1).write.parquet(path)
+        first = spark.read.parquet(path)
+        assert scan_partitions(first) == first.rdd.getNumPartitions()
+        hits, misses = memo.hits, memo.misses
+        assert scan_partitions(spark.read.parquet(path)) == (
+            first.rdd.getNumPartitions()
+        )
+        assert (memo.hits, memo.misses) == (hits + 1, misses)
+
+        spark.range(400).repartition(4).write.mode("overwrite").parquet(path)
+        again = spark.read.parquet(path)
+        assert set(again.inputFiles()).isdisjoint(first.inputFiles())
+        assert again.rdd.getNumPartitions() != first.rdd.getNumPartitions()
+        assert scan_partitions(again) == again.rdd.getNumPartitions()
+        assert memo.misses == misses + 1
+
+        n = len(memo._entries)
+        hits, misses = memo.hits, memo.misses
+        scan_partitions(spark.range(10).coalesce(1))
+        assert (len(memo._entries), memo.hits, memo.misses) == (
+            n, hits, misses
+        )
 
 
 class TestBm25StatsLocalRelation:

@@ -1,6 +1,7 @@
 """Product quantization: training, encoding, ADC two-stage search."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -150,11 +151,13 @@ class TestSearch:
         )
 
     def test_unknown_metric_raises(self, model):
-        bad = PQModel(model.codebooks, metric="hamming", dim=model.dim)
-        with pytest.raises(ValueError, match="unknown metric"):
-            from astro_vectordb_spark.operators.pq import _adc_lut
+        # the one LUT builder every ADC path calls rejects the metric
+        from astro_vectordb_spark.operators.pq import _adc_tables
 
-            _adc_lut(bad, np.zeros(DIM))
+        bad = PQModel(model.codebooks, metric="hamming", dim=model.dim)
+        codebooks, metric, dsub, rot = bad.kernel_state()
+        with pytest.raises(ValueError, match="unknown metric"):
+            _adc_tables(codebooks, metric, dsub, np.zeros((1, DIM)), rot)
 
 
 class TestScaleShape:
@@ -306,8 +309,20 @@ class TestIvfPq:
 
 
 class TestBatchPq:
+    @staticmethod
+    def _single(enc, df, pts, qids, k, model):
+        """Per-query ``pq_topk`` rows as (query_id, rank, id, score)."""
+        return sorted(
+            (q, i + 1, r.vec_id, r.score)
+            for q in qids
+            for i, r in enumerate(
+                pq_topk(enc, df, [float(x) for x in pts[q]], k, model)
+                .collect()
+            )
+        )
+
     def test_batch_matches_single(self, corpus, model):
-        from astro_vectordb_spark.operators.pq import pq_batch_topk
+        from astro_vectordb_spark.operators.pq import pq_batch_topk_cogrouped
 
         df, pts = corpus
         enc = pq_encode(df, model).cache()
@@ -317,7 +332,7 @@ class TestBatchPq:
             [(q, [float(x) for x in pts[q]]) for q in qids],
             "query_id long, query_vec array<float>",
         )
-        batch = pq_batch_topk(enc, df, queries, 10, model)
+        batch = pq_batch_topk_cogrouped(enc, df, queries, 10, model)
         got = {}
         for r in batch.collect():
             got.setdefault(r["query_id"], []).append(
@@ -336,13 +351,10 @@ class TestBatchPq:
         enc.unpersist()
 
     def test_cogrouped_matches_broadcast(self, corpus, model):
-        # the no-driver-materialization face returns bit-identical
-        # results to the broadcast face (same candidate cut order,
-        # same exact re-rank)
-        from astro_vectordb_spark.operators.pq import (
-            pq_batch_topk,
-            pq_batch_topk_cogrouped,
-        )
+        # the hash-blocked batch face returns, per query, exactly the
+        # single-query face's rows (same candidate cut order, same
+        # exact re-rank) at a block count that splits the codes
+        from astro_vectordb_spark.operators.pq import pq_batch_topk_cogrouped
 
         df, pts = corpus
         enc = pq_encode(df, model).cache()
@@ -352,10 +364,7 @@ class TestBatchPq:
             [(q, [float(x) for x in pts[q]]) for q in qids],
             "query_id long, query_vec array<float>",
         )
-        want = sorted(
-            (r.query_id, r.rank, r.vec_id, r.score)
-            for r in pq_batch_topk(enc, df, queries, 10, model).collect()
-        )
+        want = self._single(enc, df, pts, qids, 10, model)
         got = sorted(
             (r.query_id, r.rank, r.vec_id, r.score)
             for r in pq_batch_topk_cogrouped(
@@ -366,10 +375,7 @@ class TestBatchPq:
         enc.unpersist()
 
     def test_cogrouped_euclidean_matches_broadcast(self, corpus):
-        from astro_vectordb_spark.operators.pq import (
-            pq_batch_topk,
-            pq_batch_topk_cogrouped,
-        )
+        from astro_vectordb_spark.operators.pq import pq_batch_topk_cogrouped
 
         df, pts = corpus
         model_e = pq_train(
@@ -380,10 +386,7 @@ class TestBatchPq:
             [(q, [float(x) for x in pts[q]]) for q in (5, 900)],
             "query_id long, query_vec array<float>",
         )
-        want = sorted(
-            (r.query_id, r.rank, r.vec_id, r.score)
-            for r in pq_batch_topk(enc, df, queries, 5, model_e).collect()
-        )
+        want = self._single(enc, df, pts, (5, 900), 5, model_e)
         got = sorted(
             (r.query_id, r.rank, r.vec_id, r.score)
             for r in pq_batch_topk_cogrouped(
@@ -393,15 +396,21 @@ class TestBatchPq:
         assert got == want
 
     def test_batch_candidate_bound(self, corpus, model):
-        from astro_vectordb_spark.operators.pq import pq_batch_candidates
+        # the batch serve kernel keeps exactly n candidates per query
+        # of a block holding the whole code table
+        from astro_vectordb_spark.operators.pq import _make_cogroup_adc_kernel
 
         df, pts = corpus
-        enc = pq_encode(df, model)
-        cand = pq_batch_candidates(
-            enc, model, [(0, [float(x) for x in pts[0]]),
-                         (1, [float(x) for x in pts[9]])], 50
+        serve = _make_cogroup_adc_kernel(
+            df.sparkSession, model, 50, id_col="vec_id",
+            query_id_col="query_id", query_vec_col="query_vec",
         )
-        pdf = cand.toPandas()
+        pdf = serve(
+            pq_encode(df, model).toPandas(),
+            pd.DataFrame({"query_id": [0, 1],
+                          "query_vec": [pts[0].astype(float),
+                                        pts[9].astype(float)]}),
+        )
         assert set(pdf.query_id) == {0, 1}
         assert (pdf.groupby("query_id").size() == 50).all()
 
@@ -839,3 +848,114 @@ class TestIvfPqBatchCogrouped:
                 best[r["query_id"]] = (r["vec_id"], r["score"])
         for qi in qids:
             assert best[qi][0] == qi
+
+
+class TestAdcKernelDifferential:
+    """The one LUT builder and scorer against scores computed straight
+    from decoded vectors: q_hat . (c + decode(code)) for cosine/dot and
+    -||q_hat - c - decode(code)||^2 for euclidean (c = 0 for flat
+    codes), in the codebooks' (rotated) space; and the encoders against
+    a brute-force argmin."""
+
+    DIM, M, KS = 16, 4, 8
+
+    @staticmethod
+    def _signed_permutation(rng, dim):
+        # exactly orthogonal in float32, so the stored OPQ rotation is
+        # the rotation the reference applies
+        R = np.zeros((dim, dim), dtype=np.float32)
+        R[np.arange(dim), rng.permutation(dim)] = rng.choice([-1.0, 1.0], dim)
+        return R
+
+    @pytest.mark.parametrize("metric", ["cosine", "dot", "euclidean"])
+    @pytest.mark.parametrize("residual", [False, True])
+    @pytest.mark.parametrize("opq", [False, True])
+    def test_tables_match_decoded_scores(self, metric, residual, opq):
+        from astro_vectordb_spark.operators.pq import (
+            _adc_scores,
+            _adc_tables,
+            _decode_codes,
+            _prep,
+        )
+
+        rng = np.random.RandomState(5)
+        model = PQModel(
+            rng.normal(size=(self.M, self.KS, self.DIM // self.M)),
+            metric=metric, dim=self.DIM, residual=residual,
+            rotation=self._signed_permutation(rng, self.DIM) if opq else None,
+        )
+        codebooks, met, dsub, rot = model.kernel_state()
+        Q = rng.normal(size=(5, self.DIM))
+        Q[1] = 0.0          # zero query (cosine: the zero-norm case)
+        Q[2] = -0.0
+        Q[3] *= 1e-3        # tiny norm: cosine normalizes it to 1
+        centroid = rng.normal(size=self.DIM) if residual else None
+        codes = rng.randint(0, self.KS, size=(40, self.M))
+        got = _adc_scores(
+            *_adc_tables(codebooks, met, dsub, Q, rot, centroid), codes
+        )
+        q_hat = _prep(Q, metric)
+        c = np.zeros(self.DIM) if centroid is None else centroid
+        if rot is not None:
+            q_hat, c = q_hat @ rot, c @ rot
+        v_hat = c[None, :] + _decode_codes(codes, codebooks)
+        if metric == "euclidean":
+            want = -((q_hat[:, None, :] - v_hat[None, :, :]) ** 2).sum(axis=2)
+        else:
+            want = q_hat @ v_hat.T
+        np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-12)
+        if metric == "cosine":
+            norms = np.linalg.norm(_prep(Q, metric), axis=1)
+            np.testing.assert_allclose(norms[[0, 3, 4]], 1.0)
+            assert not norms[[1, 2]].any()
+
+    @staticmethod
+    def _argmin(X, codebooks):
+        m, _, dsub = codebooks.shape
+        return np.stack(
+            [
+                ((X[:, None, j * dsub:(j + 1) * dsub] - codebooks[j][None])
+                 ** 2).sum(axis=2).argmin(axis=1)
+                for j in range(m)
+            ],
+            axis=1,
+        )
+
+    @staticmethod
+    def _codes(frame):
+        pdf = frame.toPandas().sort_values("vec_id")
+        return pdf, np.stack(pdf.pq_code.to_numpy()).astype(np.int64) + 128
+
+    def test_encoders_match_brute_force_argmin(self, spark):
+        from astro_vectordb_spark.operators.pq import _prep, ivf_pq_build
+
+        rng = np.random.RandomState(21)
+        ctr = rng.normal(size=(5, self.DIM))
+        X = (ctr[rng.randint(0, 5, 400)]
+             + 0.3 * rng.normal(size=(400, self.DIM))).astype(np.float32)
+        X[7] = 0.0
+        df = spark.createDataFrame(
+            [(i, [float(x) for x in X[i]]) for i in range(len(X))],
+            "vec_id long, embedding array<float>",
+        )
+        model = pq_train(df, m=self.M, ks=self.KS, max_rows=400, seed=2)
+        _, got = self._codes(pq_encode(df, model))
+        cb = model.codebooks.astype(np.float64)
+        np.testing.assert_array_equal(
+            got, self._argmin(_prep(X, "cosine"), cb)
+        )
+        enc, cents, rmodel = ivf_pq_build(
+            df, k_cells=4, m=self.M, ks=self.KS, max_rows=400,
+            residual=True, opq_iters=8, seed=2,
+        )
+        assert rmodel.rotation is not None
+        pdf, got = self._codes(enc)
+        C = {int(r.cell_id): np.asarray(r.centroid, dtype=np.float64)
+             for r in cents.collect()}
+        R = (_prep(X[pdf.vec_id.to_numpy()], "cosine")
+             - np.stack([C[int(c)] for c in pdf.cell_id]))
+        np.testing.assert_array_equal(
+            got,
+            self._argmin(R @ rmodel.rotation.astype(np.float64),
+                         rmodel.codebooks.astype(np.float64)),
+        )

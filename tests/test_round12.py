@@ -6,11 +6,12 @@
 2. The PQ append faces' success-path reports carry
    ``skipped_replay: False`` (shape parity with the replay-hit path
    and the minhash family).
-3. ``_residual_pq_candidates`` builds ADC tables EXECUTOR-side from
-   model-sized broadcast state (codebooks + probed centroids) — the
-   candidates must equal the reference driver-side per-cell-LUT
-   construction (``_adc_lut_residual``) on both metrics, including a
-   probed SUBSET of cells (the server-side centroid filter path).
+3. The residual ADC scan (``_adc_candidates``) builds its tables
+   EXECUTOR-side from model-sized broadcast state (codebooks + probed
+   centroids) — the candidates must equal the top rows by scores
+   computed straight from the decoded vectors on both metrics,
+   including a probed SUBSET of cells (the server-side centroid
+   filter path).
 4. The minhash ``append``'s backlog measure short-circuits on the
    healthy path (counts agree -> no anti-join) and still reports
    ``repaired_rows: 0`` / the exact appended count.
@@ -130,8 +131,9 @@ class TestPqAppendReportShape:
 
 class TestResidualExecutorSideLuts:
     """The executor-side lazy per-cell table construction must produce
-    the exact candidate set of the reference driver-side
-    ``_adc_lut_residual`` tables — per metric, on a probed SUBSET."""
+    the candidate set of a reference that scores every probed row
+    straight from its decoded vector, v_hat = c + decode(code) —
+    per metric, on a probed SUBSET."""
 
     @pytest.fixture(scope="class")
     def corpus(self, spark):
@@ -152,9 +154,9 @@ class TestResidualExecutorSideLuts:
     @pytest.mark.parametrize("metric", ["cosine", "euclidean"])
     def test_candidates_match_reference_tables(self, spark, corpus, metric):
         from astro_vectordb_spark.operators.pq import (
-            _adc_lut_residual,
+            _adc_candidates,
+            _decode_codes,
             _prep,
-            _residual_pq_candidates,
             ivf_pq_build,
         )
 
@@ -170,25 +172,28 @@ class TestResidualExecutorSideLuts:
         probed = enc.filter(F.col("cell_id").isin(cells))
         got = sorted(
             int(r["vec_id"])
-            for r in _residual_pq_candidates(
-                probed, model, qv, cells, cents, 25
+            for r in _adc_candidates(
+                probed, model, qv, 25, cells=cells, centroids=cents
             ).collect()
         )
-        # reference: score every probed row with the driver-side
-        # per-cell (lut, const) tables
+        # reference: score every probed row from its decoded vector,
+        # q_hat . v_hat (cosine) or -||q_hat - v_hat||^2 (euclidean)
         cent_map = {
             int(r["cell_id"]): np.asarray(r["centroid"], dtype=np.float64)
             for r in cents.collect()
         }
-        tabs = {
-            c: _adc_lut_residual(model, np.asarray(qv, float), cent_map[c])
-            for c in cells
-        }
+        q_hat = _prep(np.asarray(qv, dtype=np.float64)[None, :], metric)[0]
+        codebooks = model.codebooks.astype(np.float64)
         scored = []
         for r in probed.select("vec_id", "cell_id", "pq_code").collect():
-            lut, const = tabs[int(r["cell_id"])]
-            code = np.asarray(r["pq_code"], dtype=np.int32) + 128
-            s = const + sum(lut[j][code[j]] for j in range(lut.shape[0]))
+            code = np.asarray(r["pq_code"], dtype=np.int64)[None, :] + 128
+            v_hat = cent_map[int(r["cell_id"])] + _decode_codes(
+                code, codebooks
+            )[0]
+            if metric == "euclidean":
+                s = -float(((q_hat - v_hat) ** 2).sum())
+            else:
+                s = float(q_hat @ v_hat)
             scored.append((-s, int(r["vec_id"])))
         scored.sort()
         want = sorted(v for _, v in scored[:25])

@@ -1543,7 +1543,7 @@ class TestMaintenanceControlPlane:
     @pytest.mark.parametrize("kind,op,bound", [
         ("ivf", "append", 18), ("ivf", "remove", 26),
         ("pq", "append", 22), ("pq", "remove", 24),
-        ("ivf_pq", "append", 32), ("ivf_pq", "remove", 24),
+        ("ivf_pq", "append", 27), ("ivf_pq", "remove", 24),
         ("bm25", "append", 22), ("bm25", "remove", 31),
     ])
     def test_kind_write_job_pins(self, spark, corpus, kind_paths, kind, op,
