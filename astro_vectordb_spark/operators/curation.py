@@ -455,50 +455,19 @@ def decontaminate_fuzzy(
     """
     from astro_vectordb_spark.functions.text import word_shingles
     from astro_vectordb_spark.operators.dedup import (
-        BAND_BASE,
-        POLY_MOD,
-        _char_poly_hash,
+        _MINHASH_SQL_SAFE,
+        _jaccard,
+        _scoped_cache,
     )
 
-    from astro_vectordb_spark.operators.dedup import _scoped_cache
-
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-
     def _banded(frame: DataFrame, out_id: str):
-        # cached: the shingle table feeds BOTH the banding aggregate
-        # and the exact-Jaccard verification join (same pattern as
-        # minhash_lsh_pairs_sql_safe) — without it the tokenize +
-        # shingle + poly-hash projection runs twice per side.
-        # Pooled (dedup._scoped_cache): bounded LRU, released on
-        # eviction or dedup.release_caches()
+        # cached (pooled, bounded LRU): the shingle table feeds BOTH the
+        # banding aggregate and the exact-Jaccard verification join
         base = _scoped_cache(frame.select(
             F.col(id_col).alias(out_id),
             word_shingles(F.col(text_col), n).alias("_sh"),
-        ))
-        ex = base.select(out_id, F.explode("_sh").alias("_s")).withColumn(
-            "_h", _char_poly_hash(F.col("_s"))
-        )
-        mins = ex.groupBy(out_id).agg(
-            *[
-                F.min(
-                    (F.lit(2 * i + 1) * F.col("_h") + F.lit(7919 * i))
-                    % F.lit(POLY_MOD)
-                ).alias(f"_h{i}")
-                for i in range(num_hashes)
-            ]
-        )
-        band_exprs = []
-        for b in range(bands):
-            acc = F.lit(0).cast("long")
-            for i in range(b * r, b * r + r):
-                acc = (acc * BAND_BASE + F.col(f"_h{i}")) % POLY_MOD
-            band_exprs.append(acc)
-        bd = mins.select(
-            out_id,
-            F.posexplode(F.array(*band_exprs)).alias("band_idx", "band_sig"),
-        )
-        return base, bd
+        ), frame)
+        return base, _MINHASH_SQL_SAFE.banded(base, num_hashes, bands, out_id)
 
     doc_sets, doc_bands = _banded(docs, id_col)
     bench_sets, bench_bands = _banded(benchmark, "__bench_id")
@@ -509,8 +478,6 @@ def decontaminate_fuzzy(
         .select(id_col, "__bench_id")
         .distinct()
     )
-    inter = F.size(F.array_intersect("_sh", "_shb"))
-    union = F.size("_sh") + F.size("_shb") - inter
     verified = (
         cands.join(doc_sets, id_col)
         .join(
@@ -519,9 +486,7 @@ def decontaminate_fuzzy(
             ),
             "__bench_id",
         )
-        .withColumn(
-            "_j", F.round(inter.cast("double") / union, 6)
-        )
+        .withColumn("_j", _jaccard("_sh", "_shb"))
         .filter(F.col("_j") >= F.lit(float(threshold)))
     )
     hits = verified.groupBy(id_col).agg(

@@ -10,6 +10,17 @@ over documents.  Five family members, all DataFrame -> DataFrame:
                          exact-Jaccard verification of candidates
 - simhash_pairs        — 64-bit SimHash with pigeonhole band blocking
                          on Hamming distance
+- *_sql_safe twins     — the same MinHash/SimHash pipelines under the
+                         SQL-safe char-poly hash family, which the
+                         DuckDB oracle replays bit for bit
+
+Hash families live only here: one record per scheme and family
+(``_MINHASH_NATIVE``/``_MINHASH_SQL_SAFE``, ``_SIMHASH["native64"]``/
+``_SIMHASH["sql_safe31"]``) holds what differs (token hash, signature
+builder, band fold or chunk layout, bit width, distance check), and
+each pipeline is written once with the record passed in.  Fuzzy
+decontamination and the persisted MinHash/SimHash indexes use the same
+records (the indexes by their stored ``hash_family`` string).
 - embedding_near_dups  — cosine threshold on embeddings: RP-LSH
                          blocked by default (rp_block_pairs), exact
                          similarity_join for small frames
@@ -34,10 +45,12 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import itertools
+from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from astro_vectordb_spark.functions.text import fingerprint, tokens, word_shingles
@@ -56,7 +69,7 @@ JACCARD_DECIMALS = 6
 # (round-7 verdict).
 #
 # The fix is a capacity-bounded LRU pool keyed by the frame's SEMANTIC
-# hash: registering an intermediate whose logical plan is already
+# hash plus its source's input files (see _scoped_cache): registering an intermediate whose logical plan is already
 # pooled reuses the live cache (so repeated identical calls — warm
 # reruns, retries, oracle double-evaluation — stay cheap), a new plan
 # evicts-and-unpersists the least-recently-used entry once the pool
@@ -73,8 +86,15 @@ JACCARD_DECIMALS = 6
 # evict another's warm cache — a throughput matter only, never
 # correctness).  Per-tenant isolation = one Python process per
 # tenant, or raise the capacity for a deliberately shared driver.
-_CACHE_POOL: dict[int, DataFrame] = {}
+_CACHE_POOL: dict[int, tuple[DataFrame, tuple[str, ...]]] = {}
 CACHE_POOL_CAPACITY = 8
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session torn down — nothing to release
 
 
 def release_caches() -> int:
@@ -83,37 +103,41 @@ def release_caches() -> int:
     that want the executor memory back immediately (e.g. between
     stages of a long pipeline)."""
     n = len(_CACHE_POOL)
-    for df in _CACHE_POOL.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session torn down — nothing to release
+    for df, _ in _CACHE_POOL.values():
+        _unpersist(df)
     _CACHE_POOL.clear()
     return n
 
 
-def _scoped_cache(df: DataFrame) -> DataFrame:
+def _scoped_cache(df: DataFrame, source: DataFrame) -> DataFrame:
     """Cache ``df`` through the bounded pool (reuse on identical
-    logical plan, LRU-evict-and-unpersist beyond capacity)."""
+    logical plan over the same input files, LRU-evict-and-unpersist
+    beyond capacity).
+
+    ``source`` is the frame ``df`` derives from.  A re-read of a path
+    whose directory was swapped has the SAME logical plan as the read
+    before the swap, so the plan hash alone would serve the old rows;
+    the key therefore also holds the source's input file list.  It is
+    read from ``source``, not ``df``: while the old entry is cached,
+    Spark substitutes it into ``df``'s plan and ``df.inputFiles()``
+    is empty.  A same-plan entry over other files is unpersisted
+    before caching again, since Spark's own cache lookup would still
+    match the old relation."""
     try:
         key = df.semanticHash()
-        hit = _CACHE_POOL.get(key)
-        if hit is not None and hit.schema == df.schema:
-            # refresh recency (dict preserves insertion order)
-            del _CACHE_POOL[key]
-            _CACHE_POOL[key] = hit
-            return hit
+        files = tuple(sorted(source.inputFiles()))
+        hit = _CACHE_POOL.pop(key, None)
     except Exception:
         return df.cache()  # pool unavailable (torn-down session)
+    if hit is not None:
+        if hit[1] == files and hit[0].schema == df.schema:
+            _CACHE_POOL[key] = hit  # refresh recency (insertion order)
+            return hit[0]
+        _unpersist(hit[0])
     out = df.cache()
-    _CACHE_POOL[key] = out
+    _CACHE_POOL[key] = (out, files)
     while len(_CACHE_POOL) > CACHE_POOL_CAPACITY:
-        oldest = next(iter(_CACHE_POOL))
-        old = _CACHE_POOL.pop(oldest)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+        _unpersist(_CACHE_POOL.pop(next(iter(_CACHE_POOL)))[0])
     return out
 
 
@@ -181,7 +205,7 @@ def _jaccard_allpairs(
     # verify sides); materialize it once instead of recomputing the
     # tokenize+shingle expression per branch (pooled: bounded LRU,
     # released on eviction or release_caches())
-    base = _scoped_cache(base)
+    base = _scoped_cache(base, df)
     idx = base.select(
         F.col(id_col), "_sz", F.explode("_sh").alias("shingle")
     )
@@ -230,18 +254,52 @@ def _jaccard_allpairs(
         .select("a_id", "b_id")
         .distinct()
     )
-    a_sets = base.select(F.col(id_col).alias("a_id"), F.col("_sh").alias("_sha"))
-    b_sets = base.select(F.col(id_col).alias("b_id"), F.col("_sh").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = F.size("_sha") + F.size("_shb") - inter
+    return _verify_jaccard(cands, base, id_col, t)
+
+
+def _jaccard(a_sh: str, b_sh: str):
+    """Exact Jaccard of two shingle-set columns, rounded to
+    ``JACCARD_DECIMALS`` — the one verify formula of the text near-dup
+    family (all-pairs, both MinHash faces, fuzzy decontamination)."""
+    inter = F.size(F.array_intersect(a_sh, b_sh))
+    union = F.size(a_sh) + F.size(b_sh) - inter
+    return F.round(inter.cast("double") / union, JACCARD_DECIMALS)
+
+
+def _verify_jaccard(
+    cands: DataFrame, sets_: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Verify ONLY the candidate ``(a_id, b_id)`` pairs: join each
+    side's shingle set in from ``sets_`` (``id_col``, ``_sh``) and keep
+    exact Jaccard >= ``threshold`` — work is O(candidates), not
+    O(co-shingled pairs)."""
+    a_sets = sets_.select(F.col(id_col).alias("a_id"), F.col("_sh").alias("_sha"))
+    b_sets = sets_.select(F.col(id_col).alias("b_id"), F.col("_sh").alias("_shb"))
     return (
         cands.join(a_sets, "a_id")
         .join(b_sets, "b_id")
-        .withColumn(
-            "jaccard", F.round(inter.cast("double") / union, JACCARD_DECIMALS)
-        )
-        .filter(F.col("jaccard") >= F.lit(t))
+        .withColumn("jaccard", _jaccard("_sha", "_shb"))
+        .filter(F.col("jaccard") >= F.lit(float(threshold)))
         .select("a_id", "b_id", "jaccard")
+    )
+
+
+def _bucket_self_join(
+    buckets: DataFrame, id_col: str, keys: list[str], value: str | None = None
+) -> DataFrame:
+    """``(keys..., a_id[, a_<value>], b_id[, b_<value>])``: every pair of
+    rows sharing a bucket key, ``a_id < b_id`` — the candidate stage of
+    every blocked near-dup pipeline (band, chunk and RP-cell buckets).
+    ``value`` names a column carried along each side."""
+
+    def side(s: str) -> DataFrame:
+        cols = [F.col(id_col).alias(f"{s}_id"), *keys]
+        if value is not None:
+            cols.append(F.col(value).alias(f"{s}_{value}"))
+        return buckets.select(*cols)
+
+    return side("a").join(side("b"), on=keys).filter(
+        F.col("a_id") < F.col("b_id")
     )
 
 
@@ -411,6 +469,275 @@ def _collapse_exact_texts(
     return rep_rows, star
 
 
+# --------------------------------------------------------------------------
+# Hash families.  Each near-dup scheme has two: the native one (xxhash64,
+# the production discrimination) and the SQL-safe one (the char-poly
+# hash, integer arithmetic the DuckDB oracle replays bit for bit).  A
+# family record holds only what differs between the two; each pipeline
+# below is written once and takes the record.  This module is the only
+# place that knows a family: the persisted indexes look theirs up by the
+# stored ``hash_family`` string (:func:`_simhash_hashes`).
+
+
+@dataclass(frozen=True)
+class _MinhashHashes:
+    """A MinHash hash family: ``token_hash`` maps each shingle to the
+    ``_h`` column ``min_hash`` reads (None: ``min_hash`` hashes the
+    shingle string ``_s`` itself); ``min_hash(i)`` is the SQL of hash i
+    for one shingle row; ``band_fold(sig, start, r)`` is the SQL of the
+    band signature over ``r`` signature entries from 1-based ``start``.
+    Every aggregate and fold is one parsed SQL expression (one JVM call
+    each, not a Column tree)."""
+
+    token_hash: Callable[[Column], Column] | None
+    min_hash: Callable[[int], str]
+    band_fold: Callable[[str, int, int], str]
+
+    def signatures(
+        self, shingles: DataFrame, num_hashes: int, id_col: str, sig_col: str
+    ) -> DataFrame:
+        """``(id_col, sig_col array<bigint>)`` from an ``(id_col, _sh)``
+        shingle table: explode once, then ``num_hashes`` partial MIN
+        aggregates — map-side combining, so the shuffle carries one row
+        per doc per partition.  Docs with no shingles get no row."""
+        ex = shingles.select(F.col(id_col), F.explode("_sh").alias("_s"))
+        if self.token_hash is not None:
+            ex = ex.withColumn("_h", self.token_hash(F.col("_s")))
+        mins = ex.groupBy(id_col).agg(
+            *[
+                F.expr(f"min({self.min_hash(i)}) AS _h{i}")
+                for i in range(num_hashes)
+            ]
+        )
+        return mins.selectExpr(
+            f"`{id_col}`",
+            f"array({', '.join(f'_h{i}' for i in range(num_hashes))}) AS {sig_col}",
+        )
+
+    def bands(
+        self,
+        sigs: DataFrame,
+        num_hashes: int,
+        bands: int,
+        id_col: str,
+        sig_col: str,
+    ) -> DataFrame:
+        """``(id_col, ..., band_idx, band_sig)``: one row per band of
+        r = num_hashes / bands signature entries.  Every input column
+        but ``sig_col`` passes through (id first, see :func:`_carried`)."""
+        assert num_hashes % bands == 0, "bands must divide num_hashes"
+        r = num_hashes // bands
+        folds = ", ".join(
+            self.band_fold(sig_col, b * r + 1, r) for b in range(bands)
+        )
+        return sigs.selectExpr(
+            *[f"`{c}`" for c in _carried(sigs, id_col, sig_col)],
+            f"posexplode(array({folds})) AS (band_idx, band_sig)",
+        )
+
+    def banded(
+        self, shingles: DataFrame, num_hashes: int, bands: int, id_col: str
+    ) -> DataFrame:
+        """``(id_col, band_idx, band_sig)`` straight from a shingle table."""
+        return self.bands(
+            self.signatures(shingles, num_hashes, id_col, "_sig"),
+            num_hashes, bands, id_col, "_sig",
+        )
+
+
+# hash_i(s) = xxhash64(i, s); band signature = xxhash64 of the band's slice
+_MINHASH_NATIVE = _MinhashHashes(
+    token_hash=None,
+    min_hash=lambda i: f"xxhash64({i}, _s)",
+    band_fold=lambda sig, start, r: f"xxhash64(slice(`{sig}`, {start}, {r}))",
+)
+# hash_i(s) = ((2i+1) * polyhash(s) + 7919 i) mod (2^31-1); band
+# signature = left fold of the band's entries base BAND_BASE mod POLY_MOD.
+# Int literals times the bigint hash: the oracle's types and arithmetic.
+_MINHASH_SQL_SAFE = _MinhashHashes(
+    token_hash=_char_poly_hash,
+    min_hash=lambda i: f"({2 * i + 1} * _h + {7919 * i}) % {POLY_MOD}",
+    band_fold=lambda sig, start, r: (
+        f"aggregate(slice(`{sig}`, {start}, {r}), CAST(0 AS BIGINT), "
+        f"(acc, x) -> (acc * {BAND_BASE} + x) % {POLY_MOD})"
+    ),
+)
+
+
+SIMHASH_SQL_BITS = 31  # char-poly hashes are < 2^31
+SIMHASH_SQL_CHUNKS = [(0, 255), (8, 255), (16, 255), (24, 127)]  # (offset, mask)
+
+
+def native_simhash_chunks(max_hamming: int) -> list[tuple[int, int]]:
+    """Even-width (offset, mask) chunk layout over 64 bits for the
+    native signature family: max_hamming + 1 chunks."""
+    n = max_hamming + 1
+    width = 64 // n
+    return [(c * width, (1 << width) - 1) for c in range(n)]
+
+
+@dataclass(frozen=True)
+class _SimhashHashes:
+    """A SimHash hash family: ``name`` is the ``hash_family`` string a
+    persisted index stores; ``token_hash`` maps each distinct token to
+    a bigint whose low ``bits`` bits vote; ``fixed_chunks`` is the
+    family's fixed pigeonhole layout (None: ``max_hamming + 1``
+    even-width chunks over the bits); ``hamming_type`` is the type the
+    one-shot pair face reports the distance in."""
+
+    name: str
+    bits: int
+    token_hash: Callable[[Column], Column]
+    fixed_chunks: list[tuple[int, int]] | None
+    hamming_type: str
+
+    def signatures(
+        self, df: DataFrame, text_col: str, id_col: str
+    ) -> DataFrame:
+        """``(id_col, sim bigint)``: explode distinct tokens once, hash
+        each token once, then ``bits`` partial-SUM aggregates of the
+        per-bit +/-1 votes (map-side combining, one shuffle of one row
+        per doc per partition); bit j of ``sim`` is set iff its vote
+        sum is positive."""
+        ex = df.select(
+            F.col(id_col),
+            F.explode(F.array_distinct(tokens(F.lower(F.col(text_col))))).alias("_t"),
+        ).withColumn("_h", self.token_hash(F.col("_t")))
+        votes = ex.groupBy(id_col).agg(
+            *[
+                F.expr(f"sum(IF((shiftright(_h, {j}) & 1) = 1, 1, -1)) AS _b{j}")
+                for j in range(self.bits)
+            ]
+        )
+        sim = " | ".join(
+            f"IF(_b{j} > 0, shiftleft(1L, {j}), 0L)" for j in range(self.bits)
+        )
+        return votes.selectExpr(f"`{id_col}`", f"{sim} AS sim")
+
+    def chunks(self, max_hamming: int) -> list[tuple[int, int]]:
+        """The (offset, mask) pigeonhole layout for ``max_hamming``:
+        any pair within that distance shares at least one exact chunk.
+        A fixed layout of c chunks covers distances up to c - 1 only,
+        so a larger one raises ValueError instead of dropping pairs."""
+        mh = int(max_hamming)
+        if self.fixed_chunks is None:
+            return native_simhash_chunks(mh)
+        if mh >= len(self.fixed_chunks):
+            raise ValueError(
+                f"{self.name} simhash supports max_hamming <= "
+                f"{len(self.fixed_chunks) - 1} (its fixed "
+                f"{len(self.fixed_chunks)}-chunk SQL-replayable layout "
+                "pigeonholes exactly that far); use the native64 family "
+                "(simhash_pairs, or hash_family='native64' for an index) "
+                f"for larger distances (got max_hamming={max_hamming})"
+            )
+        return self.fixed_chunks
+
+
+_SIMHASH = {
+    h.name: h
+    for h in (
+        _SimhashHashes("native64", 64, F.xxhash64, None, "int"),
+        _SimhashHashes(
+            "sql_safe31", SIMHASH_SQL_BITS, _char_poly_hash,
+            SIMHASH_SQL_CHUNKS, "long",
+        ),
+    )
+}
+
+
+def _simhash_hashes(hash_family: str) -> _SimhashHashes:
+    """The SimHash family record for a ``hash_family`` string."""
+    try:
+        return _SIMHASH[hash_family]
+    except KeyError:
+        raise ValueError(f"unknown simhash hash_family {hash_family!r}") from None
+
+
+def _carried(sigs: DataFrame, id_col: str, sig_col: str) -> list[str]:
+    """The columns a bucket kernel passes through: the id first, then
+    every other input column except the signature it buckets."""
+    return [id_col] + [c for c in sigs.columns if c not in (id_col, sig_col)]
+
+
+def _shingle_table(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
+    return df.select(F.col(id_col), word_shingles(F.col(text_col), n).alias("_sh"))
+
+
+def _minhash_pairs(
+    df: DataFrame,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    n: int,
+    text_col: str,
+    id_col: str,
+    collapse_exact: bool,
+    hashes: _MinhashHashes,
+) -> DataFrame:
+    """The one MinHash LSH pipeline: shingle table -> signatures ->
+    band buckets -> candidate self-join -> exact-Jaccard verify ->
+    optional ``collapse_exact`` star union."""
+    assert num_hashes % bands == 0, "bands must divide num_hashes"
+    star = None
+    if collapse_exact:
+        df, star = _collapse_exact_texts(df, id_col, text_col, n)
+    # cached (pooled, bounded LRU): the signatures and both verify
+    # sides read it
+    sets_ = _scoped_cache(_shingle_table(df, n, text_col, id_col), df)
+    cands = (
+        _bucket_self_join(
+            hashes.banded(sets_, num_hashes, bands, id_col),
+            id_col, ["band_idx", "band_sig"],
+        )
+        .select("a_id", "b_id")
+        .distinct()
+    )
+    out = _verify_jaccard(cands, sets_, id_col, threshold)
+    if star is not None:
+        t = float(threshold)
+        out = out.unionByName(
+            star.withColumn("jaccard", F.lit(1.0)).filter(F.lit(1.0) >= F.lit(t))
+        )
+    return out
+
+
+def _simhash_pairs(
+    df: DataFrame,
+    max_hamming: int,
+    text_col: str,
+    id_col: str,
+    hashes: _SimhashHashes,
+) -> DataFrame:
+    """The one SimHash pipeline: signatures -> pigeonhole chunk
+    buckets -> candidate self-join -> popcount verify."""
+    chunks = hashes.chunks(max_hamming)
+    sigs = hashes.signatures(df, text_col, id_col)
+    blocked = sigs.select(
+        F.col(id_col), "sim",
+        F.posexplode(_chunk_values(chunks, "sim")).alias("chunk_idx", "chunk_val"),
+    )
+    ham = F.bit_count(F.col("a_sim").bitwiseXOR(F.col("b_sim")))
+    return (
+        _bucket_self_join(blocked, id_col, ["chunk_idx", "chunk_val"], "sim")
+        .select("a_id", "b_id", ham.cast(hashes.hamming_type).alias("hamming"))
+        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def _chunk_values(chunks: list[tuple[int, int]], sig_col: str):
+    """array of chunk values, chunk c = (sig >>> offset) & mask."""
+    return F.array(
+        *[
+            F.shiftrightunsigned(F.col(sig_col), off).bitwiseAND(
+                F.lit(mask).cast("long")
+            )
+            for off, mask in chunks
+        ]
+    )
+
+
 def minhash_lsh_pairs_sql_safe(
     df: DataFrame,
     threshold: float = 0.8,
@@ -429,8 +756,9 @@ def minhash_lsh_pairs_sql_safe(
 
     hash_i(s) = ((2i+1) * polyhash(s) + 7919 i) mod (2^31-1); band
     signature = left fold of its r member minhashes base 1000003.
-    Same plan shape as minhash_lsh_pairs (explode once, partial-MIN
-    aggs, band-bucket join, candidate-only verification).
+    The same pipeline as minhash_lsh_pairs (explode once, partial-MIN
+    aggs, band-bucket join, candidate-only verification) with the
+    SQL-safe hash family passed in.
 
     ``collapse_exact`` (opt-in, the boilerplate-cluster guard): exact
     text duplicates are collapsed to a min-id representative before
@@ -440,63 +768,10 @@ def minhash_lsh_pairs_sql_safe(
     default (False) keeps the exact all-pairs contract the DuckDB
     oracle replays (member-member edges included).
     """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    t = float(threshold)
-    star = None
-    if collapse_exact:
-        df, star = _collapse_exact_texts(df, id_col, text_col, n)
-    base = _scoped_cache(df.select(
-        F.col(id_col), word_shingles(F.col(text_col), n).alias("_sh")
-    ))
-    ex = base.select(
-        F.col(id_col), F.explode("_sh").alias("_s")
-    ).withColumn("_h", _char_poly_hash(F.col("_s")))
-    mins = ex.groupBy(id_col).agg(
-        *[
-            F.min(
-                (F.lit(2 * i + 1) * F.col("_h") + F.lit(7919 * i)) % F.lit(POLY_MOD)
-            ).alias(f"_h{i}")
-            for i in range(num_hashes)
-        ]
+    return _minhash_pairs(
+        df, threshold, num_hashes, bands, n, text_col, id_col,
+        collapse_exact, _MINHASH_SQL_SAFE,
     )
-    band_exprs = []
-    for b in range(bands):
-        acc = F.lit(0).cast("long")
-        for i in range(b * r, b * r + r):
-            acc = (acc * BAND_BASE + F.col(f"_h{i}")) % POLY_MOD
-        band_exprs.append(acc)
-    banded = mins.select(
-        id_col, F.posexplode(F.array(*band_exprs)).alias("band_idx", "band_sig")
-    )
-    a = banded.withColumnRenamed(id_col, "a_id")
-    b_ = banded.withColumnRenamed(id_col, "b_id")
-    cands = (
-        a.join(b_, on=["band_idx", "band_sig"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    a_sets = base.select(F.col(id_col).alias("a_id"), F.col("_sh").alias("_sha"))
-    b_sets = base.select(F.col(id_col).alias("b_id"), F.col("_sh").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = F.size("_sha") + F.size("_shb") - inter
-    out = (
-        cands.join(a_sets, "a_id")
-        .join(b_sets, "b_id")
-        .withColumn(
-            "jaccard", F.round(inter.cast("double") / union, JACCARD_DECIMALS)
-        )
-        .filter(F.col("jaccard") >= F.lit(t))
-        .select("a_id", "b_id", "jaccard")
-    )
-    if star is not None:
-        out = out.unionByName(
-            star.withColumn("jaccard", F.lit(1.0)).filter(
-                F.lit(1.0) >= F.lit(t)
-            )
-        )
-    return out
 
 
 def minhash_signature(
@@ -514,17 +789,8 @@ def minhash_signature(
     exactly once per document (a naive nested ``transform`` re-evaluates
     it per hash function), and the groupBy is map-side-combining, so the
     shuffle carries one row per doc per partition.  All JVM-side."""
-    ex = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), n)).alias("_s")
-    )
-    mins = ex.groupBy(id_col).agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("_s"))).alias(f"_h{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    return mins.select(
-        id_col, F.array(*[f"_h{i}" for i in range(num_hashes)]).alias("signature")
+    return _MINHASH_NATIVE.signatures(
+        _shingle_table(df, n, text_col, id_col), num_hashes, id_col, "signature"
     )
 
 
@@ -543,33 +809,10 @@ def minhash_signatures_sql_safe(
     plan shape as :func:`minhash_signature`.  Docs with fewer than
     ``n`` tokens have no shingles and are dropped (they cannot
     near-dup under this family)."""
-    base = df.select(
-        F.col(id_col), word_shingles(F.col(text_col), n).alias("_sh")
-    ).filter(F.size("_sh") > 0)
-    ex = base.select(
-        F.col(id_col), F.explode("_sh").alias("_s")
-    ).withColumn("_h", _char_poly_hash(F.col("_s")))
-    # each aggregate is one parsed SQL expression (one JVM call, not
-    # a Column tree of ~10): int literals times the bigint hash, the
-    # same types and arithmetic as the oracle's
-    mins = ex.groupBy(id_col).agg(
-        *[
-            F.expr(
-                f"min(({2 * i + 1} * _h + {7919 * i}) % {POLY_MOD}) AS _h{i}"
-            )
-            for i in range(num_hashes)
-        ]
+    return _MINHASH_SQL_SAFE.signatures(
+        _shingle_table(df, n, text_col, id_col).filter(F.size("_sh") > 0),
+        num_hashes, id_col, "sig",
     )
-    return mins.selectExpr(
-        f"`{id_col}`",
-        f"array({', '.join(f'_h{i}' for i in range(num_hashes))}) AS sig",
-    )
-
-
-def _carried(sigs: DataFrame, id_col: str, sig_col: str) -> list[str]:
-    """The columns a bucket kernel passes through: the id first, then
-    every other input column except the signature it buckets."""
-    return [id_col] + [c for c in sigs.columns if c not in (id_col, sig_col)]
 
 
 def minhash_band_table(
@@ -581,24 +824,13 @@ def minhash_band_table(
 ) -> DataFrame:
     """``(id_col, band_idx, band_sig)`` from array-form signatures:
     band_sig = left fold of the band's r = num_hashes/bands member
-    minhashes base ``BAND_BASE`` mod ``POLY_MOD`` — identical
-    arithmetic to :func:`minhash_lsh_pairs_sql_safe`'s inline band
-    exprs and the oracle's list_reduce, so bands computed from STORED
+    minhashes base ``BAND_BASE`` mod ``POLY_MOD`` — the SQL-safe
+    family's band fold, the same one :func:`minhash_lsh_pairs_sql_safe`
+    and the oracle's list_reduce apply, so bands computed from STORED
     signatures equal bands computed from text.  Every input column but
     ``sig_col`` passes through (id first, see :func:`_carried`), so a
     caller can carry a batch's values along its bucket rows."""
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    # the whole projection is one parsed SQL expression list
-    folds = ", ".join(
-        f"aggregate(slice(`{sig_col}`, {b * r + 1}, {r}), CAST(0 AS BIGINT), "
-        f"(acc, x) -> (acc * {BAND_BASE} + x) % {POLY_MOD})"
-        for b in range(bands)
-    )
-    return sigs.selectExpr(
-        *[f"`{c}`" for c in _carried(sigs, id_col, sig_col)],
-        f"posexplode(array({folds})) AS (band_idx, band_sig)",
-    )
+    return _MINHASH_SQL_SAFE.bands(sigs, num_hashes, bands, id_col, sig_col)
 
 
 def minhash_lsh_pairs(
@@ -609,77 +841,27 @@ def minhash_lsh_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    verify: bool = True,
     collapse_exact: bool = False,
 ) -> DataFrame:
     """Near-dup pairs via MinHash + banded LSH.
 
     ``num_hashes`` hashes split into ``bands`` bands of r = k/b rows;
     docs colliding in >= 1 band become candidates (P[collide] =
-    1-(1-j^r)^b).  With verify=True (default), candidates are checked
-    with exact n-gram Jaccard, so output = exact pairs *restricted to
-    LSH candidates*: same schema as ngram_jaccard_pairs, recall < 1 by
-    design, cost ~linear.  Scale: band buckets are the join key —
-    O(docs x bands) rows shuffle, never O(n^2).
+    1-(1-j^r)^b).  Candidates are checked with exact n-gram Jaccard,
+    so output = exact pairs *restricted to LSH candidates*: same schema
+    as ngram_jaccard_pairs, recall < 1 by design, cost ~linear.  Scale:
+    band buckets are the join key — O(docs x bands) rows shuffle, never
+    O(n^2).
 
     ``collapse_exact`` (opt-in): collapse exact-text duplicates to a
     min-id representative before banding and re-attach them as
     (rep, member) star edges — O(d) instead of O(d^2) candidates for
     a d-copy boilerplate cluster, connectivity-equivalent for dedup
     grouping (see :func:`_collapse_exact_texts`)."""
-    assert num_hashes % bands == 0, "bands must divide num_hashes"
-    r = num_hashes // bands
-    star = None
-    if collapse_exact:
-        df, star = _collapse_exact_texts(df, id_col, text_col, n)
-    sigs = minhash_signature(df, num_hashes, n, text_col, id_col)
-    banded = sigs.select(
-        id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bi: F.xxhash64(F.slice(F.col("signature"), bi * r + 1, r)),
-            )
-        ).alias("band_idx", "band_sig"),
+    return _minhash_pairs(
+        df, threshold, num_hashes, bands, n, text_col, id_col,
+        collapse_exact, _MINHASH_NATIVE,
     )
-    a = banded.withColumnRenamed(id_col, "a_id")
-    b = banded.withColumnRenamed(id_col, "b_id")
-    cands = (
-        a.join(b, on=["band_idx", "band_sig"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    if not verify:
-        return cands if star is None else cands.unionByName(star).distinct()
-    # Verify ONLY the candidates: join each side's shingle set in and
-    # compute exact Jaccard per pair with array intersection — work is
-    # O(candidates), not O(co-shingled pairs).  Cached (generation-
-    # pooled, bounded LRU): both verify sides read it.
-    sets_ = _scoped_cache(df.select(
-        F.col(id_col), word_shingles(F.col(text_col), n).alias("_sh")
-    ))
-    a_sets = sets_.select(F.col(id_col).alias("a_id"), F.col("_sh").alias("_sha"))
-    b_sets = sets_.select(F.col(id_col).alias("b_id"), F.col("_sh").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = F.size("_sha") + F.size("_shb") - inter
-    out = (
-        cands.join(a_sets, "a_id")
-        .join(b_sets, "b_id")
-        .withColumn(
-            "jaccard",
-            F.round(inter.cast("double") / union, JACCARD_DECIMALS),
-        )
-        .filter(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("a_id", "b_id", "jaccard")
-    )
-    if star is not None:
-        out = out.unionByName(
-            star.withColumn("jaccard", F.lit(1.0)).filter(
-                F.lit(1.0) >= F.lit(float(threshold))
-            )
-        )
-    return out
 
 
 def _mask(j: int) -> int:
@@ -694,8 +876,6 @@ def simhash64(text_col, n: int = 1):
     The 64 bit tests are generated Python-side with static masks
     (PySpark's shift functions only take literal shift amounts), so the
     whole signature is one codegen'd projection — no UDF."""
-    from astro_vectordb_spark.functions.text import tokens
-
     units = F.array_distinct(tokens(F.lower(text_col))) if n == 1 else word_shingles(
         text_col, n
     )
@@ -732,30 +912,7 @@ def simhash_table(
     combining, one shuffle of one row per doc per partition).  The
     expression-only ``simhash64`` re-walks the token array per bit —
     fine for a single row, wrong shape for a corpus scan."""
-    from astro_vectordb_spark.functions.text import tokens
-
-    ex = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(tokens(F.lower(F.col(text_col))))).alias("_t"),
-    ).withColumn("_h", F.xxhash64(F.col("_t")))
-    votes = ex.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(
-                    F.col("_h").bitwiseAND(F.lit(_mask(j)).cast("long")) != 0, 1
-                ).otherwise(-1)
-            ).alias(f"_b{j}")
-            for j in range(64)
-        ]
-    )
-    sig = F.lit(0).cast("long")
-    for j in range(64):
-        sig = sig.bitwiseXOR(
-            F.when(F.col(f"_b{j}") > 0, F.lit(_mask(j)).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return votes.select(id_col, sig.alias("sim"))
+    return _SIMHASH["native64"].signatures(df, text_col, id_col)
 
 
 def simhash_pairs(
@@ -771,37 +928,7 @@ def simhash_pairs(
     one exact chunk — so the join key is (chunk_idx, chunk_value) and
     recall is exactly 1.0 at O(docs x chunks) shuffle (Manku et al.,
     WWW'07 pattern)."""
-    chunks = max_hamming + 1
-    width = 64 // chunks
-    sig = simhash_table(df, text_col, id_col)
-    chunk_exprs = [
-        F.shiftrightunsigned(F.col("sim"), c * width).bitwiseAND(
-            F.lit((1 << width) - 1).cast("long")
-        )
-        for c in range(chunks)
-    ]
-    blocked = sig.select(
-        id_col,
-        "sim",
-        F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk_val"),
-    )
-    a = blocked.select(
-        F.col(id_col).alias("a_id"), F.col("sim").alias("a_sim"), "chunk_idx", "chunk_val"
-    )
-    b = blocked.select(
-        F.col(id_col).alias("b_id"), F.col("sim").alias("b_sim"), "chunk_idx", "chunk_val"
-    )
-    return (
-        a.join(b, on=["chunk_idx", "chunk_val"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", hamming64(F.col("a_sim"), F.col("b_sim")).alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-SIMHASH_SQL_BITS = 31  # char-poly hashes are < 2^31
-SIMHASH_SQL_CHUNKS = [(0, 255), (8, 255), (16, 255), (24, 127)]  # (offset, mask)
+    return _simhash_pairs(df, max_hamming, text_col, id_col, _SIMHASH["native64"])
 
 
 def simhash_sql_table(
@@ -812,29 +939,8 @@ def simhash_sql_table(
     arithmetic the DuckDB twin replays (see simhash_pairs_sql_safe's
     discrimination-gap note for why this family coexists with the
     native 64-bit one).  Shared by the one-shot pair face and the
-    persisted SimHash index (vault.save_simhash_index)."""
-    from astro_vectordb_spark.functions.text import tokens
-
-    ex = df.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(tokens(F.lower(F.col(text_col))))
-        ).alias("_t"),
-    ).withColumn("_h", _char_poly_hash(F.col("_t")))
-    votes = ex.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.shiftright(F.col("_h"), j).bitwiseAND(F.lit(1)) * 2 - 1
-            ).alias(f"_b{j}")
-            for j in range(SIMHASH_SQL_BITS)
-        ]
-    )
-    sig = F.lit(0).cast("long")
-    for j in range(SIMHASH_SQL_BITS):
-        sig = sig + F.when(
-            F.col(f"_b{j}") > 0, F.lit(1 << j).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return votes.select(id_col, sig.alias("sim"))
+    persisted SimHash index (``hash_family='sql_safe31'``)."""
+    return _SIMHASH["sql_safe31"].signatures(df, text_col, id_col)
 
 
 def simhash_chunk_table(
@@ -850,24 +956,10 @@ def simhash_chunk_table(
     layout and the native even-width 64-bit layout share one kernel.
     Every other input column passes through, as in
     :func:`minhash_band_table`."""
-    chunk_exprs = [
-        F.shiftrightunsigned(F.col(sig_col), off).bitwiseAND(
-            F.lit(mask).cast("long")
-        )
-        for off, mask in chunks
-    ]
     return sigs.select(
         *_carried(sigs, id_col, sig_col),
-        F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk_val"),
+        F.posexplode(_chunk_values(chunks, sig_col)).alias("chunk_idx", "chunk_val"),
     )
-
-
-def native_simhash_chunks(max_hamming: int) -> list[tuple[int, int]]:
-    """Even-width (offset, mask) chunk layout over 64 bits for the
-    native signature family: max_hamming + 1 chunks."""
-    n = max_hamming + 1
-    width = 64 // n
-    return [(c * width, (1 << width) - 1) for c in range(n)]
 
 
 def simhash_pairs_sql_safe(
@@ -880,9 +972,11 @@ def simhash_pairs_sql_safe(
     whole pipeline (token hashes -> 31-bit signature -> pigeonhole
     chunks -> hamming verify) is reproducible by the DuckDB oracle.
 
-    Same shape as simhash_pairs: explode distinct tokens once, 31
-    partial-SUM bit votes, chunk-bucket join, popcount verify.
-    4 chunks cover hamming <= 3 with recall exactly 1.0.
+    The same pipeline as simhash_pairs: explode distinct tokens once,
+    31 partial-SUM bit votes, chunk-bucket join, popcount verify.
+    Its FIXED 4-chunk layout (``SIMHASH_SQL_CHUNKS``) covers hamming
+    <= 3 with recall exactly 1.0; ``max_hamming > 3`` raises
+    ValueError (use :func:`simhash_pairs`).
 
     DISCRIMINATION GAP vs the native (xxhash64, 64-bit) variant — this
     is intentional and load-bearing, do not "align" the two: at the
@@ -899,29 +993,7 @@ def simhash_pairs_sql_safe(
     hash-oracled end-to-end.  ``tests/test_dedup.py::
     test_simhash_family_discrimination_gap`` pins the ratio band so a
     silent hash-family regression in either variant fails loudly."""
-    from astro_vectordb_spark.functions.text import tokens
-
-    sigs = simhash_sql_table(df, text_col=text_col, id_col=id_col)
-    blocked = sigs.join(
-        simhash_chunk_table(sigs, SIMHASH_SQL_CHUNKS, id_col=id_col)
-        .withColumnRenamed("chunk_idx", "ci")
-        .withColumnRenamed("chunk_val", "cv"),
-        id_col,
-    ).select(id_col, "sim", "ci", "cv")
-    a = blocked.select(
-        F.col(id_col).alias("a_id"), F.col("sim").alias("sa"), "ci", "cv"
-    )
-    b = blocked.select(
-        F.col(id_col).alias("b_id"), F.col("sim").alias("sb"), "ci", "cv"
-    )
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("long")
-    return (
-        a.join(b, on=["ci", "cv"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _simhash_pairs(df, max_hamming, text_col, id_col, _SIMHASH["sql_safe31"])
 
 
 def _rp_plane(seed: int, table: int, plane: int, dim: int) -> list[float]:
@@ -1098,13 +1170,7 @@ def rp_block_pairs(
     )
 
     def _self_join(c: DataFrame, keys: list[str]) -> DataFrame:
-        a = c.select(F.col(id_col).alias("a_id"), *keys)
-        b = c.select(F.col(id_col).alias("b_id"), *keys)
-        return (
-            a.join(b, on=keys)
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id")
-        )
+        return _bucket_self_join(c, id_col, keys).select("a_id", "b_id")
 
     if not guarded:
         cand = _self_join(cells, ["tbl", "cell"]).distinct()
@@ -1255,14 +1321,15 @@ def connected_components(
     returned are the components.  A caller-set ``max_iter`` caps the
     rounds; if it is exhausted with changes still flowing, a
     RuntimeWarning reports the non-converged state instead of silently
-    returning split components.  For adversarial long-chain graphs
-    pre-contract with large-star/small-star.  (r15 note: a
-    pointer-jumping variant — label(label(x)) per round for
-    O(log diameter) convergence — was tried and MEASURED NEUTRAL TO
-    SLOWER on the bench graphs: their diameters are already 2-4, so
-    the extra labels self-join per round cost more than the saved
-    round.  Reverted; large-star/small-star remains the deep-graph
-    escape.)
+    returning split components.  Adversarial long-chain graphs need
+    rounds equal to their diameter; large-star/small-star contraction
+    (Kiveris et al., SoCC'14) bounds that at O(log^2 n) and is the
+    escape if such graphs ever matter — near-dup graphs have not
+    needed it.  (r15 note: a pointer-jumping variant — label(label(x))
+    per round for O(log diameter) convergence — was tried and MEASURED
+    NEUTRAL TO SLOWER on the bench graphs: their diameters are already
+    2-4, so the extra labels self-join per round cost more than the
+    saved round.  Reverted.)
 
     This is the correct closure for transitive duplicate groups, vs the
     one-pass greedy ``dedup_keep_representatives`` (which can split a
@@ -1318,103 +1385,6 @@ def connected_components(
             stacklevel=2,
         )
     return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    max_iter: int = 30,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the adversarial-graph alternative to
-    ``connected_components``: label propagation needs rounds equal to
-    the graph DIAMETER (a 1M-long chain needs 1M rounds), star
-    contraction converges in O(log^2 n) rounds on ANY shape because
-    every round rewires nodes directly toward their component minimum.
-
-    large-star: every node u points its larger neighbors at
-    min(N(u) + {u}); small-star: canonical-direction edges (u > v)
-    rewire u and its smaller neighbors to that minimum.  Fixpoint is a
-    star forest: each component is exactly the edge set
-    (member -> min id).  Returns (id, component) like
-    ``connected_components``; per-round cost is two grouped
-    aggregations + joins on a shrinking edge list.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        sym = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-        m = (
-            sym.groupBy("src")
-            .agg(F.min("dst").alias("_mn"))
-            .select("src", F.least(F.col("_mn"), F.col("src")).alias("m"))
-        )
-        large = (
-            sym.join(m, on="src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        # small-star over canonical (larger -> smaller) directions
-        canon = large.select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        ).distinct()
-        m2 = (
-            canon.groupBy("src")
-            .agg(F.min("dst").alias("m"))
-        )
-        small = (
-            canon.join(m2, on="src")
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("dst").alias("s"), F.col("m").alias("d")),
-                        F.struct(F.col("src").alias("s"), F.col("m").alias("d")),
-                    )
-                ).alias("e")
-            )
-            .select(F.col("e.s").alias("src"), F.col("e.d").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        edges = small
-        # star forest reached when no edge's target is itself a source
-        chained = (
-            edges.alias("e1")
-            .join(
-                edges.alias("e2"),
-                F.col("e1.dst") == F.col("e2.src"),
-            )
-            .limit(1)
-            .count()
-        )
-        if chained == 0:
-            break
-    else:
-        import warnings
-
-        warnings.warn(
-            f"connected_components_star did not reach a star forest in "
-            f"{max_iter} rounds",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    members = edges.select(F.col("src").alias("id"), F.col("dst").alias("component"))
-    roots = edges.select(F.col("dst").alias("id")).distinct().withColumn(
-        "component", F.col("id")
-    )
-    return members.unionByName(roots).distinct()
 
 
 def dedup_groups(

@@ -709,18 +709,18 @@ def minhash_sig_self_pairs(
     grouping, and a member can never head its component (the rep is
     the group minimum).  Shared by the MinHash keep set (the
     retroactive sweep) and the streaming ingest's intra-batch dedup."""
-    from astro_vectordb_spark.operators.dedup import minhash_band_table
+    from astro_vectordb_spark.operators.dedup import (
+        _bucket_self_join,
+        minhash_band_table,
+    )
 
     reps = sigs.groupBy("sig").agg(F.min(id_col).alias(id_col))
     rep_bands = minhash_band_table(
         reps, num_hashes=num_hashes, bands=bands,
         id_col=id_col, sig_col="sig",
     )
-    a = rep_bands.select(F.col(id_col).alias("a_id"), "band_idx", "band_sig")
-    b = rep_bands.select(F.col(id_col).alias("b_id"), "band_idx", "band_sig")
     cands = (
-        a.join(b, ["band_idx", "band_sig"])
-        .filter(F.col("a_id") < F.col("b_id"))
+        _bucket_self_join(rep_bands, id_col, ["band_idx", "band_sig"])
         .select("a_id", "b_id")
         .distinct()
     )
@@ -1261,33 +1261,22 @@ class SimhashFamily(BucketIndexFamily):
         return "sim"
 
     def encode(self, ctx: IndexCtx, df: DataFrame) -> DataFrame:
+        from astro_vectordb_spark.operators.dedup import _simhash_hashes
+
+        m = ctx.meta
+        return _simhash_hashes(m["hash_family"]).signatures(
+            df, self.text_col, m["id_col"]
+        )
+
+    def bucketize(self, ctx: IndexCtx, primary: DataFrame) -> DataFrame:
         from astro_vectordb_spark.operators.dedup import (
-            simhash_sql_table,
-            simhash_table,
+            _simhash_hashes,
+            simhash_chunk_table,
         )
 
         m = ctx.meta
-        if m["hash_family"] == "native64":
-            return simhash_table(df, self.text_col, m["id_col"])
-        return simhash_sql_table(df, text_col=self.text_col,
-                                 id_col=m["id_col"])
-
-    def _chunks(self, meta: dict) -> list[tuple[int, int]]:
-        from astro_vectordb_spark.operators.dedup import (
-            SIMHASH_SQL_CHUNKS,
-            native_simhash_chunks,
-        )
-
-        if meta["hash_family"] == "native64":
-            return native_simhash_chunks(int(meta["max_hamming"]))
-        return SIMHASH_SQL_CHUNKS
-
-    def bucketize(self, ctx: IndexCtx, primary: DataFrame) -> DataFrame:
-        from astro_vectordb_spark.operators.dedup import simhash_chunk_table
-
-        return simhash_chunk_table(
-            primary, self._chunks(ctx.meta), id_col=ctx.meta["id_col"]
-        )
+        chunks = _simhash_hashes(m["hash_family"]).chunks(m["max_hamming"])
+        return simhash_chunk_table(primary, chunks, id_col=m["id_col"])
 
     def pair_score(self, ctx: IndexCtx, a, b):
         bits = int(ctx.meta["bits"])

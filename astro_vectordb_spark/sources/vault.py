@@ -1722,23 +1722,18 @@ def save_simhash_index(
     recall up to hamming 3 — accepting a larger build distance would
     silently break the recall-exactly-1.0 promise above (and at
     hamming >= 8 on 31 bits the 6-decimal score rounding can drop
-    pairs at exactly the threshold).  ``native64`` derives
+    pairs at exactly the threshold), so it raises ValueError, as the
+    one-shot ``simhash_pairs_sql_safe`` does.  ``native64`` derives
     ``max_hamming + 1`` chunks, so any distance is honored there."""
+    from astro_vectordb_spark.operators.dedup import _simhash_hashes
     from astro_vectordb_spark.sources.index_lifecycle import (
         SimhashFamily,
         save_index,
     )
 
-    if hash_family not in ("sql_safe31", "native64"):
-        raise ValueError(f"unknown simhash hash_family {hash_family!r}")
-    if hash_family == "sql_safe31" and int(max_hamming) > 3:
-        raise ValueError(
-            "sql_safe31 simhash indexes support max_hamming <= 3 (the "
-            "fixed 4-chunk SQL-replayable layout pigeonholes exactly "
-            "that far); build with hash_family='native64' for larger "
-            f"distances (got max_hamming={max_hamming})"
-        )
-    bits = 31 if hash_family == "sql_safe31" else 64
+    hashes = _simhash_hashes(hash_family)  # ValueError on an unknown family
+    hashes.chunks(max_hamming)  # ValueError past the layout's reach
+    bits = hashes.bits
     params = {"bits": bits, "max_hamming": int(max_hamming),
               "hash_family": str(hash_family), "id_col": str(id_col)}
     save_index(

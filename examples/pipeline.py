@@ -111,7 +111,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     # 8. Blocked embedding near-dup over the full table (the scale
     #    path: RP-LSH buckets, no cross join, no corpus broadcast)
     from astro_vectordb_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         embedding_near_dups,
     )
 
@@ -119,7 +119,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
                                threshold=0.4, dim=64)
     n_pairs = near.count()
     if n_pairs:
-        comps = connected_components_star(near)
+        comps = connected_components(near)
         n_comp = comps.select("component").distinct().count()
         print(f"[8] blocked near-dups: {n_pairs} pairs, {n_comp} groups")
     else:

@@ -233,52 +233,6 @@ def test_rp_block_pairs_plan_has_no_cartesian(spark, embeddings):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_star_cc_matches_label_propagation(spark):
-    """Star contraction labels == label-propagation labels on random
-    graphs (same min-id-per-component contract)."""
-    import random
-
-    from astro_vectordb_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(3)
-    for trial in range(3):
-        n = 60
-        edges = [
-            (rng.randrange(n), rng.randrange(n))
-            for _ in range(40)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        pairs = spark.createDataFrame(edges, "a_id long, b_id long")
-        prop = {r["id"]: r["component"]
-                for r in connected_components(pairs, max_iter=60).collect()}
-        star = {r["id"]: r["component"]
-                for r in connected_components_star(pairs).collect()}
-        assert star == prop, f"trial {trial}"
-
-
-def test_star_cc_long_chain_logarithmic_rounds(spark):
-    """A 200-node chain (diameter 199) resolves inside star
-    contraction's default round budget — label propagation would need
-    199 rounds."""
-    import warnings
-
-    from astro_vectordb_spark.operators.dedup import connected_components_star
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(199)], "a_id long, b_id long"
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        comp = {r["id"]: r["component"]
-                for r in connected_components_star(pairs, max_iter=15).collect()}
-        assert not any("did not reach" in str(x.message) for x in w)
-    assert set(comp) == set(range(200))
-    assert set(comp.values()) == {0}
-
-
 def test_rp_block_pairs_subset_of_exact(spark, embeddings):
     """Blocked pairs are always a SUBSET of the exact all-pairs result
     at the same threshold (verification step guarantees no false
@@ -448,6 +402,109 @@ def test_embedding_near_dups_default_warns_once(spark, embeddings):
         assert not [x for x in w if "APPROXIMATE" in str(x.message)]
 
 
+def _rows_sha256(df) -> tuple[int, str]:
+    import hashlib
+
+    rows = sorted(tuple(r) for r in df.collect())
+    return len(rows), hashlib.sha256(
+        "\n".join(repr(r) for r in rows).encode()
+    ).hexdigest()
+
+
+# (row count, sha256 of the sorted rows) on the default 500-doc
+# ``documents`` fixture.  The native (xxhash64) faces are rows-only in
+# the DuckDB oracle, so these pins are what notices a drift in their
+# hash family, banding, chunking or verify.
+_NATIVE_ROW_PINS = {
+    "minhash_lsh_pairs": (
+        28, "86aab41d418d674d0b989811141510ae3161f42bed12be27001533dea684b007"
+    ),
+    "minhash_lsh_pairs_collapse": (
+        28, "86aab41d418d674d0b989811141510ae3161f42bed12be27001533dea684b007"
+    ),
+    "simhash_pairs": (
+        1176, "9369c5e2dc3f2b97cb4ef9d4fb551a83e106dd5a27f6884d535c75894461e22a"
+    ),
+    "minhash_signature": (
+        500, "506f50ed9b876a0c0e165a3517ac23b61fd9a35c425e1957bfd5c472b78ea68e"
+    ),
+    "simhash_table": (
+        500, "d7de8136dccf35e7c1199d0979330636614764dc90bb9c4483e05c7288293d83"
+    ),
+}
+
+
+class TestNativeRowPins:
+    """Row pins for the native near-dup faces and their signatures."""
+
+    @staticmethod
+    def _faces(docs):
+        from astro_vectordb_spark.operators.dedup import (
+            minhash_signature,
+            simhash_table,
+        )
+
+        return {
+            "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs),
+            "minhash_lsh_pairs_collapse": lambda: minhash_lsh_pairs(
+                docs, collapse_exact=True
+            ),
+            "simhash_pairs": lambda: simhash_pairs(docs),
+            "minhash_signature": lambda: minhash_signature(docs),
+            "simhash_table": lambda: simhash_table(docs),
+        }
+
+    def test_native_rows_pinned(self, documents):
+        import pytest
+
+        if documents.count() != 500:
+            pytest.skip("row pins are for the default 500-doc fixture")
+        got = {k: _rows_sha256(f()) for k, f in self._faces(documents).items()}
+        assert got == _NATIVE_ROW_PINS
+
+
+def test_pair_face_output_schemas(spark):
+    """The four pair faces keep their output schemas: the native
+    SimHash face reports ``hamming int``, the SQL-safe one ``bigint``."""
+    from astro_vectordb_spark.operators.dedup import (
+        minhash_lsh_pairs_sql_safe,
+        simhash_pairs_sql_safe,
+    )
+
+    def fields(df):
+        return [
+            (f.name, f.dataType.simpleString(), f.nullable)
+            for f in df.schema.fields
+        ]
+
+    df = _docs(spark, TEXTS)
+    jac = [("a_id", "bigint", True), ("b_id", "bigint", True),
+           ("jaccard", "double", True)]
+    ham = [("a_id", "bigint", True), ("b_id", "bigint", True)]
+    assert fields(minhash_lsh_pairs(df)) == jac
+    assert fields(minhash_lsh_pairs(df, collapse_exact=True)) == jac
+    assert fields(minhash_lsh_pairs_sql_safe(df)) == jac
+    assert fields(minhash_lsh_pairs_sql_safe(df, collapse_exact=True)) == jac
+    assert fields(simhash_pairs(df)) == ham + [("hamming", "int", False)]
+    assert fields(simhash_pairs_sql_safe(df)) == ham + [
+        ("hamming", "bigint", False)
+    ]
+
+
+def test_simhash_sql_safe_rejects_distance_past_its_chunks(spark):
+    """The SQL-safe SimHash layout is a fixed 4 chunks, which
+    pigeonholes recall only up to hamming 3: a larger distance raises
+    instead of silently dropping pairs."""
+    import pytest
+
+    from astro_vectordb_spark.operators.dedup import simhash_pairs_sql_safe
+
+    df = _docs(spark, TEXTS)
+    with pytest.raises(ValueError, match="max_hamming <= 3"):
+        simhash_pairs_sql_safe(df, max_hamming=5)
+    assert simhash_pairs_sql_safe(df, max_hamming=3).count() > 0
+
+
 class TestCachePool:
     """Bounded LRU pool for the corpus-sized shingle caches — the
     round-7 leak fix: repeated operator calls must not accumulate
@@ -511,6 +568,42 @@ class TestCachePool:
         finally:
             dedup.CACHE_POOL_CAPACITY = old_cap
             assert dedup.release_caches() <= 1
+
+    def test_directory_swap_is_not_served_stale(self, spark, tmp_path):
+        # the same read path gives the same logical plan before and
+        # after a rename swap; the pooled shingle cache must not answer
+        # for the new files
+        import os
+
+        from astro_vectordb_spark.operators import dedup
+
+        near = "alpha beta gamma delta epsilon zeta eta theta"
+        other = "one two three four five six seven eight"
+
+        def write(dst, rows):
+            spark.createDataFrame(rows, "doc_id long, text string") \
+                .coalesce(1).write.parquet(dst)
+
+        path = str(tmp_path / "docs")
+        write(path, [(1, near), (2, near), (3, other)])
+        dedup.release_caches()
+        try:
+            def pairs():
+                docs = spark.read.parquet(path)
+                return {
+                    (int(r.a_id), int(r.b_id))
+                    for r in dedup.minhash_lsh_pairs_sql_safe(
+                        docs, threshold=0.5
+                    ).collect()
+                }
+
+            assert pairs() == {(1, 2)}
+            write(str(tmp_path / "new"), [(1, near), (2, other), (3, near)])
+            os.rename(path, str(tmp_path / "old"))
+            os.rename(str(tmp_path / "new"), path)
+            assert pairs() == {(1, 3)}
+        finally:
+            dedup.release_caches()
 
 
 class TestDuplicateSpans:
