@@ -2485,7 +2485,7 @@ def _q_prf_expand(spark, sf_dir):
     ts, cs = bm25_term_stats(docs)
     return prf_expand_terms(
         docs, ts, cs, _BM25_TERMS, n_feedback=10, n_expand=8
-    )
+    ).select("term", "score")
 
 
 def _q_curation_e2e(spark, sf_dir):

@@ -31,7 +31,7 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from astro_vectordb_spark.functions.vector import l2_norm, vector_literal
@@ -271,26 +271,118 @@ def ivf_build(
     return assigned, centroids
 
 
+def _ranked_cells(
+    centroids: DataFrame, query_vector: Sequence[float], metric: str
+) -> tuple[list[int], np.ndarray]:
+    """Every cell id in (similarity desc, cell_id asc) order — the
+    order of ``probe_table_batch``'s window, so both faces pick the
+    same cells when a cut binds on tied similarities — with its
+    similarity, from ONE collect of the k_cells-row centroid table (a
+    driver-side micro-query by design: it parameterizes the scan
+    pruning of the big query).  Null similarities rank last and NaN
+    first, as in the Spark sort."""
+    from astro_vectordb_spark.functions.vector import similarity
+
+    qv = vector_literal(query_vector)
+    rows = (
+        centroids.withColumn("_s", similarity(F.col("centroid"), qv, metric))
+        .select("cell_id", "_s")
+        .collect()
+    )
+    sims = np.array(
+        [-np.inf if r["_s"] is None else r["_s"] for r in rows],
+        dtype=np.float64,
+    )
+    ids = np.array([r["cell_id"] for r in rows], dtype=np.int64)
+    order = np.lexsort((ids, -np.where(np.isnan(sims), np.inf, sims)))
+    return [int(ids[i]) for i in order], sims[order]
+
+
+def _adaptive_count(
+    sims: np.ndarray,
+    structure_z: float = 3.0,
+    member_z: float = 1.0,
+    min_probe: int = 2,
+    max_probe_frac: float | None = None,
+) -> int:
+    """How many top-similarity cells the adaptive profile rule probes
+    (see :func:`choose_probe_cells_adaptive`)."""
+    n = len(sims)
+    if n <= min_probe:
+        return n
+    cap = (
+        n
+        if max_probe_frac is None
+        else max(min_probe, math.ceil(float(max_probe_frac) * n))
+    )
+    mean, std = sims.mean(), sims.std()
+    if std <= 1e-12 or (sims.max() - mean) / std < structure_z:
+        return min(cap, n)
+    zscores = (sims - mean) / std
+    return min(cap, max(min_probe, int((zscores >= member_z).sum())))
+
+
+def _widened(n, sel: float | None):
+    """The one selectivity-widening rule of filtered IVF and IVF-PQ:
+    probe ``ceil(n / sel)`` cells instead of ``n`` (never fewer), so
+    the expected number of allowed candidates stays at the unfiltered
+    level.  ``n`` is a single query's count or the batch face's
+    per-query count column."""
+    if sel is None:
+        return n
+    if isinstance(n, Column):
+        return F.greatest(n, F.ceil(n / F.lit(sel)))
+    return max(n, math.ceil(n / sel))
+
+
+def _selectivity(allowed_ids, n_total: int | None, corpus: DataFrame,
+                 id_col: str) -> float | None:
+    """|allowed| / |corpus| (None without a filter); ``n_total`` (the
+    index ``_meta`` ``n_rows`` counter) skips the distinct-id count."""
+    if allowed_ids is None:
+        return None
+    from astro_vectordb_spark.operators.filtering import allowed_count
+
+    if n_total is None:
+        n_total = corpus.dropDuplicates([id_col]).count()
+    return max(allowed_count(allowed_ids) / max(n_total, 1), 1e-9)
+
+
+def probe(
+    corpus: DataFrame, centroids: DataFrame, query_vector: Sequence[float],
+    nprobe: int | None, metric: str, max_probe_frac: float | None,
+    allowed_ids, n_total: int | None, id_col: str,
+) -> tuple[DataFrame, list[int]]:
+    """The single-query probe policy of IVF and IVF-PQ: ``(rows, cells)``
+    — the top ``nprobe`` cells by query-to-centroid similarity, or the
+    adaptive profile rule's cells when ``nprobe`` is None, widened by
+    the selectivity of ``allowed_ids`` (one collect of the centroid
+    table), and ``corpus`` pruned to them by a literal ``cell_id IN
+    (...)`` filter (partition pruning on cell-partitioned parquet),
+    then restricted to the allowed ids."""
+    from astro_vectordb_spark.operators.filtering import restrict_to_allowed
+
+    order, sims = _ranked_cells(centroids, query_vector, metric)
+    n = (
+        _adaptive_count(sims, max_probe_frac=max_probe_frac)
+        if nprobe is None else min(int(nprobe), len(order))
+    )
+    sel = _selectivity(allowed_ids, n_total, corpus, id_col)
+    cells = order[: _widened(n, sel)]
+    rows = corpus.filter(F.col("cell_id").isin(cells))
+    if allowed_ids is not None:
+        rows = restrict_to_allowed(rows, allowed_ids, id_col=id_col)
+    return rows, cells
+
+
 def choose_probe_cells(
     centroids: DataFrame,
     query_vector: Sequence[float],
     nprobe: int,
     metric: str = "cosine",
 ) -> list[int]:
-    """Rank cells by query-to-centroid similarity; return top nprobe.
-
-    The centroid table is k_cells rows — this is a driver-side
-    micro-query by design (it *parameterizes the scan pruning* of the
-    big query; it cannot stay distributed and still prune)."""
-    from astro_vectordb_spark.functions.vector import similarity
-
-    qv = vector_literal(query_vector)
-    ranked = (
-        centroids.withColumn("_s", similarity(F.col("centroid"), qv, metric))
-        .orderBy(F.col("_s").desc(), F.col("cell_id"))
-        .limit(nprobe)
-    )
-    return [r["cell_id"] for r in ranked.collect()]
+    """Rank cells by query-to-centroid similarity; return top nprobe."""
+    return _ranked_cells(centroids, query_vector, metric)[0][:nprobe]
 
 
 def choose_probe_cells_adaptive(
@@ -338,41 +430,13 @@ def choose_probe_cells_adaptive(
     floored at ``min_probe`` — the standard bounded-recall LSH-style
     trade, OFF by default because the uncapped fallback is what makes
     the small-k exactness gates provably exact.
+
+    Cells return in (similarity desc, cell_id asc) order.
     """
-    import math
-
-    import numpy as np
-
-    from astro_vectordb_spark.functions.vector import similarity
-
-    qv = vector_literal(query_vector)
-    rows = (
-        centroids.withColumn("_s", similarity(F.col("centroid"), qv, metric))
-        .select("cell_id", "_s")
-        .collect()
-    )
-    sims = np.array([r["_s"] for r in rows], dtype=np.float64)
-    ids = [r["cell_id"] for r in rows]
-    if len(ids) <= min_probe:
-        return ids
-    cap = (
-        len(ids)
-        if max_probe_frac is None
-        else max(min_probe, math.ceil(float(max_probe_frac) * len(ids)))
-    )
-    mean, std = sims.mean(), sims.std()
-    # (similarity desc, cell_id asc) total order — the SAME tie rule
-    # as choose_probe_cells and probe_table_batch's window, so the
-    # single and batch faces pick identical cells when the cut binds
-    # on tied similarities (duplicate centroids, quantized embeddings)
-    order = np.lexsort((np.asarray(ids), -sims))
-    if std <= 1e-12 or (sims.max() - mean) / std < structure_z:
-        if cap >= len(ids):
-            return ids
-        return [ids[i] for i in order[:cap]]
-    zscores = (sims - mean) / std
-    n_take = min(cap, max(min_probe, int((zscores >= member_z).sum())))
-    return [ids[i] for i in order[:n_take]]
+    order, sims = _ranked_cells(centroids, query_vector, metric)
+    return order[: _adaptive_count(
+        sims, structure_z, member_z, min_probe, max_probe_frac
+    )]
 
 
 def ivf_search(
@@ -398,54 +462,25 @@ def ivf_search(
     ``allowed_ids`` = metadata-filtered search (parity with the HNSW
     path's result-set filter): candidate rows inside the probed cells
     are restricted to the allowed set BEFORE ranking, and the probe
-    count is WIDENED by 1/selectivity (selectivity = |allowed| /
-    |corpus|; same policy as ``hnsw_query_shards``'s beam widening) so
-    the expected number of allowed candidates stays at the unfiltered
-    level — a 10% filter probes ~10x the cells, degrading smoothly to
-    the exact scan over the allowed set as the filter sharpens.  The
-    adaptive form widens its OWN profile-derived count by the same
-    factor; ``n_total`` (corpus row count) skips the count job when the
-    caller already knows it.
+    count — fixed or adaptive — is widened by 1/selectivity
+    (``_widened``: ceil(n / sel) cells; selectivity = |allowed| /
+    |corpus|, the same policy as ``hnsw_query_shards``'s beam
+    widening).  ``n_total`` (corpus row count) skips the count job
+    when the caller already knows it.
 
     ``cell_id IN (...)`` is a literal IN-filter -> partition pruning
     when ``assigned`` is read from cell-partitioned parquet; the
     subsequent plan is identical to the exact path (codegen score ->
     TakeOrderedAndProject)."""
-    if nprobe is None:
-        cells = choose_probe_cells_adaptive(
-            centroids, query_vector, metric, max_probe_frac=max_probe_frac
-        )
-    else:
-        cells = choose_probe_cells(centroids, query_vector, nprobe, metric)
-    if allowed_ids is not None:
-        from astro_vectordb_spark.operators.filtering import (
-            allowed_count,
-            restrict_to_allowed,
-        )
-
-        n_allowed = allowed_count(allowed_ids)
-        if n_total is None:
-            n_total = assigned.dropDuplicates([id_col]).count()
-        sel = max(n_allowed / max(n_total, 1), 1e-9)
-        k_cells = centroids.count()
-        widened = min(int(k_cells), math.ceil(len(cells) / sel))
-        if widened > len(cells):
-            cells = choose_probe_cells(
-                centroids, query_vector, widened, metric
-            )
-        pruned = restrict_to_allowed(
-            assigned.filter(F.col("cell_id").isin(cells)),
-            allowed_ids, id_col=id_col,
-        ).dropDuplicates([id_col])
-    else:
-        # drop spill duplicates: with redundant assignment a vector can
-        # sit in several probed cells
-        pruned = assigned.filter(F.col("cell_id").isin(cells)).dropDuplicates(
-            [id_col]
-        )
+    pruned, _ = probe(
+        assigned, centroids, query_vector, nprobe, metric, max_probe_frac,
+        allowed_ids, n_total, id_col,
+    )
+    # drop spill duplicates: with redundant assignment a vector can
+    # sit in several probed cells
     return topk_search(
-        pruned, query_vector, k, strength=strength, metric=metric,
-        id_col=id_col, vec_col=vec_col,
+        pruned.dropDuplicates([id_col]), query_vector, k, strength=strength,
+        metric=metric, id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -574,15 +609,48 @@ def ivf_search_exact(
     correctness).  Cell selection is driver-side math over k_cells
     rows; the big scans stay distributed and partition-pruned.
     """
-    import math
+    cells, _ = _bound_pruned_cells(
+        assigned, centroids, cell_stats, query_vector, k, nprobe_seed,
+        strength, metric, id_col, vec_col,
+    )
+    return topk_search(
+        assigned.filter(F.col("cell_id").isin(cells)).dropDuplicates([id_col]),
+        [float(x) for x in query_vector], k, strength=strength,
+        metric=metric, id_col=id_col, vec_col=vec_col,
+    )
 
+
+def ivf_exact_pruned_cells(
+    assigned: DataFrame,
+    centroids: DataFrame,
+    cell_stats: DataFrame,
+    query_vector: Sequence[float],
+    k: int,
+    nprobe_seed: int = 2,
+    metric: str = "cosine",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[int, int]:
+    """(cells_scanned, cells_total) for one exact bound-pruned search —
+    instrumentation for recall/cost reporting (BASELINE.md obligation)."""
+    cells, n_cells = _bound_pruned_cells(
+        assigned, centroids, cell_stats, query_vector, k, nprobe_seed,
+        0.0, metric, id_col, vec_col,
+    )
+    return len(cells), n_cells
+
+
+def _bound_pruned_cells(
+    assigned, centroids, cell_stats, query_vector, k, nprobe_seed,
+    strength, metric, id_col, vec_col,
+) -> tuple[list[int], int]:
+    """``(cells, k_cells)``: the cells :func:`ivf_search_exact` scans —
+    the ``nprobe_seed`` nearest, plus every other cell whose
+    triangle-inequality bound beats the seed scan's k-th score."""
     if metric not in ("cosine", "euclidean"):
         raise ValueError(f"unsupported metric {metric!r}")
 
-    stats = {
-        r["cell_id"]: r[1]
-        for r in cell_stats.collect()
-    }
+    stats = {r["cell_id"]: r[1] for r in cell_stats.collect()}
     cents = {r["cell_id"]: r["centroid"] for r in centroids.collect()}
     q = [float(x) for x in query_vector]
     qn = math.sqrt(sum(x * x for x in q))
@@ -620,53 +688,7 @@ def ivf_search_exact(
             bound = 1.0 / (1.0 + max(0.0, d_qc - radius))
         if bound > tau:
             survivors.append(cid)
-
-    cells = seed_cells + survivors
-    return topk_search(
-        assigned.filter(F.col("cell_id").isin(cells)).dropDuplicates([id_col]),
-        q, k, strength=strength, metric=metric, id_col=id_col, vec_col=vec_col,
-    )
-
-
-def ivf_exact_pruned_cells(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    cell_stats: DataFrame,
-    query_vector: Sequence[float],
-    k: int,
-    nprobe_seed: int = 2,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[int, int]:
-    """(cells_scanned, cells_total) for one exact bound-pruned search —
-    instrumentation for recall/cost reporting (BASELINE.md obligation)."""
-    import math
-
-    stats = {r["cell_id"]: r[1] for r in cell_stats.collect()}
-    cents = {r["cell_id"]: r["centroid"] for r in centroids.collect()}
-    q = [float(x) for x in query_vector]
-    qn = math.sqrt(sum(x * x for x in q))
-
-    def cos_to(c):
-        cn = math.sqrt(sum(x * x for x in c))
-        return sum(a * b for a, b in zip(q, c)) / (qn * cn)
-
-    order = sorted(cents, key=lambda cid: -cos_to(cents[cid]))
-    seed_cells = order[:nprobe_seed]
-    seed_top = topk_search(
-        assigned.filter(F.col("cell_id").isin(seed_cells)).dropDuplicates([id_col]),
-        q, k, strength=0.0, metric=metric, id_col=id_col, vec_col=vec_col,
-    ).collect()
-    tau = (seed_top[-1]["score"] - 1e-6) if len(seed_top) >= k else -float("inf")
-    survivors = 0
-    for cid in order[nprobe_seed:]:
-        s_qc = max(-1.0, min(1.0, cos_to(cents[cid])))
-        radius = math.acos(max(-1.0, min(1.0, stats.get(cid, -1.0))))
-        bound = math.cos(max(0.0, math.acos(s_qc) - radius))
-        if bound > tau:
-            survivors += 1
-    return nprobe_seed + survivors, len(cents)
+    return seed_cells + survivors, len(cents)
 
 
 def brp_lsh_topk(
@@ -717,22 +739,19 @@ def probe_table_batch(
     centroids: DataFrame,
     nprobe: int | None,
     metric: str = "cosine",
-    widen: int = 1,
+    sel: float | None = None,
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     max_probe_frac: float | None = None,
 ) -> DataFrame:
     """Distributed per-query probe-cell table ``(query_id, query_vec,
-    cell_id)`` — the (|Q| x k_cells) centroid ranking with the fixed
-    (``nprobe``) or ADAPTIVE (``nprobe=None``;
-    ``choose_probe_cells_adaptive``'s profile rule as per-query
-    windows) cutoff, optionally widened by an integer factor
-    (selectivity widening for filtered search).  ``max_probe_frac``
-    is the adaptive rule's optional cost ceiling (same semantics as
-    the driver-side rule: cap at ceil(frac x k_cells) top-similarity
-    cells, floored at 2; None = uncapped, the recall-first default).
-    No driver-side per-query loop; shared by ``ivf_batch_search`` and
-    the cell-probed IVF-PQ batch face."""
+    cell_id)`` — :func:`probe`'s policy as windows over the
+    (|Q| x k_cells) centroid ranking: the fixed (``nprobe``) or
+    ADAPTIVE (``nprobe=None``) cutoff, optionally capped by
+    ``max_probe_frac`` and widened by the selectivity ``sel`` of a
+    filtered search (the same ``_widened`` rule on each query's own
+    count).  No driver-side per-query loop; shared by
+    ``ivf_batch_search`` and the cell-probed IVF-PQ batch face."""
     from pyspark.sql import Window
 
     from astro_vectordb_spark.functions.vector import similarity
@@ -786,18 +805,37 @@ def probe_table_batch(
                     )
                 ),
             )
-        if widen > 1:
-            # widen each query's adaptive count by the selectivity
-            # factor: rank cutoff = widen x the query's base count
-            ranked = ranked.withColumn(
-                "_base",
-                F.sum(F.col("_keep").cast("int")).over(wq),
-            ).filter(F.col("_r") <= F.col("_base") * F.lit(widen))
-        else:
-            ranked = ranked.filter(F.col("_keep"))
+        # the kept cells are a rank prefix, so the count is the cutoff
+        ranked = ranked.withColumn(
+            "_n", F.sum(F.col("_keep").cast("int")).over(wq)
+        )
+        n = F.col("_n")
     else:
-        ranked = ranked.filter(F.col("_r") <= nprobe * widen)
-    return ranked.select(query_id_col, query_vec_col, "cell_id")
+        n = F.lit(int(nprobe))
+    return ranked.filter(F.col("_r") <= _widened(n, sel)).select(
+        query_id_col, query_vec_col, "cell_id"
+    )
+
+
+def probe_batch(
+    corpus: DataFrame, centroids: DataFrame, queries: DataFrame,
+    nprobe: int | None, metric: str, max_probe_frac: float | None,
+    allowed_ids, n_total: int | None, id_col: str,
+    query_id_col: str = "query_id", query_vec_col: str = "query_vec",
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`probe`'s batch form: ``(rows, probe table)`` — ``corpus``
+    restricted to the allowed ids, and :func:`probe_table_batch` with
+    every query's count widened by the same selectivity."""
+    from astro_vectordb_spark.operators.filtering import restrict_to_allowed
+
+    sel = _selectivity(allowed_ids, n_total, corpus, id_col)
+    if allowed_ids is not None:
+        corpus = restrict_to_allowed(corpus, allowed_ids, id_col=id_col)
+    return corpus, probe_table_batch(
+        queries, centroids, nprobe, metric=metric, sel=sel,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
+        max_probe_frac=max_probe_frac,
+    )
 
 
 def ivf_batch_search(
@@ -815,61 +853,27 @@ def ivf_batch_search(
     n_total: int | None = None,
     max_probe_frac: float | None = None,
 ) -> DataFrame:
-    """Batch IVF: each query joins only its probed cells.
-
-    ``allowed_ids`` = metadata-filtered batch search: the corpus is
-    restricted to the allowed set and every query's probe count widens
-    by 1/selectivity (fixed nprobe multiplies; the adaptive rule's
-    per-query count multiplies, keeping its shape) — the batch form of
-    ``ivf_search``'s policy.  ``n_total`` skips the corpus count when
-    known.
-
-    ``nprobe=None`` applies the ADAPTIVE profile rule
-    (``choose_probe_cells_adaptive``'s semantics) DISTRIBUTED: the
-    per-query similarity profile statistics are one window over the
-    (|Q| x k_cells) ranking table — no driver-side per-query loop, so
-    the adaptive rule scales to unbounded query sets.  A query with no
-    standout cell probes every cell (graceful degeneration); a
-    structured profile probes only its clearly-better-than-average
-    cells (floored at 2 so spill/boundary vectors stay reachable).
+    """Batch face of :func:`ivf_search`: each query joins only its
+    probed cells, chosen by the same probe policy
+    (:func:`probe_batch`), so each query's rows equal the single
+    face's.  Returns ``(query_id, vec_id, score, rank)``.
 
     Plan: broadcast (queries x centroids) ranking -> (query_id, cell_id)
     probe table -> broadcast-join corpus on cell_id (each corpus row
     meets only the queries probing its cell) -> per-query top-K via the
     salted window.  Shuffle volume is |corpus| x avg_probes_per_cell,
     an nprobe/k_cells fraction of the exact batch path."""
-    from pyspark.sql import Window
-
     from astro_vectordb_spark.functions.vector import similarity
     from astro_vectordb_spark.operators.topk import rank_topk_per_query
 
-    widen = 1
-    if allowed_ids is not None:
-        # selectivity-widened probing, batch form: the same
-        # 1/selectivity factor the single-query path applies, as a
-        # MULTIPLIER on each query's probe count (adaptive keeps its
-        # per-query shape: the z-selected count widens uniformly)
-        from astro_vectordb_spark.operators.filtering import allowed_count
-
-        if n_total is None:
-            n_total = assigned.dropDuplicates([id_col]).count()
-        sel = max(allowed_count(allowed_ids) / max(n_total, 1), 1e-9)
-        widen = max(1, math.ceil(1.0 / sel))
-    ranked = probe_table_batch(
-        queries, centroids, nprobe, metric=metric, widen=widen,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-        max_probe_frac=max_probe_frac,
+    assigned, ranked = probe_batch(
+        assigned, centroids, queries, nprobe, metric, max_probe_frac,
+        allowed_ids, n_total, id_col, query_id_col, query_vec_col,
     )
     # drop spill duplicates per query: with redundant assignment a
     # vector sits in several cells and can be probed more than once by
     # the same query — dedupe before scoring so copies never occupy
     # multiple top-K slots
-    if allowed_ids is not None:
-        from astro_vectordb_spark.operators.filtering import (
-            restrict_to_allowed,
-        )
-
-        assigned = restrict_to_allowed(assigned, allowed_ids, id_col=id_col)
     probed = assigned.join(F.broadcast(ranked), on="cell_id").dropDuplicates(
         [query_id_col, id_col]
     )

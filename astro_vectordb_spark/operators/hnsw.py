@@ -542,6 +542,22 @@ def _broadcast_queries(sc, queries, query_id_col: str, query_vec_col: str):
     return sc.broadcast((ids, mat))
 
 
+def _answer(
+    index, qids, qvecs, k: int, ef: int, query_id_col: str, id_col: str,
+    allowed=None,
+) -> pd.DataFrame:
+    """The per-query core of every HNSW serving face: beam-search each
+    query against one built ``index`` -> ``(query_id, id, score)``
+    rows, score rounded to 6 decimals."""
+    out_q, out_i, out_s = [], [], []
+    for qid, qv in zip(qids, qvecs):
+        for s, uid in index.search(qv, k, ef=ef, allowed=allowed):
+            out_q.append(qid)
+            out_i.append(uid)
+            out_s.append(round(s, 6))
+    return pd.DataFrame({query_id_col: out_q, id_col: out_i, "score": out_s})
+
+
 def hnsw_build_shards(
     corpus: DataFrame,
     num_shards: int = 8,
@@ -1076,14 +1092,8 @@ def hnsw_query_shards(
                     max(ef_search, math.ceil(k * ef_oversample / sel)),
                     n_shard,
                 ))
-            out_q, out_i, out_s = [], [], []
-            for qid, qv in zip(qids, qmat):
-                for s, uid in index.search(qv, k, ef=ef, allowed=allowed):
-                    out_q.append(qid)
-                    out_i.append(uid)
-                    out_s.append(round(s, 6))
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_i, "score": out_s}
+            yield _answer(
+                index, qids, qmat, k, ef, query_id_col, id_col, allowed
             )
 
     hits = graph.mapInPandas(_query, out_schema)
@@ -1145,21 +1155,16 @@ def hnsw_query_shards_cogrouped(
             return pd.DataFrame(
                 {query_id_col: [], id_col: [], "score": []}
             ).astype({query_id_col: "int64", id_col: "int64", "score": "float64"})
-        index = NumpyHNSW.from_rows(gpdf, m=m, metric=metric)
-        out_q, out_i, out_s = [], [], []
-        for qid, qv in zip(
-            qpdf[query_id_col].tolist(), qpdf[query_vec_col].tolist()
-        ):
-            for s, uid in index.search(qv, k, ef=ef_search):
-                out_q.append(qid)
-                out_i.append(uid)
-                out_s.append(round(s, 6))
-        return pd.DataFrame({query_id_col: out_q, id_col: out_i, "score": out_s})
+        return _answer(
+            NumpyHNSW.from_rows(gpdf, m=m, metric=metric),
+            qpdf[query_id_col].tolist(), qpdf[query_vec_col].tolist(), k,
+            ef_search, query_id_col, id_col,
+        )
 
     hits = (
         graph.groupBy("shard_id")
         .cogroup(q_rep.groupBy("shard_id"))
-        .applyInPandas(lambda left, right: _serve(left, right), out_schema)
+        .applyInPandas(_serve, out_schema)
     )
     return rank_topk_per_query(
         hits, k, id_col=id_col, query_id_col=query_id_col, num_salts=1
@@ -1212,13 +1217,7 @@ def hnsw_batch_topk(
         for uid, v in zip(ids, vecs):
             index.add(uid, v)
         qids, qmat = bc.value
-        out_q, out_i, out_s = [], [], []
-        for qid, qv in zip(qids, qmat):
-            for s, uid in index.search(qv, k, ef=ef_search):
-                out_q.append(qid)
-                out_i.append(uid)
-                out_s.append(round(s, 6))
-        yield pd.DataFrame({query_id_col: out_q, id_col: out_i, "score": out_s})
+        yield _answer(index, qids, qmat, k, ef_search, query_id_col, id_col)
 
     shard_hits = corpus.select(id_col, vec_col).mapInPandas(_shard, out_schema)
     return rank_topk_per_query(

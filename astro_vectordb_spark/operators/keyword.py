@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from astro_vectordb_spark.functions.text import tokens
@@ -60,12 +60,14 @@ def bm25_score_all(
         # keeps the signature unary
         return lambda x: x == F.lit(term)
 
-    toks = tokens(F.lower(F.col(text_col)))
     base = docs.select(
+        id_col, tokens(F.lower(F.col(text_col))).alias("_tk")
+    ).select(
         id_col,
-        F.size(toks).alias("_dl"),
+        "_tk",
+        F.size("_tk").alias("_dl"),
         F.array(
-            *[F.size(F.filter(toks, _eq(t))) for t in terms]
+            *[F.size(F.filter("_tk", _eq(t))) for t in terms]
         ).alias("_tfs"),
     )
 
@@ -79,24 +81,17 @@ def bm25_score_all(
             for i in range(len(terms))
         ],
     )
-
-    scored = base.crossJoin(F.broadcast(stats))
-    per_term = []
-    for i in range(len(terms)):
-        tf = F.col("_tfs")[i].cast("double")
-        df_t = F.col(f"_df{i}").cast("double")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("_n").cast("double") - df_t + F.lit(0.5)) / (df_t + F.lit(0.5))
+    tinfo = F.array(*[
+        F.struct(
+            F.lit(t).alias("term"),
+            _idf(F.col("_n").cast("double"),
+                 F.col(f"_df{i}").cast("double")).alias("idf"),
         )
-        denom = tf + F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * F.col("_dl").cast("double") / F.col("_avgdl")
-        )
-        per_term.append(idf * tf * F.lit(k1 + 1.0) / denom)
-    score = per_term[0]
-    for p in per_term[1:]:
-        score = score + p
-    return scored.select(id_col, score.alias(score_col))
+        for i, t in enumerate(terms)
+    ])
+    return base.crossJoin(F.broadcast(stats)).select(
+        id_col, _bm25_fold(tinfo, F.col("_avgdl"), k1, b).alias(score_col)
+    )
 
 
 def bm25_topk(
@@ -291,70 +286,92 @@ def bm25_remove_stats(
     return decremented.filter(F.col("df") > 0), merged_corpus
 
 
+def _idf(n, df: Column) -> Column:
+    """The one BM25 term pricing: Lucene's ``idf = ln(1 + (N - df +
+    0.5) / (df + 0.5))`` as a float64 expression (``n`` a float or a
+    column; evaluated engine-side either way, so every face prices a
+    term bit-identically)."""
+    return F.log(
+        F.lit(1.0) + (F.lit(n) - df + F.lit(0.5)) / (df + F.lit(0.5))
+    )
+
+
+def _bm25_fold(
+    tinfo: Column, avgdl: float | Column, k1: float, b: float
+) -> Column:
+    """The one BM25 sum: a left-to-right fold over ``tinfo`` (an array
+    of ``(term, idf)`` structs in query-term order) against the row's
+    token array ``_tk`` — tf via a nested ``filter`` (pure codegen, no
+    explode, no (doc, term) shuffle).  The single face passes a
+    literal array, the batch face its broadcast per-query column,
+    ``bm25_score_all`` an array priced from its in-plan statistics."""
+    dlnorm = F.lit(k1) * (
+        F.lit(1.0 - b)
+        + F.lit(b) * F.size("_tk").cast("double") / F.lit(avgdl)
+    )
+
+    def _step(acc, t):
+        tf = F.size(
+            F.filter(F.col("_tk"), lambda x: x == t["term"])
+        ).cast("double")
+        return acc + t["idf"] * tf * F.lit(k1 + 1.0) / (tf + dlnorm)
+
+    return F.aggregate(tinfo, F.lit(0.0), _step)
+
+
+def price_terms(
+    term_stats: DataFrame, query_terms: Sequence
+) -> list[tuple[str, int]]:
+    """The priced-term list ``[(term, df), ...]`` of ``query_terms``
+    (lowercased, in order; df=0 for terms outside the index) — a
+    |terms|-row filter on the stats table, collected driver-side (the
+    bounded control plane of the IVF-centroid pattern).  Entries that
+    are already ``(term, df)`` pairs pass through without a job, so a
+    caller that prices once (e.g. the PRF loop, whose expansion terms
+    arrive priced from ``prf_expand_terms``) reuses the list for every
+    later query over the same committed stats snapshot."""
+    if query_terms and all(isinstance(t, tuple) for t in query_terms):
+        return [(str(t).lower(), int(df)) for t, df in query_terms]
+    terms = [str(t).lower() for t in query_terms]
+    df_map = {
+        r["term"]: int(r["df"])
+        for r in term_stats.filter(F.col("term").isin(terms)).collect()
+    }
+    return [(t, df_map.get(t, 0)) for t in terms]
+
+
 def bm25_topk_indexed(
     docs: DataFrame,
     term_stats: DataFrame,
     corpus_stats: DataFrame,
-    query_terms: Sequence[str],
+    query_terms: Sequence,
     k: int,
     k1: float = 1.2,
     b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
     score_col: str = "score",
-    _df_map: dict[str, int] | None = None,
 ) -> DataFrame:
     """BM25 top-K against PRE-BUILT statistics: the per-query plan is
-    a |terms|-row filter on the stats table (driver-side, bounded
-    control plane — the IVF-centroid pattern) plus ONE corpus scan
-    for term frequencies.  Scores are identical to ``bm25_topk``
-    (same float64 expression tree; df/n/avgdl enter as literals, idf
-    still computed engine-side), so the same oracle hash-matches
-    both paths.  At 100 TB this halves per-query corpus work and is
-    the right shape for a query service.
-
-    ``_df_map`` (private, round-16 §5 job-count cut): a caller that
-    already holds the terms' document frequencies (e.g. the PRF loop,
-    which prices the SAME original terms twice and learns the
-    expansion terms' df from the expansion collect) passes them here
-    and skips this call's stats-collect job.  Values must come from
-    the same committed stats snapshot; missing terms price df=0
-    exactly like the collected path."""
+    a |terms|-row stats lookup (:func:`price_terms`; skipped when
+    ``query_terms`` are already priced ``(term, df)`` pairs) plus ONE
+    corpus scan for term frequencies.  Scores are identical to
+    ``bm25_topk`` (same float64 expression tree; df/n/avgdl enter as
+    literals, idf still computed engine-side), so the same oracle
+    hash-matches both paths.  At 100 TB this halves per-query corpus
+    work and is the right shape for a query service."""
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    terms = [str(t).lower() for t in query_terms]
-    df_map = _df_map if _df_map is not None else {
-        r["term"]: int(r["df"])
-        for r in term_stats.filter(F.col("term").isin(terms)).collect()
-    }
+    priced = price_terms(term_stats, query_terms)
     cs = corpus_stats.first()
     n, avgdl = float(cs["n"]), float(cs["avgdl"])
-
-    def _eq(term: str):
-        return lambda x: x == F.lit(term)
-
+    tinfo = F.array(*[
+        F.struct(F.lit(t).alias("term"),
+                 _idf(n, F.lit(float(df))).alias("idf"))
+        for t, df in priced
+    ])
     toks = tokens(F.lower(F.col(text_col)))
-    base = docs.select(
-        id_col,
-        F.size(toks).alias("_dl"),
-        *[F.size(F.filter(toks, _eq(t))).alias(f"_tf{i}")
-          for i, t in enumerate(terms)],
-    )
-    per_term = []
-    for i, t in enumerate(terms):
-        tf = F.col(f"_tf{i}").cast("double")
-        df_t = float(df_map.get(t, 0))
-        idf = F.log(
-            F.lit(1.0) + (F.lit(n) - F.lit(df_t) + F.lit(0.5))
-            / (F.lit(df_t) + F.lit(0.5))
-        )
-        denom = tf + F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * F.col("_dl").cast("double") / F.lit(avgdl)
-        )
-        per_term.append(idf * tf * F.lit(k1 + 1.0) / denom)
-    score = per_term[0]
-    for p in per_term[1:]:
-        score = score + p
+    score = _bm25_fold(tinfo, avgdl, k1, b)
     # top-k THEN the score > 0 filter: every matching doc (score > 0,
     # NaN included) sorts ahead of every other one, so this is the
     # top-k of the matches.  Filtering first lets Spark fold the filter
@@ -364,7 +381,8 @@ def bm25_topk_indexed(
     # sit in one partition either way (a folded local relation would
     # spread them), so a consumer that ranks them adds no exchange
     out = (
-        base.select(id_col, score.alias(score_col))
+        docs.select(id_col, toks.alias("_tk"))
+        .select(id_col, score.alias(score_col))
         .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
         .limit(k)
         .filter(F.col(score_col) > 0)
@@ -388,31 +406,20 @@ def bm25_batch_topk_indexed(
     score_col: str = "score",
     num_salts: int = 8,
 ) -> DataFrame:
-    """Batch companion to :func:`bm25_topk_indexed`: ``queries`` is a
-    DataFrame ``(query_id long, terms array<string>)`` — the lexical
-    analogue of ``topk.batch_topk``'s query set.  One corpus scan
-    serves EVERY query; per-query scores are bit-identical to the
-    single-query face (same float64 expression tree, same
-    left-to-right accumulation in the query's term order).
+    """Batch face of :func:`bm25_topk_indexed`: ``queries`` is a
+    DataFrame ``(query_id long, terms array<string>)``.  One corpus
+    scan serves EVERY query with the single face's pricing and fold,
+    so per-query scores are bit-identical.
 
-    Physical story (no driver-side per-query loop):
-
-    1. Explode query terms (position kept) and price them: the stats
-       scan is first restricted to the needed terms by an inner join
-       against the broadcast distinct-term set (|Q| x terms rows —
-       the scan prunes, the vocabulary never shuffles), then the
-       exploded query side LEFT-joins the restricted stats so terms
-       absent from the index price with df = 0, exactly like the
-       single face's ``df_map.get(t, 0)``.
-    2. Regroup per query into a position-sorted ``array<struct<pos,
-       term, idf>>`` — |Q| rows, broadcast.
-    3. ONE corpus scan: tokenize, cross-join the broadcast query
-       array, and fold the BM25 sum with ``F.aggregate`` over the
-       term array (tf via a nested ``filter`` on the token array —
-       pure codegen, no explode, no (doc, term) shuffle).
-    4. Per-query top-K via ``rank_topk_per_query`` (partition-local
-       prereduce, then the global per-query rank) — only
-       |Q| x partitions x K survivor rows reach the exchange.
+    Plan (no driver-side per-query loop): explode query terms
+    (position kept) and price them — the stats scan restricted to the
+    needed terms by an inner join against the broadcast distinct-term
+    set, then a LEFT join so terms absent from the index price with
+    df = 0; regroup per query into a position-sorted ``(pos, term,
+    idf)`` array (|Q| rows, broadcast); cross-join it to the
+    tokenized corpus and fold; per-query top-K via
+    ``rank_topk_per_query`` (partition-local prereduce, then the
+    global per-query rank).
 
     Returns ``(query_id, doc_id, score, rank)``, score rounded to 6
     decimals, at most ``k`` rows per query; queries none of whose
@@ -436,16 +443,13 @@ def bm25_batch_topk_indexed(
     stats_small = term_stats.join(F.broadcast(needed), "term")
     priced = qt.join(F.broadcast(stats_small), "term", "left")
     df_t = F.coalesce(F.col("df").cast("double"), F.lit(0.0))
-    idf = F.log(
-        F.lit(1.0) + (F.lit(n) - df_t + F.lit(0.5)) / (df_t + F.lit(0.5))
-    )
     qinfo = (
         priced.select(
             query_id_col,
             F.struct(
                 F.col("_pos").alias("pos"),
                 F.col("term").alias("term"),
-                idf.alias("idf"),
+                _idf(n, df_t).alias("idf"),
             ).alias("_ti"),
         )
         .groupBy(query_id_col)
@@ -453,22 +457,10 @@ def bm25_batch_topk_indexed(
     )
 
     toks = tokens(F.lower(F.col(text_col)))
-    base = docs.select(id_col, toks.alias("_tk")).withColumn(
-        "_dl", F.size("_tk")
-    )
-    dlnorm = F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("_dl").cast("double") / F.lit(avgdl)
-    )
-
-    def _step(acc, t):
-        tf = F.size(
-            F.filter(F.col("_tk"), lambda x: x == t["term"])
-        ).cast("double")
-        return acc + t["idf"] * tf * F.lit(k1 + 1.0) / (tf + dlnorm)
-
     scored = (
-        base.join(F.broadcast(qinfo))
-        .withColumn(score_col, F.aggregate("_tinfo", F.lit(0.0), _step))
+        docs.select(id_col, toks.alias("_tk"))
+        .join(F.broadcast(qinfo))
+        .withColumn(score_col, _bm25_fold(F.col("_tinfo"), avgdl, k1, b))
         .filter(F.col(score_col) > 0)
         .select(query_id_col, id_col, score_col)
     )
@@ -509,22 +501,8 @@ def snippet_extract(
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    terms = [str(t).lower() for t in query_terms]
-    term_arr = F.array(*[F.lit(t) for t in terms])
-    toks = tokens(F.lower(F.col(text_col)))
-    scored = (
-        docs.select(id_col, toks.alias("_tk"))
-        .withColumn("_pick", _snippet_pick(F.col("_tk"), term_arr, window))
-        .filter(F.col("_pick.nh") > 0)
-    )
-    return scored.select(
-        id_col,
-        F.col("_pick.nh").cast("long").alias("n_hits"),
-        F.col("_pick.st").cast("long").alias("start"),
-        F.array_join(
-            F.slice(F.col("_tk"), F.col("_pick.st"), F.lit(window)), " "
-        ).alias("snippet"),
-    )
+    term_arr = F.array(*[F.lit(str(t).lower()) for t in query_terms])
+    return _snippets(docs, [id_col], term_arr, window, text_col)
 
 
 def snippet_extract_batch(
@@ -535,25 +513,34 @@ def snippet_extract_batch(
     query_id_col: str = "query_id",
     terms_col: str = "terms",
 ) -> DataFrame:
-    """Batch companion to :func:`snippet_extract`: ``hits`` carries
+    """Batch face of :func:`snippet_extract`: ``hits`` carries
     ``(query_id, doc_id, terms array<string>, text)`` — each row is
     highlighted against ITS OWN query's term list (per-query lists
-    diverge under PRF expansion), same candidate-starts scan and the
-    same earliest-maximal-window tie rule, as one narrow no-shuffle
-    projection over the (|Q| x k)-bounded hit set.  Returns
-    ``(query_id, doc_id, n_hits, start, snippet)``; zero-hit rows are
-    dropped (the caller left-joins and coalesces, exactly like the
-    single face)."""
+    diverge under PRF expansion) over the (|Q| x k)-bounded hit set.
+    Returns ``(query_id, doc_id, n_hits, start, snippet)``."""
     term_arr = F.transform(F.col(terms_col), lambda t: F.lower(t))
+    return _snippets(
+        hits, [query_id_col, id_col], term_arr, window, text_col
+    )
+
+
+def _snippets(
+    frame: DataFrame, keys: list[str], term_arr: Column, window: int,
+    text_col: str,
+) -> DataFrame:
+    """The snippet projection of both faces: ``keys`` + ``(n_hits,
+    start, snippet)`` of each row's best window against ``term_arr``,
+    zero-hit rows dropped (the caller left-joins and coalesces)."""
     toks = tokens(F.lower(F.col(text_col)))
     scored = (
-        hits.select(query_id_col, id_col, toks.alias("_tk"), terms_col)
-        .withColumn("_pick", _snippet_pick(F.col("_tk"), term_arr, window))
+        frame.select(*keys, toks.alias("_tk"), term_arr.alias("_terms"))
+        .withColumn(
+            "_pick", _snippet_pick(F.col("_tk"), F.col("_terms"), window)
+        )
         .filter(F.col("_pick.nh") > 0)
     )
     return scored.select(
-        query_id_col,
-        id_col,
+        *keys,
         F.col("_pick.nh").cast("long").alias("n_hits"),
         F.col("_pick.st").cast("long").alias("start"),
         F.array_join(
@@ -633,6 +620,55 @@ def _snippet_pick(tk, term_arr, window: int):
     return pick(tk)
 
 
+def prf_expand_terms(
+    docs: DataFrame,
+    term_stats: DataFrame,
+    corpus_stats: DataFrame,
+    query_terms: Sequence,
+    n_feedback: int = 10,
+    n_expand: int = 5,
+    k1: float = 1.2,
+    b: float = 0.75,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Pseudo-relevance-feedback query expansion: run the indexed
+    BM25 query, take the top ``n_feedback`` documents as a relevance
+    sample, and score every term they contain by ``df_feedback *
+    idf_corpus`` — how characteristic of the feedback set a term is,
+    discounted by how common it is corpus-wide (the classic
+    RM/Rocchio-style tf-idf selection, made deterministic: integer
+    feedback df x the index's float64 idf, no sampling).  Original
+    query terms are excluded.
+
+    Scale: the feedback set is ``n_feedback`` rows by construction —
+    the explode/groupBy runs on a BOUNDED slice, never the corpus;
+    the corpus-scale work is the one indexed BM25 scan that produced
+    the feedback.  ``query_terms`` may be priced ``(term, df)`` pairs
+    (:func:`price_terms`), which skips the feedback query's stats
+    lookup.
+
+    Returns ``(term, score, df)``, top ``n_expand`` by (score desc,
+    term asc), score rounded to 6 decimals, ``df`` the corpus document
+    frequency the term was priced with (0 outside the index) — so the
+    rows are the expansion's priced-term list, ready for
+    ``bm25_topk_indexed`` without another stats lookup."""
+    priced = price_terms(term_stats, query_terms)
+    fb = bm25_topk_indexed(
+        docs, term_stats, corpus_stats, priced, n_feedback,
+        k1=k1, b=b, id_col=id_col, text_col=text_col,
+    ).select(id_col)
+    out = (
+        _prf_scored(
+            fb, docs, term_stats, corpus_stats, [t for t, _ in priced],
+            (), id_col, text_col,
+        )
+        .orderBy(F.col("score").desc(), F.col("term").asc())
+        .limit(n_expand)
+    )
+    return out.withColumn("score", F.round(F.col("score"), SCORE_DECIMALS))
+
+
 def prf_expand_terms_batch(
     docs: DataFrame,
     term_stats: DataFrame,
@@ -647,154 +683,90 @@ def prf_expand_terms_batch(
     query_id_col: str = "query_id",
     terms_col: str = "terms",
 ) -> DataFrame:
-    """Batch companion to :func:`prf_expand_terms`: ``queries`` is
+    """Batch face of :func:`prf_expand_terms`: ``queries`` is
     ``(query_id, terms array<string>)`` of unbounded size; every
-    query's pseudo-relevance feedback runs in ONE plan — the batch
-    indexed BM25 scan produces all feedback sets together, the
-    explode/groupBy runs on the |Q| x n_feedback bounded slice, term
-    pricing restricts the vocabulary scan to the union of feedback
-    terms (broadcast), and the per-query top-``n_expand`` cut is a
-    partitioned window.  Per-query results are bit-identical to the
-    single face (same integer feedback df x float64 corpus idf, same
-    (score desc, term asc) order; pinned by test).
+    query's feedback comes from one batch indexed BM25 scan, the
+    shared term scoring runs grouped by query, and the per-query
+    top-``n_expand`` cut is a partitioned window — per-query results
+    are bit-identical to the single face (pinned by test).
 
     Returns ``(query_id, term, score, rank)`` with rank 1..n_expand in
     selection order (the order the single face appends expansion
     terms)."""
     from pyspark.sql import Window
 
-    cs = corpus_stats.first()
-    if cs is None:
-        raise ValueError("corpus_stats is empty")
-    n = float(cs["n"])
-
     fb = bm25_batch_topk_indexed(
         docs, term_stats, corpus_stats, queries, n_feedback,
         k1=k1, b=b, id_col=id_col, text_col=text_col,
         query_id_col=query_id_col, terms_col=terms_col,
     ).select(query_id_col, id_col)
-    fb_docs = fb.join(docs.select(id_col, text_col), id_col)
-    fb_df = (
-        fb_docs.select(
-            query_id_col,
-            F.explode(
-                F.array_distinct(tokens(F.lower(F.col(text_col))))
-            ).alias("term"),
-        )
-        .groupBy(query_id_col, "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("_dffb"))
-    )
-    # exclude each query's OWN terms (the single face's isin filter,
-    # keyed per query)
     own = queries.select(
         query_id_col,
         F.explode(
             F.transform(F.col(terms_col), lambda t: F.lower(t))
         ).alias("term"),
     ).distinct()
-    fb_df = fb_df.join(own, [query_id_col, "term"], "left_anti")
-    stats_small = term_stats.join(
-        F.broadcast(fb_df.select("term").distinct()), "term"
-    )
-    priced = fb_df.join(F.broadcast(stats_small), "term", "left")
-    df_t = F.coalesce(F.col("df").cast("double"), F.lit(0.0))
-    idf = F.log(
-        F.lit(1.0) + (F.lit(n) - df_t + F.lit(0.5)) / (df_t + F.lit(0.5))
-    )
-    scored = priced.select(
-        query_id_col, "term", (F.col("_dffb") * idf).alias("score")
-    )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("score").desc(), F.col("term").asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _prf_scored(
+            fb, docs, term_stats, corpus_stats, own, (query_id_col,),
+            id_col, text_col,
+        )
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= int(n_expand))
         .withColumn("score", F.round(F.col("score"), SCORE_DECIMALS))
         .select(query_id_col, "term", "score", "rank")
     )
 
 
-def prf_expand_terms(
+def _prf_scored(
+    fb: DataFrame,
     docs: DataFrame,
     term_stats: DataFrame,
     corpus_stats: DataFrame,
-    query_terms: Sequence[str],
-    n_feedback: int = 10,
-    n_expand: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    with_df: bool = False,
-    _df_map: dict[str, int] | None = None,
+    own,
+    group: tuple[str, ...],
+    id_col: str,
+    text_col: str,
 ) -> DataFrame:
-    """Pseudo-relevance-feedback query expansion: run the indexed
-    BM25 query, take the top ``n_feedback`` documents as a relevance
-    sample, and score every term they contain by ``df_feedback *
-    idf_corpus`` — how characteristic of the feedback set a term is,
-    discounted by how common it is corpus-wide (the classic
-    RM/Rocchio-style tf-idf selection, made deterministic: integer
-    feedback df x the index's float64 idf, no sampling).  Original
-    query terms are excluded.
-
-    Scale: the feedback set is ``n_feedback`` rows by construction —
-    the explode/groupBy runs on a BOUNDED slice, never the corpus;
-    the corpus-scale work is the one indexed BM25 scan that produced
-    the feedback.  Returns ``(term, score)``, top ``n_expand`` by
-    (score desc, term asc), score rounded to 6 decimals — feed the
-    terms back into ``bm25_topk_indexed`` for the expanded query.
-
-    ``with_df=True`` (round-16 §5 job-count cut) appends the corpus
-    ``df`` each expansion term was priced with (0 for terms outside
-    the index) so the caller's follow-up ``bm25_topk_indexed`` over
-    the expanded list can price WITHOUT its own stats-collect job;
-    the default output schema is unchanged (the ``prf_expand`` oracle
-    pins it).  ``_df_map`` passes the original terms' already-known
-    frequencies through to the feedback query (same contract as
-    ``bm25_topk_indexed._df_map``)."""
-    terms = [str(t).lower() for t in query_terms]
+    """The one PRF term-selection core: ``(group..., term, score,
+    df)`` for every term of the feedback docs ``fb`` (``group...,
+    id``) outside the query's own terms ``own`` (the single face's
+    lowercased list, or the batch face's ``(query_id, term)`` frame),
+    scored ``df_feedback x idf`` (unrounded).  The explode/groupBy
+    runs on the bounded feedback slice; pricing restricts the
+    vocabulary scan to the feedback terms (broadcast inner join), then
+    LEFT-joins back so terms outside the index price with df = 0."""
     cs = corpus_stats.first()
     if cs is None:
         raise ValueError("corpus_stats is empty")
-    n = float(cs["n"])
-
-    fb = bm25_topk_indexed(
-        docs, term_stats, corpus_stats, terms, n_feedback,
-        k1=k1, b=b, id_col=id_col, text_col=text_col,
-        _df_map=_df_map,
-    ).select(id_col)
-    fb_docs = fb.join(docs.select(id_col, text_col), id_col)
     fb_df = (
-        fb_docs.select(
+        fb.join(docs.select(id_col, text_col), id_col)
+        .select(
+            *group,
             F.explode(
                 F.array_distinct(tokens(F.lower(F.col(text_col))))
-            ).alias("term")
+            ).alias("term"),
         )
-        .groupBy("term")
+        .groupBy(*group, "term")
         .agg(F.count(F.lit(1)).cast("double").alias("_dffb"))
-        .filter(~F.col("term").isin(terms))
     )
-    # restrict the vocabulary scan to the feedback terms (broadcast
-    # semi-style inner join), then LEFT join back so terms outside the
-    # index price with df = 0 — the bm25_batch_topk_indexed pattern
-    stats_small = term_stats.join(
-        F.broadcast(fb_df.select("term")), "term"
-    )
+    if isinstance(own, DataFrame):
+        fb_df = fb_df.join(own, [*group, "term"], "left_anti")
+        fb_terms = fb_df.select("term").distinct()
+    else:
+        fb_df = fb_df.filter(~F.col("term").isin(own))
+        fb_terms = fb_df.select("term")
+    stats_small = term_stats.join(F.broadcast(fb_terms), "term")
     priced = fb_df.join(F.broadcast(stats_small), "term", "left")
-    df_t = F.coalesce(F.col("df").cast("double"), F.lit(0.0))
-    idf = F.log(
-        F.lit(1.0) + (F.lit(n) - df_t + F.lit(0.5)) / (df_t + F.lit(0.5))
+    df = F.coalesce(F.col("df"), F.lit(0))
+    return priced.select(
+        *group,
+        "term",
+        (F.col("_dffb") * _idf(float(cs["n"]), df.cast("double"))).alias(
+            "score"
+        ),
+        df.cast("long").alias("df"),
     )
-    extra = (
-        [F.coalesce(F.col("df"), F.lit(0)).cast("long").alias("df")]
-        if with_df else []
-    )
-    out = (
-        priced.select(
-            "term", (F.col("_dffb") * idf).alias("score"), *extra
-        )
-        .orderBy(F.col("score").desc(), F.col("term").asc())
-        .limit(n_expand)
-    )
-    return out.withColumn("score", F.round(F.col("score"), SCORE_DECIMALS))

@@ -532,15 +532,15 @@ def _adc_candidates(
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """The one single-query ADC scan: approximate scores over the
-    compressed table, global top ``n_candidates``.  Per Arrow batch
-    only the batch-local top survives, so the final TakeOrdered sees
-    O(partitions * n) rows.
+    compressed table, global top ``n_candidates``.  Each Arrow batch
+    runs the batch faces' ADC kernel (:func:`_make_cogroup_adc_kernel`) against
+    the one query, so only its batch-local top survives and the final
+    TakeOrdered sees O(partitions * n) rows.
 
-    Raw codes score through ONE shared table per task.  RESIDUAL codes
-    (``model.residual``; ``cells`` are the probed cells, ``centroids``
-    the IVF centroid table) score each row with ITS cell's (luts,
-    consts), built on the executors on first touch — codes are
-    partitioned by cell_id, so a task touches few cells.  The driver
+    RESIDUAL codes (``model.residual``; ``cells`` are the probed
+    cells, ``centroids`` the IVF centroid table) score per cell with
+    that cell's (luts, consts), built on the executors — codes are
+    partitioned by cell_id, so a batch touches few cells.  The driver
     never materializes per-cell tables: it broadcasts MODEL-sized
     state, the codebooks plus the PROBED centroids (collected under a
     server-side ``isin`` filter, never the full centroid table).  Under
@@ -563,50 +563,33 @@ def _adc_candidates(
             int(r["cell_id"]): np.asarray(r["centroid"], dtype=np.float64)
             for r in src
         }
-    bc = spark.sparkContext.broadcast(
-        (model.kernel_state(),
-         np.asarray(query_vector, dtype=np.float64)[None, :], cents)
+    serve = _make_cogroup_adc_kernel(
+        spark, model, n_candidates, id_col, "_q", "_qv"
     )
-    n_local = n_candidates
+    bc = spark.sparkContext.broadcast(
+        (np.asarray(query_vector, dtype=np.float64), cents)
+    )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        (codebooks, metric, dsub, rot), Q, cents_ = bc.value
-        tables: dict = {}  # cell (None = raw codes) -> (luts, consts)
+        qv, cents_ = bc.value
 
-        def _scores(codes: np.ndarray, cell: int | None) -> np.ndarray:
-            if cell not in tables:
-                tables[cell] = _adc_tables(
-                    codebooks, metric, dsub, Q, rot,
-                    None if cell is None else cents_[cell],
-                )
-            return _adc_scores(*tables[cell], codes)[0]
+        def query(cell=None) -> pd.DataFrame:
+            cent = None if cell is None else cents_[cell]
+            return pd.DataFrame({"_q": [0], "_qv": [qv], "centroid": [cent]})
 
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = _unpack_codes(pdf["pq_code"])
             if cents_ is None:
-                s = _scores(codes, None)
-            else:
-                cells_ = pdf["cell_id"].to_numpy()
-                s = np.empty(len(pdf), dtype=np.float64)
-                for c in np.unique(cells_):
-                    sel = cells_ == c
-                    s[sel] = _scores(codes[sel], int(c))
-            if len(s) > n_local:
-                keep = np.argpartition(-s, n_local - 1)[:n_local]
-            else:
-                keep = np.arange(len(s))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy()[keep], "adc_score": s[keep]}
-            )
+                yield serve(pdf, query())
+                continue
+            for c, part in pdf.groupby("cell_id", sort=False):
+                yield serve(part, query(int(c)))
 
     scored = scan.select(*cols).mapInPandas(
-        score, schema=f"{id_col} long, adc_score double"
+        score, schema=f"_q long, {id_col} long, adc_score double"
     )
     top = scored.orderBy(
         F.col("adc_score").desc(), F.col(id_col).asc()
-    ).limit(n_candidates)
+    ).limit(n_candidates).select(id_col, "adc_score")
     return top if with_scores else top.select(id_col)
 
 
@@ -847,28 +830,52 @@ def pq_topk(
     scan = encoded
     if allowed_ids is not None:
         scan = restrict_to_allowed(scan, allowed_ids, id_col=id_col)
-    # .distinct(): the codes table may hold duplicate vec_id rows (a
-    # re-appended batch, an at-least-once streaming retry); without the
-    # dedup the broadcast join below would emit the id twice into the
-    # final top-k.  Bounded rows (<= k*refine) — cheap, same guard
-    # ivf_pq_topk applies for spill-redundant cell assignment.
+    return _refine_topk(
+        scan, original, query_vector, k, model, refine_factor, strength,
+        id_col, vec_col, score_col, adaptive_refine, refine_min, sigma_mult,
+    )
+
+
+def _refine_topk(
+    scan: DataFrame,
+    original: DataFrame,
+    query_vector: Sequence[float],
+    k: int,
+    model: PQModel,
+    refine_factor: int,
+    strength: float,
+    id_col: str,
+    vec_col: str,
+    score_col: str,
+    adaptive_refine: bool,
+    refine_min: int,
+    sigma_mult: float,
+    cells: Sequence[int] | None = None,
+    centroids: DataFrame | None = None,
+) -> DataFrame:
+    """The two stages of every single-query PQ face: the ADC scan of
+    ``scan`` (:func:`_adc_candidates`; residual codes score per probed
+    cell), the optional error-bound pool cut
+    (:func:`adaptive_refine_cut` — ``refine_factor`` becomes the
+    ceiling), then the exact re-rank: a broadcast id join into the
+    full-precision table, scored with the built-in fold expression,
+    thresholded by ``strength`` -> TakeOrderedAndProject."""
+    cand = _adc_candidates(
+        scan, model, query_vector, k * refine_factor, id_col=id_col,
+        with_scores=adaptive_refine, cells=cells, centroids=centroids,
+    )
     if adaptive_refine:
-        # refine_factor becomes the CEILING; the error-bound cut
-        # shrinks the exact-re-rank pool per query (see
-        # adaptive_refine_cut)
-        pool = pq_candidates(
-            scan, model, query_vector, k * refine_factor, id_col=id_col,
-            with_scores=True,
-        )
         cand = adaptive_refine_cut(
-            pool, k, adc_sigma(model, query_vector),
+            cand, k, adc_sigma(model, query_vector),
             refine_min=refine_min, sigma_mult=sigma_mult, id_col=id_col,
             model=model,
-        ).select(id_col).distinct()
-    else:
-        cand = pq_candidates(
-            scan, model, query_vector, k * refine_factor, id_col=id_col
-        ).distinct()
+        ).select(id_col)
+    # .distinct(): the codes table may hold duplicate id rows (a
+    # re-appended batch, an at-least-once streaming retry, or a
+    # spill-redundant IVF assignment that stores a vector in several
+    # cells); without it the broadcast join would emit the id twice
+    # into the final top-k.  Bounded rows (<= k*refine) — cheap.
+    cand = cand.distinct()
     qv = vector_literal(query_vector)
     out = (
         original.join(F.broadcast(cand), id_col)
@@ -1049,107 +1056,54 @@ def ivf_pq_topk(
     codes (``cell_id IN (...)`` = PartitionFilters on a
     cell-partitioned table), exact-rerank the survivors.
 
-    ``nprobe=None`` selects the probe cells ADAPTIVELY from the
-    query's centroid-similarity profile
-    (``ann.choose_probe_cells_adaptive`` — the same rule the IVF path
-    uses; centroid distances carry the identical signal here, the
-    codes just quantize the members): a query with no standout cell
-    ADC-scans every cell (graceful degeneration, stage 2 still
-    re-ranks exactly), a structured profile scans only its
-    clearly-better-than-average cells.  An integer keeps the classic
-    fixed-count ranking.
+    Cells come from the IVF probe policy (``ann.probe``, the
+    rule ``ivf_search`` uses; centroid distances carry the identical
+    signal here, the codes just quantize the members): fixed
+    ``nprobe``, or ``nprobe=None`` for the adaptive profile rule — a
+    query with no standout cell ADC-scans every cell (stage 2 still
+    re-ranks exactly).
 
-    ``allowed_ids`` = metadata-filtered search (parity with
-    ``pq_topk``/``ivf_search``): the probed cells' codes are
-    restricted to the allowed set (sequence -> isin; DataFrame ->
-    broadcast semi-join, see ``operators.filtering``) BEFORE the ADC
-    ranking, with the probe count widened by 1/selectivity (same
-    policy as ``ivf_search``; the adaptive form widens its OWN
-    profile-derived count) so the expected allowed candidate pool
-    stays at the unfiltered level; ``n_total`` skips the corpus count
-    when the caller knows it (the facade reads it from ``_meta``)."""
-    from astro_vectordb_spark.operators.ann import (
-        choose_probe_cells,
-        choose_probe_cells_adaptive,
+    ``allowed_ids`` = metadata-filtered search: the probed cells'
+    codes are restricted to the allowed set (sequence -> isin;
+    DataFrame -> broadcast semi-join, see ``operators.filtering``)
+    BEFORE the ADC ranking, with the probe count widened by
+    1/selectivity exactly as in ``ivf_search``; ``n_total`` skips the
+    corpus count when the caller knows it (the facade reads it from
+    ``_meta``)."""
+    from astro_vectordb_spark.operators.ann import probe
+
+    probed, cells = probe(
+        encoded, centroids, query_vector, nprobe, model.metric,
+        max_probe_frac, allowed_ids, n_total, id_col,
     )
-    from astro_vectordb_spark.operators.filtering import (
-        allowed_count,
-        restrict_to_allowed,
+    return _refine_topk(
+        probed, original, query_vector, k, model, refine_factor, strength,
+        id_col, vec_col, score_col, adaptive_refine, refine_min, sigma_mult,
+        cells=cells, centroids=centroids,
     )
 
-    if nprobe is None:
-        cells = choose_probe_cells_adaptive(
-            centroids, query_vector, metric=model.metric,
-            max_probe_frac=max_probe_frac,
-        )
-    else:
-        cells = choose_probe_cells(
-            centroids, query_vector, nprobe, metric=model.metric
-        )
-    if allowed_ids is not None:
-        import math
-
-        n_allowed = allowed_count(allowed_ids)
-        if n_total is None:
-            n_total = encoded.dropDuplicates([id_col]).count()
-        sel = max(n_allowed / max(n_total, 1), 1e-9)
-        k_cells = centroids.count()
-        widened = min(int(k_cells), math.ceil(len(cells) / sel))
-        if widened > len(cells):
-            cells = choose_probe_cells(
-                centroids, query_vector, widened, metric=model.metric
-            )
-    probed = encoded.filter(F.col("cell_id").isin(cells))
-    if allowed_ids is not None:
-        probed = restrict_to_allowed(probed, allowed_ids, id_col=id_col)
-    # residual codes score per (query, probed cell) against that cell's
-    # centroid; raw codes ignore cells/centroids
-    cand = _adc_candidates(
-        probed, model, query_vector, k * refine_factor, id_col=id_col,
-        with_scores=adaptive_refine, cells=cells, centroids=centroids,
-    )
-    if adaptive_refine:
-        cand = adaptive_refine_cut(
-            cand, k, adc_sigma(model, query_vector),
-            refine_min=refine_min, sigma_mult=sigma_mult, id_col=id_col,
-            model=model,
-        ).select(id_col)
-    # .distinct(): spill-redundant IVF assignment (SPANN-style) stores
-    # a vector in several cells, so two probed copies of one id must
-    # not both reach the re-rank (bounded rows — cheap)
-    cand = cand.distinct()
-    qv = vector_literal(query_vector)
-    out = (
-        original.join(F.broadcast(cand), id_col)
-        .withColumn(score_col, similarity(F.col(vec_col), qv, model.metric))
-        .filter(F.col(score_col) > threshold_from_strength(strength))
-        .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    return out.select(
-        id_col, F.round(F.col(score_col), SCORE_DECIMALS).alias(score_col)
-    )
 
 def _make_cogroup_adc_kernel(
     spark, model: PQModel, n_local: int, id_col: str, query_id_col: str,
     query_vec_col: str,
 ):
-    """Cogroup serve kernel shared by the hash-blocked PQ batch face
-    and the cell-probed IVF-PQ batch face: one side is a codes slice,
-    the other the query rows paired with it; builds the slice's ADC
-    tables worker-side from one broadcast of ``model.kernel_state()``
-    and emits the block-local top ``n_local`` per query.  Query-sliced
-    scoring: a (|Q|, |block|) float64 matrix at large |Q| is multi-GB
-    of temporaries per j-gather (measured: 18 workers at 4 GB RES
-    each, >50% SYSTEM cpu = allocator churn, at 50k x 6k); 512-query
-    slices cap the temp at ~25 MB with identical float64 math
-    (per-query sums are independent).
+    """The ADC serve kernel of every PQ face: ``fn(codes, queries)``
+    scores a codes slice (pandas) against query rows, building the
+    slice's ADC tables worker-side from one broadcast of
+    ``model.kernel_state()``, and emits the slice-local top ``n_local``
+    per query.  The batch faces call it per cogroup, the single-query
+    scan per Arrow batch.  Query-sliced scoring: a (|Q|, |block|)
+    float64 matrix at large |Q| is multi-GB of temporaries per
+    j-gather (measured: 18 workers at 4 GB RES each, >50% SYSTEM cpu
+    = allocator churn, at 50k x 6k); 512-query slices cap the temp at
+    ~25 MB with identical float64 math (per-query sums are
+    independent).
 
-    Residual codes: the query side carries the group's cell centroid
-    in a ``centroid`` column (a cogroup is one cell, or one salt of
-    one cell, so the column is constant within the group) and the
-    tables build per (query, cell) — scores stay comparable across
-    cells because every group adds its own exact constant."""
+    Residual codes: the query side carries the slice's cell centroid
+    in a ``centroid`` column (a slice is one cell, or one salt of one
+    cell, so the column is constant within it) and the tables build
+    per (query, cell) — scores stay comparable across cells because
+    every slice adds its own exact constant."""
     bc = spark.sparkContext.broadcast(model.kernel_state())
     residual = model.residual
 
@@ -1240,33 +1194,22 @@ def pq_batch_topk_cogrouped(
     refine_min: int = 4,
     sigma_mult: float = 3.0,
 ) -> DataFrame:
-    """Batch face of ``pq_topk``, WITHOUT driver-side query
-    materialization: no single machine ever holds the query set or its
-    LUT tensor, so |Q| is unbounded.  Mirrors
-    ``hnsw_query_shards_cogrouped``.  Output: (query_id, id, score,
-    rank) — same contract as ``batch_topk``.
+    """Batch face of ``pq_topk`` (same options; each query's rows
+    equal its ``pq_topk`` call — the equivalence tests pin this),
+    WITHOUT driver-side query materialization: no single machine ever
+    holds the query set or its LUT tensor, so |Q| is unbounded.
+    Output: (query_id, id, score, rank) — same contract as
+    ``batch_topk``.
 
     Shape: the compact codes table is hash-blocked on id, queries are
     replicated once per block (|Q| x n_blocks rows — data-parallel, no
     single-machine copy), and a cogroup pairs each block's codes with
     its full query slice; the task builds the slice's LUTs from raw
     query vectors (tiny: m*ks*dsub flops per query) and emits the
-    block-local ADC top ``k*refine_factor`` per query.  The global
-    candidate cut is the single-query face's (score desc, id asc)
-    order per query, and the exact re-rank decides the output, so each
-    query's rows equal ``pq_topk``'s (the equivalence tests pin this).
-    Cost: one shuffle of the m-bytes-per-vector codes table (not the
-    float corpus) + |Q| x n_blocks query replication.  The final joins
-    are plain (AQE-planned) — no broadcast of the candidate or query
-    frames, which at large |Q| would not fit.
-
-    ``adaptive_refine``: per-query error-bound cut of the stage-2 pool
-    (:func:`adaptive_refine_cut_batch`) — ``refine_factor`` becomes
-    the ceiling and each query keeps only the candidates its own ADC
-    margin cannot rule out; legacy models degrade to the fixed pool
-    bit-identically."""
-    from astro_vectordb_spark.operators.topk import rank_topk_per_query
-
+    block-local ADC top ``k*refine_factor`` per query; the candidate
+    cut and exact re-rank follow (:func:`_refine_topk_batch`).  Cost:
+    one shuffle of the m-bytes-per-vector codes table (not the float
+    corpus) + |Q| x n_blocks query replication."""
     spark = encoded.sparkSession
     if n_blocks is None:
         n_blocks = max(2, spark.sparkContext.defaultParallelism)
@@ -1288,23 +1231,55 @@ def pq_batch_topk_cogrouped(
     hits = (
         codes_b.groupBy("__blk")
         .cogroup(q_rep.groupBy("__blk"))
-        .applyInPandas(lambda left, right: _serve(left, right), out_schema)
+        .applyInPandas(_serve, out_schema)
     )
-    # global candidate cut: the single-query scan's (score desc, id
-    # asc) order per query; prereduce (num_salts) keeps the exchange at
-    # |partitions| x |Q| x n rows
+    return _refine_topk_batch(
+        hits, original, queries, k, model, n_local, strength, id_col,
+        vec_col, query_id_col, query_vec_col, score_col, adaptive_refine,
+        refine_min, sigma_mult,
+    )
+
+
+def _refine_topk_batch(
+    hits: DataFrame,
+    original: DataFrame,
+    queries: DataFrame,
+    k: int,
+    model: PQModel,
+    n_local: int,
+    strength: float,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    score_col: str,
+    adaptive_refine: bool,
+    refine_min: int,
+    sigma_mult: float,
+) -> DataFrame:
+    """The stages both cogrouped PQ faces share after their block-local
+    ADC cut ``hits`` ``(query_id, id, adc_score)``: the global
+    candidate cut in the single-query scan's (score desc, id asc)
+    order per query (the prereduce keeps the exchange at |partitions|
+    x |Q| x n rows), the optional per-query error-bound cut
+    (:func:`adaptive_refine_cut_batch` — inside the plan, no driver
+    collect, so it composes with unbounded |Q|), then the exact
+    re-rank by plain (AQE-planned) joins — no broadcast of the
+    candidate or query frames, which at large |Q| would not fit."""
+    from astro_vectordb_spark.operators.topk import rank_topk_per_query
+
     pool = rank_topk_per_query(
         hits, n_local, id_col=id_col, query_id_col=query_id_col,
         score_col="adc_score", num_salts=8, round_scores=False,
     )
     if adaptive_refine:
-        # per-query error-bound cut INSIDE the batch plan — no driver
-        # collect, so it composes with unbounded |Q|
         pool = adaptive_refine_cut_batch(
             pool, k, model, queries=queries, refine_min=refine_min,
             sigma_mult=sigma_mult, id_col=id_col,
             query_id_col=query_id_col, query_vec_col=query_vec_col,
         )
+    # spill-redundant copies of one id rank adjacently at equal scores;
+    # distinct() collapses them before the re-rank
     cand = pool.select(query_id_col, id_col).distinct()
     exact = (
         original.join(cand, id_col)
@@ -1348,20 +1323,14 @@ def ivf_pq_batch_topk_cogrouped(
     """Cell-probed batch IVF-PQ — the batch face of ``ivf_pq_topk``:
     every query ADC-scans ONLY its probed cells' codes instead of the
     whole table, cutting the ADC flops to the probed fraction
-    (nprobe / k_cells) at any |Q|.
-
-    ``allowed_ids`` = metadata-filtered batch search (the
-    ``ivf_batch_search`` policy): the codes are restricted to the
-    allowed set (sequence -> isin, DataFrame -> broadcast semi-join)
-    and every query's probe count widens by 1/selectivity — fixed
-    ``nprobe`` multiplies, the adaptive rule's per-query count
-    multiplies keeping its shape (``probe_table_batch(widen=...)``).
-    ``n_total`` (distinct corpus ids) skips the corpus count when the
-    caller knows it — the facade reads it from the index ``_meta``.
+    (nprobe / k_cells) at any |Q|.  Probing (``nprobe``,
+    ``max_probe_frac``) and filtering (``allowed_ids``, ``n_total``)
+    follow the single face's policy, so each query's rows equal its
+    ``ivf_pq_topk`` call.
 
     Shape: the distributed probe table (``ann.probe_table_batch`` —
-    fixed ``nprobe`` or the adaptive ``nprobe=None`` profile rule, as
-    per-query windows) pairs each query with its cells; a cogroup on
+    the single face's probe policy as per-query windows) pairs each
+    query with its cells; a cogroup on
     ``cell_id`` serves each cell's codes against exactly the queries
     probing it (the same worker-side LUT kernel as the hash-blocked
     face — nothing materializes on the driver, |Q| unbounded); the
@@ -1390,29 +1359,13 @@ def ivf_pq_batch_topk_cogrouped(
     Returns ``(query_id, vec_id, score, rank)``, exact scores, at
     most ``k`` rows per query.
     """
-    from astro_vectordb_spark.operators.ann import probe_table_batch
-    from astro_vectordb_spark.operators.filtering import (
-        allowed_count,
-        restrict_to_allowed,
-    )
-    from astro_vectordb_spark.operators.topk import rank_topk_per_query
+    from astro_vectordb_spark.operators.ann import probe_batch
 
     spark = encoded.sparkSession
-    widen = 1
-    if allowed_ids is not None:
-        import math
-
-        n_allowed = allowed_count(allowed_ids)
-        if n_total is None:
-            n_total = encoded.dropDuplicates([id_col]).count()
-        sel = max(n_allowed / max(n_total, 1), 1e-9)
-        widen = max(1, math.ceil(1.0 / sel))
-        encoded = restrict_to_allowed(encoded, allowed_ids, id_col=id_col)
     n_local = k * refine_factor
-    q_cells = probe_table_batch(
-        queries, centroids, nprobe, metric=model.metric, widen=widen,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-        max_probe_frac=max_probe_frac,
+    encoded, q_cells = probe_batch(
+        encoded, centroids, queries, nprobe, model.metric, max_probe_frac,
+        allowed_ids, n_total, id_col, query_id_col, query_vec_col,
     )
     out_schema = f"{query_id_col} long, {id_col} long, adc_score double"
     if model.residual:
@@ -1458,38 +1411,16 @@ def ivf_pq_batch_topk_cogrouped(
         hits = (
             codes_s.groupBy("cell_id", "_salt")
             .cogroup(q_cells_s.groupBy("cell_id", "_salt"))
-            .applyInPandas(lambda left, right: _serve(left, right), out_schema)
+            .applyInPandas(_serve, out_schema)
         )
     else:
         hits = (
             codes.groupBy("cell_id")
             .cogroup(q_cells.groupBy("cell_id"))
-            .applyInPandas(lambda left, right: _serve(left, right), out_schema)
+            .applyInPandas(_serve, out_schema)
         )
-    pool = rank_topk_per_query(
-        hits, n_local, id_col=id_col, query_id_col=query_id_col,
-        score_col="adc_score", num_salts=8, round_scores=False,
-    )
-    if adaptive_refine:
-        # worker-side error-bound cut (spill-redundant duplicates rank
-        # adjacently at equal scores; the post-cut distinct collapses
-        # them as in the fixed path)
-        pool = adaptive_refine_cut_batch(
-            pool, k, model, queries=queries, refine_min=refine_min,
-            sigma_mult=sigma_mult, id_col=id_col,
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-        )
-    cand = pool.select(query_id_col, id_col).distinct()
-    exact = (
-        original.join(cand, id_col)
-        .join(queries.select(query_id_col, query_vec_col), query_id_col)
-        .withColumn(
-            score_col,
-            similarity(F.col(vec_col), F.col(query_vec_col), model.metric),
-        )
-        .filter(F.col(score_col) > threshold_from_strength(strength))
-    )
-    return rank_topk_per_query(
-        exact, k, id_col=id_col, query_id_col=query_id_col,
-        score_col=score_col, num_salts=8,
+    return _refine_topk_batch(
+        hits, original, queries, k, model, n_local, strength, id_col,
+        vec_col, query_id_col, query_vec_col, score_col, adaptive_refine,
+        refine_min, sigma_mult,
     )

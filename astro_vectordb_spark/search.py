@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,6 +82,8 @@ def search(
     - ``vectors``: full-precision table for the PQ/IVF-PQ stage-2
       re-rank (required for those kinds — the codes alone cannot give
       exact scores).
+    - ``strength`` (0-100, the reference's knob) keeps hits with
+      ``score > min(0.95, strength / 100)`` on every kind.
     - ``metric`` applies only to the exact path; every index kind
       reads its metric from its own persisted ``_meta``.
     - ``nprobe=None`` on the IVF *and IVF-PQ* paths selects probe
@@ -98,9 +101,9 @@ def search(
     - ``allowed_ids`` = metadata-filtered search on EVERY kind: exact
       and PQ pre-filter the scan; HNSW filters the beam's result set
       with selectivity-widened ef; IVF and IVF-PQ restrict candidates
-      inside the probed cells with the probe count widened by
-      1/selectivity (the same policy as the HNSW beam).  A small
-      Python sequence routes as an isin literal; a one-column
+      inside the probed cells with the probe count widened to
+      ceil(n / selectivity) (the same policy as the HNSW beam).  A
+      small Python sequence routes as an isin literal; a one-column
       DataFrame allow-list routes as a broadcast semi-join
       (``operators.filtering``), so large allow-lists never inflate
       the plan (HNSW's beam filter is inherently a broadcast set and
@@ -108,93 +111,21 @@ def search(
       Selectivity widening reads the corpus size from the index's
       persisted ``_meta`` ``n_rows`` counter (maintained by every
       save/append/remove); only legacy indexes without it count once.
-    - ``adaptive_refine`` (PQ / IVF-PQ kinds; round 14 on the batch
-      companion too) = error-bound stage-2 pool sizing:
-      ``refine_factor`` becomes the ceiling and each query keeps only
-      the ADC candidates its own margin cannot rule out
-      (``operators.pq.adaptive_refine_cut``/``_batch``).  Ignored by
-      kinds with no ADC stage (exact / IVF / HNSW); legacy PQ models
-      without a stored training MSE serve the fixed pool
+    - ``adaptive_refine`` (PQ / IVF-PQ kinds) = error-bound stage-2
+      pool sizing: ``refine_factor`` becomes the ceiling and each
+      query keeps only the ADC candidates its own margin cannot rule
+      out (``operators.pq.adaptive_refine_cut``/``_batch``).  Ignored
+      by kinds with no ADC stage (exact / IVF / HNSW); legacy PQ
+      models without a stored training MSE serve the fixed pool
       bit-identically.
     """
-    kind = detect_index_kind(spark, path)
-    if kind == "exact":
-        from astro_vectordb_spark.operators.filtering import (
-            restrict_to_allowed,
-        )
-        from astro_vectordb_spark.operators.topk import topk_search
-        from astro_vectordb_spark.sources.vault import load_embeddings
-
-        corpus = load_embeddings(spark, path)
-        if allowed_ids is not None:
-            corpus = restrict_to_allowed(corpus, allowed_ids)
-        out = topk_search(corpus, query_vector, k, strength=strength, metric=metric)
-        return out.select("vec_id", "score")
-
-    if kind == "ivf":
-        from astro_vectordb_spark.operators.ann import ivf_search
-        from astro_vectordb_spark.sources.vault import load_ivf_index
-
-        assigned, centroids, _, meta = load_ivf_index(spark, path)
-        out = ivf_search(
-            assigned, centroids, query_vector, k, nprobe=nprobe,
-            strength=strength, metric=meta["metric"],
-            allowed_ids=allowed_ids, n_total=meta.get("n_rows"),
-            max_probe_frac=max_probe_frac,
-        )
-        return out.select("vec_id", "score")
-
-    if kind == "hnsw":
-        from astro_vectordb_spark.operators.hnsw import hnsw_query_shards
-        from astro_vectordb_spark.sources.vault import load_hnsw_index
-
-        from astro_vectordb_spark.operators.filtering import allowed_as_list
-
-        graph, meta = load_hnsw_index(spark, path)
-        out = hnsw_query_shards(
-            graph, [query_vector], k=k, m=meta["m"], metric=meta["metric"],
-            ef_search=ef_search, clustered=meta["clustered_safe"],
-            index_cache_token=meta["cache_token"],
-            allowed_ids=(
-                allowed_as_list(allowed_ids) if allowed_ids is not None else None
-            ),
-        )
-        return (
-            out.select("vec_id", F.round("score", 6).alias("score"))
-            .orderBy(F.col("score").desc(), F.col("vec_id").asc())
-            .limit(k)
-        )
-
-    # pq / ivf_pq: stage 2 re-ranks against full-precision vectors
-    if vectors is None:
-        raise ValueError(
-            f"index at {path} is {kind}: pass vectors= (the full-precision "
-            "table) for the exact stage-2 re-rank"
-        )
-    if kind == "pq":
-        from astro_vectordb_spark.operators.pq import pq_topk
-        from astro_vectordb_spark.sources.vault import load_pq_index
-
-        encoded, model, _ = load_pq_index(spark, path)
-        return pq_topk(
-            encoded, vectors, query_vector, k, model,
-            refine_factor=refine_factor, strength=strength,
-            allowed_ids=allowed_ids, adaptive_refine=adaptive_refine,
-            refine_min=refine_min, sigma_mult=sigma_mult,
-        ).select("vec_id", "score")
-
-    from astro_vectordb_spark.operators.pq import ivf_pq_topk
-    from astro_vectordb_spark.sources.vault import load_ivf_pq_index
-
-    encoded, centroids, model, meta = load_ivf_pq_index(spark, path)
-    return ivf_pq_topk(
-        encoded, centroids, vectors, query_vector, k, model,
-        nprobe=nprobe,
-        refine_factor=refine_factor, strength=strength,
-        allowed_ids=allowed_ids, n_total=meta.get("n_rows"),
+    return _serve(
+        spark, path, query_vector, k, False, vectors=vectors,
+        strength=strength, allowed_ids=allowed_ids, metric=metric,
+        ef_search=ef_search, nprobe=nprobe, refine_factor=refine_factor,
         max_probe_frac=max_probe_frac, adaptive_refine=adaptive_refine,
         refine_min=refine_min, sigma_mult=sigma_mult,
-    ).select("vec_id", "score")
+    )
 
 
 def search_batch(
@@ -215,35 +146,14 @@ def search_batch(
     refine_min: int = 4,
     sigma_mult: float = 3.0,
 ) -> DataFrame:
-    """Batch companion to :func:`search`: ``queries`` is a DataFrame
-    ``(query_id long, query_vec array<float>)`` of UNBOUNDED size —
-    every kind dispatches to its batch face, none of which
-    materializes the query set on the driver (HNSW and PQ serve
-    cogrouped; exact uses the map-side prereduce; IVF probes per
-    query via a bounded centroid broadcast).
-
-    ``nprobe=None`` (default — parity with :func:`search`) selects IVF
-    probe cells adaptively PER QUERY, computed as one distributed
-    window over the (|Q| x k_cells) ranking table; an integer pins the
-    classic fixed count.  Same DEFAULT-CHANGE NOTE as :func:`search`:
-    a query with no standout cell probes every cell under the
-    adaptive default — cap with ``max_probe_frac`` or pin ``nprobe``
-    for a cost ceiling.
-
-    ``allowed_ids`` = metadata-filtered batch search on every kind
-    (parity with :func:`search`, including the sequence-vs-DataFrame
-    routing): exact/PQ/IVF-PQ restrict the scanned corpus to the
-    allowed set; HNSW filters each beam's result set with the
-    selectivity-widened ef; IVF and IVF-PQ widen every query's probe
-    count by 1/selectivity, reading the corpus size from the index's
-    ``_meta`` ``n_rows`` counter (no per-call count job; legacy
-    indexes without the counter count once).
-
-    Returns ``(query_id, vec_id, score)``, at most ``k`` rows per
-    query.  IVF-PQ batch serves CELL-PROBED (``ivf_pq_batch_topk_cogrouped``):
-    each query ADC-scans only its probed cells — ``nprobe`` fixed or
-    ``None`` for the per-query adaptive rule — so batch ADC work drops
-    to the probed fraction.
+    """Batch face of :func:`search`: ``queries`` is a DataFrame
+    ``(query_id long, query_vec array<float>)`` of UNBOUNDED size,
+    served through the same per-kind dispatch and options, each kind
+    by its batch operator — none materializes the query set on the
+    driver (HNSW and PQ serve cogrouped; exact uses the map-side
+    prereduce; IVF and IVF-PQ probe per query through the distributed
+    probe table).  Returns ``(query_id, vec_id, score)``, at most
+    ``k`` rows per query.
 
     ``max_group_rows`` (IVF-PQ kind) = skew-bounded serving: salts
     each cell's cogroup into ``ceil(cell_rows / max_group_rows)``
@@ -251,90 +161,115 @@ def search_batch(
     task; results identical to the unsalted face (see
     ``ivf_pq_batch_topk_cogrouped``).
     """
+    return _serve(
+        spark, path, queries, k, True, vectors=vectors, strength=strength,
+        allowed_ids=allowed_ids, metric="cosine", ef_search=ef_search,
+        nprobe=nprobe, refine_factor=refine_factor,
+        max_probe_frac=max_probe_frac, adaptive_refine=adaptive_refine,
+        refine_min=refine_min, sigma_mult=sigma_mult,
+        max_group_rows=max_group_rows,
+    )
+
+
+def _serve(
+    spark: SparkSession,
+    path: str,
+    query,
+    k: int,
+    batch: bool,
+    *,
+    vectors: DataFrame | None,
+    strength: float,
+    allowed_ids,
+    metric: str,
+    ef_search: int,
+    nprobe: int | None,
+    refine_factor: int,
+    max_probe_frac: float | None,
+    adaptive_refine: bool,
+    refine_min: int,
+    sigma_mult: float,
+    max_group_rows: int | None = None,
+) -> DataFrame:
+    """The per-kind dispatch of both faces: load the index, route
+    ``allowed_ids``, apply ``strength``, and call the kind's single
+    operator on a query vector or its batch operator on a query frame
+    (``batch``) — the two faces differ only in that call."""
+    from astro_vectordb_spark.functions.vector import threshold_from_strength
+    from astro_vectordb_spark.operators import ann, hnsw, pq, topk
+    from astro_vectordb_spark.operators.filtering import (
+        allowed_as_list,
+        restrict_to_allowed,
+    )
+    from astro_vectordb_spark.sources import vault
+
     kind = detect_index_kind(spark, path)
-    if kind == "exact":
-        from astro_vectordb_spark.operators.filtering import (
-            restrict_to_allowed,
-        )
-        from astro_vectordb_spark.operators.topk import batch_topk
-        from astro_vectordb_spark.sources.vault import load_embeddings
-
-        corpus = load_embeddings(spark, path)
-        if allowed_ids is not None:
-            corpus = restrict_to_allowed(corpus, allowed_ids)
-        return batch_topk(corpus, queries, k, strength=strength).select(
-            "query_id", "vec_id", "score"
-        )
-
-    if kind == "ivf":
-        from astro_vectordb_spark.operators.ann import ivf_batch_search
-        from astro_vectordb_spark.sources.vault import load_ivf_index
-
-        assigned, centroids, _, meta = load_ivf_index(spark, path)
-        return ivf_batch_search(
-            assigned, centroids, queries, k, nprobe=nprobe,
-            metric=meta["metric"], allowed_ids=allowed_ids,
-            n_total=meta.get("n_rows"), max_probe_frac=max_probe_frac,
-        ).select("query_id", "vec_id", "score")
-
-    if kind == "hnsw":
-        from astro_vectordb_spark.operators.filtering import allowed_as_list
-        from astro_vectordb_spark.operators.hnsw import hnsw_query_shards
-        from astro_vectordb_spark.sources.vault import load_hnsw_index
-
-        graph, meta = load_hnsw_index(spark, path)
-        return hnsw_query_shards(
-            graph, queries, k=k, m=meta["m"], metric=meta["metric"],
-            ef_search=ef_search, clustered=meta["clustered_safe"],
-            index_cache_token=meta["cache_token"],
-            allowed_ids=(
-                allowed_as_list(allowed_ids) if allowed_ids is not None else None
-            ),
-        ).select("query_id", "vec_id", "score")
-
-    if vectors is None:
+    if kind in ("pq", "ivf_pq") and vectors is None:
         raise ValueError(
             f"index at {path} is {kind}: pass vectors= (the full-precision "
             "table) for the exact stage-2 re-rank"
         )
-    if kind == "pq":
-        from astro_vectordb_spark.operators.filtering import (
-            restrict_to_allowed,
+    probe = dict(
+        nprobe=nprobe, allowed_ids=allowed_ids, max_probe_frac=max_probe_frac
+    )
+    refine = dict(
+        refine_factor=refine_factor, adaptive_refine=adaptive_refine,
+        refine_min=refine_min, sigma_mult=sigma_mult,
+    )
+    if kind == "exact":
+        corpus = vault.load_embeddings(spark, path)
+        if allowed_ids is not None:
+            corpus = restrict_to_allowed(corpus, allowed_ids)
+        serve = topk.batch_topk if batch else topk.topk_search
+        out = serve(corpus, query, k, strength=0.0, metric=metric)
+    elif kind == "ivf":
+        assigned, centroids, _, meta = vault.load_ivf_index(spark, path)
+        serve = ann.ivf_batch_search if batch else ann.ivf_search
+        out = serve(
+            assigned, centroids, query, k, metric=meta["metric"],
+            n_total=meta.get("n_rows"), **probe,
         )
-        from astro_vectordb_spark.operators.pq import pq_batch_topk_cogrouped
-        from astro_vectordb_spark.sources.vault import load_pq_index
-
-        encoded, model, _ = load_pq_index(spark, path)
+    elif kind == "hnsw":
+        graph, meta = vault.load_hnsw_index(spark, path)
+        out = hnsw.hnsw_query_shards(
+            graph, query if batch else [query], k=k, m=meta["m"],
+            metric=meta["metric"], ef_search=ef_search,
+            clustered=meta["clustered_safe"],
+            index_cache_token=meta["cache_token"],
+            allowed_ids=(
+                allowed_as_list(allowed_ids) if allowed_ids is not None else None
+            ),
+        )
+        if not batch:
+            out = out.orderBy(
+                F.col("score").desc(), F.col("vec_id").asc()
+            ).limit(k)
+    elif kind == "pq":
+        encoded, model, _ = vault.load_pq_index(spark, path)
         if allowed_ids is not None:
             # no cell structure to prune — restricting the scanned
             # codes to the allowed set IS the exact filtered search
             # (stage 2 re-ranks the allowed candidates exactly)
             encoded = restrict_to_allowed(encoded, allowed_ids)
-        return pq_batch_topk_cogrouped(
-            encoded, vectors, queries, k, model,
-            refine_factor=refine_factor, strength=strength,
-            adaptive_refine=adaptive_refine, refine_min=refine_min,
-            sigma_mult=sigma_mult,
-        ).select("query_id", "vec_id", "score")
-
-    # ivf_pq: cell-probed batch ADC — each query scans only its
-    # probed cells; the operator owns the filtered-search policy
-    # (codes restricted, per-query probe counts widened by
-    # 1/selectivity) with the corpus size from _meta
-    from astro_vectordb_spark.operators.pq import (
-        ivf_pq_batch_topk_cogrouped,
+        serve = pq.pq_batch_topk_cogrouped if batch else pq.pq_topk
+        out = serve(encoded, vectors, query, k, model, **refine)
+    else:
+        encoded, centroids, model, meta = vault.load_ivf_pq_index(spark, path)
+        if batch:
+            serve = partial(
+                pq.ivf_pq_batch_topk_cogrouped, max_group_rows=max_group_rows
+            )
+        else:
+            serve = pq.ivf_pq_topk
+        out = serve(
+            encoded, centroids, vectors, query, k, model,
+            n_total=meta.get("n_rows"), **probe, **refine,
+        )
+    # one threshold for every kind and face, on the served score (the
+    # operators keep only their own score > 0 floor)
+    return out.filter(F.col("score") > threshold_from_strength(strength)).select(
+        *(["query_id"] if batch else []), "vec_id", "score"
     )
-    from astro_vectordb_spark.sources.vault import load_ivf_pq_index
-
-    encoded, centroids, model, meta = load_ivf_pq_index(spark, path)
-    return ivf_pq_batch_topk_cogrouped(
-        encoded, centroids, vectors, queries, k, model,
-        nprobe=nprobe, refine_factor=refine_factor,
-        strength=strength, allowed_ids=allowed_ids,
-        n_total=meta.get("n_rows"), max_group_rows=max_group_rows,
-        max_probe_frac=max_probe_frac, adaptive_refine=adaptive_refine,
-        refine_min=refine_min, sigma_mult=sigma_mult,
-    ).select("query_id", "vec_id", "score")
 
 
 def hybrid_search(
@@ -343,7 +278,7 @@ def hybrid_search(
     bm25_index_path: str,
     docs: DataFrame,
     query_vector: Sequence[float],
-    query_terms: Sequence[str],
+    query_terms: Sequence,
     k: int = 10,
     *,
     fetch_k: int | None = None,
@@ -358,14 +293,15 @@ def hybrid_search(
     refine_factor: int = 32,
     id_col: str = "doc_id",
     text_col: str = "text",
-    _bm25_df_map: dict[str, int] | None = None,
 ) -> DataFrame:
     """One-call HYBRID retrieval — the front door of a production
     retrieval stack: the vector list served from whatever index lives
     at ``vector_index_path`` (:func:`search` — kind auto-detected),
     the lexical list priced from the persisted BM25 statistics at
     ``bm25_index_path`` (``bm25_topk_indexed`` — |terms|-row stats
-    lookup + ONE corpus scan over ``docs``), fused per ``fusion``:
+    lookup + ONE corpus scan over ``docs``; ``query_terms`` may
+    already be priced ``(term, df)`` pairs, see
+    ``keyword.price_terms``), fused per ``fusion``:
 
     - ``"rrf"`` (default): reciprocal-rank fusion — each list ranked
       on its ROUNDED output scores (6 decimals, ascending-id ties;
@@ -392,45 +328,15 @@ def hybrid_search(
     layout.  ``vectors``/``nprobe``/``ef_search``/``refine_factor``
     pass through to :func:`search` for the respective index kinds.
     """
-    from pyspark.sql import Window
-
-    from astro_vectordb_spark.operators.keyword import bm25_topk_indexed
-    from astro_vectordb_spark.operators.rerank import rrf_fuse, score_fusion
-    from astro_vectordb_spark.sources.vault import load_bm25_index
-
-    if fusion not in ("rrf", "weighted"):
-        raise ValueError(f"unknown fusion: {fusion!r} (rrf | weighted)")
-    fetch = fetch_k if fetch_k is not None else max(4 * k, 20)
-
-    vec_list = search(
-        spark, vector_index_path, query_vector, fetch,
-        vectors=vectors, metric=metric, ef_search=ef_search,
-        nprobe=nprobe, refine_factor=refine_factor,
-        allowed_ids=allowed_ids,
-    ).select(F.col("vec_id").alias(id_col), "score")
-
-    term_stats, corpus_stats = load_bm25_index(spark, bm25_index_path)
-    lex_docs = docs
-    if allowed_ids is not None:
-        from astro_vectordb_spark.operators.filtering import (
-            restrict_to_allowed,
-        )
-
-        lex_docs = restrict_to_allowed(docs, allowed_ids, id_col=id_col)
-    lex_list = bm25_topk_indexed(
-        lex_docs, term_stats, corpus_stats, query_terms, fetch,
-        id_col=id_col, text_col=text_col, _df_map=_bm25_df_map,
-    )
-
-    if fusion == "weighted":
-        return score_fusion(
-            [lex_list, vec_list], list(weights), k, id_col=id_col
-        )
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return rrf_fuse(
-        [lex_list.withColumn("rank", F.row_number().over(w)),
-         vec_list.withColumn("rank", F.row_number().over(w))],
-        k, k_rrf=k_rrf, id_col=id_col,
+    return _hybrid(
+        spark, vector_index_path, bm25_index_path, docs, k,
+        query_vector, query_terms, fetch_k=fetch_k, k_rrf=k_rrf,
+        fusion=fusion, weights=weights, allowed_ids=allowed_ids,
+        id_col=id_col, text_col=text_col,
+        search_kwargs=dict(
+            vectors=vectors, metric=metric, ef_search=ef_search,
+            nprobe=nprobe, refine_factor=refine_factor,
+        ),
     )
 
 
@@ -457,27 +363,62 @@ def hybrid_search_batch(
     query_vec_col: str = "query_vec",
     terms_col: str = "terms",
 ) -> DataFrame:
-    """Batch companion to :func:`hybrid_search`: ``queries`` is a
-    DataFrame ``(query_id long, query_vec array<float>, terms
-    array<string>)`` and the WHOLE batch is served as one plan — the
-    vector lists via :func:`search_batch` (every kind's batch face,
-    none materializing the query set on the driver), the lexical
-    lists via ``bm25_batch_topk_indexed`` (one corpus scan for all
-    queries), fused per query with grouped RRF (or grouped weighted
-    ``score_fusion`` when ``fusion="weighted"`` — min/max normalized
-    PER QUERY, ``weights = (lexical, vector)``).
-
-    Per-query semantics are identical to :func:`hybrid_search` (same
-    fetch depth, same rank-on-rounded-scores determinism contract,
-    same fusion arithmetic, same ``allowed_ids`` policy); per-query
-    ranks are partitioned windows, so nothing single-partitions on
-    the batch axis.  Returns ``(query_id, doc_id, score)``, at most
+    """Batch face of :func:`hybrid_search`: ``queries`` is a DataFrame
+    ``(query_id long, query_vec array<float>, terms array<string>)``
+    and the WHOLE batch is served as one plan — the vector lists via
+    :func:`search_batch`, the lexical lists via
+    ``bm25_batch_topk_indexed`` (one corpus scan for all queries) —
+    through the same fusion step grouped by query (per-query ranks
+    and min/max are partitioned windows, so nothing single-partitions
+    on the batch axis).  Options and per-query semantics are the
+    single face's.  Returns ``(query_id, doc_id, score)``, at most
     ``k`` rows per query.
     """
+    return _hybrid(
+        spark, vector_index_path, bm25_index_path, docs, k,
+        queries.select(query_id_col, query_vec_col),
+        queries.select(query_id_col, terms_col), fetch_k=fetch_k,
+        k_rrf=k_rrf, fusion=fusion, weights=weights,
+        allowed_ids=allowed_ids, id_col=id_col, text_col=text_col,
+        search_kwargs=dict(
+            vectors=vectors, ef_search=ef_search, nprobe=nprobe,
+            refine_factor=refine_factor,
+        ),
+        query_id_col=query_id_col, terms_col=terms_col,
+    )
+
+
+def _hybrid(
+    spark: SparkSession,
+    vector_index_path: str,
+    bm25_index_path: str,
+    docs: DataFrame,
+    k: int,
+    vec_query,
+    lex_query,
+    *,
+    fetch_k: int | None,
+    k_rrf: int,
+    fusion: str,
+    weights: Sequence[float],
+    allowed_ids,
+    id_col: str,
+    text_col: str,
+    search_kwargs: dict,
+    query_id_col: str | None = None,
+    terms_col: str = "terms",
+) -> DataFrame:
+    """The fusion step of both hybrid faces: fetch the vector and the
+    lexical list to the same depth (``allowed_ids`` restricting each),
+    rank each on its rounded scores, and fuse by RRF or weighted score
+    fusion — per query when ``query_id_col`` names the batch face's
+    query frames, else over the single face's one query."""
     from pyspark.sql import Window
 
+    from astro_vectordb_spark.operators.filtering import restrict_to_allowed
     from astro_vectordb_spark.operators.keyword import (
         bm25_batch_topk_indexed,
+        bm25_topk_indexed,
     )
     from astro_vectordb_spark.operators.rerank import rrf_fuse, score_fusion
     from astro_vectordb_spark.sources.vault import load_bm25_index
@@ -485,41 +426,40 @@ def hybrid_search_batch(
     if fusion not in ("rrf", "weighted"):
         raise ValueError(f"unknown fusion: {fusion!r} (rrf | weighted)")
     fetch = fetch_k if fetch_k is not None else max(4 * k, 20)
-
-    vec_list = search_batch(
-        spark, vector_index_path,
-        queries.select(query_id_col, query_vec_col), fetch,
-        vectors=vectors, ef_search=ef_search, nprobe=nprobe,
-        refine_factor=refine_factor, allowed_ids=allowed_ids,
-    ).select(query_id_col, F.col("vec_id").alias(id_col), "score")
+    group = (query_id_col,) if query_id_col else ()
+    serve = search_batch if group else search
+    vec_list = serve(
+        spark, vector_index_path, vec_query, fetch, allowed_ids=allowed_ids,
+        **search_kwargs,
+    ).select(*group, F.col("vec_id").alias(id_col), "score")
 
     term_stats, corpus_stats = load_bm25_index(spark, bm25_index_path)
-    lex_docs = docs
     if allowed_ids is not None:
-        from astro_vectordb_spark.operators.filtering import (
-            restrict_to_allowed,
+        docs = restrict_to_allowed(docs, allowed_ids, id_col=id_col)
+    if group:
+        lex_list = bm25_batch_topk_indexed(
+            docs, term_stats, corpus_stats, lex_query, fetch, id_col=id_col,
+            text_col=text_col, query_id_col=query_id_col,
+            terms_col=terms_col,
+        ).select(query_id_col, id_col, "score")
+    else:
+        lex_list = bm25_topk_indexed(
+            docs, term_stats, corpus_stats, lex_query, fetch,
+            id_col=id_col, text_col=text_col,
         )
-
-        lex_docs = restrict_to_allowed(docs, allowed_ids, id_col=id_col)
-    lex_list = bm25_batch_topk_indexed(
-        lex_docs, term_stats, corpus_stats,
-        queries.select(query_id_col, terms_col), fetch,
-        id_col=id_col, text_col=text_col, query_id_col=query_id_col,
-        terms_col=terms_col,
-    ).select(query_id_col, id_col, "score")
 
     if fusion == "weighted":
         return score_fusion(
             [lex_list, vec_list], list(weights), k, id_col=id_col,
-            group_cols=[query_id_col],
+            group_cols=group,
         )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy(*group).orderBy(
         F.col("score").desc(), F.col(id_col).asc()
     )
     return rrf_fuse(
         [lex_list.withColumn("rank", F.row_number().over(w)),
          vec_list.withColumn("rank", F.row_number().over(w))],
-        k, k_rrf=k_rrf, id_col=id_col, group_cols=[query_id_col],
+        k, k_rrf=k_rrf, id_col=id_col, group_cols=group,
     )
 
 
@@ -568,15 +508,12 @@ def search_text_batch(
     query_text_col: str = "query_text",
     **search_kwargs,
 ) -> DataFrame:
-    """Batch text-in front door for :func:`search_batch` — the
-    vector-only sibling of :func:`hybrid_search_text_batch`:
-    ``queries`` is ``(query_id long, query_text string)`` of UNBOUNDED
-    size, every string embedded DISTRIBUTED through the encoder
-    registry (``embed.embed_text``: Arrow-batched pandas_udf, lazy
-    per-worker model load), then the whole batch serves through
-    :func:`search_batch` as one plan.  Per-query results equal
-    ``search_text(query_text)`` (pinned by test); all
-    :func:`search_batch` options pass through."""
+    """Batch face of :func:`search_text`: ``queries`` is ``(query_id
+    long, query_text string)`` of UNBOUNDED size, every string
+    embedded DISTRIBUTED through the encoder registry
+    (``embed.embed_text``), then served through :func:`search_batch`
+    as one plan.  Per-query results equal ``search_text(query_text)``
+    (pinned by test); all :func:`search_batch` options pass through."""
     from astro_vectordb_spark.functions.embed import embed_text
 
     prepared = embed_text(
@@ -656,6 +593,11 @@ def hybrid_search_text(
     ``snippets=True``; top ``k`` by (score desc, id asc) unchanged
     by the extra columns."""
     from astro_vectordb_spark.functions.embed import embed_query_text
+    from astro_vectordb_spark.operators.keyword import (
+        prf_expand_terms,
+        price_terms,
+    )
+    from astro_vectordb_spark.sources.vault import load_bm25_index
 
     qv = embed_query_text(
         query_text, dim=dim, model=model, embed_fn=embed_fn
@@ -665,88 +607,28 @@ def hybrid_search_text(
         raise ValueError("query_text has no tokens and no terms given")
     id_col = hybrid_kwargs.get("id_col", "doc_id")
     text_col = hybrid_kwargs.get("text_col", "text")
+    term_stats, corpus_stats = load_bm25_index(spark, bm25_index_path)
+    # ONE stats lookup for the whole loop: the priced list feeds the
+    # feedback query AND the final lexical leg, and the expansion terms
+    # arrive priced from the expansion collect itself
+    priced = price_terms(term_stats, qterms)
     if prf:
-        from astro_vectordb_spark.operators.keyword import prf_expand_terms
-        from astro_vectordb_spark.sources.vault import load_bm25_index
-
-        term_stats, corpus_stats = load_bm25_index(spark, bm25_index_path)
-        fb_docs = docs
-        if hybrid_kwargs.get("allowed_ids") is not None:
-            from astro_vectordb_spark.operators.filtering import (
-                restrict_to_allowed,
-            )
-
-            fb_docs = restrict_to_allowed(
-                docs, hybrid_kwargs["allowed_ids"], id_col=id_col
-            )
-        # ONE stats-collect for the whole PRF loop (round-16 §5
-        # job-count cut): the original terms' df feed the feedback
-        # query AND the final lexical leg; the expansion terms' df
-        # ride the expansion collect itself (with_df=True) — three
-        # bounded pricing jobs become one, values byte-identical
-        # (same committed snapshot, df=0 for unindexed terms either
-        # way).
-        low_terms = [str(t).lower() for t in qterms]
-        df_map = {
-            r["term"]: int(r["df"])
-            for r in term_stats.filter(
-                F.col("term").isin(low_terms)
-            ).collect()
-        }
         expanded = prf_expand_terms(
-            fb_docs, term_stats, corpus_stats, qterms,
-            n_feedback=n_feedback, n_expand=n_expand,
+            _feedback_pool(docs, hybrid_kwargs, id_col), term_stats,
+            corpus_stats, priced, n_feedback=n_feedback, n_expand=n_expand,
             id_col=id_col, text_col=text_col,
-            with_df=True, _df_map=df_map,
         )
         # bounded collect: n_expand rows by construction
-        for r in expanded.collect():
-            qterms = qterms + [r["term"]]
-            df_map[str(r["term"]).lower()] = int(r["df"])
-        hybrid_kwargs["_bm25_df_map"] = df_map
+        priced += [(r["term"], int(r["df"])) for r in expanded.collect()]
     fused = hybrid_search(
-        spark, vector_index_path, bm25_index_path, docs, qv, qterms,
-        (rerank_depth if rerank_depth is not None else 3 * k) if rerank else k,
-        **hybrid_kwargs,
+        spark, vector_index_path, bm25_index_path, docs, qv, priced,
+        _fused_depth(k, rerank, rerank_depth), **hybrid_kwargs,
     )
-    if rerank:
-        from astro_vectordb_spark.operators.rerank import (
-            cross_encoder_rerank,
-        )
-
-        cand = docs.select(id_col, text_col).join(
-            F.broadcast(fused.select(id_col)), id_col, "left_semi"
-        )
-        fused = cross_encoder_rerank(
-            cand, query_text, k, model=rerank_model,
-            id_col=id_col, text_col=text_col,
-            **(rerank_config or {}),
-        )
-    if not snippets:
-        return fused
-    from astro_vectordb_spark.operators.keyword import snippet_extract
-
-    # k rows — materialize once so the snippet semi-join doesn't
-    # re-execute the whole fused retrieval plan
-    fused = fused.localCheckpoint(eager=True)
-    hit_docs = docs.join(
-        F.broadcast(fused.select(id_col)), id_col, "left_semi"
-    )
-    snips = snippet_extract(
-        hit_docs, qterms, window=snippet_window,
-        id_col=id_col, text_col=text_col,
-    )
-    return (
-        fused.join(
-            F.broadcast(snips.select(id_col, "start", "snippet")),
-            id_col, "left",
-        )
-        .select(
-            id_col, "score",
-            F.coalesce(F.col("start"), F.lit(0)).alias("start"),
-            F.coalesce(F.col("snippet"), F.lit("")).alias("snippet"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
+    return _text_tail(
+        fused, docs, k, (), query_text, [t for t, _ in priced],
+        rerank=rerank, rerank_model=rerank_model,
+        rerank_config=rerank_config, snippets=snippets,
+        snippet_window=snippet_window, id_col=id_col, text_col=text_col,
     )
 
 
@@ -774,39 +656,19 @@ def hybrid_search_text_batch(
     snippet_window: int = 16,
     **hybrid_kwargs,
 ) -> DataFrame:
-    """Batch text-in front door: ``queries`` is ``(query_id long,
-    query_text string)`` of UNBOUNDED size — every query string is
-    embedded DISTRIBUTED through the encoder registry
+    """Batch face of :func:`hybrid_search_text`: ``queries`` is
+    ``(query_id long, query_text string)`` of UNBOUNDED size — every
+    query string is embedded DISTRIBUTED through the encoder registry
     (``embed.embed_text``: Arrow-batched pandas_udf, lazy per-worker
     model load) and tokenized in codegen (the repo contract), then the
-    whole batch serves through :func:`hybrid_search_batch` as one
-    plan.  Per-query semantics equal
-    ``hybrid_search_text(query_text)`` (pinned by test, per option).
-    All :func:`hybrid_search_batch` options pass through.
-
-    The single face's full option set is mirrored:
-
-    - ``prf=True``: per-query pseudo-relevance-feedback expansion as
-      ONE plan (``keyword.prf_expand_terms_batch`` — the batch BM25
-      scan feeds every query's feedback set together; the per-query
-      top-``n_expand`` term cut is a partitioned window).  Expansion
-      terms append to each query's LEXICAL term list in the single
-      face's selection order; the vector leg keeps the raw query
-      embedding; ``allowed_ids`` restricts the feedback pool.
-    - ``rerank=True`` = the batch face of the single call's
-      cross-encoder stage: each query's fused top ``rerank_depth``
-      (default ``3*k``) joins back its doc text AND its raw query
-      text (plain keyed joins — the candidate set is |Q| x depth
-      rows, so nothing is broadcast or driver-materialized at
-      unbounded |Q|), and ``rerank.cross_encoder_rerank``'s batch
-      face scores every (query, doc) pair jointly with the per-query
-      top-k as one partitioned window; ``score`` becomes the cross
-      score.
-    - ``snippets=True``: each hit highlighted against ITS query's
-      FINAL term list (after PRF) via
-      ``keyword.snippet_extract_batch`` over only the |Q| x k result
-      rows, with ``(start, snippet)`` defaulting to ``(0, '')`` for
-      pure vector hits — exactly the single face's contract."""
+    whole batch serves through :func:`hybrid_search_batch` and the
+    single face's expand -> fuse -> rerank -> highlight steps as one
+    plan: PRF through ``keyword.prf_expand_terms_batch`` (expansion
+    terms appended in the single face's selection order), rerank and
+    snippets by keyed joins over the |Q| x depth rows.  Per-query
+    results equal ``hybrid_search_text(query_text)`` (pinned by test,
+    per option); all :func:`hybrid_search_batch` options pass
+    through."""
     from astro_vectordb_spark.functions.embed import embed_text
     from astro_vectordb_spark.functions.text import tokens
 
@@ -827,18 +689,9 @@ def hybrid_search_text_batch(
         )
         from astro_vectordb_spark.sources.vault import load_bm25_index
 
-        term_stats, corpus_stats = load_bm25_index(spark, bm25_index_path)
-        fb_docs = docs
-        if hybrid_kwargs.get("allowed_ids") is not None:
-            from astro_vectordb_spark.operators.filtering import (
-                restrict_to_allowed,
-            )
-
-            fb_docs = restrict_to_allowed(
-                docs, hybrid_kwargs["allowed_ids"], id_col=id_col
-            )
         expanded = prf_expand_terms_batch(
-            fb_docs, term_stats, corpus_stats,
+            _feedback_pool(docs, hybrid_kwargs, id_col),
+            *load_bm25_index(spark, bm25_index_path),
             prepared.select(query_id_col, "terms"),
             n_feedback=n_feedback, n_expand=n_expand,
             id_col=id_col, text_col=text_col,
@@ -875,56 +728,120 @@ def hybrid_search_text_batch(
         )
     fused = hybrid_search_batch(
         spark, vector_index_path, bm25_index_path, docs, prepared,
-        (rerank_depth if rerank_depth is not None else 3 * k)
-        if rerank else k,
+        _fused_depth(k, rerank, rerank_depth),
         query_id_col=query_id_col, **hybrid_kwargs,
     )
-    if rerank:
-        from astro_vectordb_spark.operators.rerank import (
-            cross_encoder_rerank,
+    return _text_tail(
+        fused, docs, k, (query_id_col,),
+        queries.select(query_id_col, query_text_col),
+        prepared.select(query_id_col, "terms"), rerank=rerank,
+        rerank_model=rerank_model, rerank_config=rerank_config,
+        snippets=snippets, snippet_window=snippet_window, id_col=id_col,
+        text_col=text_col, query_text_col=query_text_col,
+    )
+
+
+def _feedback_pool(docs: DataFrame, hybrid_kwargs: dict, id_col: str):
+    """The PRF feedback pool of both text faces: ``allowed_ids`` (if
+    given) restricts it, so expansion can't learn terms from
+    filtered-out documents."""
+    if hybrid_kwargs.get("allowed_ids") is None:
+        return docs
+    from astro_vectordb_spark.operators.filtering import restrict_to_allowed
+
+    return restrict_to_allowed(
+        docs, hybrid_kwargs["allowed_ids"], id_col=id_col
+    )
+
+
+def _fused_depth(k: int, rerank: bool, rerank_depth: int | None) -> int:
+    """How deep the fused list goes: ``k``, or the rerank pool
+    (default ``3*k``) that the cross-encoder narrows back to ``k``."""
+    if not rerank:
+        return k
+    return rerank_depth if rerank_depth is not None else 3 * k
+
+
+def _text_tail(
+    fused: DataFrame,
+    docs: DataFrame,
+    k: int,
+    group: tuple[str, ...],
+    query_text,
+    terms,
+    *,
+    rerank: bool,
+    rerank_model: str,
+    rerank_config: dict | None,
+    snippets: bool,
+    snippet_window: int,
+    id_col: str,
+    text_col: str,
+    query_text_col: str | None = None,
+) -> DataFrame:
+    """The rerank -> snippet tail of both text faces.  ``query_text``
+    is the cross-encoder's query side (the raw text: PRF expansion is
+    a lexical-recall device, not a semantic rewrite) and ``terms`` the
+    FINAL term list the snippets highlight — for the single face
+    (``group=()``) a string and a list, for the batch face
+    (``group=(query_id,)``) ``(query_id, query_text)`` and ``(query_id,
+    terms)`` frames.  Each face keeps its plan shape: the single face
+    reaches its k docs by broadcast semi-joins, the batch face by
+    plain keyed joins, so its |Q| x depth rows are never broadcast or
+    driver-materialized."""
+    from astro_vectordb_spark.operators.keyword import (
+        snippet_extract,
+        snippet_extract_batch,
+    )
+    from astro_vectordb_spark.operators.rerank import cross_encoder_rerank
+
+    keys = [*group, id_col]
+
+    def with_text(hits: DataFrame) -> DataFrame:
+        if group:
+            return hits.select(*keys).join(
+                docs.select(id_col, text_col), id_col
+            )
+        return docs.select(id_col, text_col).join(
+            F.broadcast(hits.select(id_col)), id_col, "left_semi"
         )
 
-        cand = (
-            fused.select(query_id_col, id_col)
-            .join(docs.select(id_col, text_col), id_col)
-            .join(
-                queries.select(query_id_col, query_text_col), query_id_col
+    if rerank:
+        cand, per_query = with_text(fused), {}
+        if group:
+            cand = cand.join(query_text, group[0])
+            per_query = dict(
+                query_id_col=group[0], query_text_col=query_text_col
             )
-        )
         fused = cross_encoder_rerank(
-            cand, None, k, model=rerank_model, id_col=id_col,
-            text_col=text_col, query_id_col=query_id_col,
-            query_text_col=query_text_col, **(rerank_config or {}),
+            cand, None if group else query_text, k, model=rerank_model,
+            id_col=id_col, text_col=text_col, **per_query,
+            **(rerank_config or {}),
         )
     if not snippets:
         return fused
-    from astro_vectordb_spark.operators.keyword import snippet_extract_batch
-
-    # |Q| x k rows — materialize once so the snippet joins don't
+    # k (or |Q| x k) rows — materialize once so the snippet joins don't
     # re-execute the whole fused (and possibly reranked) plan
     fused = fused.localCheckpoint(eager=True)
-    hits = (
-        fused.select(query_id_col, id_col)
-        .join(docs.select(id_col, text_col), id_col)
-        .join(prepared.select(query_id_col, "terms"), query_id_col)
-    )
-    snips = snippet_extract_batch(
-        hits, window=snippet_window, id_col=id_col, text_col=text_col,
-        query_id_col=query_id_col,
-    )
-    return (
-        fused.join(
-            snips.select(query_id_col, id_col, "start", "snippet"),
-            [query_id_col, id_col], "left",
+    if group:
+        snips = snippet_extract_batch(
+            with_text(fused).join(terms, group[0]), window=snippet_window,
+            id_col=id_col, text_col=text_col, query_id_col=group[0],
         )
+    else:
+        snips = F.broadcast(snippet_extract(
+            with_text(fused), terms, window=snippet_window, id_col=id_col,
+            text_col=text_col,
+        ))
+    return (
+        fused.join(snips.select(*keys, "start", "snippet"), keys, "left")
         .select(
-            query_id_col, id_col, "score",
+            *keys, "score",
             F.coalesce(F.col("start"), F.lit(0)).alias("start"),
             F.coalesce(F.col("snippet"), F.lit("")).alias("snippet"),
         )
         .orderBy(
-            F.col(query_id_col).asc(),
-            F.col("score").desc(),
-            F.col(id_col).asc(),
+            *[F.col(c).asc() for c in group],
+            F.col("score").desc(), F.col(id_col).asc(),
         )
     )

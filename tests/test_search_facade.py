@@ -381,6 +381,106 @@ class TestBatchFacade:
             assert len(got & exact) >= 8
 
 
+@pytest.fixture(scope="module")
+def all_kinds(spark, corpus, tmp_path_factory):
+    """One persisted index of every kind over the clustered corpus,
+    as ``{kind: (path, serving kwargs)}``."""
+    from astro_vectordb_spark.operators.ann import ivf_build_sampled
+    from astro_vectordb_spark.operators.hnsw import hnsw_build_shards
+    from astro_vectordb_spark.operators.pq import (
+        ivf_pq_build,
+        pq_encode,
+        pq_train,
+    )
+    from astro_vectordb_spark.sources.vault import (
+        save_hnsw_index,
+        save_ivf_index,
+        save_ivf_pq_index,
+        save_pq_index,
+    )
+
+    df, _ = corpus
+    root = tmp_path_factory.mktemp("all_kinds")
+    paths = {k: str(root / k) for k in ("exact", "ivf", "hnsw", "pq", "ivf_pq")}
+    df.write.parquet(paths["exact"])
+    assigned, cents = ivf_build_sampled(df, k_cells=8)
+    save_ivf_index(
+        assigned.select("vec_id", "embedding", "cell_id"), cents, paths["ivf"]
+    )
+    save_hnsw_index(
+        hnsw_build_shards(df, num_shards=2, m=8, seed=11), paths["hnsw"],
+        m=8, metric="cosine",
+    )
+    model = pq_train(df, m=8, ks=32, metric="cosine", max_rows=N, seed=2)
+    save_pq_index(pq_encode(df, model), model, paths["pq"])
+    save_ivf_pq_index(
+        *ivf_pq_build(df, k_cells=8, m=8, ks=32, metric="cosine", max_rows=N),
+        paths["ivf_pq"],
+    )
+    kw = {
+        "exact": {}, "ivf": {"nprobe": 2}, "hnsw": {"ef_search": 200},
+        "pq": {"vectors": df}, "ivf_pq": {"vectors": df, "nprobe": 2},
+    }
+    return {kind: (paths[kind], kw[kind]) for kind in paths}
+
+
+def _serve_rows(spark, path, qv, k, face, **kw):
+    """``[(vec_id, score)]`` of one query served by ``face``, score
+    descending: the single call, or the batch call over a one-query
+    frame."""
+    from astro_vectordb_spark.search import search_batch
+
+    if face == "single":
+        rows = search(spark, path, qv, k, **kw).collect()
+    else:
+        queries = spark.createDataFrame(
+            [(0, qv)], "query_id long, query_vec array<float>"
+        )
+        rows = search_batch(spark, path, queries, k, **kw).collect()
+    return sorted(
+        ((r.vec_id, r.score) for r in rows), key=lambda t: (-t[1], t[0])
+    )
+
+
+class TestOneDispatch:
+    """Both faces of ``search`` serve through one per-kind dispatch, so
+    an option holds on every kind in both faces."""
+
+    @pytest.mark.parametrize("face", ["single", "batch"])
+    @pytest.mark.parametrize("kind", ["exact", "ivf", "hnsw", "pq", "ivf_pq"])
+    def test_strength_holds(self, spark, corpus, all_kinds, kind, face):
+        _, pts = corpus
+        # between two points of one cluster: of its top 10 hits only
+        # the first two score above 0.9, and none lies near 0.9
+        qv = [float(x) for x in 0.5 * pts[17] + 0.225 * pts[18]]
+        path, kw = all_kinds[kind]
+        base = _serve_rows(spark, path, qv, 10, face, **kw)
+        want = [(i, s) for i, s in base if s > 0.9]
+        assert 0 < len(want) < len(base), base
+        got = _serve_rows(spark, path, qv, 10, face, strength=90, **kw)
+        assert got == want
+
+    @pytest.mark.parametrize("kind", ["ivf", "ivf_pq"])
+    def test_filtered_batch_equals_single(self, spark, corpus, all_kinds,
+                                          kind):
+        """At selectivity 0.3 and nprobe=2 both faces probe ceil(2/0.3)
+        = 7 of the 8 cells.  The query sits near every cluster and k
+        exceeds the allow-list, so each face returns every allowed row
+        of the cells it probes."""
+        _, pts = corpus
+        qv = [float(x) for x in pts.mean(axis=0)]
+        allowed = [i for i in range(N) if i % 10 < 3]
+        path, kw = all_kinds[kind]
+        single = _serve_rows(
+            spark, path, qv, 200, "single", allowed_ids=allowed, **kw
+        )
+        batch = _serve_rows(
+            spark, path, qv, 200, "batch", allowed_ids=allowed, **kw
+        )
+        assert single and len(single) < len(allowed)
+        assert batch == single
+
+
 class TestStorageRemoves:
     """Storage-level deletes for IVF and HNSW — lifecycle symmetry with
     the append faces (every index kind now has build/append/remove)."""
@@ -1168,6 +1268,13 @@ _DOCS = [
 ]
 
 
+# Warm job counts of hybrid_search_text(prf=True, snippets=True) and of
+# its batch face, as measured before the single and batch faces shared
+# one per-query core; a later change may lower them, never raise them.
+PRF_SNIPPET_JOBS = 13
+PRF_SNIPPET_BATCH_JOBS = 32
+
+
 class TestServeControlPlane:
     """A warm single-query call on persisted indexes runs only the jobs
     that compute its answer: schemas, ``_meta`` and the BM25 corpus
@@ -1236,6 +1343,40 @@ class TestServeControlPlane:
             ).collect(),
         )
         assert n <= 2, n
+
+    def test_hybrid_search_text_prf_snippets_jobs(self, spark, served):
+        """The full retrieve -> expand -> fuse -> highlight loop: the
+        baseline job count for PRF query expansion plus snippets."""
+        from astro_vectordb_spark.search import hybrid_search_text
+
+        paths, docs = served
+        n = self._warm_jobs(
+            spark, "hybrid-prf-snip",
+            lambda: hybrid_search_text(
+                spark, paths["doc_vectors"], paths["bm25"], docs,
+                "merge spark join", 5, prf=True, n_feedback=3, n_expand=2,
+                snippets=True,
+            ).collect(),
+        )
+        assert n <= PRF_SNIPPET_JOBS, n
+
+    def test_hybrid_search_text_batch_prf_snippets_jobs(self, spark, served):
+        from astro_vectordb_spark.search import hybrid_search_text_batch
+        from astro_vectordb_spark.session import local_frame
+
+        paths, docs = served
+        queries = local_frame(
+            spark, [(0, "merge spark join"), (1, "vector graph beam")],
+            "query_id long, query_text string",
+        )
+        n = self._warm_jobs(
+            spark, "hybrid-batch-prf-snip",
+            lambda: hybrid_search_text_batch(
+                spark, paths["doc_vectors"], paths["bm25"], docs, queries, 5,
+                prf=True, n_feedback=3, n_expand=2, snippets=True,
+            ).collect(),
+        )
+        assert n <= PRF_SNIPPET_BATCH_JOBS, n
 
     def test_hybrid_over_local_docs_with_few_matches(self, spark, served):
         """A docs frame built from driver rows (as a pandas-fed caller
