@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from astro_vectordb_spark.functions.text import tokens
+from astro_vectordb_spark.operators.topk import top_k_rows
 
 SCORE_DECIMALS = 6
 
@@ -111,10 +112,8 @@ def bm25_topk(
         docs, query_terms, k1=k1, b=b,
         id_col=id_col, text_col=text_col, score_col=score_col,
     )
-    out = (
-        scored.filter(F.col(score_col) > 0)
-        .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-        .limit(k)
+    out = top_k_rows(
+        scored.filter(F.col(score_col) > 0), k, (), id_col, score_col
     )
     return out.withColumn(score_col, F.round(F.col(score_col), SCORE_DECIMALS))
 
@@ -319,6 +318,28 @@ def _bm25_fold(
     return F.aggregate(tinfo, F.lit(0.0), _step)
 
 
+def _corpus(corpus_stats: DataFrame) -> tuple[float, float]:
+    """``(n, avgdl)`` of the 1-row corpus statistics (a memoized
+    control-plane read for a persisted index)."""
+    cs = corpus_stats.first()
+    if cs is None:
+        raise ValueError("corpus_stats is empty")
+    return float(cs["n"]), float(cs["avgdl"])
+
+
+def _priced(
+    frame: DataFrame, term_stats: DataFrame, terms: DataFrame
+) -> DataFrame:
+    """``frame`` with ``df``, the index document frequency of its
+    ``term`` (0 outside the index) — the plan-side form of
+    :func:`price_terms`: the vocabulary scan restricted to ``terms``
+    by a broadcast inner join, then LEFT-joined back."""
+    stats = term_stats.join(F.broadcast(terms), "term")
+    return frame.join(F.broadcast(stats), "term", "left").withColumn(
+        "df", F.coalesce(F.col("df"), F.lit(0)).cast("long")
+    )
+
+
 def price_terms(
     term_stats: DataFrame, query_terms: Sequence
 ) -> list[tuple[str, int]]:
@@ -363,8 +384,7 @@ def bm25_topk_indexed(
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     priced = price_terms(term_stats, query_terms)
-    cs = corpus_stats.first()
-    n, avgdl = float(cs["n"]), float(cs["avgdl"])
+    n, avgdl = _corpus(corpus_stats)
     tinfo = F.array(*[
         F.struct(F.lit(t).alias("term"),
                  _idf(n, F.lit(float(df))).alias("idf"))
@@ -428,28 +448,21 @@ def bm25_batch_topk_indexed(
     """
     from astro_vectordb_spark.operators.topk import rank_topk_per_query
 
-    cs = corpus_stats.first()
-    if cs is None:
-        raise ValueError("corpus_stats is empty")
-    n, avgdl = float(cs["n"]), float(cs["avgdl"])
-
+    n, avgdl = _corpus(corpus_stats)
     qt = queries.select(
         query_id_col,
         F.posexplode(
             F.transform(F.col(terms_col), lambda t: F.lower(t))
         ).alias("_pos", "term"),
     )
-    needed = qt.select("term").distinct()
-    stats_small = term_stats.join(F.broadcast(needed), "term")
-    priced = qt.join(F.broadcast(stats_small), "term", "left")
-    df_t = F.coalesce(F.col("df").cast("double"), F.lit(0.0))
     qinfo = (
-        priced.select(
+        _priced(qt, term_stats, qt.select("term").distinct())
+        .select(
             query_id_col,
             F.struct(
                 F.col("_pos").alias("pos"),
                 F.col("term").alias("term"),
-                _idf(n, df_t).alias("idf"),
+                _idf(n, F.col("df").cast("double")).alias("idf"),
             ).alias("_ti"),
         )
         .groupBy(query_id_col)
@@ -658,15 +671,10 @@ def prf_expand_terms(
         docs, term_stats, corpus_stats, priced, n_feedback,
         k1=k1, b=b, id_col=id_col, text_col=text_col,
     ).select(id_col)
-    out = (
-        _prf_scored(
-            fb, docs, term_stats, corpus_stats, [t for t, _ in priced],
-            (), id_col, text_col,
-        )
-        .orderBy(F.col("score").desc(), F.col("term").asc())
-        .limit(n_expand)
+    return _prf_expansion(
+        fb, docs, term_stats, corpus_stats, [t for t, _ in priced], (),
+        n_expand, id_col, text_col,
     )
-    return out.withColumn("score", F.round(F.col("score"), SCORE_DECIMALS))
 
 
 def prf_expand_terms_batch(
@@ -693,8 +701,6 @@ def prf_expand_terms_batch(
     Returns ``(query_id, term, score, rank)`` with rank 1..n_expand in
     selection order (the order the single face appends expansion
     terms)."""
-    from pyspark.sql import Window
-
     fb = bm25_batch_topk_indexed(
         docs, term_stats, corpus_stats, queries, n_feedback,
         k1=k1, b=b, id_col=id_col, text_col=text_col,
@@ -706,42 +712,32 @@ def prf_expand_terms_batch(
             F.transform(F.col(terms_col), lambda t: F.lower(t))
         ).alias("term"),
     ).distinct()
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("term").asc()
-    )
-    return (
-        _prf_scored(
-            fb, docs, term_stats, corpus_stats, own, (query_id_col,),
-            id_col, text_col,
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(n_expand))
-        .withColumn("score", F.round(F.col("score"), SCORE_DECIMALS))
-        .select(query_id_col, "term", "score", "rank")
-    )
+    return _prf_expansion(
+        fb, docs, term_stats, corpus_stats, own, (query_id_col,), n_expand,
+        id_col, text_col,
+    ).select(query_id_col, "term", "score", "rank")
 
 
-def _prf_scored(
+def _prf_expansion(
     fb: DataFrame,
     docs: DataFrame,
     term_stats: DataFrame,
     corpus_stats: DataFrame,
     own,
     group: tuple[str, ...],
+    n_expand: int,
     id_col: str,
     text_col: str,
 ) -> DataFrame:
-    """The one PRF term-selection core: ``(group..., term, score,
-    df)`` for every term of the feedback docs ``fb`` (``group...,
-    id``) outside the query's own terms ``own`` (the single face's
-    lowercased list, or the batch face's ``(query_id, term)`` frame),
-    scored ``df_feedback x idf`` (unrounded).  The explode/groupBy
-    runs on the bounded feedback slice; pricing restricts the
-    vocabulary scan to the feedback terms (broadcast inner join), then
-    LEFT-joins back so terms outside the index price with df = 0."""
-    cs = corpus_stats.first()
-    if cs is None:
-        raise ValueError("corpus_stats is empty")
+    """The one PRF term-selection core: the top ``n_expand`` terms (per
+    ``group``; ``rank`` kept when grouped) of the feedback docs ``fb``
+    (``group..., id``) outside the query's own terms ``own`` (the
+    single face's lowercased list, or the batch face's ``(query_id,
+    term)`` frame), scored ``df_feedback x idf`` and cut by (score desc,
+    term asc) -> ``(group..., term, score, df)``, score rounded.  The
+    explode/groupBy runs on the bounded feedback slice; pricing
+    restricts the vocabulary scan to the feedback terms."""
+    n, _ = _corpus(corpus_stats)
     fb_df = (
         fb.join(docs.select(id_col, text_col), id_col)
         .select(
@@ -759,14 +755,13 @@ def _prf_scored(
     else:
         fb_df = fb_df.filter(~F.col("term").isin(own))
         fb_terms = fb_df.select("term")
-    stats_small = term_stats.join(F.broadcast(fb_terms), "term")
-    priced = fb_df.join(F.broadcast(stats_small), "term", "left")
-    df = F.coalesce(F.col("df"), F.lit(0))
-    return priced.select(
+    scored = _priced(fb_df, term_stats, fb_terms).select(
         *group,
         "term",
-        (F.col("_dffb") * _idf(float(cs["n"]), df.cast("double"))).alias(
-            "score"
-        ),
-        df.cast("long").alias("df"),
+        (F.col("_dffb") * _idf(n, F.col("df").cast("double"))).alias("score"),
+        "df",
     )
+    out = top_k_rows(
+        scored, int(n_expand), group, "term", rank_col="rank" if group else None
+    )
+    return out.withColumn("score", F.round(F.col("score"), SCORE_DECIMALS))

@@ -56,9 +56,12 @@ from astro_vectordb_spark.functions.vector import (
     threshold_from_strength,
     vector_literal,
 )
+from astro_vectordb_spark.operators.topk import (
+    rank_topk_per_query,
+    top_k_rows,
+    topk_search,
+)
 from astro_vectordb_spark.session import local_frame
-
-SCORE_DECIMALS = 6
 
 
 class PQModel:
@@ -587,10 +590,8 @@ def _adc_candidates(
     scored = scan.select(*cols).mapInPandas(
         score, schema=f"_q long, {id_col} long, adc_score double"
     )
-    top = scored.orderBy(
-        F.col("adc_score").desc(), F.col(id_col).asc()
-    ).limit(n_candidates).select(id_col, "adc_score")
-    return top if with_scores else top.select(id_col)
+    top = top_k_rows(scored, n_candidates, (), id_col, "adc_score")
+    return top.select(id_col, *(["adc_score"] if with_scores else []))
 
 
 def pq_candidates(
@@ -709,32 +710,19 @@ def adaptive_refine_cut_batch(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """The error-bound reorder cut (:func:`adaptive_refine_cut`) for a
-    query BATCH, applied PLAN-SIDE — the round-13 verdict's missing
-    piece: the single-query cut collects its pool and re-broadcasts
-    the kept ids, which at |Q| queries would serialize |Q| extra
-    driver jobs; here the cut is one window + one |Q|-row join inside
-    the existing batch ranking, so it scales with the plan.
+    """Batch face of :func:`adaptive_refine_cut`, applied PLAN-SIDE:
+    the single-query cut collects its pool, which at |Q| queries would
+    serialize |Q| extra driver jobs; here the cut is one window + one
+    |Q|-row join inside the batch ranking.
 
-    ``pool`` is the GLOBAL per-query ADC pool —
-    ``rank_topk_per_query(..., score_col='adc_score',
-    round_scores=False)`` output ``(query_id, id, adc_score, rank)``,
-    at most ``k * refine_factor`` rows per query, rank 1-based by
-    (adc desc, id asc) — exactly the frame the fixed path hands the
-    exact re-rank.  Per query: keep rank <= k*refine_min plus every
-    candidate within ``sigma_mult * sigma_q`` of that query's rank-k
-    ADC score; a query with fewer than k pooled rows keeps them all.
-
-    sigma_q mirrors :func:`adc_sigma` per metric: cosine — constant
-    sqrt(train_mse/dim) (prep normalizes the query, so the norm factor
-    is 1 up to the last ulp of the single-query path's recomputed
-    norm); dot — ||q|| * sqrt(train_mse/dim), the norm folded from the
-    query column (pairwise-vs-fold summation may differ from NumPy in
-    the last ulp — the cut is a recall/cost dial, not an oracled
-    face); euclidean — derived per query from the rank-k radius,
-    2*sqrt(d2_k*mse/dim) + mse, the same in-place rule as the
-    single-query cut.  Legacy models (no ``train_mse``) return the
-    pool unchanged — bit-identical to the fixed path.
+    ``pool`` is ``rank_topk_per_query(..., score_col='adc_score',
+    round_scores=False)`` output ``(query_id, id, adc_score, rank)`` —
+    the frame the fixed path hands the exact re-rank.  The keep rule
+    and sigma are the single face's, per query: cosine uses the
+    constant sqrt(train_mse/dim) (the single face's recomputed unit
+    norm may differ in the last ulp); dot folds ||q|| from the query
+    column (pairwise-vs-fold summation may differ from NumPy in the
+    last ulp — the cut is a recall/cost dial, not an oracled face).
 
     The |Q|-row rank-k join carries no hint: AQE broadcasts it while
     it is small and falls back to a shuffled join at cogrouped-face
@@ -875,18 +863,12 @@ def _refine_topk(
     # spill-redundant IVF assignment that stores a vector in several
     # cells); without it the broadcast join would emit the id twice
     # into the final top-k.  Bounded rows (<= k*refine) — cheap.
-    cand = cand.distinct()
-    qv = vector_literal(query_vector)
-    out = (
-        original.join(F.broadcast(cand), id_col)
-        .withColumn(score_col, similarity(F.col(vec_col), qv, model.metric))
-        .filter(F.col(score_col) > threshold_from_strength(strength))
-        .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    return out.select(
-        id_col, F.round(F.col(score_col), SCORE_DECIMALS).alias(score_col)
-    )
+    return topk_search(
+        original.join(F.broadcast(cand.distinct()), id_col),
+        vector_literal(query_vector), k, strength=strength,
+        metric=model.metric, id_col=id_col, vec_col=vec_col,
+        score_col=score_col,
+    ).select(id_col, score_col)
 
 
 def pq_reconstruction_mse(
@@ -1207,13 +1189,12 @@ def pq_batch_topk_cogrouped(
     its full query slice; the task builds the slice's LUTs from raw
     query vectors (tiny: m*ks*dsub flops per query) and emits the
     block-local ADC top ``k*refine_factor`` per query; the candidate
-    cut and exact re-rank follow (:func:`_refine_topk_batch`).  Cost:
+    cut and exact re-rank follow (:func:`_cogrouped_topk`).  Cost:
     one shuffle of the m-bytes-per-vector codes table (not the float
     corpus) + |Q| x n_blocks query replication."""
     spark = encoded.sparkSession
     if n_blocks is None:
         n_blocks = max(2, spark.sparkContext.defaultParallelism)
-    n_local = k * refine_factor
     codes_b = encoded.select(id_col, "pq_code").withColumn(
         "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
     )
@@ -1222,26 +1203,17 @@ def pq_batch_topk_cogrouped(
             local_frame(spark, [(b,) for b in range(n_blocks)], "__blk int")
         )
     )
-    out_schema = f"{query_id_col} long, {id_col} long, adc_score double"
-    _serve = _make_cogroup_adc_kernel(
-        spark, model, n_local, id_col=id_col, query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-    )
-
-    hits = (
-        codes_b.groupBy("__blk")
-        .cogroup(q_rep.groupBy("__blk"))
-        .applyInPandas(_serve, out_schema)
-    )
-    return _refine_topk_batch(
-        hits, original, queries, k, model, n_local, strength, id_col,
-        vec_col, query_id_col, query_vec_col, score_col, adaptive_refine,
-        refine_min, sigma_mult,
+    return _cogrouped_topk(
+        codes_b, q_rep, ["__blk"], original, queries, k, model,
+        k * refine_factor, strength, id_col, vec_col, query_id_col,
+        query_vec_col, score_col, adaptive_refine, refine_min, sigma_mult,
     )
 
 
-def _refine_topk_batch(
-    hits: DataFrame,
+def _cogrouped_topk(
+    codes: DataFrame,
+    q_side: DataFrame,
+    keys: list[str],
     original: DataFrame,
     queries: DataFrame,
     k: int,
@@ -1257,8 +1229,9 @@ def _refine_topk_batch(
     refine_min: int,
     sigma_mult: float,
 ) -> DataFrame:
-    """The stages both cogrouped PQ faces share after their block-local
-    ADC cut ``hits`` ``(query_id, id, adc_score)``: the global
+    """The stages both cogrouped PQ faces share once each has paired
+    its ``codes`` with their queries ``q_side`` on ``keys``: the ADC
+    kernel per cogroup (local top ``n_local`` per query), the global
     candidate cut in the single-query scan's (score desc, id asc)
     order per query (the prereduce keeps the exchange at |partitions|
     x |Q| x n rows), the optional per-query error-bound cut
@@ -1266,8 +1239,17 @@ def _refine_topk_batch(
     collect, so it composes with unbounded |Q|), then the exact
     re-rank by plain (AQE-planned) joins — no broadcast of the
     candidate or query frames, which at large |Q| would not fit."""
-    from astro_vectordb_spark.operators.topk import rank_topk_per_query
-
+    hits = (
+        codes.groupBy(*keys)
+        .cogroup(q_side.groupBy(*keys))
+        .applyInPandas(
+            _make_cogroup_adc_kernel(
+                codes.sparkSession, model, n_local, id_col, query_id_col,
+                query_vec_col,
+            ),
+            f"{query_id_col} long, {id_col} long, adc_score double",
+        )
+    )
     pool = rank_topk_per_query(
         hits, n_local, id_col=id_col, query_id_col=query_id_col,
         score_col="adc_score", num_salts=8, round_scores=False,
@@ -1361,13 +1343,10 @@ def ivf_pq_batch_topk_cogrouped(
     """
     from astro_vectordb_spark.operators.ann import probe_batch
 
-    spark = encoded.sparkSession
-    n_local = k * refine_factor
     encoded, q_cells = probe_batch(
         encoded, centroids, queries, nprobe, model.metric, max_probe_frac,
         allowed_ids, n_total, id_col, query_id_col, query_vec_col,
     )
-    out_schema = f"{query_id_col} long, {id_col} long, adc_score double"
     if model.residual:
         # each cogroup is one cell (or one salt of one cell): ride the
         # cell's centroid on the query side (k_cells-row broadcast) so
@@ -1375,11 +1354,7 @@ def ivf_pq_batch_topk_cogrouped(
         q_cells = q_cells.join(
             F.broadcast(centroids.select("cell_id", "centroid")), "cell_id"
         )
-    _serve = _make_cogroup_adc_kernel(
-        spark, model, n_local, id_col=id_col, query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-    )
-    codes = encoded.select(id_col, "pq_code", "cell_id")
+    codes, keys = encoded.select(id_col, "pq_code", "cell_id"), ["cell_id"]
     if max_group_rows is not None:
         counts = cell_counts
         if counts is None:
@@ -1395,7 +1370,7 @@ def ivf_pq_batch_topk_cogrouped(
                 F.ceil(F.col("_cn") / F.lit(int(max_group_rows))),
             ).cast("int").alias("_nsalt"),
         )
-        codes_s = codes.join(F.broadcast(salts), "cell_id").withColumn(
+        codes = codes.join(F.broadcast(salts), "cell_id").withColumn(
             "_salt",
             F.pmod(F.xxhash64(F.col(id_col)), F.col("_nsalt")).cast("int"),
         )
@@ -1405,22 +1380,12 @@ def ivf_pq_batch_topk_cogrouped(
         salts_q = salts.select(
             "cell_id", F.col("_nsalt").alias("_nsalt_q")
         )
-        q_cells_s = q_cells.join(F.broadcast(salts_q), "cell_id").withColumn(
+        q_cells = q_cells.join(F.broadcast(salts_q), "cell_id").withColumn(
             "_salt", F.explode(F.sequence(F.lit(0), F.col("_nsalt_q") - 1))
         )
-        hits = (
-            codes_s.groupBy("cell_id", "_salt")
-            .cogroup(q_cells_s.groupBy("cell_id", "_salt"))
-            .applyInPandas(_serve, out_schema)
-        )
-    else:
-        hits = (
-            codes.groupBy("cell_id")
-            .cogroup(q_cells.groupBy("cell_id"))
-            .applyInPandas(_serve, out_schema)
-        )
-    return _refine_topk_batch(
-        hits, original, queries, k, model, n_local, strength, id_col,
-        vec_col, query_id_col, query_vec_col, score_col, adaptive_refine,
-        refine_min, sigma_mult,
+        keys.append("_salt")
+    return _cogrouped_topk(
+        codes, q_cells, keys, original, queries, k, model,
+        k * refine_factor, strength, id_col, vec_col, query_id_col,
+        query_vec_col, score_col, adaptive_refine, refine_min, sigma_mult,
     )

@@ -42,8 +42,12 @@ from astro_vectordb_spark.functions.vector import (
     threshold_from_strength,
     vector_literal,
 )
+from astro_vectordb_spark.operators.topk import (
+    rank_topk_per_query,
+    top_k_rows,
+    topk_search,
+)
 
-SCORE_DECIMALS = 6
 QSCALE_EPS = 1e-30
 
 
@@ -107,8 +111,6 @@ def batch_topk_quantized(
     full-precision table for the exact re-rank.  Ranking uses the
     unrounded score in both stages (ties by id), so the DuckDB oracle
     replays it deterministically."""
-    from astro_vectordb_spark.operators.topk import rank_topk_per_query
-
     qscored = quantized.join(F.broadcast(queries)).withColumn(
         "qscore", similarity(dequantize_expr(), F.col(query_vec_col), metric)
     )
@@ -156,19 +158,11 @@ def topk_search_quantized(
         qv = query_vector
     else:
         qv = vector_literal(query_vector)
-    cand = (
-        quantized.withColumn("qscore", similarity(dequantize_expr(), qv, metric))
-        .orderBy(F.col("qscore").desc(), F.col(id_col).asc())
-        .limit(k * refine_factor)
-        .select(id_col)
-    )
-    out = (
-        original.join(F.broadcast(cand), id_col)
-        .withColumn(score_col, similarity(F.col(vec_col), qv, metric))
-        .filter(F.col(score_col) > threshold_from_strength(strength))
-        .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    return out.select(
-        id_col, F.round(F.col(score_col), SCORE_DECIMALS).alias(score_col)
-    )
+    cand = top_k_rows(
+        quantized.withColumn("qscore", similarity(dequantize_expr(), qv, metric)),
+        k * refine_factor, (), id_col, "qscore",
+    ).select(id_col)
+    return topk_search(
+        original.join(F.broadcast(cand), id_col), qv, k, strength=strength,
+        metric=metric, id_col=id_col, vec_col=vec_col, score_col=score_col,
+    ).select(id_col, score_col)

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from astro_vectordb_spark.operators.topk import top_k_rows
+
 SCORE_DECIMALS = 6
 
 
@@ -66,24 +68,7 @@ def rrf_fuse(
         )
         for df in ranked_lists
     ]
-    unioned = reduce(lambda a, b: a.unionByName(b), contribs)
-    fused = unioned.groupBy(*gcols, id_col).agg(F.sum("_c").alias(score_col))
-    if gcols:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*gcols).orderBy(
-            F.col(score_col).desc(), F.col(id_col).asc()
-        )
-        out = (
-            fused.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-    else:
-        out = fused.orderBy(
-            F.col(score_col).desc(), F.col(id_col).asc()
-        ).limit(k)
-    return out.withColumn(score_col, F.round(F.col(score_col), SCORE_DECIMALS))
+    return _fused_top_k(contribs, k, gcols, id_col, score_col)
 
 
 def _fold_dot(a: np.ndarray, b: np.ndarray) -> float:
@@ -216,38 +201,24 @@ def score_fusion(
             F.col("_mx") > F.col("_mn"),
             (F.col(score_col) - F.col("_mn")) / (F.col("_mx") - F.col("_mn")),
         ).otherwise(F.lit(1.0))
-        if gcols:
-            stats = df.groupBy(*gcols).agg(
-                F.min(score_col).alias("_mn"), F.max(score_col).alias("_mx")
-            )
-            joined = df.join(F.broadcast(stats), gcols)
-        else:
-            stats = df.agg(
-                F.min(score_col).alias("_mn"), F.max(score_col).alias("_mx")
-            )
-            joined = df.crossJoin(F.broadcast(stats))
+        stats = F.broadcast(df.groupBy(*gcols).agg(
+            F.min(score_col).alias("_mn"), F.max(score_col).alias("_mx")
+        ))
+        joined = df.join(stats, gcols) if gcols else df.crossJoin(stats)
         contribs.append(
             joined.select(
                 *gcols, F.col(id_col), (F.lit(float(w)) * norm).alias("_c")
             )
         )
+    return _fused_top_k(contribs, k, gcols, id_col, score_col)
+
+
+def _fused_top_k(contribs, k, gcols, id_col, score_col) -> DataFrame:
+    """The tail both fusions share: sum each id's ``_c`` contributions
+    (per group), cut to the top ``k`` and round for output."""
     unioned = reduce(lambda a, b: a.unionByName(b), contribs)
     fused = unioned.groupBy(*gcols, id_col).agg(F.sum("_c").alias(score_col))
-    if gcols:
-        from pyspark.sql import Window
-
-        w2 = Window.partitionBy(*gcols).orderBy(
-            F.col(score_col).desc(), F.col(id_col).asc()
-        )
-        out = (
-            fused.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-    else:
-        out = fused.orderBy(
-            F.col(score_col).desc(), F.col(id_col).asc()
-        ).limit(k)
+    out = top_k_rows(fused, k, gcols, id_col, score_col)
     return out.withColumn(score_col, F.round(F.col(score_col), SCORE_DECIMALS))
 
 
@@ -297,25 +268,11 @@ def cross_encoder_rerank(
         F.col(query_text_col) if query_text_col is not None
         else F.lit(query_text)
     )
+    group = [query_id_col] if query_id_col is not None else []
     scored = (
         candidates.withColumn(score_col, udf(qcol, F.col(text_col)))
         .filter(F.col(score_col).isNotNull())
+        .select(*group, id_col, score_col)
     )
-    if query_id_col is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col(score_col).desc(), F.col(id_col).asc()
-        )
-        out = (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select(query_id_col, id_col, score_col)
-        )
-    else:
-        out = (
-            scored.select(id_col, score_col)
-            .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-            .limit(k)
-        )
+    out = top_k_rows(scored, k, group, id_col, score_col)
     return out.withColumn(score_col, F.round(F.col(score_col), SCORE_DECIMALS))

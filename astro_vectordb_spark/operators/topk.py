@@ -108,10 +108,9 @@ def topk_search(
         scored = score_against(corpus, query_vector, vec_col, metric, score_col)
     if deleted_col is not None:
         scored = scored.filter(~F.coalesce(F.col(deleted_col), F.lit(False)))
-    out = (
-        scored.filter(F.col(score_col) > threshold_from_strength(strength))
-        .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-        .limit(k)
+    out = top_k_rows(
+        scored.filter(F.col(score_col) > threshold_from_strength(strength)),
+        k, (), id_col, score_col,
     )
     return out.withColumn(score_col, F.round(F.col(score_col), SCORE_DECIMALS))
 
@@ -150,6 +149,30 @@ def filtered_topk(
     )
 
 
+def top_k_rows(
+    frame: DataFrame,
+    k: int,
+    group_cols: Sequence[str] = (),
+    id_col: str = "vec_id",
+    score_col: str = "score",
+    rank_col: str | None = None,
+) -> DataFrame:
+    """The top ``k`` rows of ``frame`` by (score desc, id asc) — the one
+    cut of every face that serves either one query or a query batch:
+    without ``group_cols`` a global ``ORDER BY ... LIMIT k``
+    (``TakeOrderedAndProject``), with them a partitioned row_number
+    window per group, whose 1-based rank is kept as ``rank_col`` (or
+    dropped when None)."""
+    order = (F.col(score_col).desc(), F.col(id_col).asc())
+    if not group_cols:
+        return frame.orderBy(*order).limit(k)
+    rn = rank_col or "_rn"
+    out = frame.withColumn(
+        rn, F.row_number().over(Window.partitionBy(*group_cols).orderBy(*order))
+    ).filter(F.col(rn) <= k)
+    return out if rank_col else out.drop(rn)
+
+
 def rank_topk_per_query(
     scored: DataFrame,
     k: int,
@@ -181,7 +204,6 @@ def rank_topk_per_query(
     serving-contract 6-decimal round would shift the threshold.
 
     Returns (query_id, id_col, score, rank)."""
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
     if num_salts > 1:
         import pandas as pd
 
@@ -208,16 +230,13 @@ def rank_topk_per_query(
 
         scored = narrow.mapInPandas(_partition_topk, out_fields)
     # Stage 2: final per-query ranking over the survivors.
-    w2 = Window.partitionBy(query_id_col).orderBy(*order)
     out_score = (
         F.round(F.col(score_col), SCORE_DECIMALS).alias(score_col)
         if round_scores else F.col(score_col)
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, out_score, "rank")
-    )
+    return top_k_rows(
+        scored, k, [query_id_col], id_col, score_col, rank_col="rank"
+    ).select(query_id_col, id_col, out_score, "rank")
 
 
 def batch_topk(

@@ -241,9 +241,7 @@ def _serve(
             ),
         )
         if not batch:
-            out = out.orderBy(
-                F.col("score").desc(), F.col("vec_id").asc()
-            ).limit(k)
+            out = topk.top_k_rows(out, k)
     elif kind == "pq":
         encoded, model, _ = vault.load_pq_index(spark, path)
         if allowed_ids is not None:
